@@ -388,6 +388,29 @@ def tfidf_index_incremental(spark: SparkSession, sf: str) -> DataFrame:
     return _tfidf_probe_index(spark, post_dir, df_dir, meta_dir)
 
 
+def _obs_bounded(obs, timeout_s: float = 120.0):
+    """The observation's metrics dict, waiting at most ``timeout_s`` —
+    or None so the caller recomputes (the unbounded `obs.get` blocks
+    forever when the observed plan never ran). Polls the JVM's
+    non-blocking accessor through the pyspark-PRIVATE ``obs._jo``
+    (classic sessions); the final `.get` is then immediate. Any error
+    from the poll — no ``_jo`` on a Connect observation, a renamed
+    accessor, a Py4J fault — counts as a timeout, so the recompute
+    fallback serves instead of failing the batch."""
+    import time
+
+    deadline = time.monotonic() + timeout_s
+    while True:
+        try:
+            if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
+                return obs.get
+        except Exception:
+            return None
+        if time.monotonic() >= deadline:
+            return None
+        time.sleep(0.05)
+
+
 def _index_apply_batch(
     batch_df: DataFrame, batch_id: int, post_dir: str, df_dir: str, meta_dir: str
 ) -> None:
@@ -414,22 +437,6 @@ def _index_apply_batch(
     from pyspark.sql import Observation
 
     from nshm2022db_spark.streaming.sinks import append_partition_transaction
-
-    def _obs_bounded(obs, timeout_s: float = 120.0):
-        """The observation's metrics dict, waiting at most
-        ``timeout_s`` — or None so the caller recomputes (the
-        unbounded `obs.get` blocks forever when the observed plan
-        never ran). Polls the JVM's non-blocking accessor; the final
-        `.get` is then immediate."""
-        import time as _time
-
-        deadline = _time.monotonic() + timeout_s
-        while True:
-            if obs._jo is not None and obs._jo.getRowOrEmpty().isDefined():
-                return obs.get
-            if _time.monotonic() >= deadline:
-                return None
-            _time.sleep(0.05)
 
     s = batch_df.sparkSession
     # batch_df is persisted too: the meta scalars are further consumers

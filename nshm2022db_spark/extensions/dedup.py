@@ -955,7 +955,15 @@ def connected_components(
     this converges in 2-4 rounds. Each round is one join + one min-agg,
     both on the same key — at 100 TB persist labels per round (here
     localCheckpoint) to cut lineage, and AQE handles the skew of a giant
-    component."""
+    component.
+
+    ``max_iter`` counts rounds INCLUDING the detection round: the fixed
+    point is seen only when a round leaves the label sum equal to the
+    previous round's, and round 1 has no previous sum. A graph whose
+    labels settle after D changing rounds therefore stops at round
+    D + 1 and needs ``max_iter >= D + 1`` — an edgeless or
+    already-converged graph still runs two rounds, so ``max_iter=1``
+    always raises."""
     labels = vertices.select(F.col("doc_id"), F.col("doc_id").alias("cluster_id"))
     # undirected: propagate both ways. Materialize ONCE — the edge set may
     # be an expensive candidate pipeline (jaccard join) and every round

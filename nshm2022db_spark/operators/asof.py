@@ -48,8 +48,11 @@ def nearest_ge_lookup(domain: DataFrame, value_col: str, targets: DataFrame, tar
         .agg(F.min("__v").alias("__ge"))
     )
     global_max = d.agg(F.max("__v").alias("__max"))
+    # left side = the distinct targets, so each target yields ONE row
+    # however many targets rows share it (a caller joining the result
+    # back on target_col must not multiply)
     return (
-        targets.join(ge_min, target_col, "left")
+        t.join(ge_min, target_col, "left")
         .crossJoin(F.broadcast(global_max))
         .select(
             F.col(target_col),

@@ -21,6 +21,10 @@ import os
 import tempfile
 
 _MARKER = "_LANDED"
+# bumped when a landing's on-disk table layout changes, so tables landed
+# by older code are rebuilt instead of read (2: commit-log tables only —
+# no `_CURRENT`-pointer / `v{N}` dir tables)
+_LAYOUT = 2
 
 
 def _corpus_fingerprint(sf: str) -> str:
@@ -43,10 +47,10 @@ def _corpus_fingerprint(sf: str) -> str:
 
 
 def scratch_path(kind: str, sf: str) -> str:
-    """Per-(kind, sf-dir, corpus-content) scratch directory path, stable
-    across processes while the corpus is unchanged."""
+    """Per-(kind, sf-dir, corpus-content, layout) scratch directory path,
+    stable across processes while the corpus and layout are unchanged."""
     key = hashlib.sha1(
-        f"{sf}|{_corpus_fingerprint(sf)}".encode()
+        f"{sf}|{_corpus_fingerprint(sf)}|layout{_LAYOUT}".encode()
     ).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"{kind}_{key}")
 

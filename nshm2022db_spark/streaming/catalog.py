@@ -47,7 +47,7 @@ from nshm2022db_spark.streaming.sinks import (
     _COMMITS,
     _is_manifest,
     _read_json,
-    try_commit,
+    transact,
 )
 
 
@@ -83,7 +83,6 @@ def current_catalog(catalog_dir: str) -> dict:
 def catalog_publish(
     catalog_dir: str,
     updates: dict[str, tuple[str, int]],
-    max_retries: int = 10,
     branch: str | None = None,
 ) -> dict:
     """Atomically re-point the catalog's snapshot vector for the named
@@ -101,8 +100,8 @@ def catalog_publish(
     linear CAS log: ``tables`` stays main's vector, the branch's new
     vector rides in ``branch_tables``, and the head's ``branches`` map
     re-points at it."""
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+
+    def attempt(cur, _new_stage):
         if branch is not None and branch not in cur.get("branches", {}):
             raise ValueError(
                 f"branch {branch!r} does not exist in {catalog_dir}"
@@ -133,13 +132,11 @@ def catalog_publish(
                 **m["branches"][branch],
                 "at": m["version"],
             }
-        # the SAME os.link conditional-put every table's log uses —
-        # the catalog is just one more CAS log (sinks.try_commit)
-        if try_commit(catalog_dir, m):
-            return m
-    raise RuntimeError(
-        f"catalog_publish lost the CAS {max_retries} times in {catalog_dir}"
-    )
+        return m
+
+    # the SAME os.link conditional-put every table's log uses — the
+    # catalog is just one more CAS log, in transact's stage-less form
+    return transact(catalog_dir, attempt)
 
 
 _TAG_NAME_RE = None  # compiled lazily; module avoids importing re at top
@@ -188,7 +185,6 @@ def catalog_branch(
     catalog_dir: str,
     name: str,
     version: int | None = None,
-    max_retries: int = 10,
 ) -> dict:
     """Create a WRITABLE NAMED BRANCH — the Nessie/Iceberg branch model
     beside catalog_tag's immutable refs: ``catalog_publish(...,
@@ -208,8 +204,8 @@ def catalog_branch(
     unambiguously). Branches are mutable by design, so re-creating an
     existing branch refuses (delete it first)."""
     _check_tag_name(name)
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+
+    def attempt(cur, _new_stage):
         target = cur["version"] if version is None else int(version)
         if target < 1:
             raise ValueError("cannot branch the empty pre-publish catalog")
@@ -232,39 +228,36 @@ def catalog_branch(
         branches[name] = {
             "at": target, "base": target, "seq": cur["version"] + 1,
         }
-        m = {
+        return {
             "version": cur["version"] + 1,
             "tables": dict(cur.get("tables", {})),
             "refs": dict(cur.get("refs", {})),
             "branches": branches,
         }
-        if try_commit(catalog_dir, m):
-            # same post-CAS re-validation as catalog_tag: a vacuum
-            # racing the window between the retention check and the
-            # CAS could retire the fork target; roll back and refuse
-            # rather than leave a dangling branch (ADVICE r14 rule)
-            try:
-                catalog_at(catalog_dir, version=target)
-            except Exception:
-                catalog_branch_delete(catalog_dir, name)
-                raise ValueError(
-                    f"catalog version {target} was vacuumed while branching; "
-                    f"branch {name!r} rolled back"
-                )
-            return m
-    raise RuntimeError(
-        f"catalog_branch lost the CAS {max_retries} times in {catalog_dir}"
-    )
+
+    m = transact(catalog_dir, attempt)
+    target = m["branches"][name]["at"]
+    # same post-CAS re-validation as catalog_tag: a vacuum racing the
+    # window between the retention check and the CAS could retire the
+    # fork target; roll back and refuse rather than leave a dangling
+    # branch (ADVICE r14 rule)
+    try:
+        catalog_at(catalog_dir, version=target)
+    except Exception:
+        catalog_branch_delete(catalog_dir, name)
+        raise ValueError(
+            f"catalog version {target} was vacuumed while branching; "
+            f"branch {name!r} rolled back"
+        )
+    return m
 
 
-def catalog_branch_delete(
-    catalog_dir: str, name: str, max_retries: int = 10
-) -> dict:
+def catalog_branch_delete(catalog_dir: str, name: str) -> dict:
     """Drop a branch ref (its commits become ordinary vacuumable
     history — Nessie's delete-branch). Unknown names refuse, matching
     catalog_tag_delete."""
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+
+    def attempt(cur, _new_stage):
         branches = dict(_branches_carry(cur).get("branches", {}))
         if name not in branches:
             raise ValueError(
@@ -278,19 +271,15 @@ def catalog_branch_delete(
         }
         if branches:
             m["branches"] = branches
-        if try_commit(catalog_dir, m):
-            return m
-    raise RuntimeError(
-        f"catalog_branch_delete lost the CAS {max_retries} times in "
-        f"{catalog_dir}"
-    )
+        return m
+
+    return transact(catalog_dir, attempt)
 
 
 def catalog_promote(
     catalog_dir: str,
     name: str,
     delete_branch: bool = True,
-    max_retries: int = 10,
 ) -> dict:
     """PROMOTE a branch into main — one atomic CAS commit, so every
     main reader flips from the old vector to the merged one with no
@@ -306,8 +295,8 @@ def catalog_promote(
     fast-forward of the branch vector. The promotion commit is
     auditable history (``promoted_from``); the branch ref is dropped
     by default (Nessie merge-then-delete)."""
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+
+    def attempt(cur, _new_stage):
         branches = dict(_branches_carry(cur).get("branches", {}))
         if name not in branches:
             raise ValueError(
@@ -369,11 +358,9 @@ def catalog_promote(
         }
         if branches:
             m["branches"] = branches
-        if try_commit(catalog_dir, m):
-            return m
-    raise RuntimeError(
-        f"catalog_promote lost the CAS {max_retries} times in {catalog_dir}"
-    )
+        return m
+
+    return transact(catalog_dir, attempt)
 
 
 def catalog_tag(
@@ -381,7 +368,6 @@ def catalog_tag(
     name: str,
     version: int | None = None,
     replace: bool = False,
-    max_retries: int = 10,
 ) -> dict:
     """Create a NAMED TAG on a catalog version — Iceberg's refs at
     catalog scope: ``catalog_at(tag='train-v1')`` resolves the tagged
@@ -399,8 +385,9 @@ def catalog_tag(
     never perturbs what readers see and the tag operation itself is
     auditable history. Returns the published manifest."""
     _check_tag_name(name)
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+    seen: dict = {}
+
+    def attempt(cur, _new_stage):
         target = cur["version"] if version is None else int(version)
         if target < 1:
             raise ValueError("cannot tag the empty pre-publish catalog")
@@ -417,83 +404,77 @@ def catalog_tag(
                 f"tag {name!r} already points at version {refs[name]}; "
                 "tags are immutable — pass replace=True to re-point"
             )
-        prev = refs.get(name)  # pre-existing target (replace=True case)
+        seen["prev"] = refs.get(name)  # pre-existing target (replace=True)
         refs[name] = target
-        m = {
+        return {
             "version": cur["version"] + 1,
             "tables": dict(cur.get("tables", {})),
             "refs": refs,
             **_branches_carry(cur),
         }
-        if try_commit(catalog_dir, m):
-            # The retention check above ran BEFORE the CAS: a
-            # concurrent catalog_vacuum that read refs in that window
-            # could have retired the target manifest, leaving a
-            # committed tag that dangles. Re-validate now that the tag
-            # is visible — vacuum respects visible tags, so a target
-            # that still resolves here stays protected from this point
-            # on; if it was retired in the window, roll the tag back
-            # and refuse (ADVICE r14). A replace=True re-point rolls
-            # back to the PREVIOUS target — the caller asked to move a
-            # tag, losing it entirely (and its retention pin) would be
-            # strictly worse (r15 review #3); only if the old target
-            # was itself retired in the same window does the tag drop.
-            try:
-                catalog_at(catalog_dir, version=target)
-            except Exception:
-                try:
-                    if prev is not None:
-                        catalog_tag(
-                            catalog_dir, name, version=int(prev),
-                            replace=True,
-                        )
-                    else:
-                        catalog_tag_delete(catalog_dir, name)
-                except Exception:
-                    # the restore itself lost a further race (prev was
-                    # retired too, or a NESTED rollback already dropped
-                    # the ref) — make sure the tag ends simply absent
-                    # rather than dangling, tolerating the
-                    # already-deleted case so the original error below
-                    # is never masked by a 'does not exist' from a
-                    # double delete (r15 review #2, follow-up pass)
-                    try:
-                        catalog_tag_delete(catalog_dir, name)
-                    except ValueError:
-                        pass
-                raise ValueError(
-                    f"catalog version {target} was vacuumed while tagging; "
-                    f"tag {name!r} rolled back"
+
+    m = transact(catalog_dir, attempt)
+    target, prev = m["refs"][name], seen["prev"]
+    # The retention check above ran BEFORE the CAS: a
+    # concurrent catalog_vacuum that read refs in that window
+    # could have retired the target manifest, leaving a
+    # committed tag that dangles. Re-validate now that the tag
+    # is visible — vacuum respects visible tags, so a target
+    # that still resolves here stays protected from this point
+    # on; if it was retired in the window, roll the tag back
+    # and refuse (ADVICE r14). A replace=True re-point rolls
+    # back to the PREVIOUS target — the caller asked to move a
+    # tag, losing it entirely (and its retention pin) would be
+    # strictly worse (r15 review #3); only if the old target
+    # was itself retired in the same window does the tag drop.
+    try:
+        catalog_at(catalog_dir, version=target)
+    except Exception:
+        try:
+            if prev is not None:
+                catalog_tag(
+                    catalog_dir, name, version=int(prev),
+                    replace=True,
                 )
-            return m
-    raise RuntimeError(
-        f"catalog_tag lost the CAS {max_retries} times in {catalog_dir}"
-    )
+            else:
+                catalog_tag_delete(catalog_dir, name)
+        except Exception:
+            # the restore itself lost a further race (prev was
+            # retired too, or a NESTED rollback already dropped
+            # the ref) — make sure the tag ends simply absent
+            # rather than dangling, tolerating the
+            # already-deleted case so the original error below
+            # is never masked by a 'does not exist' from a
+            # double delete (r15 review #2, follow-up pass)
+            try:
+                catalog_tag_delete(catalog_dir, name)
+            except ValueError:
+                pass
+        raise ValueError(
+            f"catalog version {target} was vacuumed while tagging; "
+            f"tag {name!r} rolled back"
+        )
+    return m
 
 
-def catalog_tag_delete(
-    catalog_dir: str, name: str, max_retries: int = 10
-) -> dict:
+def catalog_tag_delete(catalog_dir: str, name: str) -> dict:
     """Drop a named tag (its version becomes ordinary vacuumable
     history). Unknown names refuse — deleting a ref you think exists
     but doesn't is a caller bug, not a no-op."""
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+
+    def attempt(cur, _new_stage):
         refs = dict(cur.get("refs", {}))
         if name not in refs:
             raise ValueError(f"tag {name!r} does not exist in {catalog_dir}")
         del refs[name]
-        m = {
+        return {
             "version": cur["version"] + 1,
             "tables": dict(cur.get("tables", {})),
             "refs": refs,
             **_branches_carry(cur),
         }
-        if try_commit(catalog_dir, m):
-            return m
-    raise RuntimeError(
-        f"catalog_tag_delete lost the CAS {max_retries} times in {catalog_dir}"
-    )
+
+    return transact(catalog_dir, attempt)
 
 
 def catalog_at(
@@ -653,33 +634,30 @@ def read_catalog_table(
     return read_keyed_table(spark, ent["dir"], version=ent["version"])
 
 
-def catalog_rollback(catalog_dir: str, version: int, max_retries: int = 10) -> dict:
+def catalog_rollback(catalog_dir: str, version: int) -> dict:
     """Iceberg-style catalog ROLLBACK: re-publish the snapshot vector of
     a retained historical version as the NEW head — a forward commit,
     never a rewrite, so the botched publishes stay in history (auditable,
     still time-travelable) while every catalog reader atomically snaps
     back to the known-good multi-table state. Resolves through
     ``catalog_at`` and therefore refuses past the vacuum boundary. The
-    CAS loop is ``catalog_publish``'s: a concurrent publisher can slip
+    CAS loop is ``transact``'s: a concurrent publisher can slip
     in, and the rollback REPLACES the whole vector (unlike publish's
     merge) because restoring a consistent past state is the point.
     Returns the published manifest."""
     target = dict(catalog_at(catalog_dir, version=version).get("tables", {}))
-    for _ in range(max_retries):
-        cur = current_catalog(catalog_dir)
+
+    def attempt(cur, _new_stage):
         # refs carry from the HEAD, not the target: tags are names on
         # the history and must survive a vector rollback
-        m = {
+        return {
             "version": cur["version"] + 1,
             "tables": dict(target),
             "refs": dict(cur.get("refs", {})),
             **_branches_carry(cur),
         }
-        if try_commit(catalog_dir, m):
-            return m
-    raise RuntimeError(
-        f"catalog_rollback lost the CAS {max_retries} times in {catalog_dir}"
-    )
+
+    return transact(catalog_dir, attempt)
 
 
 def catalog_vacuum(catalog_dir: str, keep_last_snapshots: int = 1) -> dict:

@@ -925,7 +925,7 @@ def commit_rebase_stats(spark: SparkSession, sf: str) -> DataFrame:
                 append_partition_transaction(
                     spark, table_dir, "bucket",
                     ev.filter(F.col("event_id") % 8 == i),
-                    stats_cols=["event_id"], max_retries=32,
+                    stats_cols=["event_id"],
                 )
             except Exception as e:  # pragma: no cover - surfaced below
                 errs.append(e)

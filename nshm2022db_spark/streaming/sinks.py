@@ -26,12 +26,17 @@ protocol is explicit and minimal — the same model those formats use:
     version, recomputes, and retries — OPTIMISTIC CONCURRENCY, so two
     concurrent writers serialize instead of silently dropping one
     writer's merge (the lost-update hazard of a mutable pointer),
-  * manifests carry the cumulative batch-id list, so a replayed
-    micro-batch (restart between write and checkpoint commit) sees its
-    id already committed and no-ops — idempotent end-to-end,
+  * manifests carry the batch ids their transaction applied, so a
+    replayed micro-batch (restart between write and checkpoint commit)
+    sees its id already committed and no-ops — idempotent end-to-end,
   * readers resolve the max committed manifest and only ever see a
-    fully-written version; the `_CURRENT` file remains as a hint and a
-    legacy fallback for tables written by the pre-log layout.
+    fully-written version; the `_CURRENT` file is a non-authoritative
+    hint beside the log.
+
+`transact` is the one publish loop: every writer here and in catalog.py
+states only its attempt (head in, successor manifest out) and
+`_next_manifest` is the one rule for the table state a successor
+carries forward.
 
 Crash after staging but before commit leaves an orphan data dir that no
 manifest references; `vacuum_uncommitted` removes those after a grace
@@ -82,19 +87,11 @@ def land_stream_to_parquet(
     return writer.start()
 
 
-def _read_pointer(table_dir: str) -> dict:
-    try:
-        with open(os.path.join(table_dir, _POINTER)) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return {"version": 0, "batch_ids": []}
-
-
 def _write_hint(table_dir: str, manifest: dict) -> None:
     """Non-authoritative `_CURRENT` hint (atomic replace). The commit log
-    is the source of truth; the hint only speeds up / legacy-bridges
-    `current_commit`. Two racing hint writes can land out of order —
-    harmless, because the log scan always wins when present."""
+    is the source of truth; the hint is written for a head resolution
+    that starts from it. Two racing hint writes can land out of order —
+    harmless, because the log scan always wins."""
     fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="_hint-tmp-")
     with os.fdopen(fd, "w") as f:
         json.dump(manifest, f)
@@ -126,9 +123,9 @@ def _manifest_names(table_dir: str) -> list[str]:
 
 
 def current_commit(table_dir: str) -> dict:
-    """The latest committed manifest {version, dir, batch_ids}: max entry
-    of the append-only commit log, falling back to the legacy mutable
-    pointer (pre-log tables used `v{N}` dirs named by version)."""
+    """The latest committed manifest {version, dir, batch_ids, ...}: the
+    max entry of the append-only commit log, or version 0 before the
+    first commit."""
     names = _manifest_names(table_dir)
     # newest-first: vacuum never unlinks the newest, but an older name
     # from our listing may vanish under a concurrent retention pass
@@ -136,9 +133,7 @@ def current_commit(table_dir: str) -> dict:
         m = _read_json(os.path.join(table_dir, _COMMITS, n))
         if m is not None:
             return m
-    ptr = _read_pointer(table_dir)
-    ptr.setdefault("dir", f"v{ptr['version']}")
-    return ptr
+    return {"version": 0, "batch_ids": []}
 
 
 def try_commit(table_dir: str, manifest: dict) -> bool:
@@ -203,17 +198,12 @@ def committed_batch_ids(table_dir: str) -> set[int]:
     the delta batch_ids of manifests after it — O(tail), not O(every
     version since table birth), which is what keeps a long-lived
     streaming land from re-reading thousands of manifests per
-    micro-batch (the problem Delta's log checkpoints solve). Falls back
-    to the legacy pointer's cumulative list for pre-log tables.
-    Manifests carry only the ids THEIR transaction applied — cumulative
-    lists would grow the log O(B²) over a stream's life (the first
-    commit over a legacy table carries the pointer's ids forward once,
-    so nothing is lost in migration)."""
+    micro-batch (the problem Delta's log checkpoints solve). Manifests
+    carry only the ids THEIR transaction applied — cumulative lists
+    would grow the log O(B²) over a stream's life."""
     while True:
         names = _manifest_names(table_dir)
         ckpt_v, ids = _ledger_checkpoint(table_dir)
-        if not names and ckpt_v == 0:
-            return set(_read_pointer(table_dir)["batch_ids"])
         log = os.path.join(table_dir, _COMMITS)
         restart = False
         for n in names:
@@ -242,43 +232,157 @@ def _maybe_checkpoint_ledger(table_dir: str, version: int) -> None:
         _write_ledger_checkpoint(table_dir, version, committed_batch_ids(table_dir))
 
 
-def _publish(
-    table_dir: str,
-    manifest: dict,
-    stage_path: str,
-    keep_stage_on_conflict: bool = False,
-) -> bool:
-    """CAS-publish a staged manifest — the one publish sequence every
-    writer shares (committed/partition/append/MOR transactions and
-    compaction): refresh the stage mtime so vacuum's grace window
-    restarts, link the manifest (the CAS), fail LOUDLY un-publishing if
-    a misconfigured vacuum deleted the stage in the race window, then
-    write the hint and roll the batch-id ledger. Returns False on a
-    version conflict (stage deleted so the caller recomputes and
-    retries — unless ``keep_stage_on_conflict``, the append REBASE path:
-    staged data dirs are position-independent, so a loser that can prove
-    logical non-conflict re-manifests the SAME stage instead of
-    re-running its whole transaction)."""
+def _publish(table_dir: str, manifest: dict, stage_path: str) -> bool:
+    """CAS-publish a manifest anchored on a staged dir: refresh the
+    stage mtime so vacuum's grace window restarts, link the manifest
+    (the CAS), fail LOUDLY un-publishing if a misconfigured vacuum
+    deleted the stage in the race window, then write the hint and roll
+    the batch-id ledger. Returns False on a version conflict."""
     os.utime(stage_path)
-    if try_commit(table_dir, manifest):
-        if not os.path.isdir(stage_path):
-            os.unlink(
-                os.path.join(
-                    table_dir, _COMMITS, f"{manifest['version']:020d}.json"
-                )
-            )
-            raise RuntimeError(
-                f"stage {os.path.basename(stage_path)} vacuumed before "
-                f"commit on {table_dir}; raise vacuum grace_sec above the "
-                "max writer stall"
-            )
-        _write_hint(table_dir, manifest)
-        _maybe_checkpoint_ledger(table_dir, manifest["version"])
-        return True
-    if not keep_stage_on_conflict:
-        shutil.rmtree(stage_path, ignore_errors=True)
-    return False
+    if not try_commit(table_dir, manifest):
+        return False
+    if not os.path.isdir(stage_path):
+        os.unlink(
+            os.path.join(table_dir, _COMMITS, f"{manifest['version']:020d}.json")
+        )
+        raise RuntimeError(
+            f"stage {os.path.basename(stage_path)} vacuumed before "
+            f"commit on {table_dir}; raise vacuum grace_sec above the "
+            "max writer stall"
+        )
+    _write_hint(table_dir, manifest)
+    _maybe_checkpoint_ledger(table_dir, manifest["version"])
+    return True
 
+
+_ATTEMPTS = 32  # CAS attempts per transaction (8 racing appenders fit)
+
+
+def transact(table_dir: str, attempt, *, batch_id=None, rebase=None):
+    """Run one optimistic-concurrency transaction on a commit log — the
+    one publish loop every writer (tables here, the catalog in
+    catalog.py) shares, the shape of Delta's OptimisticTransaction.
+
+    Each attempt reads the head (`current_commit`). A ``batch_id``
+    already in the log makes the whole transaction a no-op (replayed
+    micro-batch idempotence); otherwise ``attempt(cur, new_stage)``
+    returns the successor manifest, or None when there is nothing to
+    commit. ``new_stage(kind="data")`` names a fresh ``{kind}-<uuid>``
+    dir owned by this transaction. A manifest whose ``dir`` is one of
+    them publishes through `_publish`; any other manifest (a catalog
+    vector, a restore of committed dirs) is stage-less and CASes
+    directly.
+
+    A lost CAS deletes the attempt's stages and retries against the
+    winner — unless ``rebase`` is given: the stages are then kept, and
+    before the next attempt ``rebase(cur)`` either accepts them for
+    re-manifesting on the new head (True) or has them deleted for a
+    full re-run (False). Stages never outlive an unpublished
+    transaction (no-op, give-up, or an error raised before the CAS);
+    an error DURING the CAS leaves them for `vacuum_uncommitted`, as a
+    crash would. Returns the published manifest, or None when nothing
+    was committed."""
+    os.makedirs(table_dir, exist_ok=True)
+    staged: list[str] = []
+
+    def new_stage(kind: str = "data") -> str:
+        staged.append(f"{kind}-{uuid.uuid4().hex}")
+        return staged[-1]
+
+    def drop_stages() -> None:
+        for name in staged:
+            shutil.rmtree(os.path.join(table_dir, name), ignore_errors=True)
+        staged.clear()
+
+    try:
+        for _ in range(_ATTEMPTS):
+            cur = current_commit(table_dir)
+            if batch_id is not None and batch_id in committed_batch_ids(
+                table_dir
+            ):
+                return None
+            if staged and not rebase(cur):
+                drop_stages()
+            manifest = attempt(cur, new_stage)
+            if manifest is None:
+                return None
+            if batch_id is not None:
+                manifest["batch_ids"] = [batch_id]
+            try:
+                if manifest.get("dir") in staged:
+                    won = _publish(
+                        table_dir, manifest,
+                        os.path.join(table_dir, manifest["dir"]),
+                    )
+                else:
+                    won = try_commit(table_dir, manifest)
+            except BaseException:
+                # the CAS outcome is unknown (a failure after the link
+                # leaves a live manifest on these stages): leave them to
+                # vacuum_uncommitted, which deletes only unreferenced dirs
+                staged.clear()
+                raise
+            if won:
+                staged.clear()  # published: the stages are live table data
+                return manifest
+            if rebase is None:
+                drop_stages()
+        raise RuntimeError(
+            f"commit conflict persisted for {_ATTEMPTS} attempts on {table_dir}"
+        )
+    finally:
+        drop_stages()
+
+
+# table state a successor manifest carries forward unless its commit
+# changes it (per-commit keys — op, batch_ids, cdc, data_change,
+# committed_at — never carry)
+_CARRIED = (
+    "partition_col", "partitions", "stats", "bloom", "constraints",
+    "legacy_layouts", "column_map", "dropped_columns", "dv", "dv_key",
+    "mor", "dirs",
+)
+
+
+def _next_manifest(cur: dict, op: str | None, stage: str, **fields) -> dict:
+    """The one rule for what a new manifest carries: version + 1,
+    anchored (``dir``) on ``stage``, every `_CARRIED` key of ``cur``
+    forward, then ``fields`` on top. An empty or None value drops its
+    key — stat-less, bloom-less, tombstone-less and map-less are all
+    the absent state — except ``partitions``, whose presence marks a
+    partition-mapped table; ``dv_key`` leaves with the last tombstone.
+    ``op=None`` writes no ``op`` (single-dir and merge-on-read tables).
+
+    ``dir_schemas`` names the NEW dirs' file schemas (Spark schema json
+    of that dir's parquet files; partition-mapped stages exclude the
+    partition column), recorded ONCE at write time — the writer already
+    knew what `_footer_schema` would derive per read (at 100 TB that
+    was O(files) serial driver reads per first touch).
+    Entries of ``cur`` carry forward for the dirs the new manifest
+    still references; a dir without an entry ("." migration dirs,
+    legacy layouts) reads through the exact footer/inference path."""
+    stages = fields.pop("dir_schemas", None) or {}
+    m = {k: cur[k] for k in _CARRIED if k in cur}
+    m.update(fields)
+    m = {
+        k: v for k, v in m.items()
+        if k == "partitions" or v not in (None, [], {})
+    }
+    if "dv" not in m:
+        m.pop("dv_key", None)
+    m.update(version=cur["version"] + 1, dir=stage, batch_ids=[])
+    if op is not None:
+        m["op"] = op
+    live = _manifest_dirs(m)
+    schemas = {
+        d: sj for d, sj in (cur.get("dir_schemas") or {}).items() if d in live
+    }
+    schemas.update(
+        {d: sj for d, sj in stages.items() if d in live and sj is not None}
+    )
+    if schemas:
+        m["dir_schemas"] = schemas
+    return m
 
 
 def committed_transaction(
@@ -286,7 +390,6 @@ def committed_transaction(
     table_dir: str,
     compute,
     batch_id: int | None = None,
-    max_retries: int = 10,
 ) -> None:
     """Run one optimistic-concurrency transaction: read the current
     version, `compute(base_df_or_None) -> DataFrame`, stage the result in
@@ -295,9 +398,8 @@ def committed_transaction(
     against the winner's version, so concurrent writers SERIALIZE — no
     lost updates. With `batch_id`, an already-committed id no-ops
     (replayed micro-batch idempotence)."""
-    os.makedirs(table_dir, exist_ok=True)
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if "partitions" in cur:
             raise ValueError(
                 f"{table_dir} is a partition-mapped table; "
@@ -308,9 +410,6 @@ def committed_transaction(
                 f"{table_dir} is a merge-on-read keyed table; "
                 "use append_keyed_mor"
             )
-        seen = committed_batch_ids(table_dir)
-        if batch_id is not None and batch_id in seen:
-            return
         base = None
         if cur["version"] > 0:
             base = _read_parquet_fast(
@@ -319,27 +418,14 @@ def committed_transaction(
                 schema_json=_dir_schema(cur, cur["dir"]),
             )
         merged = compute(base)
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
-        merged.write.mode("overwrite").parquet(stage_path)
-        delta = [batch_id] if batch_id is not None else []
-        if cur["version"] > 0 and not _manifest_names(table_dir):
-            # first commit over a legacy-pointer table: carry its
-            # cumulative ids into the log once, then deltas from here on
-            delta = sorted(seen) + delta
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "batch_ids": delta,
-        }
-        _note_dir_schemas(
-            manifest, cur, {stage: _file_schema_json(merged.schema)}
+        stage = new_stage()
+        merged.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
+        return _next_manifest(
+            cur, None, stage,
+            dir_schemas={stage: _file_schema_json(merged.schema)},
         )
-        if _publish(table_dir, manifest, stage_path):
-            return
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
-    )
+
+    transact(table_dir, attempt, batch_id=batch_id)
 
 
 def _json_stat(v):
@@ -624,7 +710,7 @@ def _read_parquet_fast(
     schema.
 
     ``schema_json``: a manifest-recorded schema (`dir_schemas`, written
-    once at commit time by `_note_dir_schemas`). When present the read
+    once at commit time by `_next_manifest`). When present the read
     supplies it directly — ZERO footer reads and ZERO stat() calls on
     the read path, the O(files) driver cost the footer path still paid
     per first touch (guide §6/§1: at 100 TB a 10k-file dir meant 10k
@@ -693,34 +779,6 @@ def _file_schema_json(
             if f.name != drop
         ]
     ).jsonValue()
-
-
-def _note_dir_schemas(
-    manifest: dict, cur: dict, stages: dict | None = None
-) -> None:
-    """Record the staged dirs' file schemas in the manifest ONCE at
-    write time and carry prior generations' entries forward — the
-    manifest half of what `_footer_schema` derived per read (guide
-    §6/§1: at 100 TB the footer path was O(files) serial driver reads
-    per first touch plus O(files) stat() calls per read; the writer
-    already knew the schema). ``dir_schemas`` maps data-dir name ->
-    Spark schema json of THAT dir's parquet files (partition-mapped
-    stages: the data files, which exclude the partition column).
-    Entries for dirs the new manifest no longer references are
-    dropped; a dir without an entry (pre-feature manifests, "."
-    migration dirs, legacy layouts) reads through the exact
-    footer/inference path it always did."""
-    live = _manifest_dirs(manifest)
-    out = {
-        d: s
-        for d, s in (cur.get("dir_schemas") or {}).items()
-        if d in live
-    }
-    for stage, sj in (stages or {}).items():
-        if stage and sj is not None and stage in live:
-            out[stage] = sj
-    if out:
-        manifest["dir_schemas"] = out
 
 
 def _distribute_for_partitioned_write(
@@ -1081,7 +1139,6 @@ def committed_partition_transaction(
     compute,
     affected: list[str] | None = None,
     stats_cols: list[str] | None = None,
-    max_retries: int = 10,
     max_records_per_file: int | None = None,
     allow_legacy: bool = False,
     bloom_cols: list[str] | None = None,
@@ -1129,11 +1186,9 @@ def committed_partition_transaction(
     Delta/Iceberg column-stats pruning."""
     if bloom_cols:
         _check_bloom_spec(bloom_bits, bloom_hashes)
-    os.makedirs(table_dir, exist_ok=True)
     prefix = f"{partition_col}="
-    for _ in range(max_retries):
-        # hot path reads ONLY the newest manifest (O(1) in log length)
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if cur["version"] > 0:
             if "partitions" not in cur:
                 raise ValueError(
@@ -1164,7 +1219,7 @@ def committed_partition_transaction(
             )
         base = _read_partition_map(spark, table_dir, cur)
         out = compute(base)
-        stage = f"data-{uuid.uuid4().hex}"
+        stage = new_stage()
         stage_path = os.path.join(table_dir, stage)
         writer = out.write.mode("overwrite")
         if max_records_per_file:
@@ -1178,6 +1233,7 @@ def committed_partition_transaction(
             n for n in os.listdir(stage_path) if n.startswith(prefix)
         }
         _check_entry_values(written)
+        stage_schema = _file_schema_json(out.schema, drop=partition_col)
         if cur.get("constraints") and written:
             _enforce_constraints(
                 _read_partition_map(
@@ -1186,15 +1242,10 @@ def committed_partition_transaction(
                     {
                         "partition_col": partition_col,
                         "partitions": {e: stage for e in sorted(written)},
-                        "dir_schemas": {
-                            stage: _file_schema_json(
-                                out.schema, drop=partition_col
-                            )
-                        },
+                        "dir_schemas": {stage: stage_schema},
                     },
                 ),
                 cur["constraints"],
-                stage_path,
                 manifest=cur,
             )
         claimed = (
@@ -1237,56 +1288,33 @@ def committed_partition_transaction(
                 _collect_stage_blooms(
                     spark, stage_path, partition_col, written,
                     bcols, bloom_bits, bloom_hashes,
-                    schema_json=_file_schema_json(
-                        out.schema, drop=partition_col
-                    ),
+                    schema_json=stage_schema,
                 )
             )
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "partition_col": partition_col,
-            "partitions": new_parts,
-            "batch_ids": [],
-            "op": "rewrite",
-        }
-        if not data_change:
+        # tombstones survive rewrites: the rewritten partitions
+        # re-materialize their rows unfiltered, but reads keep
+        # anti-joining the carried keys (materialize_tombstones is the
+        # one transaction that clears them, _drop_dv); a materialize
+        # of the column map (_drop_map) clears the map
+        cleared = {"dv": None} if _drop_dv else {}
+        if _drop_map:
+            cleared.update(dict.fromkeys(_SCHEMA_MAP_KEYS))
+        return _next_manifest(
+            cur, "rewrite", stage,
+            partition_col=partition_col,
+            partitions=new_parts,
+            stats=new_stats,
+            bloom=new_bloom,
             # Delta's dataChange=false: the rewrite provably RESTATES
             # rows (compaction, Z-order, tombstone materialization) —
             # change feeds skip the commit entirely instead of emitting
             # no-op pairs, and additive consumers stay sound across it
-            manifest["data_change"] = False
-        if new_stats:
-            manifest["stats"] = new_stats
-        if new_bloom:
-            manifest["bloom"] = new_bloom
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        if cur.get("legacy_layouts"):
-            manifest["legacy_layouts"] = cur["legacy_layouts"]
-        if not _drop_map:
-            _carry_column_map(manifest, cur)
-        if cur.get("dv") and not _drop_dv:
-            # tombstones survive rewrites: the rewritten partitions
-            # re-materialize their rows unfiltered, but reads keep
-            # anti-joining the carried keys (materialize_tombstones is
-            # the one transaction that clears them)
-            manifest["dv"] = cur["dv"]
-            manifest["dv_key"] = cur["dv_key"]
-        _note_dir_schemas(
-            manifest,
-            cur,
-            {
-                stage: _file_schema_json(out.schema, drop=partition_col)
-                if written
-                else None
-            },
+            data_change=None if data_change else False,
+            dir_schemas={stage: stage_schema if written else None},
+            **cleared,
         )
-        if _publish(table_dir, manifest, stage_path):
-            return
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
-    )
+
+    transact(table_dir, attempt)
 
 
 class AuditError(RuntimeError):
@@ -1297,6 +1325,13 @@ class AuditError(RuntimeError):
 class ConstraintViolation(RuntimeError):
     """A staged write (or ADD CONSTRAINT over existing data) violated a
     table CHECK constraint; nothing was published."""
+
+
+def _empty_stage(table_dir: str, new_stage) -> str:
+    """An empty stage dir to anchor a metadata-only commit on."""
+    stage = new_stage()
+    os.makedirs(os.path.join(table_dir, stage))
+    return stage
 
 
 def set_table_constraints(
@@ -1322,8 +1357,8 @@ def set_table_constraints(
     declared expression's names never silently decouple."""
     for e in exprs:
         F.expr(e)  # fail fast on unparseable expressions
-    for _ in range(10):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
@@ -1334,25 +1369,12 @@ def set_table_constraints(
             raise ConstraintViolation(
                 f"existing data violates {bad!r}; constraint not added"
             )
-        stage = f"data-{uuid.uuid4().hex}"
-        os.makedirs(os.path.join(table_dir, stage), exist_ok=True)
-        manifest = {
-            k: cur[k]
-            for k in (
-                "partition_col", "partitions", "stats", "bloom",
-                "legacy_layouts", "dv", "dv_key",
-                "column_map", "dropped_columns", "dir_schemas",
-            )
-            if k in cur
-        }
-        manifest["version"] = cur["version"] + 1
-        manifest["dir"] = stage
-        manifest["constraints"] = sorted(set(exprs))
-        manifest["batch_ids"] = []
-        manifest["op"] = "set-constraints"
-        if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
-            return manifest["version"]
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+        return _next_manifest(
+            cur, "set-constraints", _empty_stage(table_dir, new_stage),
+            constraints=sorted(set(exprs)),
+        )
+
+    return transact(table_dir, attempt)["version"]
 
 
 def _first_violation(df: DataFrame | None, exprs: list[str]) -> str | None:
@@ -1369,13 +1391,12 @@ def _first_violation(df: DataFrame | None, exprs: list[str]) -> str | None:
 
 
 def _enforce_constraints(
-    staged: DataFrame, exprs: list[str] | None, stage_path: str,
-    manifest: dict | None = None,
+    staged: DataFrame, exprs: list[str] | None, manifest: dict | None = None,
 ) -> None:
     """Validate a staged write against the table's CHECK constraints
     BEFORE its manifest CAS — the constraint half of write-audit-
-    publish: on violation the stage is deleted and the transaction
-    fails loudly; readers never saw a row.
+    publish: on violation the transaction fails loudly (and `transact`
+    deletes its stage); readers never saw a row.
 
     Constraint expressions are LOGICAL-schema SQL (r13 — declared and
     enforced in the names the user sees): pass the commit ``manifest``
@@ -1389,7 +1410,6 @@ def _enforce_constraints(
         return
     bad = _first_violation(_to_logical(staged, manifest or {}), exprs)
     if bad is not None:
-        shutil.rmtree(stage_path, ignore_errors=True)
         raise ConstraintViolation(
             f"staged write violates {bad!r}; nothing published"
         )
@@ -1449,7 +1469,6 @@ def append_partition_transaction(
     batch_df: DataFrame,
     stats_cols: list[str] | None = None,
     batch_id: int | None = None,
-    max_retries: int = 10,
     audit=None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = _BLOOM_BITS,
@@ -1502,318 +1521,288 @@ def append_partition_transaction(
     change — an audit may assert table-state invariants, so skipping
     it on rebase would let two concurrently-audited batches publish a
     state neither audit saw."""
+
+    def successor(cur: dict, st: dict) -> dict:
+        written, staged_stats = st["written"], st["stats"]
+        new_parts = {e: v for e, v in cur["partitions"].items()}
+        for e in written:
+            new_parts[e] = (
+                _entry_dirs(new_parts[e]) + [st["stage"]]
+                if e in new_parts
+                else st["stage"]
+            )
+        new_stats = {
+            e: s for e, s in cur.get("stats", {}).items() if e in new_parts
+        }
+        if not stats_cols:
+            # this append did not footer-scan: a written entry's
+            # carried bounds no longer cover its new generation, so
+            # keeping them would let pruning skip partitions that now
+            # hold matching rows. Drop them — stat-less = never
+            # pruned, always safe.
+            for e in written:
+                new_stats.pop(e, None)
+        if stats_cols and written:
+            for e, add in staged_stats.items():
+                if e in cur["partitions"] and e not in cur.get("stats", {}):
+                    continue  # pre-existing unstatted data: stay stat-less
+                old = new_stats.get(e)
+                if old is None:
+                    new_stats[e] = add
+                else:
+                    # merge ONLY columns scanned on both sides: an old
+                    # column absent from this append's stats_cols was
+                    # never footer-scanned in the new files, so
+                    # carrying its bounds forward would claim coverage
+                    # of unscanned data — dishonest stats that make
+                    # pruning drop real rows. Dropped = stat-less =
+                    # never pruned.
+                    merged = {
+                        "n": old["n"] + add["n"], "cols": {}, "nulls": {}
+                    }
+                    for c in add["cols"]:
+                        if c in old["cols"]:
+                            lo = [old["cols"][c][0], add["cols"][c][0]]
+                            hi = [old["cols"][c][1], add["cols"][c][1]]
+                            lo = [x for x in lo if x is not None]
+                            hi = [x for x in hi if x is not None]
+                            merged["cols"][c] = [
+                                min(lo) if lo else None,
+                                max(hi) if hi else None,
+                            ]
+                    # null counts are additive, but only when KNOWN on
+                    # both sides — a side without the count (older
+                    # manifest, footer without stats) drops the column
+                    # (absent = never null-pruned, always safe)
+                    for c, k in add.get("nulls", {}).items():
+                        if c in old.get("nulls", {}):
+                            merged["nulls"][c] = old["nulls"][c] + k
+                    new_stats[e] = merged
+        # blooms: a set-union structure, so appends MERGE by OR-ing
+        # bitmaps — but only when both sides exist with the same
+        # (m, k); anything else drops the entry's bloom (bloom-less =
+        # never pruned), mirroring the stats drop-or-merge discipline
+        # above.
+        new_bloom = {
+            e: b for e, b in cur.get("bloom", {}).items() if e in new_parts
+        }
+        if not bloom_cols:
+            for e in written:
+                new_bloom.pop(e, None)
+        elif written:
+            for e in written:
+                add_b = st["blooms"].get(e)
+                if e in cur["partitions"] and e not in cur.get("bloom", {}):
+                    continue  # pre-existing unbloomed data: stay bloom-less
+                old_b = cur.get("bloom", {}).get(e)
+                if add_b is None:
+                    new_bloom.pop(e, None)
+                    continue
+                if old_b is None:
+                    new_bloom[e] = add_b  # brand-new entry
+                    continue
+                merged_b = {}
+                for c, sp in add_b.items():
+                    osp = old_b.get(c)
+                    if (
+                        osp
+                        and osp["m"] == sp["m"]
+                        and osp["k"] == sp["k"]
+                        and osp.get("t") == sp.get("t")
+                        # OR-merging bitmaps hashed under different
+                        # format versions would mix incompatible
+                        # probe spaces; a version mismatch drops
+                        # the column's bloom instead (conservative)
+                        and osp.get("v") == sp.get("v")
+                    ):
+                        ob = base64.b64decode(osp["bits"])
+                        nb = base64.b64decode(sp["bits"])
+                        merged_b[c] = {
+                            "m": sp["m"],
+                            "k": sp["k"],
+                            "t": sp["t"],
+                            "v": sp["v"],
+                            "bits": base64.b64encode(
+                                bytes(a | b for a, b in zip(ob, nb))
+                            ).decode("ascii"),
+                        }
+                if merged_b:
+                    new_bloom[e] = merged_b
+                else:
+                    new_bloom.pop(e, None)
+        return _next_manifest(
+            cur, "append", st["stage"],
+            partition_col=partition_col,
+            partitions=new_parts,
+            stats=new_stats,
+            bloom=new_bloom,
+            dir_schemas={st["stage"]: st["schema"] if written else None},
+        )
+
+    return _partition_batch_commit(
+        spark, table_dir, partition_col, batch_df, "append",
+        lambda written: written, successor,
+        batch_id=batch_id, audit=audit, stats_cols=stats_cols,
+        bloom_cols=bloom_cols, bloom_bits=bloom_bits,
+        bloom_hashes=bloom_hashes, n_partition_values=n_partition_values,
+    )
+
+
+def _partition_batch_commit(
+    spark: SparkSession,
+    table_dir: str,
+    partition_col: str,
+    batch_df: DataFrame,
+    op: str,
+    claim,
+    successor,
+    *,
+    batch_id: int | None,
+    audit,
+    stats_cols: list[str] | None,
+    bloom_cols: list[str] | None,
+    bloom_bits: int,
+    bloom_hashes: int,
+    n_partition_values: int | None,
+) -> set[str] | None:
+    """The stage / enforce / audit / rebase path APPEND and OVERWRITE
+    share. The batch stages once under physical names, hash-distributed
+    by the partition value (parallel writers, one file per value per
+    commit); CHECK constraints and the WAP ``audit`` gate the
+    staged rows; footer stats and blooms are collected once per stage.
+    ``claim(written)`` names the map entries the commit claims (None:
+    nothing to commit), and ``successor(cur, st)`` builds the manifest
+    from the kept stage ``st``.
+
+    A CAS loser keeps its stage and REBASES (Delta's logical conflict
+    resolution) when `_rebase_conflict` proves every commit since the
+    stage was last validated disjoint from the claimed entries and
+    spec-stable — re-validated per attempt from that base to the head
+    actually published on (ADVICE r08's TOCTOU close); otherwise the
+    stage is discarded and the transaction re-runs against the new base
+    (re-enforcing constraints, re-auditing). A rebase re-runs only the
+    audit: CHECK constraints are per-row predicates disjoint appends
+    cannot invalidate, but an audit may assert table-state invariants.
+    Overwrite audits even an empty stage (a deletion-only replaceWhere
+    must not skip its pipeline's gate, ADVICE r09). Returns the written
+    entries, or None when nothing was committed."""
     if bloom_cols:
         _check_bloom_spec(bloom_bits, bloom_hashes)
-    os.makedirs(table_dir, exist_ok=True)
     prefix = f"{partition_col}="
-    stage = stage_path = None
-    written: set[str] = set()
-    staged_stats: dict = {}
-    staged_blooms: dict = {}
-    # the table state the kept stage was last conflict-checked against
-    # (ADVICE r08): every retry iteration re-validates from here to the
-    # freshly-read head, so a commit landing in ANY read gap — not just
-    # the one immediately after a failed CAS — is conflict-checked
-    # before the stage re-manifests (Delta's per-attempt re-validation
-    # from the read version to the latest version)
-    validated_base: dict | None = None
-    try:
-        for _ in range(max_retries):
-            # hot path: newest manifest + checkpointed ledger (O(tail))
-            cur = current_commit(table_dir)
-            if cur["version"] == 0:
-                cur = {"version": 0, "partitions": {}}
-            elif "partitions" not in cur:
-                raise ValueError(
-                    f"{table_dir} is a single-dir committed table; "
-                    "use committed_transaction"
-                )
-            elif cur["partition_col"] != partition_col:
-                # the current SPEC owns the layout — after partition
-                # evolution an append with the old column would land data
-                # under the wrong dir names and corrupt the map
-                raise ValueError(
-                    f"{table_dir} is partitioned by "
-                    f"{cur['partition_col']!r}; append supplied "
-                    f"{partition_col!r}"
-                )
-            if batch_id is not None and batch_id in committed_batch_ids(
-                table_dir
-            ):
-                return None
-            if (
-                stage_path is not None
-                and cur["version"] > validated_base["version"]
-            ):
-                # per-attempt re-validation (TOCTOU close): commits that
-                # landed since the stage was last validated must prove
-                # disjoint+spec-stable or the stage is discarded and the
-                # whole transaction re-runs against the new base (which
-                # re-enforces the new constraints and re-audits)
-                if (
-                    _rebase_conflict(table_dir, validated_base, cur, written)
-                    is not None
-                ):
-                    shutil.rmtree(stage_path, ignore_errors=True)
-                    stage_path = None
-                else:
-                    validated_base = cur
-                    if audit is not None and written:
-                        # WAP audits may check TABLE-STATE invariants
-                        # (not just per-row predicates like constraints,
-                        # whose validity disjointness preserves) — so a
-                        # rebase re-runs the audit against the base it
-                        # will actually publish on. Cheap: the staged
-                        # files are immutable, nothing is re-written or
-                        # re-footer-scanned (r9 review).
-                        staged = _read_partition_map(
-                            spark,
-                            table_dir,
-                            {
-                                "partition_col": partition_col,
-                                "partitions": {
-                                    e: stage for e in sorted(written)
-                                },
-                                "dir_schemas": {stage: stage_schema},
-                            },
-                        )
-                        try:
-                            # audits are written against the table's
-                            # LOGICAL schema; the staged frame carries
-                            # physical names (r12 review sweep 2 #2)
-                            verdict = audit(_to_logical(staged, cur))
-                        except Exception:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise
-                        if not verdict:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise AuditError(
-                                f"audit rejected rebased batch for "
-                                f"{table_dir}; nothing published"
-                            )
-            if stage_path is None:
-                stage = f"data-{uuid.uuid4().hex}"
-                stage_path = os.path.join(table_dir, stage)
-                # logical -> stable physical names (column mapping); an
-                # old-name or dropped-name column is rejected here
-                # (hash-distributed by the partition value: guide §6,
-                # parallel writers + one file per value per commit)
-                phys = _to_physical_batch(batch_df, cur)
-                stage_schema = _file_schema_json(
-                    phys.schema, drop=partition_col
-                )
-                _distribute_for_partitioned_write(
-                    phys, partition_col, nvals=n_partition_values
-                ).write.mode(
-                    "overwrite"
-                ).partitionBy(partition_col).parquet(stage_path)
-                written = {
-                    n for n in os.listdir(stage_path) if n.startswith(prefix)
-                }
-                _check_entry_values(written)
-                if (audit is not None or cur.get("constraints")) and written:
-                    staged = _read_partition_map(
-                        spark,
-                        table_dir,
-                        {
-                            "partition_col": partition_col,
-                            "partitions": {e: stage for e in sorted(written)},
-                            "dir_schemas": {stage: stage_schema},
-                        },
-                    )
-                    _enforce_constraints(
-                        staged, cur.get("constraints"), stage_path,
-                        manifest=cur,
-                    )
-                    if audit is not None:
-                        try:
-                            # audits are written against the table's
-                            # LOGICAL schema; the staged frame carries
-                            # physical names (r12 review sweep 2 #2)
-                            verdict = audit(_to_logical(staged, cur))
-                        except Exception:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise
-                        if not verdict:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise AuditError(
-                                f"audit rejected staged batch for "
-                                f"{table_dir}; nothing published"
-                            )
-                # footer scans are per-stage facts: collect ONCE, reuse
-                # across rebase retries (the files never change)
-                staged_stats = (
-                    _collect_stage_stats(
-                        stage_path, written, _physical_names(stats_cols, cur)
-                    )
-                    if stats_cols and written
-                    else {}
-                )
-                staged_blooms = (
-                    _collect_stage_blooms(
-                        stage_path=stage_path, spark=spark,
-                        partition_col=partition_col, written=written,
-                        bloom_cols=_physical_names(bloom_cols, cur),
-                        m=bloom_bits, k=bloom_hashes,
-                        schema_json=stage_schema,
-                    )
-                    if bloom_cols and written
-                    else {}
-                )
-                # staging enforced constraints/audit against THIS state
-                validated_base = cur
-            new_parts = {e: v for e, v in cur["partitions"].items()}
-            for e in written:
-                new_parts[e] = (
-                    _entry_dirs(new_parts[e]) + [stage]
-                    if e in new_parts
-                    else stage
-                )
-            new_stats = {
-                e: s for e, s in cur.get("stats", {}).items() if e in new_parts
-            }
-            if not stats_cols:
-                # this append did not footer-scan: a written entry's
-                # carried bounds no longer cover its new generation, so
-                # keeping them would let pruning skip partitions that now
-                # hold matching rows. Drop them — stat-less = never
-                # pruned, always safe.
-                for e in written:
-                    new_stats.pop(e, None)
-            if stats_cols and written:
-                for e, add in staged_stats.items():
-                    if e in cur["partitions"] and e not in cur.get("stats", {}):
-                        continue  # pre-existing unstatted data: stay stat-less
-                    old = new_stats.get(e)
-                    if old is None:
-                        new_stats[e] = add
-                    else:
-                        # merge ONLY columns scanned on both sides: an old
-                        # column absent from this append's stats_cols was
-                        # never footer-scanned in the new files, so
-                        # carrying its bounds forward would claim coverage
-                        # of unscanned data — dishonest stats that make
-                        # pruning drop real rows. Dropped = stat-less =
-                        # never pruned.
-                        merged = {
-                            "n": old["n"] + add["n"], "cols": {}, "nulls": {}
-                        }
-                        for c in add["cols"]:
-                            if c in old["cols"]:
-                                lo = [old["cols"][c][0], add["cols"][c][0]]
-                                hi = [old["cols"][c][1], add["cols"][c][1]]
-                                lo = [x for x in lo if x is not None]
-                                hi = [x for x in hi if x is not None]
-                                merged["cols"][c] = [
-                                    min(lo) if lo else None,
-                                    max(hi) if hi else None,
-                                ]
-                        # null counts are additive, but only when KNOWN on
-                        # both sides — a side without the count (older
-                        # manifest, footer without stats) drops the column
-                        # (absent = never null-pruned, always safe)
-                        for c, k in add.get("nulls", {}).items():
-                            if c in old.get("nulls", {}):
-                                merged["nulls"][c] = old["nulls"][c] + k
-                        new_stats[e] = merged
-            # blooms: a set-union structure, so appends MERGE by OR-ing
-            # bitmaps — but only when both sides exist with the same
-            # (m, k); anything else drops the entry's bloom (bloom-less =
-            # never pruned), mirroring the stats drop-or-merge discipline
-            # above.
-            new_bloom = {
-                e: b for e, b in cur.get("bloom", {}).items() if e in new_parts
-            }
-            if not bloom_cols:
-                for e in written:
-                    new_bloom.pop(e, None)
-            elif written:
-                for e in written:
-                    add_b = staged_blooms.get(e)
-                    if e in cur["partitions"] and e not in cur.get("bloom", {}):
-                        continue  # pre-existing unbloomed data: stay bloom-less
-                    old_b = cur.get("bloom", {}).get(e)
-                    if add_b is None:
-                        new_bloom.pop(e, None)
-                        continue
-                    if old_b is None:
-                        new_bloom[e] = add_b  # brand-new entry
-                        continue
-                    merged_b = {}
-                    for c, sp in add_b.items():
-                        osp = old_b.get(c)
-                        if (
-                            osp
-                            and osp["m"] == sp["m"]
-                            and osp["k"] == sp["k"]
-                            and osp.get("t") == sp.get("t")
-                            # OR-merging bitmaps hashed under different
-                            # format versions would mix incompatible
-                            # probe spaces; a version mismatch drops
-                            # the column's bloom instead (conservative)
-                            and osp.get("v") == sp.get("v")
-                        ):
-                            ob = base64.b64decode(osp["bits"])
-                            nb = base64.b64decode(sp["bits"])
-                            merged_b[c] = {
-                                "m": sp["m"],
-                                "k": sp["k"],
-                                "t": sp["t"],
-                                "v": sp["v"],
-                                "bits": base64.b64encode(
-                                    bytes(a | b for a, b in zip(ob, nb))
-                                ).decode("ascii"),
-                            }
-                    if merged_b:
-                        new_bloom[e] = merged_b
-                    else:
-                        new_bloom.pop(e, None)
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
+    # the kept stage: name, file schema, written and claimed entries,
+    # footer stats/blooms, and the table state it was last validated on
+    st: dict = {}
+
+    def staged_frame() -> DataFrame:
+        if not st["written"]:
+            return batch_df.limit(0)
+        return _read_partition_map(
+            spark,
+            table_dir,
+            {
                 "partition_col": partition_col,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "append",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            if cur.get("legacy_layouts"):
-                manifest["legacy_layouts"] = cur["legacy_layouts"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            _note_dir_schemas(
-                manifest, cur, {stage: stage_schema if written else None}
-            )
-            if _publish(
-                table_dir, manifest, stage_path, keep_stage_on_conflict=True
-            ):
-                stage_path = None  # published: the stage is live table data
-                return written
-            # CAS lost. Keep the stage; the NEXT iteration's top-of-loop
-            # re-validation decides rebase vs discard against the head it
-            # will actually manifest on (checking an intermediate head
-            # here would leave commits landing after it unchecked —
-            # ADVICE r08's TOCTOU).
-        raise RuntimeError(
-            f"commit conflict persisted for {max_retries} retries on "
-            f"{table_dir}"
+                "partitions": {e: st["stage"] for e in sorted(st["written"])},
+                "dir_schemas": {st["stage"]: st["schema"]},
+            },
         )
-    finally:
-        # give-up / audit-failure cleanup: an unpublished stage must not
-        # leak (published stages reset stage_path above)
-        if stage_path is not None:
-            shutil.rmtree(stage_path, ignore_errors=True)
+
+    def run_audit(cur: dict, staged: DataFrame, what: str) -> None:
+        if audit is None or not (st["written"] or op == "overwrite"):
+            return
+        # audits are written against the table's LOGICAL schema; the
+        # staged frame carries physical names (r12 review sweep 2 #2)
+        if not audit(_to_logical(staged, cur)):
+            raise AuditError(
+                f"audit rejected {what} {op} for {table_dir}; nothing "
+                "published"
+            )
+
+    def rebase(cur: dict) -> bool:
+        if cur["version"] <= st["base"]["version"]:
+            return True
+        if _rebase_conflict(table_dir, st["base"], cur, st["claimed"]):
+            st.clear()
+            return False
+        st["base"] = cur
+        run_audit(cur, staged_frame(), "rebased")
+        return True
+
+    def attempt(cur, new_stage):
+        if cur["version"] == 0:
+            cur = {"version": 0, "partitions": {}}
+        elif "partitions" not in cur:
+            raise ValueError(
+                f"{table_dir} is a single-dir committed table; "
+                "use committed_transaction"
+            )
+        elif cur["partition_col"] != partition_col:
+            # the current SPEC owns the layout — after partition
+            # evolution a write with the old column would land data
+            # under the wrong dir names and corrupt the map
+            raise ValueError(
+                f"{table_dir} is partitioned by "
+                f"{cur['partition_col']!r}; {op} supplied "
+                f"{partition_col!r}"
+            )
+        if op == "overwrite" and cur.get("legacy_layouts"):
+            raise ValueError(
+                f"{table_dir} has unmigrated legacy partition "
+                "layouts; an overwrite computed against the current "
+                "layout would leave replaced values' legacy rows "
+                "readable — run migrate_legacy_layouts first"
+            )
+        if st:
+            return successor(cur, st)
+        stage = new_stage()
+        stage_path = os.path.join(table_dir, stage)
+        # logical -> stable physical names (column mapping); an
+        # old-name or dropped-name column is rejected here
+        phys = _to_physical_batch(batch_df, cur)
+        _distribute_for_partitioned_write(
+            phys, partition_col, nvals=n_partition_values
+        ).write.mode("overwrite").partitionBy(partition_col).parquet(
+            stage_path
+        )
+        written = {n for n in os.listdir(stage_path) if n.startswith(prefix)}
+        _check_entry_values(written)
+        claimed = claim(written)
+        if claimed is None:
+            return None
+        st.update(
+            stage=stage, written=written, claimed=claimed, base=cur,
+            schema=_file_schema_json(phys.schema, drop=partition_col),
+        )
+        if (written and cur.get("constraints")) or audit is not None:
+            staged = staged_frame()
+            if written:
+                _enforce_constraints(
+                    staged, cur.get("constraints"), manifest=cur
+                )
+            run_audit(cur, staged, "staged")
+        # footer scans are per-stage facts: collect ONCE, reuse across
+        # rebase attempts (the files never change)
+        st["stats"] = (
+            _collect_stage_stats(
+                stage_path, written, _physical_names(stats_cols, cur)
+            )
+            if stats_cols and written
+            else {}
+        )
+        st["blooms"] = (
+            _collect_stage_blooms(
+                stage_path=stage_path, spark=spark,
+                partition_col=partition_col, written=written,
+                bloom_cols=_physical_names(bloom_cols, cur),
+                m=bloom_bits, k=bloom_hashes, schema_json=st["schema"],
+            )
+            if bloom_cols and written
+            else {}
+        )
+        return successor(cur, st)
+
+    if transact(table_dir, attempt, batch_id=batch_id, rebase=rebase):
+        return st["written"]
+    return None
 
 
 def overwrite_partition_transaction(
@@ -1824,7 +1813,6 @@ def overwrite_partition_transaction(
     replace_where: list[str] | None = None,
     stats_cols: list[str] | None = None,
     batch_id: int | None = None,
-    max_retries: int = 10,
     audit=None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = _BLOOM_BITS,
@@ -1875,254 +1863,67 @@ def overwrite_partition_transaction(
     a real write-write conflict (the overwrite would silently erase
     it): the stage is discarded and the transaction re-runs, exactly
     Delta's ConcurrentAppendException-then-retry."""
-    if bloom_cols:
-        _check_bloom_spec(bloom_bits, bloom_hashes)
-    os.makedirs(table_dir, exist_ok=True)
     prefix = f"{partition_col}="
     if replace_where is not None:
         claimed = {f"{prefix}{v}" for v in replace_where}
         _check_entry_values(claimed)
         if not claimed:
             return  # replace nothing = no-op
-    stage = stage_path = None
-    written: set[str] = set()
-    replaced: set[str] = set()
-    staged_stats: dict = {}
-    staged_blooms: dict = {}
-    validated_base: dict | None = None
-    try:
-        for _ in range(max_retries):
-            cur = current_commit(table_dir)
-            if cur["version"] == 0:
-                cur = {"version": 0, "partitions": {}}
-            elif "partitions" not in cur:
-                raise ValueError(
-                    f"{table_dir} is a single-dir committed table; "
-                    "use committed_transaction"
-                )
-            elif cur["partition_col"] != partition_col:
-                raise ValueError(
-                    f"{table_dir} is partitioned by "
-                    f"{cur['partition_col']!r}; overwrite supplied "
-                    f"{partition_col!r}"
-                )
-            if cur.get("legacy_layouts"):
-                raise ValueError(
-                    f"{table_dir} has unmigrated legacy partition "
-                    "layouts; an overwrite computed against the current "
-                    "layout would leave replaced values' legacy rows "
-                    "readable — run migrate_legacy_layouts first"
-                )
-            if batch_id is not None and batch_id in committed_batch_ids(
-                table_dir
-            ):
-                return
-            if (
-                stage_path is not None
-                and cur["version"] > validated_base["version"]
-            ):
-                # per-attempt re-validation, same TOCTOU discipline as
-                # the append path — checked against the entries this
-                # overwrite REPLACES
-                if (
-                    _rebase_conflict(table_dir, validated_base, cur, replaced)
-                    is not None
-                ):
-                    shutil.rmtree(stage_path, ignore_errors=True)
-                    stage_path = None
-                else:
-                    validated_base = cur
-                    if audit is not None:
-                        # deletion-only batches (written empty) audit an
-                        # empty staged frame — an audited pipeline must
-                        # not be able to delete partitions un-audited
-                        # (ADVICE r09)
-                        staged = (
-                            _read_partition_map(
-                                spark,
-                                table_dir,
-                                {
-                                    "partition_col": partition_col,
-                                    "partitions": {
-                                        e: stage for e in sorted(written)
-                                    },
-                                    "dir_schemas": {stage: stage_schema},
-                                },
-                            )
-                            if written
-                            else batch_df.limit(0)
-                        )
-                        try:
-                            # audits are written against the table's
-                            # LOGICAL schema; the staged frame carries
-                            # physical names (r12 review sweep 2 #2)
-                            verdict = audit(_to_logical(staged, cur))
-                        except Exception:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise
-                        if not verdict:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise AuditError(
-                                f"audit rejected rebased overwrite for "
-                                f"{table_dir}; nothing published"
-                            )
-            if stage_path is None:
-                stage = f"data-{uuid.uuid4().hex}"
-                stage_path = os.path.join(table_dir, stage)
-                # logical -> stable physical names (column mapping); an
-                # old-name or dropped-name column is rejected here
-                # (hash-distributed by the partition value: guide §6,
-                # parallel writers + one file per value per commit)
-                phys = _to_physical_batch(batch_df, cur)
-                stage_schema = _file_schema_json(
-                    phys.schema, drop=partition_col
-                )
-                _distribute_for_partitioned_write(
-                    phys, partition_col, nvals=n_partition_values
-                ).write.mode(
-                    "overwrite"
-                ).partitionBy(partition_col).parquet(stage_path)
-                written = {
-                    n for n in os.listdir(stage_path) if n.startswith(prefix)
-                }
-                _check_entry_values(written)
-                if replace_where is None:
-                    if not written:
-                        return  # dynamic overwrite of nothing: no-op
-                    replaced = set(written)
-                else:
-                    outside = written - claimed
-                    if outside:
-                        raise ValueError(
-                            f"batch rows land outside replace_where "
-                            f"{sorted(replace_where)}: "
-                            f"{sorted(outside)[:3]} — Delta's "
-                            "predicate-containment contract; widen "
-                            "replace_where or filter the batch"
-                        )
-                    replaced = set(claimed)
-                if (cur.get("constraints") and written) or audit is not None:
-                    # constraints are per-row (nothing to enforce on an
-                    # empty batch); the audit ALWAYS runs when provided —
-                    # a deletion-only replaceWhere must not skip the gate
-                    # its pipeline configured (ADVICE r09), so it audits
-                    # an empty staged frame in the batch's schema
-                    staged = (
-                        _read_partition_map(
-                            spark,
-                            table_dir,
-                            {
-                                "partition_col": partition_col,
-                                "partitions": {
-                                    e: stage for e in sorted(written)
-                                },
-                                "dir_schemas": {stage: stage_schema},
-                            },
-                        )
-                        if written
-                        else batch_df.limit(0)
-                    )
-                    if written:
-                        _enforce_constraints(
-                            staged, cur.get("constraints"), stage_path,
-                            manifest=cur,
-                        )
-                    if audit is not None:
-                        try:
-                            # audits are written against the table's
-                            # LOGICAL schema; the staged frame carries
-                            # physical names (r12 review sweep 2 #2)
-                            verdict = audit(_to_logical(staged, cur))
-                        except Exception:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise
-                        if not verdict:
-                            shutil.rmtree(stage_path, ignore_errors=True)
-                            stage_path = None
-                            raise AuditError(
-                                f"audit rejected staged overwrite for "
-                                f"{table_dir}; nothing published"
-                            )
-                staged_stats = (
-                    _collect_stage_stats(
-                        stage_path, written, _physical_names(stats_cols, cur)
-                    )
-                    if stats_cols and written
-                    else {}
-                )
-                staged_blooms = (
-                    _collect_stage_blooms(
-                        stage_path=stage_path, spark=spark,
-                        partition_col=partition_col, written=written,
-                        bloom_cols=_physical_names(bloom_cols, cur),
-                        m=bloom_bits, k=bloom_hashes,
-                        schema_json=stage_schema,
-                    )
-                    if bloom_cols and written
-                    else {}
-                )
-                validated_base = cur
-            # REPLACE semantics: replaced entries point at the stage
-            # alone (or vanish when the batch holds no rows for them);
-            # everything else carries forward. Stats/blooms follow the
-            # same replace-don't-merge rule.
-            new_parts = {
-                e: v
-                for e, v in cur["partitions"].items()
-                if e not in replaced
-            }
-            for e in written:
-                new_parts[e] = stage
-            new_stats = {
-                e: s for e, s in cur.get("stats", {}).items() if e in new_parts
-            }
-            for e in replaced:
-                new_stats.pop(e, None)
-            if stats_cols:
-                new_stats.update(staged_stats)
-            new_bloom = {
-                e: b
-                for e, b in cur.get("bloom", {}).items()
-                if e in new_parts and e not in replaced
-            }
-            if bloom_cols:
-                new_bloom.update(staged_blooms)
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": partition_col,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "overwrite",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            _note_dir_schemas(
-                manifest, cur, {stage: stage_schema if written else None}
+
+    def claim(written: set[str]) -> set[str] | None:
+        if replace_where is None:
+            return set(written) or None  # dynamic overwrite of nothing
+        outside = written - claimed
+        if outside:
+            raise ValueError(
+                f"batch rows land outside replace_where "
+                f"{sorted(replace_where)}: "
+                f"{sorted(outside)[:3]} — Delta's "
+                "predicate-containment contract; widen "
+                "replace_where or filter the batch"
             )
-            if _publish(
-                table_dir, manifest, stage_path, keep_stage_on_conflict=True
-            ):
-                stage_path = None
-                return
-        raise RuntimeError(
-            f"commit conflict persisted for {max_retries} retries on "
-            f"{table_dir}"
+        return claimed
+
+    def successor(cur: dict, st: dict) -> dict:
+        # REPLACE semantics: replaced entries point at the stage alone
+        # (or vanish when the batch holds no rows for them); everything
+        # else carries forward. Stats/blooms follow the same
+        # replace-don't-merge rule.
+        replaced = st["claimed"]
+        new_parts = {
+            e: v for e, v in cur["partitions"].items() if e not in replaced
+        }
+        new_parts.update({e: st["stage"] for e in st["written"]})
+        new_stats = {
+            e: s
+            for e, s in cur.get("stats", {}).items()
+            if e in new_parts and e not in replaced
+        }
+        new_stats.update(st["stats"])
+        new_bloom = {
+            e: b
+            for e, b in cur.get("bloom", {}).items()
+            if e in new_parts and e not in replaced
+        }
+        new_bloom.update(st["blooms"])
+        return _next_manifest(
+            cur, "overwrite", st["stage"],
+            partition_col=partition_col,
+            partitions=new_parts,
+            stats=new_stats,
+            bloom=new_bloom,
+            dir_schemas={
+                st["stage"]: st["schema"] if st["written"] else None
+            },
         )
-    finally:
-        if stage_path is not None:
-            shutil.rmtree(stage_path, ignore_errors=True)
+
+    _partition_batch_commit(
+        spark, table_dir, partition_col, batch_df, "overwrite",
+        claim, successor,
+        batch_id=batch_id, audit=audit, stats_cols=stats_cols,
+        bloom_cols=bloom_cols, bloom_bits=bloom_bits,
+        bloom_hashes=bloom_hashes, n_partition_values=n_partition_values,
+    )
 
 
 def land_stream_to_partitioned_table(
@@ -2366,7 +2167,6 @@ def tombstone_keys(
     key_col: str | list[str],
     keys_df: DataFrame,
     batch_id: int | None = None,
-    max_retries: int = 10,
 ) -> None:
     """MERGE-ON-READ DELETE for a partition-mapped table — the deletion-
     vector trade: instead of rewriting every affected partition (the
@@ -2387,10 +2187,9 @@ def tombstone_keys(
     ``key_col`` may be a list for a COMPOSITE natural key (VERDICT r10
     #2): the dv file then carries key TUPLES and every read anti-joins
     on all columns."""
-    os.makedirs(table_dir, exist_ok=True)
     kcols = [key_col] if isinstance(key_col, str) else list(key_col)
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
@@ -2415,10 +2214,7 @@ def tombstone_keys(
                 f"{table_dir}; tombstone on the current physical names "
                 "or rewrite the table"
             )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
+        stage = new_stage()
         # NULL key components are dropped, not recorded: the read-side
         # anti-join on NULL matches nothing (SQL equality), so a NULL
         # tombstone hides no row — recording it would only poison the
@@ -2427,28 +2223,15 @@ def tombstone_keys(
         for k in kcols:
             not_null = not_null & F.col(k).isNotNull()
         dvf = keys_df.select(*kcols).filter(not_null).distinct()
-        dvf.write.mode("overwrite").parquet(stage_path)
-        manifest = {
-            k: cur[k]
-            for k in (
-                "partition_col", "partitions", "stats", "bloom",
-                "constraints", "legacy_layouts",
-                "column_map", "dropped_columns",
-            )
-            if k in cur
-        }
-        manifest["version"] = cur["version"] + 1
-        manifest["dir"] = stage
-        manifest["dv"] = cur.get("dv", []) + [stage]
-        manifest["dv_key"] = _dv_key_field(kcols)
-        manifest["batch_ids"] = [batch_id] if batch_id is not None else []
-        manifest["op"] = "delete"
-        _note_dir_schemas(
-            manifest, cur, {stage: _file_schema_json(dvf.schema)}
+        dvf.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
+        return _next_manifest(
+            cur, "delete", stage,
+            dv=cur.get("dv", []) + [stage],
+            dv_key=_dv_key_field(kcols),
+            dir_schemas={stage: _file_schema_json(dvf.schema)},
         )
-        if _publish(table_dir, manifest, stage_path):
-            return
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+
+    transact(table_dir, attempt, batch_id=batch_id)
 
 
 _SCHEMA_MAP_KEYS = ("column_map", "dropped_columns")
@@ -2472,16 +2255,6 @@ def _is_materialize(by_v: dict, m: dict) -> bool:
     earlier = [k for k in by_v if k < m["version"]]
     prev = by_v[max(earlier)] if earlier else {}
     return _map_meta(m) != _map_meta(prev)
-
-
-def _carry_column_map(manifest: dict, cur: dict) -> None:
-    """Carry the column-mapping metadata (logical→physical rename map +
-    dropped physical names) forward onto a new manifest — every commit
-    that doesn't deliberately change the mapping must preserve it, or a
-    compaction/append would silently un-rename the table."""
-    for k in _SCHEMA_MAP_KEYS:
-        if cur.get(k):
-            manifest[k] = cur[k]
 
 
 def _check_map_stable(
@@ -2735,14 +2508,14 @@ def evolve_partition_column(
     when (if ever) the rewrite cost is worth paying. Returns the new
     version. Metadata-only commit: the change feed emits nothing for
     it."""
-    for _ in range(10):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
             )
         if cur["partition_col"] == new_partition_col:
-            return cur["version"]  # already that spec: no-op
+            return None  # already that spec: no-op
         cmap = _column_map(cur)
         if (
             new_partition_col in cmap
@@ -2756,39 +2529,27 @@ def evolve_partition_column(
                 f"{new_partition_col!r} is renamed or dropped in "
                 f"{table_dir}; materialize_column_mapping first"
             )
-        legacy = list(cur.get("legacy_layouts", []))
         old = {
             "partition_col": cur["partition_col"],
             "partitions": cur["partitions"],
         }
-        if cur.get("stats"):
-            old["stats"] = cur["stats"]
-        if cur.get("bloom"):
-            old["bloom"] = cur["bloom"]
-        legacy.append(old)
-        stage = f"data-{uuid.uuid4().hex}"
-        os.makedirs(os.path.join(table_dir, stage), exist_ok=True)
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "partition_col": new_partition_col,
-            "partitions": {},
-            "legacy_layouts": legacy,
-            "batch_ids": [],
-            "op": "evolve",
-        }
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        _carry_column_map(manifest, cur)
-        if cur.get("dv"):
-            # outstanding tombstones survive the spec change — dropping
-            # them here would resurrect deleted rows on the next read
-            manifest["dv"] = cur["dv"]
-            manifest["dv_key"] = cur["dv_key"]
-        _note_dir_schemas(manifest, cur)
-        if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
-            return manifest["version"]
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+        for k in ("stats", "bloom"):
+            if cur.get(k):
+                old[k] = cur[k]
+        # the current layout's stats/blooms move into its legacy entry;
+        # outstanding tombstones survive the spec change (dropping them
+        # would resurrect deleted rows on the next read)
+        return _next_manifest(
+            cur, "evolve", _empty_stage(table_dir, new_stage),
+            partition_col=new_partition_col,
+            partitions={},
+            legacy_layouts=list(cur.get("legacy_layouts", [])) + [old],
+            stats=None,
+            bloom=None,
+        )
+
+    m = transact(table_dir, attempt)
+    return (m or current_commit(table_dir))["version"]
 
 
 def _logical_columns(spark: SparkSession, cur: dict, table_dir: str) -> list:
@@ -2831,7 +2592,6 @@ def _check_mappable(cur: dict, col: str, action: str) -> None:
 
 def rename_column(
     spark: SparkSession, table_dir: str, old: str, new: str,
-    max_retries: int = 10,
 ) -> int:
     """RENAME COLUMN without rewriting a byte (Delta's column mapping,
     mode=name): a metadata-only ``op: "evolve"`` commit records the
@@ -2847,8 +2607,8 @@ def rename_column(
     new version."""
     if not old or not new or old == new:
         raise ValueError(f"rename {old!r} -> {new!r} is not a rename")
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
@@ -2886,31 +2646,15 @@ def rename_column(
             )
         if new != phys:
             cmap[new] = phys
-        stage = f"data-{uuid.uuid4().hex}"
-        os.makedirs(os.path.join(table_dir, stage), exist_ok=True)
-        manifest = {
-            k: cur[k]
-            for k in (
-                "partition_col", "partitions", "stats", "bloom",
-                "constraints", "legacy_layouts", "dv", "dv_key",
-                "dropped_columns", "dir_schemas",
-            )
-            if k in cur
-        }
-        manifest["version"] = cur["version"] + 1
-        manifest["dir"] = stage
-        manifest["batch_ids"] = []
-        manifest["op"] = "evolve"
-        if cmap:
-            manifest["column_map"] = cmap
-        if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
-            return manifest["version"]
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+        return _next_manifest(
+            cur, "evolve", _empty_stage(table_dir, new_stage),
+            column_map=cmap,
+        )
+
+    return transact(table_dir, attempt)["version"]
 
 
-def drop_column(
-    spark: SparkSession, table_dir: str, col: str, max_retries: int = 10,
-) -> int:
+def drop_column(spark: SparkSession, table_dir: str, col: str) -> int:
     """DROP COLUMN without rewriting a byte (Delta column mapping): a
     metadata-only ``op: "evolve"`` commit records the column's PHYSICAL
     name as dropped — its data stays in every file, reads and feeds
@@ -2920,8 +2664,8 @@ def drop_column(
     retained data; id-based mapping would — disclosed boundary). Same
     refusals as `rename_column` for the partition/dv/constraint
     columns. Returns the new version."""
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
@@ -2938,28 +2682,13 @@ def drop_column(
         _check_mappable(cur, col, "drop")
         cmap = dict(_column_map(cur))
         phys = cmap.pop(col, col)
-        dropped = sorted(_dropped_physical(cur) | {phys})
-        stage = f"data-{uuid.uuid4().hex}"
-        os.makedirs(os.path.join(table_dir, stage), exist_ok=True)
-        manifest = {
-            k: cur[k]
-            for k in (
-                "partition_col", "partitions", "stats", "bloom",
-                "constraints", "legacy_layouts", "dv", "dv_key",
-                "dir_schemas",
-            )
-            if k in cur
-        }
-        manifest["version"] = cur["version"] + 1
-        manifest["dir"] = stage
-        manifest["batch_ids"] = []
-        manifest["op"] = "evolve"
-        manifest["dropped_columns"] = dropped
-        if cmap:
-            manifest["column_map"] = cmap
-        if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
-            return manifest["version"]
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+        return _next_manifest(
+            cur, "evolve", _empty_stage(table_dir, new_stage),
+            dropped_columns=sorted(_dropped_physical(cur) | {phys}),
+            column_map=cmap,
+        )
+
+    return transact(table_dir, attempt)["version"]
 
 
 def materialize_column_mapping(
@@ -3008,9 +2737,8 @@ def migrate_legacy_layouts(
     this, rewrite transactions (erasure, compaction of all data) see
     the whole table again. Returns the new version, or None when there
     was nothing to migrate."""
-    prefix_err = "legacy rows lack the current partition column"
-    for _ in range(10):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         legacy = cur.get("legacy_layouts", [])
         if not legacy:
             return None
@@ -3022,25 +2750,24 @@ def migrate_legacy_layouts(
                 old_rows = part if old_rows is None else old_rows.unionByName(
                     part, allowMissingColumns=True
                 )
+        written: set[str] = set()
+        new_parts = dict(cur["partitions"])
         if old_rows is None:
-            new_parts = dict(cur["partitions"])
-            written: set[str] = set()
-            stage = f"data-{uuid.uuid4().hex}"
-            os.makedirs(os.path.join(table_dir, stage), exist_ok=True)
+            stage = _empty_stage(table_dir, new_stage)
         else:
             if pcol not in old_rows.columns:
-                raise ValueError(f"{prefix_err}: {pcol}")
-            stage = f"data-{uuid.uuid4().hex}"
+                raise ValueError(
+                    f"legacy rows lack the current partition column: {pcol}"
+                )
+            stage = new_stage()
             stage_path = os.path.join(table_dir, stage)
             old_rows.write.mode("overwrite").partitionBy(pcol).parquet(
                 stage_path
             )
-            prefix = f"{pcol}="
             written = {
-                n for n in os.listdir(stage_path) if n.startswith(prefix)
+                n for n in os.listdir(stage_path) if n.startswith(f"{pcol}=")
             }
             _check_entry_values(written)
-            new_parts = {e: v for e, v in cur["partitions"].items()}
             for e in written:
                 new_parts[e] = (
                     _entry_dirs(new_parts[e]) + [stage]
@@ -3068,34 +2795,21 @@ def migrate_legacy_layouts(
                     new_stats[e] = add
                 else:
                     new_stats.pop(e, None)  # conservative: re-scan later
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "partition_col": pcol,
-            "partitions": new_parts,
-            "batch_ids": [],
-            "op": "migrate",
-        }
-        if new_stats:
-            manifest["stats"] = new_stats
-        if cur.get("constraints"):
-            manifest["constraints"] = cur["constraints"]
-        _carry_column_map(manifest, cur)
-        if cur.get("dv"):
-            manifest["dv"] = cur["dv"]
-            manifest["dv_key"] = cur["dv_key"]
-        _note_dir_schemas(
-            manifest,
-            cur,
-            {
+        return _next_manifest(
+            cur, "migrate", stage,
+            partitions=new_parts,
+            stats=new_stats,
+            bloom=None,
+            legacy_layouts=None,
+            dir_schemas={
                 stage: _file_schema_json(old_rows.schema, drop=pcol)
-                if old_rows is not None and written
+                if written
                 else None
             },
         )
-        if _publish(table_dir, manifest, os.path.join(table_dir, stage)):
-            return manifest["version"]
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+
+    m = transact(table_dir, attempt)
+    return m["version"] if m else None
 
 
 def clone_table_shallow(
@@ -3114,7 +2828,7 @@ def clone_table_shallow(
     deep-copy by reading+landing when that matters). Cloning a
     specific ``version`` time-travels the clone's starting point."""
     if version is None:
-        src = current_commit(src_dir)  # O(1): hint + newest manifest
+        src = current_commit(src_dir)  # O(1): the newest manifest
     else:
         src = next(
             (m for m in table_history(src_dir) if m["version"] == version),
@@ -3128,44 +2842,44 @@ def clone_table_shallow(
         raise ValueError(
             "shallow clone supports plain partition-mapped tables"
         )
-    os.makedirs(dest_dir, exist_ok=True)
-    # "empty" must mean NO commit history at all — the version-1 CAS
-    # alone would succeed on an existing table whose early manifests
-    # were vacuumed, silently splicing a foreign v1 into its history
-    if current_commit(dest_dir)["version"] != 0 or _manifest_names(dest_dir):
-        raise ValueError(f"clone target {dest_dir} is not an empty table")
     src_abs = os.path.abspath(src_dir)
 
     def _ref(d: str) -> str:
         return os.path.join(src_abs, d)
 
-    manifest = {
-        "version": 1,
-        "dir": f"data-{uuid.uuid4().hex}",
-        "partition_col": src["partition_col"],
-        "partitions": {
-            e: [_ref(d) for d in _entry_dirs(v)]
-            for e, v in src["partitions"].items()
-        },
-        "batch_ids": [],
-        "op": "clone",
-    }
-    for k in (
-        "stats", "bloom", "constraints", "column_map", "dropped_columns",
-    ):
-        if src.get(k):
-            manifest[k] = src[k]
-    if src.get("dv"):
-        manifest["dv"] = [_ref(d) for d in src["dv"]]
-        manifest["dv_key"] = src["dv_key"]
-    if src.get("dir_schemas"):
-        # schemas follow their dirs — keyed by the clone's absolute refs
-        manifest["dir_schemas"] = {
-            _ref(d): s for d, s in src["dir_schemas"].items()
+    def attempt(cur, new_stage):
+        # "empty" must mean NO commit history at all — the version-1 CAS
+        # alone would succeed on an existing table whose early manifests
+        # were vacuumed, silently splicing a foreign v1 into its history
+        if cur["version"] != 0 or _manifest_names(dest_dir):
+            raise ValueError(f"clone target {dest_dir} is not an empty table")
+        manifest = {
+            "version": 1,
+            "dir": _empty_stage(dest_dir, new_stage),
+            "partition_col": src["partition_col"],
+            "partitions": {
+                e: [_ref(d) for d in _entry_dirs(v)]
+                for e, v in src["partitions"].items()
+            },
+            "batch_ids": [],
+            "op": "clone",
         }
-    os.makedirs(os.path.join(dest_dir, manifest["dir"]), exist_ok=True)
-    if not _publish(dest_dir, manifest, os.path.join(dest_dir, manifest["dir"])):
-        raise RuntimeError(f"clone target {dest_dir} is not empty")
+        for k in (
+            "stats", "bloom", "constraints", "column_map", "dropped_columns",
+        ):
+            if src.get(k):
+                manifest[k] = src[k]
+        if src.get("dv"):
+            manifest["dv"] = [_ref(d) for d in src["dv"]]
+            manifest["dv_key"] = src["dv_key"]
+        if src.get("dir_schemas"):
+            # schemas follow their dirs — keyed by the clone's absolute refs
+            manifest["dir_schemas"] = {
+                _ref(d): s for d, s in src["dir_schemas"].items()
+            }
+        return manifest
+
+    transact(dest_dir, attempt)
     return 1
 
 
@@ -3200,37 +2914,29 @@ def restore_table_version(table_dir: str, version: int) -> int:
             f"version {version} data was vacuumed ({gone[0]} missing); "
             "restore is impossible"
         )
-    for _ in range(10):
-        cur = current_commit(table_dir)
-        manifest = {
-            k: v
-            for k, v in target.items()
-            if k in (
-                "dir", "partition_col", "partitions", "stats", "bloom",
-                "constraints", "mor", "dirs", "legacy_layouts", "dv",
-                "dv_key", "column_map", "dropped_columns", "dir_schemas",
-            )
-        }
-        manifest["version"] = cur["version"] + 1
-        manifest["batch_ids"] = []
-        manifest["op"] = "restore"
-        if try_commit(table_dir, manifest):
-            # re-verify AFTER the commit: a vacuum running concurrently
-            # could have deleted the target's dirs between our check
-            # and the CAS (it cannot see this manifest yet). Raising is
-            # loud and actionable — restore again to a live version —
-            # where silence would leave a head pointing at dead data.
-            gone = _missing_dirs()
-            if gone:
-                raise RuntimeError(
-                    f"restore of version {version} raced a vacuum "
-                    f"({gone[0]} deleted after commit); restore the "
-                    "table to a live version"
-                )
-            _write_hint(table_dir, manifest)
-            _maybe_checkpoint_ledger(table_dir, manifest["version"])
-            return manifest["version"]
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+
+    def attempt(cur, new_stage):
+        # stage-less: the restored state's dirs are committed already
+        m = _next_manifest(target, "restore", target["dir"])
+        m["version"] = cur["version"] + 1
+        return m
+
+    manifest = transact(table_dir, attempt)
+    # re-verify AFTER the commit: a vacuum running concurrently could
+    # have deleted the target's dirs between our check and the CAS (it
+    # cannot see this manifest yet). Raising is loud and actionable —
+    # restore again to a live version — where silence would leave a
+    # head pointing at dead data.
+    gone = _missing_dirs()
+    if gone:
+        raise RuntimeError(
+            f"restore of version {version} raced a vacuum "
+            f"({gone[0]} deleted after commit); restore the "
+            "table to a live version"
+        )
+    _write_hint(table_dir, manifest)
+    _maybe_checkpoint_ledger(table_dir, manifest["version"])
+    return manifest["version"]
 
 
 def vacuum_versions(
@@ -3379,8 +3085,7 @@ def vacuum_uncommitted(table_dir: str, grace_sec: float = 3600.0) -> list[str]:
 
 def table_history(table_dir: str) -> list[dict]:
     """All committed manifests, oldest first — the audit trail a real
-    table format exposes as DESCRIBE HISTORY. Empty for legacy
-    pointer-only tables (their history was overwritten in place)."""
+    table format exposes as DESCRIBE HISTORY."""
     out = []
     for n in _manifest_names(table_dir):
         m = _read_json(os.path.join(table_dir, _COMMITS, n))
@@ -4330,9 +4035,6 @@ def read_keyed_table(
                     os.path.join(table_dir, m["dir"]),
                     schema_json=_dir_schema(m, m["dir"]),
                 )
-        legacy = os.path.join(table_dir, f"v{version}")
-        if os.path.isdir(legacy):
-            return _read_parquet_fast(spark, legacy)
         raise ValueError(f"version {version} not committed in {table_dir}")
     cur = current_commit(table_dir)
     if cur["version"] == 0:
@@ -4458,7 +4160,6 @@ def merge_into_table(
     when_not_matched_by_source_delete: str | bool | None = None,
     stats_cols: list[str] | None = None,
     batch_id: int | None = None,
-    max_retries: int = 10,
     evolve_schema: bool = False,
     when_matched: list | None = None,
     when_not_matched_by_source: list | None = None,
@@ -4693,8 +4394,9 @@ def merge_into_table(
     if not (has_matched or has_insert or by_source):
         raise ValueError("merge_into_table needs at least one clause")
 
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+    res: dict = {}  # the no-commit answer, or the committed counts
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0:
             raise ValueError(
                 f"{table_dir} has no commits; a merge into an empty table "
@@ -4728,9 +4430,6 @@ def merge_into_table(
                 f"on {keys!r} (physical {pkeys!r}) cannot maintain the "
                 "deletion vectors — materialize_tombstones first"
             )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return {"version": cur["version"], "updated": 0, "deleted": 0,
-                    "inserted": 0, "carried": 0, "replayed": True}
         pcol = cur["partition_col"]
         prefix = f"{pcol}="
 
@@ -5065,7 +4764,7 @@ def merge_into_table(
             ).alias("_pre"),
         )
 
-        stage = f"data-{uuid.uuid4().hex}"
+        stage = new_stage()
         stage_path = os.path.join(table_dir, stage)
         dv_stage = None
         cdc_stage = None
@@ -5275,7 +4974,6 @@ def merge_into_table(
                             },
                         ),
                         cur["constraints"],
-                        stage_path,
                         manifest=cur,
                     )
 
@@ -5326,7 +5024,7 @@ def merge_into_table(
                         else kept.unionByName(tomb_df)
                     )
                     new_dv = []
-                dv_stage = f"data-{uuid.uuid4().hex}"
+                dv_stage = new_stage()
                 dvf = tomb_df.distinct().select(
                     *[F.col(k).alias(pk) for k, pk in zip(keys, pkeys)]
                 )
@@ -5353,10 +5051,11 @@ def merge_into_table(
                 # empty commits; so do we
                 if n_upd or n_del or n_ins:
                     raise AssertionError("actions counted but nothing staged")
-                return {
+                res["noop"] = {
                     "version": cur["version"], "updated": 0, "deleted": 0,
                     "inserted": 0, "carried": n_carry,
                 }
+                return None
 
             # ---- CDC sidecar (Delta's _change_data files) ----
             # The decision frame knows every row-level action, so the
@@ -5403,75 +5102,52 @@ def merge_into_table(
                         F.col("_change_type"),
                     )
                 )
-                cdc_stage = f"cdc-{uuid.uuid4().hex}"
+                cdc_stage = new_stage("cdc")
                 cdc_rows.write.mode("overwrite").parquet(
                     os.path.join(table_dir, cdc_stage)
                 )
-            manifest = {
-                "version": cur["version"] + 1,
+            res["counts"] = {
+                "updated": n_upd, "deleted": n_del, "inserted": n_ins,
+                "carried": n_carry,
+            }
+            return _next_manifest(
+                cur, "merge",
                 # a delete-only merge stages no data files: anchor the
                 # manifest on the DV stage instead (tombstone_keys' shape)
-                "dir": stage if write_vals else dv_stage,
-                "partition_col": pcol,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "merge",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if new_dv:
-                manifest["dv"] = new_dv
-                manifest["dv_key"] = dv_key
-            if cdc_stage:
-                manifest["cdc"] = cdc_stage
-            _note_dir_schemas(
-                manifest,
-                cur,
-                {
-                    (stage if write_vals else ""): (
+                stage if write_vals else dv_stage,
+                partition_col=pcol,
+                partitions=new_parts,
+                stats=new_stats,
+                bloom=new_bloom,
+                dv=new_dv,
+                dv_key=dv_key,
+                cdc=cdc_stage,
+                dir_schemas={
+                    stage: (
                         _file_schema_json(stage_rows.schema, drop=pcol)
-                        if write_vals and written
+                        if written
                         else None
                     ),
-                    (dv_stage or ""): (
+                    dv_stage: (
                         _file_schema_json(dvf.schema) if dv_stage else None
                     ),
-                    (cdc_stage or ""): (
+                    cdc_stage: (
                         _file_schema_json(cdc_rows.schema)
                         if cdc_stage
                         else None
                     ),
                 },
             )
-            anchor = stage_path if write_vals else os.path.join(
-                table_dir, dv_stage
-            )
-            if _publish(table_dir, manifest, anchor):
-                return {
-                    "version": manifest["version"], "updated": n_upd,
-                    "deleted": n_del, "inserted": n_ins, "carried": n_carry,
-                }
-            # CAS lost: the merge's output depends on the base, so no
-            # rebase — drop everything and re-run against the winner
-            shutil.rmtree(stage_path, ignore_errors=True)
-            if dv_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, dv_stage), ignore_errors=True
-                )
-            if cdc_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, cdc_stage), ignore_errors=True
-                )
         finally:
             dec.unpersist()
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
-    )
+
+    m = transact(table_dir, attempt, batch_id=batch_id)
+    if m is not None:
+        return {"version": m["version"], **res["counts"]}
+    return res.get("noop") or {
+        "version": current_commit(table_dir)["version"], "updated": 0,
+        "deleted": 0, "inserted": 0, "carried": 0, "replayed": True,
+    }
 
 
 def update_table(
@@ -5481,7 +5157,6 @@ def update_table(
     where: str | None = None,
     stats_cols: list[str] | None = None,
     batch_id: int | None = None,
-    max_retries: int = 10,
     prune: dict | None = None,
     change_data: bool = True,
 ) -> dict:
@@ -5521,8 +5196,9 @@ def update_table(
     names. Returns ``{"version", "updated", "carried"}``."""
     if not set_exprs:
         raise ValueError("update_table needs a non-empty SET map")
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+    res: dict = {}  # the no-commit answer, or the committed counts
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
@@ -5533,9 +5209,6 @@ def update_table(
                 "update computed against the current layout would miss "
                 "their rows — run migrate_legacy_layouts first"
             )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return {"version": cur["version"], "updated": 0, "carried": 0,
-                    "replayed": True}
         if cur.get("dv") and set(_dv_keys(cur)) & set(set_exprs):
             # assigning a tombstoned key column can write a value the
             # carried-forward deletion vector HIDES — silent row loss
@@ -5572,7 +5245,10 @@ def update_table(
             # mergeSchema resolve below reads every live footer, which
             # a pruned-empty update must not pay (r12 review sweep 2
             # #6; SET-column name validation is skipped on this path)
-            return {"version": cur["version"], "updated": 0, "carried": 0}
+            res["noop"] = {
+                "version": cur["version"], "updated": 0, "carried": 0,
+            }
+            return None
 
         # full-table LOGICAL schema (plan resolve, zero jobs) so a
         # pruned base missing evolved columns still projects them as
@@ -5600,7 +5276,10 @@ def update_table(
             else None
         )
         if base is None:
-            return {"version": cur["version"], "updated": 0, "carried": 0}
+            res["noop"] = {
+                "version": cur["version"], "updated": 0, "carried": 0,
+            }
+            return None
         have = set(base.columns)  # PHYSICAL names on disk
         dec = base.select(
             *[
@@ -5649,7 +5328,7 @@ def update_table(
             ).alias("_pre"),
         )
 
-        stage = f"data-{uuid.uuid4().hex}"
+        stage = new_stage()
         stage_path = os.path.join(table_dir, stage)
         cdc_stage = None
         try:
@@ -5670,10 +5349,11 @@ def update_table(
                 else:
                     n_carry += r["count"]
             if not n_upd:
-                return {
+                res["noop"] = {
                     "version": cur["version"], "updated": 0,
                     "carried": n_carry,
                 }
+                return None
             # departures and scanned arrivals rewrite; arrivals into
             # UNSCANNED partitions extend with just the moved rows
             rewrite_vals = upd_old | (upd_new & scanned_vals)
@@ -5717,7 +5397,6 @@ def update_table(
                         },
                     ),
                     cur["constraints"],
-                    stage_path,
                     manifest=cur,
                 )
 
@@ -5744,7 +5423,7 @@ def update_table(
                         F.col("_change_type"),
                     )
                 )
-                cdc_stage = f"cdc-{uuid.uuid4().hex}"
+                cdc_stage = new_stage("cdc")
                 cdc_rows.write.mode("overwrite").parquet(
                     os.path.join(table_dir, cdc_stage)
                 )
@@ -5761,58 +5440,37 @@ def update_table(
             new_stats, new_bloom = _carry_stats_blooms(
                 cur, written, new_parts, extend_vals, stage_path, stats_cols
             )
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": pcol,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "update",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            if cdc_stage:
-                manifest["cdc"] = cdc_stage
-            _note_dir_schemas(
-                manifest,
-                cur,
-                {
+            res["counts"] = {"updated": n_upd, "carried": n_carry}
+            return _next_manifest(
+                cur, "update", stage,
+                partition_col=pcol,
+                partitions=new_parts,
+                stats=new_stats,
+                bloom=new_bloom,
+                cdc=cdc_stage,
+                dir_schemas={
                     stage: (
                         _file_schema_json(stage_rows.schema, drop=pcol)
                         if written
                         else None
                     ),
-                    (cdc_stage or ""): (
+                    cdc_stage: (
                         _file_schema_json(cdc_rows.schema)
                         if cdc_stage
                         else None
                     ),
                 },
             )
-            if _publish(table_dir, manifest, stage_path):
-                return {
-                    "version": manifest["version"], "updated": n_upd,
-                    "carried": n_carry,
-                }
-            # CAS lost: re-run against the winner
-            shutil.rmtree(stage_path, ignore_errors=True)
-            if cdc_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, cdc_stage), ignore_errors=True
-                )
         finally:
             dec.unpersist()
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
-    )
+
+    m = transact(table_dir, attempt, batch_id=batch_id)
+    if m is not None:
+        return {"version": m["version"], **res["counts"]}
+    return res.get("noop") or {
+        "version": current_commit(table_dir)["version"], "updated": 0,
+        "carried": 0, "replayed": True,
+    }
 
 
 def delete_table(
@@ -5821,7 +5479,6 @@ def delete_table(
     where: str,
     stats_cols: list[str] | None = None,
     batch_id: int | None = None,
-    max_retries: int = 10,
     prune: dict | None = None,
     partition_values: list[str] | None = None,
     change_data: bool = True,
@@ -5880,8 +5537,9 @@ def delete_table(
             "delete_table needs an explicit WHERE (use 'true' to delete "
             "every row on purpose)"
         )
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+    res: dict = {}  # the no-commit answer, or the committed counts
+
+    def attempt(cur, new_stage):
         if cur["version"] == 0 or "partitions" not in cur:
             raise ValueError(
                 f"{table_dir} is not a partition-mapped committed table"
@@ -5892,9 +5550,6 @@ def delete_table(
                 "delete computed against the current layout would miss "
                 "their rows — run migrate_legacy_layouts first"
             )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return {"version": cur["version"], "deleted": 0, "carried": 0,
-                    "replayed": True}
         pcol = cur["partition_col"]
         prefix = f"{pcol}="
         # column mapping (r12): decision frame in LOGICAL names,
@@ -5918,7 +5573,10 @@ def delete_table(
             # every partition disproven/out of scope: O(manifest) no-op
             # without the full-footer mergeSchema resolve below (r12
             # review sweep 2 #6)
-            return {"version": cur["version"], "deleted": 0, "carried": 0}
+            res["noop"] = {
+                "version": cur["version"], "deleted": 0, "carried": 0,
+            }
+            return None
 
         # full-table LOGICAL schema (plan resolve, zero jobs) so a
         # pruned base missing evolved columns still projects them as
@@ -5943,7 +5601,10 @@ def delete_table(
             else None
         )
         if base is None:
-            return {"version": cur["version"], "deleted": 0, "carried": 0}
+            res["noop"] = {
+                "version": cur["version"], "deleted": 0, "carried": 0,
+            }
+            return None
         have = set(base.columns)  # PHYSICAL names on disk
         dec = base.select(
             *[
@@ -5960,7 +5621,7 @@ def delete_table(
             "_del", F.coalesce(F.expr(where), F.lit(False))
         )
 
-        stage = f"data-{uuid.uuid4().hex}"
+        stage = new_stage()
         stage_path = os.path.join(table_dir, stage)
         cdc_stage = None
         try:
@@ -5983,10 +5644,11 @@ def delete_table(
                 else:
                     n_carry += r["count"]
             if not n_del:
-                return {
+                res["noop"] = {
                     "version": cur["version"], "deleted": 0,
                     "carried": n_carry,
                 }
+                return None
             # ONLY partitions holding a matched row rewrite (survivors
             # restage); a fully-deleted partition writes nothing and
             # its entry drops from the map below
@@ -6021,7 +5683,7 @@ def delete_table(
                     ],
                     F.lit("delete").alias("_change_type"),
                 )
-                cdc_stage = f"cdc-{uuid.uuid4().hex}"
+                cdc_stage = new_stage("cdc")
                 cdc_rows.write.mode("overwrite").parquet(
                     os.path.join(table_dir, cdc_stage)
                 )
@@ -6034,58 +5696,37 @@ def delete_table(
             new_stats, new_bloom = _carry_stats_blooms(
                 cur, written, new_parts, set(), stage_path, stats_cols
             )
-            manifest = {
-                "version": cur["version"] + 1,
-                "dir": stage,
-                "partition_col": pcol,
-                "partitions": new_parts,
-                "batch_ids": [batch_id] if batch_id is not None else [],
-                "op": "delete",
-            }
-            if new_stats:
-                manifest["stats"] = new_stats
-            if new_bloom:
-                manifest["bloom"] = new_bloom
-            if cur.get("constraints"):
-                manifest["constraints"] = cur["constraints"]
-            _carry_column_map(manifest, cur)
-            if cur.get("dv"):
-                manifest["dv"] = cur["dv"]
-                manifest["dv_key"] = cur["dv_key"]
-            if cdc_stage:
-                manifest["cdc"] = cdc_stage
-            _note_dir_schemas(
-                manifest,
-                cur,
-                {
+            res["counts"] = {"deleted": n_del, "carried": n_carry}
+            return _next_manifest(
+                cur, "delete", stage,
+                partition_col=pcol,
+                partitions=new_parts,
+                stats=new_stats,
+                bloom=new_bloom,
+                cdc=cdc_stage,
+                dir_schemas={
                     stage: (
                         _file_schema_json(stage_rows.schema, drop=pcol)
                         if written
                         else None
                     ),
-                    (cdc_stage or ""): (
+                    cdc_stage: (
                         _file_schema_json(cdc_rows.schema)
                         if cdc_stage
                         else None
                     ),
                 },
             )
-            if _publish(table_dir, manifest, stage_path):
-                return {
-                    "version": manifest["version"], "deleted": n_del,
-                    "carried": n_carry,
-                }
-            # CAS lost: re-run against the winner
-            shutil.rmtree(stage_path, ignore_errors=True)
-            if cdc_stage:
-                shutil.rmtree(
-                    os.path.join(table_dir, cdc_stage), ignore_errors=True
-                )
         finally:
             dec.unpersist()
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
-    )
+
+    m = transact(table_dir, attempt, batch_id=batch_id)
+    if m is not None:
+        return {"version": m["version"], **res["counts"]}
+    return res.get("noop") or {
+        "version": current_commit(table_dir)["version"], "deleted": 0,
+        "carried": 0, "replayed": True,
+    }
 
 
 def upsert_stream_to_table(
@@ -6206,7 +5847,6 @@ def append_keyed_mor(
     order_col: str,
     tiebreak: list[str] | None = None,
     batch_id: int | None = None,
-    max_retries: int = 10,
     max_open_generations: int | None = None,
 ) -> None:
     """MERGE-ON-READ upsert append: the batch's newest row per key lands
@@ -6231,7 +5871,6 @@ def append_keyed_mor(
     append's entry-side trigger picks it up. Read amplification is
     thus bounded at N+1 generations over a stream's whole life at the
     cost of a periodic rewrite."""
-    os.makedirs(table_dir, exist_ok=True)
     if max_open_generations is not None:
         head = current_commit(table_dir)
         if len(head.get("dirs", [])) > max_open_generations:
@@ -6244,61 +5883,43 @@ def append_keyed_mor(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-    for _ in range(max_retries):
-        cur = current_commit(table_dir)
+    want = {"keys": keys, "order_col": order_col, "tiebreak": tiebreak or []}
+
+    def attempt(cur, new_stage):
         if cur["version"] > 0 and "mor" not in cur:
             raise ValueError(f"{table_dir} is not a merge-on-read keyed table")
-        if cur["version"] > 0:
-            # the merge contract (keys/order/tiebreak) is a TABLE
-            # property: a mismatched append would silently rewrite it in
-            # the new head manifest and change how read_keyed_mor
-            # resolves every PRIOR generation — reject instead.
-            want = {
-                "keys": keys,
-                "order_col": order_col,
-                "tiebreak": tiebreak or [],
-            }
-            if cur["mor"] != want:
-                raise ValueError(
-                    f"merge config mismatch for {table_dir}: table has "
-                    f"{cur['mor']}, append supplied {want}"
-                )
-        if batch_id is not None and batch_id in committed_batch_ids(table_dir):
-            return
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
+        # the merge contract (keys/order/tiebreak) is a TABLE property: a
+        # mismatched append would silently rewrite it in the new head
+        # manifest and change how read_keyed_mor resolves every PRIOR
+        # generation — reject instead.
+        if cur["version"] > 0 and cur["mor"] != want:
+            raise ValueError(
+                f"merge config mismatch for {table_dir}: table has "
+                f"{cur['mor']}, append supplied {want}"
+            )
+        stage = new_stage()
         gen_df = latest.withColumn("_gen", F.lit(cur["version"] + 1))
-        gen_df.write.mode("overwrite").parquet(stage_path)
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "dirs": cur.get("dirs", []) + [stage],
-            "mor": {
-                "keys": keys,
-                "order_col": order_col,
-                "tiebreak": tiebreak or [],
-            },
-            "batch_ids": [batch_id] if batch_id is not None else [],
-        }
-        _note_dir_schemas(
-            manifest, cur, {stage: _file_schema_json(gen_df.schema)}
+        gen_df.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
+        return _next_manifest(
+            cur, None, stage,
+            dirs=cur.get("dirs", []) + [stage],
+            mor=want,
+            dir_schemas={stage: _file_schema_json(gen_df.schema)},
         )
-        if _publish(table_dir, manifest, stage_path):
-            if (
-                max_open_generations is not None
-                and len(manifest["dirs"]) > max_open_generations
-            ):
-                try:
-                    compact_keyed_mor(spark, table_dir)
-                except Exception:
-                    # the append IS committed; failing the caller now
-                    # would replay a durable batch. The bound is
-                    # re-enforced by the next call's entry-side trigger.
-                    pass
-            return
-    raise RuntimeError(
-        f"commit conflict persisted for {max_retries} retries on {table_dir}"
-    )
+
+    m = transact(table_dir, attempt, batch_id=batch_id)
+    if (
+        m is not None
+        and max_open_generations is not None
+        and len(m["dirs"]) > max_open_generations
+    ):
+        try:
+            compact_keyed_mor(spark, table_dir)
+        except Exception:
+            # the append IS committed; failing the caller now would
+            # replay a durable batch. The bound is re-enforced by the
+            # next call's entry-side trigger.
+            pass
 
 
 def read_keyed_mor(
@@ -6356,31 +5977,24 @@ def compact_keyed_mor(spark: SparkSession, table_dir: str) -> bool:
     every read back to one write) — published as a normal commit, so the
     un-compacted generations stay readable as history. Returns False if
     the table already has a single generation."""
-    for _ in range(10):
-        cur = current_commit(table_dir)
+
+    def attempt(cur, new_stage):
         if "mor" not in cur:
             raise ValueError(f"{table_dir} is not a merge-on-read keyed table")
         if len(cur["dirs"]) <= 1:
-            return False
+            return None
         merged = read_keyed_mor(spark, table_dir).withColumn(
             "_gen", F.lit(cur["version"] + 1)
         )
-        stage = f"data-{uuid.uuid4().hex}"
-        stage_path = os.path.join(table_dir, stage)
-        merged.write.mode("overwrite").parquet(stage_path)
-        manifest = {
-            "version": cur["version"] + 1,
-            "dir": stage,
-            "dirs": [stage],
-            "mor": cur["mor"],
-            "batch_ids": [],
-        }
-        _note_dir_schemas(
-            manifest, cur, {stage: _file_schema_json(merged.schema)}
+        stage = new_stage()
+        merged.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
+        return _next_manifest(
+            cur, None, stage,
+            dirs=[stage],
+            dir_schemas={stage: _file_schema_json(merged.schema)},
         )
-        if _publish(table_dir, manifest, stage_path):
-            return True
-    raise RuntimeError(f"commit conflict persisted on {table_dir}")
+
+    return transact(table_dir, attempt) is not None
 
 
 def upsert_stream_to_table_mor(

@@ -492,7 +492,7 @@ class TestCatalogTags:
         tag back and refuses."""
         import pytest
 
-        from nshm2022db_spark.streaming import catalog as cat_mod
+        from nshm2022db_spark.streaming import sinks
         from nshm2022db_spark.streaming.catalog import (
             catalog_at,
             catalog_tag,
@@ -500,7 +500,7 @@ class TestCatalogTags:
         )
 
         cat, a = self._publish_n(spark, tmp_path, 3)  # v1, v2, v3
-        real = cat_mod.try_commit
+        real = sinks.try_commit
         fired = {"n": 0}
 
         def racing_commit(table_dir, manifest):
@@ -509,11 +509,11 @@ class TestCatalogTags:
             # yet visible, so v1 is unprotected and retires)
             if fired["n"] == 0 and "v1-tag" in manifest.get("refs", {}):
                 fired["n"] = 1
-                monkeypatch.setattr(cat_mod, "try_commit", real)
+                monkeypatch.setattr(sinks, "try_commit", real)
                 catalog_vacuum(cat, keep_last_snapshots=1)
             return real(table_dir, manifest)
 
-        monkeypatch.setattr(cat_mod, "try_commit", racing_commit)
+        monkeypatch.setattr(sinks, "try_commit", racing_commit)
         with pytest.raises(ValueError, match="vacuumed while tagging"):
             catalog_tag(cat, "v1-tag", version=1)
         assert fired["n"] == 1
@@ -773,6 +773,7 @@ class TestCatalogBranches:
         import pytest
 
         from nshm2022db_spark.streaming import catalog as cat_mod
+        from nshm2022db_spark.streaming import sinks
         from nshm2022db_spark.streaming.catalog import (
             catalog_at,
             catalog_tag,
@@ -785,7 +786,7 @@ class TestCatalogBranches:
         va3 = _land(spark, a, [("x", 3)])
         cat_mod.catalog_publish(cat, {"a": (a, va3)})  # v3 (head)
         catalog_tag(cat, "t", version=2)  # v4: t -> 2
-        real = cat_mod.try_commit
+        real = sinks.try_commit
         fired = {"n": 0}
 
         def racing_commit(table_dir, manifest):
@@ -794,11 +795,11 @@ class TestCatalogBranches:
             # the still-visible old ref
             if fired["n"] == 0 and manifest.get("refs", {}).get("t") == 1:
                 fired["n"] = 1
-                monkeypatch.setattr(cat_mod, "try_commit", real)
+                monkeypatch.setattr(sinks, "try_commit", real)
                 catalog_vacuum(cat, keep_last_snapshots=1)
             return real(table_dir, manifest)
 
-        monkeypatch.setattr(cat_mod, "try_commit", racing_commit)
+        monkeypatch.setattr(sinks, "try_commit", racing_commit)
         with pytest.raises(ValueError, match="vacuumed while tagging"):
             catalog_tag(cat, "t", version=1, replace=True)
         assert fired["n"] == 1

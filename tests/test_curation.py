@@ -429,6 +429,66 @@ class TestTfidfIndexIncremental:
             )
             assert a == b, sub
 
+    def test_obs_bounded_fast_path_fires(self, spark, tmp_path, monkeypatch):
+        """On the classic session the observed-metrics poll answers: the
+        index maintainer takes the zero-extra-job fast path for both
+        meta scalars instead of the recompute fallback."""
+        from pyspark.sql import Observation
+        from pyspark.sql import functions as F
+
+        from nshm2022db_spark.extensions import curation
+
+        obs = Observation()
+        spark.range(5).observe(obs, F.count(F.lit(1)).alias("n")).collect()
+        assert curation._obs_bounded(obs, timeout_s=30.0) == {"n": 5}
+
+        got = []
+        real = curation._obs_bounded
+
+        def spy(o, timeout_s=120.0):
+            got.append(real(o, timeout_s))
+            return got[-1]
+
+        monkeypatch.setattr(curation, "_obs_bounded", spy)
+        batch = spark.createDataFrame(
+            [(1, "spark merge spark vector", "en", "s", 1),
+             (2, "vector plan", "en", "s", 1)],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        )
+        t = str(tmp_path / "idx")
+        curation._index_apply_batch(batch, 0, f"{t}/p", f"{t}/d", f"{t}/m")
+        assert got == [{"n": 2}, {"t": 6}]
+
+    def test_obs_bounded_poll_error_falls_back(self, spark, tmp_path, monkeypatch):
+        """An error from the private poll is a timeout, not a failure:
+        the maintainer recomputes the scalars and lands the same meta
+        counters."""
+        from nshm2022db_spark.extensions import curation
+        from nshm2022db_spark.streaming.sinks import read_keyed_table
+
+        class BrokenPoll:
+            @property
+            def _jo(self):
+                raise RuntimeError("injected poll error")
+
+        assert curation._obs_bounded(BrokenPoll(), timeout_s=30.0) is None
+        real = curation._obs_bounded
+        monkeypatch.setattr(
+            curation, "_obs_bounded",
+            lambda o, timeout_s=120.0: real(BrokenPoll(), timeout_s),
+        )
+        batch = spark.createDataFrame(
+            [(1, "spark merge spark vector", "en", "s", 1),
+             (2, "vector plan", "en", "s", 1)],
+            "doc_id long, text string, lang string, source string, n_chars long",
+        )
+        t = str(tmp_path / "idx")
+        curation._index_apply_batch(batch, 0, f"{t}/p", f"{t}/d", f"{t}/m")
+        meta: dict[str, int] = {}
+        for r in read_keyed_table(spark, f"{t}/m").collect():
+            meta[r.metric] = meta.get(r.metric, 0) + r.v
+        assert meta == {"n_docs": 2, "sum_dl": 6}
+
     def test_postings_carry_dl_and_meta_tracks_sum_dl(self, spark, tmp_path):
         """The BM25 length stats ride the index: every posting row of a
         doc carries its total token count, and the meta table holds the

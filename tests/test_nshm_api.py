@@ -434,3 +434,42 @@ class TestReferenceParityDetails:
         assert db.most_likely_fault(3, 21, {"B": 6.55}) == {"B": 0.03}
         # A at 6.3 → global 6.5 → A's 6.5 row
         assert db.most_likely_fault(3, 21, {"A": 6.3}) == {"A": 0.01}
+
+    def test_most_likely_fault_parents_sharing_a_magnitude(
+        self, spark, tmp_path
+    ):
+        """Two requested parents with the SAME target magnitude each get
+        their own rate once — the rounding lookup yields one row per
+        distinct target, so joining it back to the requests must not
+        multiply a parent's rows by the number of parents sharing it."""
+        db = NSHMDB.create(spark, str(tmp_path / "db"))
+        db.insert_many_faults(
+            [
+                FaultInfo(3, 11, "A", 90.0, None,
+                          Fault([Plane(np.zeros((4, 3)))])),
+                FaultInfo(3, 12, "B", 90.0, None,
+                          Fault([Plane(np.ones((4, 3)))])),
+            ]
+        )
+        db.insert_many_ruptures(
+            spark.createDataFrame(
+                [(21, 3, 7.0, 50.0, 5.0, 0.01)],
+                "nshm_id long, fault_system int, magnitude double,"
+                " area double, len double, rate double",
+            ),
+            spark.createDataFrame(
+                [(21, 11, 3), (21, 12, 3)],
+                "rupture_nshm_id long, fault_nshm_id long, fault_system int",
+            ),
+        )
+        db.insert_magnitude_frequency_distribution(
+            spark.createDataFrame(
+                [(11, 3, 6.5, 0.01), (11, 3, 7.0, 0.002), (12, 3, 6.5, 0.03)],
+                "nshm_id long, fault_system int, magnitude double, rate double",
+            )
+        )
+        # both 6.4 requests round to 6.5: each parent's own 6.5 rate
+        assert db.most_likely_fault(3, 21, {"A": 6.4, "B": 6.4}) == {
+            "A": 0.01,
+            "B": 0.03,
+        }

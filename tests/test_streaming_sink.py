@@ -102,7 +102,7 @@ class TestUpsertSink:
         """Re-applying an already-published batch id must not bump the
         version — the idempotence the checkpoint-replay path relies on."""
         from nshm2022db_spark.streaming.sinks import (
-            _read_pointer,
+            current_commit,
             upsert_stream_to_table,
         )
 
@@ -119,7 +119,7 @@ class TestUpsertSink:
             order_col="ts",
         )
         q.awaitTermination()
-        ptr = _read_pointer(table)
+        head = current_commit(table)
 
         # Fresh checkpoint replays batch 0 against the same table dir.
         q2 = upsert_stream_to_table(
@@ -130,7 +130,7 @@ class TestUpsertSink:
             order_col="ts",
         )
         q2.awaitTermination()
-        assert _read_pointer(table) == ptr
+        assert current_commit(table) == head
 
 
 class TestRollupSink:
@@ -185,7 +185,7 @@ class TestRollupSink:
         batch 0 against the same table; the published batch-id list must
         make the re-add a no-op (re-adding would double every count)."""
         from nshm2022db_spark.streaming.sinks import (
-            _read_pointer,
+            current_commit,
             rollup_stream_to_table,
         )
 
@@ -205,9 +205,9 @@ class TestRollupSink:
             q.awaitTermination()
 
         drain("ckpt")
-        ptr = _read_pointer(table)
+        head = current_commit(table)
         drain("ckpt2")  # fresh checkpoint → replays batch 0
-        assert _read_pointer(table) == ptr
+        assert current_commit(table) == head
 
 
 class TestErasureRewrite:
@@ -1778,7 +1778,6 @@ class TestCommitLog:
                     spark,
                     t,
                     lambda base: row if base is None else base.unionByName(row),
-                    max_retries=32,
                 )
             except Exception as e:  # noqa: BLE001
                 errs.append(e)
@@ -1852,7 +1851,7 @@ class TestCommitLog:
             batch = spark.createDataFrame([(i, "hot")], "uid long, k string")
             try:
                 append_partition_transaction(
-                    spark, t, "k", batch, stats_cols=["uid"], max_retries=32
+                    spark, t, "k", batch, stats_cols=["uid"]
                 )
             except Exception as e:  # noqa: BLE001
                 errs.append(e)
@@ -1925,35 +1924,6 @@ class TestCommitLog:
         assert os.path.exists(fresh)
         # committed manifests untouched, table still readable
         assert read_keyed_table(spark, t).count() == 1
-
-    def test_legacy_pointer_fallback(self, spark, tmp_path):
-        """Tables written by the pre-log layout (v{N} dirs + _CURRENT
-        pointer) stay readable, and the first new commit moves them onto
-        the log."""
-        import json
-
-        from nshm2022db_spark.streaming.sinks import (
-            committed_transaction,
-            current_commit,
-            read_keyed_table,
-        )
-
-        t = str(tmp_path / "t")
-        os.makedirs(t)
-        spark.createDataFrame([(1, 1)], "k int, v int").write.parquet(
-            os.path.join(t, "v3")
-        )
-        with open(os.path.join(t, "_CURRENT"), "w") as f:
-            json.dump({"version": 3, "batch_ids": [0, 1, 2]}, f)
-
-        assert read_keyed_table(spark, t).count() == 1
-        row = spark.createDataFrame([(2, 2)], "k int, v int")
-        committed_transaction(
-            spark, t, lambda base: base.unionByName(row), batch_id=7
-        )
-        cur = current_commit(t)
-        assert cur["version"] == 4 and cur["batch_ids"] == [0, 1, 2, 7]
-        assert read_keyed_table(spark, t).count() == 2
 
     def test_time_travel_and_history(self, spark, tmp_path):
         """Every committed version stays readable; history lists the
@@ -3198,7 +3168,7 @@ class TestAppendRebaseRace:
                 df = self._batch(spark, i * 10, i * 10 + 5, f"day-{i}")
                 barrier.wait()
                 append_partition_transaction(
-                    spark, d, "day", df, stats_cols=["k"], max_retries=32
+                    spark, d, "day", df, stats_cols=["k"]
                 )
             except Exception as e:  # pragma: no cover - diagnostic
                 errs.append(e)
@@ -5449,3 +5419,197 @@ class TestManifestDirSchemas:
         derived = _footer_schema([os.path.join(t, cur["dir"])])
         assert derived is not None
         assert sj == derived.jsonValue()
+
+
+def _manifest_trail(spark, t: str) -> list[dict]:
+    """Drive every writer that builds a successor manifest through one
+    accepted sequence and return, per published manifest, its op, its
+    key set and a digest of its content (commit time aside), with data
+    dirs named by the version and role that introduced them — uuid-free,
+    so runs compare."""
+    import hashlib
+    import json
+
+    from nshm2022db_spark.streaming import sinks
+
+    schema = "k int, day string, v int, w int, x int"
+    sinks.append_partition_transaction(
+        spark, t, "day",
+        spark.createDataFrame(
+            [(1, "d1", 10, 1, 0), (2, "d1", 20, 2, 0), (3, "d2", 30, 3, 0),
+             (4, "d2", 40, 4, 0)],
+            schema,
+        ),
+        stats_cols=["k"], bloom_cols=["k"],
+    )
+    sinks.set_table_constraints(spark, t, ["v >= 0"])
+    sinks.tombstone_keys(spark, t, "k", spark.createDataFrame([(4,)], "k int"))
+    sinks.rename_column(spark, t, "w", "w2")
+    sinks.drop_column(spark, t, "x")
+    sinks.overwrite_partition_transaction(
+        spark, t, "day",
+        spark.createDataFrame(
+            [(5, "d2", 50, 5), (6, "d2", 60, 6)], "k int, day string, v int, w2 int"
+        ),
+        replace_where=["d2"], stats_cols=["k"], bloom_cols=["k"],
+    )
+    sinks.update_table(spark, t, {"v": "v + 1"}, where="k = 1", stats_cols=["k"])
+    sinks.delete_table(spark, t, where="k = 5")
+    sinks.merge_into_table(
+        spark, t,
+        spark.createDataFrame(
+            [(2, "d1", 21, 2), (7, "d3", 70, 7)], "k int, day string, v int, w2 int"
+        ),
+        keys=["k"], when_matched_update={"v": "s.v"},
+        when_not_matched_insert=True,
+    )
+    sinks.evolve_partition_column(spark, t, "v")
+    sinks.restore_table_version(t, 6)
+
+    hist = sinks.table_history(t)
+    names: dict[str, str] = {}
+    for m in hist:
+        for d in sorted(sinks._manifest_dirs(m) - {"."}):
+            if d in names:
+                continue
+            role = (
+                "dir" if d == m.get("dir")
+                else "cdc" if d == m.get("cdc")
+                else "dv" if d in m.get("dv", [])
+                else "data"
+            )
+            names[d] = f"v{m['version']}.{role}"
+    trail = []
+    for m in hist:
+        m = {k: v for k, v in m.items() if k != "committed_at"}
+        text = json.dumps(m, sort_keys=True)
+        for d, sym in names.items():
+            text = text.replace(d, sym)
+        # re-sort: dir-name keys sorted by their uuids before renaming
+        text = json.dumps(json.loads(text), sort_keys=True)
+        trail.append(
+            (m.get("op"), sorted(m), hashlib.sha1(text.encode()).hexdigest()[:12])
+        )
+    return trail
+
+
+# (op, manifest keys, content digest) for every commit _manifest_trail
+# publishes, recorded from the per-writer manifests _next_manifest
+# replaced: the one rule must carry exactly the state they carried
+_TRAIL_GOLDEN = [
+    ("append", ["batch_ids", "bloom", "dir", "dir_schemas", "op",
+                "partition_col", "partitions", "stats", "version"],
+     "772cbc3714d1"),
+    ("set-constraints", ["batch_ids", "bloom", "constraints", "dir",
+                         "dir_schemas", "op", "partition_col", "partitions",
+                         "stats", "version"],
+     "74d5d0084f20"),
+    ("delete", ["batch_ids", "bloom", "constraints", "dir", "dir_schemas",
+                "dv", "dv_key", "op", "partition_col", "partitions", "stats",
+                "version"],
+     "4216cdc82333"),
+    ("evolve", ["batch_ids", "bloom", "column_map", "constraints", "dir",
+                "dir_schemas", "dv", "dv_key", "op", "partition_col",
+                "partitions", "stats", "version"],
+     "4eb8fd4a4f6f"),
+    ("evolve", ["batch_ids", "bloom", "column_map", "constraints", "dir",
+                "dir_schemas", "dropped_columns", "dv", "dv_key", "op",
+                "partition_col", "partitions", "stats", "version"],
+     "621a1205adfd"),
+    ("overwrite", ["batch_ids", "bloom", "column_map", "constraints", "dir",
+                   "dir_schemas", "dropped_columns", "dv", "dv_key", "op",
+                   "partition_col", "partitions", "stats", "version"],
+     "f4fbfb6482c4"),
+    ("update", ["batch_ids", "bloom", "cdc", "column_map", "constraints",
+                "dir", "dir_schemas", "dropped_columns", "dv", "dv_key", "op",
+                "partition_col", "partitions", "stats", "version"],
+     "9d21200caa62"),
+    ("delete", ["batch_ids", "cdc", "column_map", "constraints", "dir",
+                "dir_schemas", "dropped_columns", "dv", "dv_key", "op",
+                "partition_col", "partitions", "stats", "version"],
+     "e9dcd0ba1f7b"),
+    ("merge", ["batch_ids", "cdc", "column_map", "constraints", "dir",
+               "dir_schemas", "dropped_columns", "dv", "dv_key", "op",
+               "partition_col", "partitions", "version"],
+     "bf4c80b633ee"),
+    ("evolve", ["batch_ids", "column_map", "constraints", "dir",
+                "dir_schemas", "dropped_columns", "dv", "dv_key",
+                "legacy_layouts", "op", "partition_col", "partitions",
+                "version"],
+     "851ac049d3fc"),
+    ("restore", ["batch_ids", "bloom", "column_map", "constraints", "dir",
+                 "dir_schemas", "dropped_columns", "dv", "dv_key", "op",
+                 "partition_col", "partitions", "stats", "version"],
+     "d75c3e8e132a"),
+]
+
+
+class TestTransact:
+    """The one transaction core (`transact`) and the one successor rule
+    (`_next_manifest`) every commit-log writer goes through."""
+
+    def test_give_up_raises_once_and_leaves_nothing(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A CAS that always loses: the writer raises ONE error naming
+        the table after the attempt budget, with no stage dir and no
+        manifest left behind."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        calls = []
+
+        def lose(table_dir, manifest):
+            calls.append(manifest["version"])
+            return False
+
+        monkeypatch.setattr(sinks, "try_commit", lose)
+        batch = spark.createDataFrame([(1, "a")], "k int, day string")
+        with _pytest.raises(RuntimeError, match=f"32 attempts on {t}"):
+            sinks.append_partition_transaction(spark, t, "day", batch)
+        assert calls == [1] * 32
+        assert not [n for n in os.listdir(t) if n.startswith("data-")]
+        assert sinks.table_history(t) == []
+
+    def test_successor_manifests_match_golden(self, spark, tmp_path):
+        """Every writer that builds a successor manifest, driven through
+        append → constraints → tombstones → rename → drop → overwrite →
+        update → delete → merge → evolve → restore: each published
+        manifest's key set and content are pinned."""
+        trail = _manifest_trail(spark, str(tmp_path / "t"))
+        assert [(op, keys, d) for op, keys, d in trail] == _TRAIL_GOLDEN
+
+    def test_one_publish_loop(self):
+        """CI guard against re-forking the core: only `transact` calls
+        `_publish`/`try_commit` (and `_publish` calls `try_commit`), and
+        no function under streaming/ takes a `max_retries` knob."""
+        import ast
+        import glob
+
+        import nshm2022db_spark.streaming as pkg
+
+        allowed = {"_publish": {"transact"}, "try_commit": {"transact", "_publish"}}
+        callers: dict[str, set] = {name: set() for name in allowed}
+
+        def visit(node, owner):
+            # a call belongs to its innermost enclosing function
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    a = child.args
+                    params = [x.arg for x in a.posonlyargs + a.args + a.kwonlyargs]
+                    assert "max_retries" not in params, child.name
+                    visit(child, child.name)
+                    continue
+                if isinstance(child, ast.Call):
+                    f = child.func
+                    name = getattr(f, "id", None) or getattr(f, "attr", None)
+                    if name in callers:
+                        callers[name].add(owner)
+                visit(child, owner)
+
+        for path in glob.glob(os.path.join(pkg.__path__[0], "*.py")):
+            with open(path) as fh:
+                visit(ast.parse(fh.read()), None)
+        assert callers == allowed
