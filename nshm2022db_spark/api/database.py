@@ -4,9 +4,11 @@ directory of Parquet tables, one Spark engine for every path.
 Differences from the reference, all deliberate and documented:
   * one engine — no SQLite/DuckDB split (nshmdb.py:655 re-attaches the
     SQLite file to DuckDB for the one analytical query);
-  * `query()` runs as ONE job: membership agg + geometry via
-    collect_list(struct) — the reference issues one extra SQL round trip
-    per result rupture (N+1, nshmdb.py:663-683);
+  * `query()` runs as TWO plans whatever the result size: the membership
+    plan (agg + top-k), then one geometry join for every hit, its rows
+    sorted and grouped on the driver — 9 Spark jobs (5 + 4) on the test
+    fixture, where the reference issues one extra SQL round trip per
+    result rupture (N+1, nshmdb.py:663-683);
   * `get_rupture_fault_info` filters on BOTH fault_system and nshm_id —
     the reference omits fault_system (nshmdb.py:589) and is ambiguous
     across systems since the natural key is only unique per system
@@ -33,7 +35,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from nshm2022db_spark import schemas
-from nshm2022db_spark.operators import dense_surrogate_keys, upsert_missing
+from nshm2022db_spark.operators import (
+    dense_surrogate_keys,
+    nearest_ge_values,
+    upsert_missing,
+)
 from nshm2022db_spark.plans.advanced_query import AdvancedQueryTables, advanced_query
 
 # corner order matches the reference plane layout (schema.sql:22-31)
@@ -441,23 +447,27 @@ class NSHMDB:
 
     # -- point lookups (reference: nshmdb.py:368-527) ------------------------
 
-    def _fault_rows(self, fault_system: int, fault_nshm_id: int):
+    def _fault_rows(self, fault_system: int, fault_nshm_id: int) -> list[dict]:
+        """One fault's plane rows in plane_id order. A fault has a handful
+        of planes, so they are sorted on the driver: a global orderBy
+        would add a range-sampling job and a shuffle."""
         fp = self.table("fault_plane").alias("fp")
         f = self.table("fault").alias("f")
         pf = self.table("parent_fault").alias("pf")
-        return (
+        rows = (
             fp.join(F.broadcast(f), F.col("fp.fault_id") == F.col("f.fault_id"))
             .join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id"))
             .filter(
                 (F.col("f.nshm_id") == fault_nshm_id)
                 & (F.col("f.fault_system") == fault_system)
             )
-            .orderBy("fp.plane_id")
+            .collect()
         )
+        return sorted((r.asDict() for r in rows), key=lambda d: d["plane_id"])
 
     def get_fault(self, fault_system: int, fault_nshm_id: int) -> Fault:
         """reference: nshmdb.py:368-415 (J1)"""
-        rows = [r.asDict() for r in self._fault_rows(fault_system, fault_nshm_id).collect()]
+        rows = self._fault_rows(fault_system, fault_nshm_id)
         planes = [p for _, p in _planes_from_rows(rows)]
         if self.projection:
             planes = [Plane(self.projection(p.corners)) for p in planes]
@@ -482,9 +492,12 @@ class NSHMDB:
         return FaultInfo(r.fault_system, r.nshm_id, r.name, r.rake, r.tect_type)
 
     def _rupture_faults_bulk(self, rupture_ids: list[int]) -> dict[int, dict[str, Fault]]:
-        """Geometry for MANY ruptures in one job (replaces the reference's
+        """Geometry for MANY ruptures in one plan (replaces the reference's
         per-rupture query loop, nshmdb.py:663-683). One join pipeline, one
-        collect; rows regrouped driver-side by (rupture, section label)."""
+        collect; rows sorted on the driver by (rupture, parent, plane) —
+        a handful per rupture, where a global orderBy would cost a
+        range-sampling job and a shuffle — then regrouped by (rupture,
+        section label)."""
         if not rupture_ids:
             return {}
         fp = self.table("fault_plane").alias("fp")
@@ -496,9 +509,10 @@ class NSHMDB:
             .join(fp, F.col("fp.fault_id") == F.col("rf.fault_id"))
             .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
             .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .orderBy("rf.rupture_id", "pf.parent_id", "fp.plane_id")
             .select(
                 F.col("rf.rupture_id").alias("rid"),
+                "pf.parent_id",
+                "fp.plane_id",
                 # reference labeling (nshmdb.py:559-563): CRUSTAL
                 # ruptures merge every section of a parent into ONE
                 # fault keyed by the bare parent name (geometries are
@@ -522,8 +536,10 @@ class NSHMDB:
             .collect()
         )
         out: dict[int, dict[str, Fault]] = {rid: {} for rid in rupture_ids}
-        for row in rows:
-            d = row.asDict()
+        for d in sorted(
+            (r.asDict() for r in rows),
+            key=lambda d: (d["rid"], d["parent_id"], d["plane_id"]),
+        ):
             (name, plane), = _planes_from_rows([d])
             if self.projection:
                 plane = Plane(self.projection(plane.corners))
@@ -607,14 +623,18 @@ class NSHMDB:
         parent-fault name. A parent with no MFD row at its rounded
         magnitude is OMITTED from the result, exactly as the
         reference's equality join drops it (rounding within each
-        parent's own set would fabricate an answer instead)."""
+        parent's own set would fabricate an answer instead).
+
+        One plan and one collect of the rupture's (name, magnitude, rate)
+        rows; the rounding (``nearest_ge_values``) and the sums run on the
+        driver."""
         r = self.table("rupture").alias("r")
         rf = self.table("rupture_faults").alias("rf")
         mfd = self.table("magnitude_frequency_distribution").alias("mfd")
         f = self.table("fault").alias("f")
         pf = self.table("parent_fault").alias("pf")
 
-        rupture_mfd = (
+        rows = (
             r.filter(
                 (F.col("r.nshm_id") == rupture_nshm_id)
                 & (F.col("r.fault_system") == fault_system)
@@ -624,32 +644,23 @@ class NSHMDB:
             .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
             .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
             .select("pf.name", "mfd.magnitude", "mfd.rate")
-        )
-
-        targets = self.spark.createDataFrame(
-            list(magnitudes.items()), "name string, target double"
-        )
-        from nshm2022db_spark.operators import nearest_ge_lookup
-
-        # GLOBAL domain: one distinct-magnitude set across the whole
-        # rupture (the reference's single searchsorted array), shared by
-        # every requested parent
-        rounded = nearest_ge_lookup(
-            rupture_mfd.select("magnitude"), "magnitude", targets, "target"
-        )
-        named = targets.join(rounded, "target").select("name", "rounded")
-        rates = (
-            named.alias("t")
-            .join(
-                rupture_mfd.alias("m"),
-                (F.col("m.name") == F.col("t.name"))
-                & (F.col("m.magnitude") == F.col("t.rounded")),
-            )
-            .groupBy("t.name")
-            .agg(F.sum("m.rate").alias("rate"))
             .collect()
         )
-        return {x.name: x.rate for x in rates}
+        # GLOBAL domain: one distinct-magnitude set across the whole
+        # rupture (the reference's single searchsorted array), shared by
+        # every requested parent. It is at most sections × MFD bins rows:
+        # a distributed lookup would cost more Spark jobs than the data
+        rounded = dict(
+            zip(
+                magnitudes,
+                nearest_ge_values((x.magnitude for x in rows), list(magnitudes.values())),
+            )
+        )
+        rates: dict[str, float] = {}
+        for x in rows:
+            if x.name in rounded and x.magnitude == rounded[x.name]:
+                rates[x.name] = rates.get(x.name, 0.0) + x.rate
+        return rates
 
     # -- the advanced query (reference: nshmdb.py:623-683) -------------------
 
@@ -661,8 +672,10 @@ class NSHMDB:
         limit: int = 100,
         fault_count_limit: int | None = None,
     ) -> list[Rupture]:
-        """Membership-DSL query → hydrated Ruptures WITH geometry, one
-        Spark job + one geometry join — no per-row round trips (§3.1)."""
+        """Membership-DSL query → hydrated Ruptures WITH geometry in two
+        plans: the membership plan's collect, then one geometry join for
+        all hits (``_rupture_faults_bulk``) — no per-row round trips
+        (§3.1)."""
         f = self.table("fault").alias("f")
         pf = self.table("parent_fault").alias("pf")
         dim = f.join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id")).select(

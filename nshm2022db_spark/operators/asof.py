@@ -5,8 +5,12 @@ the smallest distinct domain value ≥ it, clamped to the domain maximum,
 via np.searchsorted over the sorted distinct values — then equi-join on the
 rounded value.
 
-Spark has no native as-of join; two scale regimes:
+Spark has no native as-of join; two scale regimes, plus a driver twin:
 
+* ``nearest_ge_values`` — the reference's searchsorted itself, on values
+  already collected to the driver. For a domain of a few dozen rows
+  (one rupture's MFD bins in most_likely_fault) a Spark plan costs more
+  than the data: its job launches are the latency.
 * ``nearest_ge_lookup`` — range-join + min-aggregate. One shuffle-free
   broadcast range join when targets are small (the common case — the
   reference's targets are a user-supplied dict), grouped min, coalesce to
@@ -19,8 +23,24 @@ Spark has no native as-of join; two scale regimes:
 
 from __future__ import annotations
 
+from typing import Iterable, Sequence
+
+import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+
+def nearest_ge_values(
+    domain: Iterable[float], targets: Sequence[float]
+) -> list[float | None]:
+    """For each target, in order: min distinct domain value ≥ it, clamped
+    to the domain max (nshmdb.py:215-221). An empty domain rounds every
+    target to None, as ``nearest_ge_lookup`` yields a null ``rounded``."""
+    d = np.unique(np.fromiter(domain, dtype=float))
+    if not len(d):
+        return [None] * len(targets)
+    idx = np.searchsorted(d, np.asarray(targets, dtype=float))
+    return d[np.minimum(idx, len(d) - 1)].tolist()
 
 
 def nearest_ge_lookup(domain: DataFrame, value_col: str, targets: DataFrame, target_col: str) -> DataFrame:

@@ -4,6 +4,10 @@ its golden expectations (:73-133) and the ETL pipeline round trip."""
 
 from __future__ import annotations
 
+import ast
+import inspect
+import uuid
+
 import numpy as np
 import pytest
 
@@ -119,6 +123,61 @@ class TestRates:
     def test_nearest_ge_clamps_to_max(self, db):
         # 9.0 beyond max bin 7.0 → clamped → rate 0.004
         assert db.most_likely_fault(3, 1, {"Alpine Fault": 9.0}) == {"Alpine Fault": 0.004}
+
+
+def _jobs_of(spark, call) -> int:
+    """Spark jobs ``call()`` runs, counted through its job group once the
+    listener bus has delivered every job-start event to the status store."""
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestReadPathWork:
+    """Work counters of the read path. Job counts do not drift with host
+    load, so they pin the plan shapes: most_likely_fault is one plan and
+    one collect with the rounding on the driver; get_fault and the
+    geometry step of get_rupture and query sort their few rows on the
+    driver instead of a global orderBy."""
+
+    def test_most_likely_fault_jobs(self, db, spark):
+        assert _jobs_of(spark, lambda: db.most_likely_fault(3, 2, {"Alpine Fault": 6.7})) <= 5
+
+    def test_get_fault_jobs(self, db, spark):
+        assert _jobs_of(spark, lambda: db.get_fault(3, 1)) <= 3
+
+    def test_geometry_step_jobs(self, db, spark):
+        assert _jobs_of(spark, lambda: db.get_rupture(3, 2)) <= 5
+        assert _jobs_of(spark, lambda: db.query("Alpine Fault")) <= 9
+
+    def test_read_methods_build_no_python_backed_relation(self):
+        """No NSHMDB read method calls createDataFrame: a relation built
+        from driver-side Python data is backed by a Python RDD, and every
+        plan that uses it starts Python workers. Inserts are exempt."""
+        tree = ast.parse(inspect.getsource(NSHMDB))
+        reads = {"_fault_rows", "_rupture_faults_bulk", "most_likely_fault", "query"}
+        checked = set()
+        for fn in tree.body[0].body:
+            if not isinstance(fn, ast.FunctionDef):
+                continue
+            if not (fn.name.startswith("get_") or fn.name in reads):
+                continue
+            checked.add(fn.name)
+            calls = [
+                n.lineno
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and n.func.attr == "createDataFrame"
+            ]
+            assert not calls, f"NSHMDB.{fn.name} calls createDataFrame"
+        assert reads <= checked and "get_fault" in checked
 
 
 class TestAdvancedQueryOnDomain:

@@ -6,9 +6,10 @@ Two laws pinned over randomized inputs:
   parses back to the same tree; and the compiled SQL predicate evaluated
   by DuckDB agrees with a 5-line reference evaluator on random
   membership assignments.
-* nearest-≥ semantics: the distributed asof operator agrees with the
-  reference's np.searchsorted formulation (nshmdb.py:215-221) on random
-  domains and targets, including the clamp-to-max edge.
+* nearest-≥ semantics: the distributed asof operator and its driver twin
+  agree with the reference's np.searchsorted formulation
+  (nshmdb.py:215-221) on random domains and targets, including the
+  clamp-to-max edge and an empty domain.
 """
 
 from __future__ import annotations
@@ -20,6 +21,7 @@ from hypothesis import strategies as st
 
 from nshm2022db_spark.dsl.compiler import atom_names, compile_to_sql_predicate
 from nshm2022db_spark.dsl.parser import And, Name, Not, Or, parse_query
+from nshm2022db_spark.operators.asof import nearest_ge_values
 
 ATOMS = ["Alpine Fault", "Hope Fault", "Kakapo", "Brand#1", "F-2: Section 9"]
 
@@ -107,6 +109,38 @@ class TestAsofProperty:
         for t in np.unique(targets_vals):
             idx = min(int(np.searchsorted(srt, t)), len(srt) - 1)
             assert got[float(t)] == float(srt[idx]), t
+
+        # the driver twin gives the same answers, in target order, from
+        # an unsorted domain with repeats
+        order = np.unique(targets_vals)
+        driver = nearest_ge_values(
+            np.concatenate([domain_vals[::-1], domain_vals[:7]]), order
+        )
+        assert driver == [got[float(t)] for t in order]
+
+    def test_empty_domain_rounds_to_none(self, spark):
+        """No domain value: the Spark operator yields a null ``rounded``
+        and the driver twin None, so most_likely_fault on a rupture with
+        no MFD rows matches nothing."""
+        from nshm2022db_spark.operators.asof import nearest_ge_lookup
+
+        domain = spark.createDataFrame([], "v double")
+        targets = spark.createDataFrame([(6.5,), (-1.0,)], "t double")
+        got = {r.t: r.rounded for r in nearest_ge_lookup(domain, "v", targets, "t").collect()}
+        assert got == {6.5: None, -1.0: None}
+        assert nearest_ge_values([], [6.5, -1.0]) == [None, None]
+
+    def test_most_likely_fault_without_mfd_rows(self, spark, tmp_path):
+        from nshm2022db_spark import schemas
+        from nshm2022db_spark.api import NSHMDB
+
+        db = NSHMDB.create(spark, str(tmp_path / "db"))
+        mk = spark.createDataFrame
+        db.insert("parent_fault", mk([(1, "Alpine Fault")], schemas.PARENT_FAULT))
+        db.insert("fault", mk([(1, 1, 3, 90.0, None, 1)], schemas.FAULT))
+        db.insert("rupture", mk([(1, 3, 1, 100.0, 6.5, 10.0, 0.01)], schemas.RUPTURE))
+        db.insert("rupture_faults", mk([(1, 1, 1)], schemas.RUPTURE_FAULTS))
+        assert db.most_likely_fault(3, 1, {"Alpine Fault": 6.5}) == {}
 
 
 class TestPortableRandomized:
