@@ -2386,8 +2386,8 @@ def _carry_stats_blooms(
     stage_path: str,
     stats_cols: list[str] | None,
 ) -> tuple[dict, dict]:
-    """Stats/bloom bookkeeping shared by the DML writers (MERGE and
-    UPDATE — r11 review #3 extracted it so the invariant cannot
+    """Stats/bloom bookkeeping of the one DML commit path (`_dml_commit`,
+    shared by MERGE, UPDATE and DELETE, so the invariant cannot
     diverge): carried entries keep theirs; rewritten entries recompute
     stats from the staged footers and drop blooms; an entry that
     EXTENDED an existing mapping drops both (they no longer cover the
@@ -3838,6 +3838,20 @@ def _stats_prune(manifest: dict, prune: dict | None) -> dict:
     return out
 
 
+def _prune_entries(
+    spark: SparkSession, manifest: dict, prune: dict | None
+) -> dict:
+    """Entries of the manifest's partition map a prune spec cannot rule
+    out: range/null bounds through the stats (`_stats_prune`), and
+    ``("eq", v)`` probes through the stats' degenerate (v, v) range AND
+    the Bloom bitmaps (`_bloom_prune`)."""
+    base_prune, eq = _split_prune(prune)
+    parts = _stats_prune(manifest, base_prune)
+    if eq and parts:
+        parts = _bloom_prune(spark, manifest, parts, eq)
+    return parts
+
+
 def _read_partition_map(
     spark: SparkSession, table_dir: str, manifest: dict, prune: dict | None = None
 ) -> DataFrame | None:
@@ -3862,10 +3876,7 @@ def _read_partition_map(
     column is normalized to STRING on every branch — dir-name inference
     would otherwise type `day=2024-01-01` as a date in one generation
     and the lit() branch as a string."""
-    base_prune, eq = _split_prune(prune)
-    parts = _stats_prune(manifest, base_prune)
-    if eq and parts:
-        parts = _bloom_prune(spark, manifest, parts, eq)
+    parts = _prune_entries(spark, manifest, prune)
     if not parts:
         if not manifest["partitions"]:
             return None  # genuinely empty table
@@ -4145,6 +4156,487 @@ def _materialize_decision(dec: DataFrame) -> DataFrame:
     return dec.localCheckpoint(eager=True)
 
 
+def _check_dml_target(table_dir: str, cur: dict, what: str) -> None:
+    """A DML writer needs a partition-mapped committed table whose rows
+    all live in the current layout: a decision frame computed against
+    it would miss the rows of unmigrated legacy layouts."""
+    if cur["version"] == 0 or "partitions" not in cur:
+        raise ValueError(
+            f"{table_dir} is not a partition-mapped committed table"
+        )
+    if cur.get("legacy_layouts"):
+        raise ValueError(
+            f"{table_dir} has unmigrated legacy partition layouts; {what} "
+            "computed against the current layout would miss their rows "
+            "— run migrate_legacy_layouts first"
+        )
+
+
+def _dml_base(
+    spark: SparkSession, table_dir: str, cur: dict, scan_parts: dict
+) -> tuple[list[str], dict, DataFrame | None]:
+    """``(tcols, ttypes, base)`` for a DML writer: the table's full
+    LOGICAL schema (a plan resolve over the whole map, zero jobs) and
+    the ``scan_parts`` entries read THROUGH the tombstones (the dv key
+    files carry physical names, so the anti-join runs first), lifted
+    once to the logical names and cast to ``ttypes``. Columns only
+    unscanned generations carry (schema evolution + pruning) pad as
+    typed NULLs, so every writer's frame has the full schema. ``base``
+    is None when nothing is scanned."""
+    full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
+    tcols = list(full.columns)
+    ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
+    if not scan_parts:
+        return tcols, ttypes, None
+    base = _apply_tombstones(
+        spark, table_dir, cur,
+        _read_partition_map(
+            spark, table_dir,
+            {
+                "partition_col": cur["partition_col"],
+                "partitions": scan_parts,
+                "dir_schemas": cur.get("dir_schemas") or {},
+            },
+        ),
+    )
+    cmap = _column_map(cur)
+    have = set(base.columns)  # PHYSICAL names on disk
+    return tcols, ttypes, base.select(
+        *[
+            (
+                F.col(cmap.get(c, c))
+                if cmap.get(c, c) in have
+                else F.lit(None)
+            ).cast(ttypes[c]).alias(c)
+            for c in tcols
+        ]
+    )
+
+
+def _dv_key_frame(
+    spark: SparkSession, table_dir: str, cur: dict, keys: list[str]
+) -> DataFrame:
+    """The manifest's tombstoned keys, distinct, under the LOGICAL names
+    ``keys`` (dv files carry the physical names), read through the
+    recorded schema — no footer reads."""
+    return (
+        _read_parquet_fast(
+            spark,
+            *[os.path.join(table_dir, d) for d in cur["dv"]],
+            schema_json=_dirs_schema(cur, cur["dv"]),
+        )
+        .select(*[F.col(pk).alias(k) for k, pk in zip(keys, _dv_keys(cur))])
+        .distinct()
+    )
+
+
+def _dml_result(
+    table_dir: str, m: dict | None, res: dict, fields: tuple
+) -> dict:
+    """A DML writer's answer ``{"version", *fields}``: the published
+    version with its counts, the head with a no-op's counts, or — a
+    replayed ``batch_id`` — the head with zero counts and
+    ``"replayed": True``."""
+    if m is not None:
+        return {"version": m["version"], **{f: res["counts"][f] for f in fields}}
+    if "noop" in res:
+        noop = res["noop"]
+        return {"version": noop["version"], **{f: noop.get(f, 0) for f in fields}}
+    return {
+        "version": current_commit(table_dir)["version"],
+        **dict.fromkeys(fields, 0), "replayed": True,
+    }
+
+
+def _dml_commit(
+    spark: SparkSession,
+    table_dir: str,
+    cur: dict,
+    new_stage,
+    op: str,
+    dec: DataFrame,
+    res: dict,
+    *,
+    scan_parts: dict,
+    stats_cols: list[str] | None,
+    change_data: bool,
+    keys=(),
+) -> dict | None:
+    """The one DML commit path: MERGE, UPDATE and DELETE each build only
+    a decision frame ``dec`` — the LOGICAL table columns (final values),
+    ``_action`` (carry / update / delete / insert), ``_t_part`` (the
+    target row's partition; NULL for inserts) and, when it can hold
+    updates, ``_pre`` (their before-image struct) — and this commits
+    it: action rollup → rewrite / extend / tombstone partition sets
+    (`merge_into_table`'s scale shape) → stage → CHECK constraints →
+    deletion vectors → CDC sidecar → a manifest tagged ``op``.
+    ``scan_parts`` are the entries the frame scanned, ``keys`` the
+    merge keys — empty for the predicate writers, whose deletes no key
+    addresses, so their partitions rewrite instead of tombstoning.
+    Returns the manifest, or None when every row carried
+    (``res["noop"]``); ``res["counts"]`` holds the committed counts."""
+    cmap = _column_map(cur)
+    pkeys = [cmap.get(k, k) for k in keys]
+    pcol = cur["partition_col"]
+    prefix = f"{pcol}="
+    scanned_vals = {e.split("=", 1)[1] for e in scan_parts}
+    tcols = [c for c in dec.columns if c not in ("_action", "_t_part", "_pre")]
+    ttypes = {f.name: f.dataType for f in dec.schema}
+    # columns with a before-image: a frame without update rows has none
+    pre_have = (
+        set(dec.schema["_pre"].dataType.names) if "_pre" in dec.columns else set()
+    )
+    stage = new_stage()
+    stage_path = os.path.join(table_dir, stage)
+    dv_stage = None
+    cdc_stage = None
+    try:
+        dec = _materialize_decision(dec)
+
+        # per-partition action rollup — bounded by the partition
+        # domain (the repo's sanctioned bounded-collect shape)
+        null_key = F.lit(not keys)
+        for k in keys:
+            null_key = null_key | F.col(k).isNull()
+        rollup = (
+            dec.groupBy(
+                "_action", "_t_part", F.col(pcol).alias("_p"),
+                null_key.alias("_kn"),
+            )
+            .count()
+            .collect()
+        )
+        upd_in, ins_in, del_in, moved_out = set(), set(), set(), set()
+        null_del = set()  # partitions with key-less delete rows
+        n_upd = n_del = n_ins = n_carry = 0
+        for r in rollup:
+            if r._action == "carry":
+                n_carry += r["count"]
+            elif r._action == "update":
+                n_upd += r["count"]
+                upd_in.add(r._p)
+                if r._p != r._t_part:
+                    moved_out.add(r._t_part)
+            elif r._action == "delete":
+                n_del += r["count"]
+                del_in.add(r._t_part)
+                if r._kn:
+                    # no key (a predicate writer) or a NULL merge key
+                    # cannot be expressed as a key tombstone: the
+                    # read-side anti-join on NULL matches nothing, so
+                    # the "deleted" row would silently survive (and
+                    # poison the dv key files for the typed stream
+                    # reader) — force the partition to rewrite instead
+                    # (ADVICE r10)
+                    null_del.add(r._t_part)
+            else:
+                n_ins += r["count"]
+                ins_in.add(r._p)
+        # Inserts do NOT force a rewrite by themselves (VERDICT r10
+        # #3 — Delta appends new files for pure inserts): a scanned
+        # partition whose only change is arrivals of NEW keys takes
+        # a generation append below (extend_vals), O(new rows)
+        # instead of O(partition). Only in-place updates, moves,
+        # and (non-tombstonable) deletes rewrite.
+        rewrite_vals = {v for v in upd_in if v in scanned_vals} | moved_out
+        if cur.get("dv") and n_ins:
+            # re-inserting a tombstoned key clears it from the DV
+            # (consolidation below) — which would RESURRECT the
+            # key's stale physical rows in their old partitions.
+            # Those partitions must be rewritten (purged) in this
+            # same commit: their staged content is the tombstone-
+            # filtered base read, so the stale rows drop out. They
+            # are necessarily in the scan set (a re-inserted key is
+            # a source key, and pruning kept every partition whose
+            # stats can hold one); one extra bounds job, only on
+            # the dv-and-inserts path. (Found by the CDC-apply
+            # replica≠head pin, r10.)
+            reins = (
+                dec.filter(F.col("_action") == "insert")
+                .select(*keys)
+                .join(
+                    _dv_key_frame(spark, table_dir, cur, keys),
+                    on=keys,
+                    how="left_semi",
+                )
+            )
+            rb = reins.agg(
+                *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
+                *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
+            ).collect()[0]
+            if rb["_lo0"] is not None:
+                stale = _stats_prune(
+                    {
+                        "partitions": dict(scan_parts),
+                        "stats": cur.get("stats", {}),
+                    },
+                    {
+                        pkeys[i]: (rb[f"_lo{i}"], rb[f"_hi{i}"])
+                        for i in range(len(keys))
+                    },
+                )
+                rewrite_vals |= {
+                    e.split("=", 1)[1] for e in stale
+                }
+        rewrite_vals |= null_del & del_in
+        cand = del_in - rewrite_vals
+        if cand:
+            # the DV path is sound only for WHOLE-KEY deletes: a key
+            # with duplicate target rows and a row-divergent delete
+            # condition (one row deletes here, another carries or
+            # updates elsewhere) must NOT be tombstoned — the
+            # key-wide tombstone would hide the surviving row
+            # everywhere (ADVICE r10 high). One bounded aggregation
+            # over the decision frame (guarded: only merges with
+            # tombstone-candidate partitions pay it); the output is
+            # the mixed keys' delete partitions — partition-domain
+            # bounded, the sanctioned collect shape.
+            keyed_rows = F.lit(True)
+            for k in keys:
+                keyed_rows = keyed_rows & F.col(k).isNotNull()
+            mixed = (
+                dec.filter((F.col("_action") != "insert") & keyed_rows)
+                .groupBy(*keys)
+                .agg(
+                    F.collect_set(
+                        F.when(
+                            F.col("_action") == "delete",
+                            F.col("_t_part"),
+                        )
+                    ).alias("_dp"),
+                    F.max(
+                        (F.col("_action") != "delete").cast("int")
+                    ).alias("_live"),
+                )
+                .filter((F.size("_dp") > 0) & (F.col("_live") == 1))
+                .select(F.explode("_dp").alias("_p"))
+                .distinct()
+                .collect()
+            )
+            rewrite_vals |= {r._p for r in mixed} & cand
+        # extend = generation append: unscanned arrival partitions
+        # (whole partition absent from the base read) AND scanned
+        # insert-only partitions (their carried rows stay in the old
+        # generations; only the _act == "insert" rows are staged)
+        extend_vals = (upd_in | ins_in) - scanned_vals - rewrite_vals
+        extend_vals |= (ins_in & scanned_vals) - rewrite_vals
+        tomb_vals = del_in - rewrite_vals  # delete-only: DV, not rewrite
+
+        write_vals = sorted(rewrite_vals | extend_vals)
+        written: set[str] = set()
+        if write_vals:
+            # per-partition staging mode: rewrites stage every
+            # surviving row; extended entries stage ONLY the rows
+            # this commit created there (inserts, moved-in updates) —
+            # their carried rows live on in the prior generations.
+            # The value sets are driver-known literals, so they fold
+            # into the plan as isin predicates — the old tiny
+            # createDataFrame + broadcast join cost a
+            # defaultParallelism-task collect job per merge for rows
+            # the driver already held (guide §1; same class as the
+            # r14 VALUES bloom-probe rewrite).
+            _rw = (
+                F.col(pcol).isin(sorted(rewrite_vals))
+                if rewrite_vals
+                else F.lit(False)
+            )
+            stage_rows = (
+                dec.filter(F.col("_action") != "delete")
+                .filter(F.col(pcol).isin(write_vals))
+                .filter(
+                    _rw
+                    | F.col("_action").isin("insert", "update")
+                )
+                # back to the stable PHYSICAL names for the staged
+                # files (evolved source-only columns map to
+                # themselves); a rewritten partition physically sheds
+                # dropped columns' data (state-identical)
+                .select(
+                    *[F.col(c).alias(cmap.get(c, c)) for c in tcols]
+                )
+            )
+            _distribute_for_partitioned_write(
+                stage_rows, pcol, nvals=len(write_vals)
+            ).write.mode("overwrite").partitionBy(pcol).parquet(
+                stage_path
+            )
+            written = {
+                n for n in os.listdir(stage_path) if n.startswith(prefix)
+            }
+            _check_entry_values(written)
+            if cur.get("constraints") and written and (n_upd or n_ins):
+                # only new values can break a CHECK: the survivors of
+                # deletes are committed rows, and row-level CHECKs
+                # hold on any subset of them
+                _enforce_constraints(
+                    _read_partition_map(
+                        spark, table_dir,
+                        {
+                            "partition_col": pcol,
+                            "partitions": {
+                                e: stage for e in sorted(written)
+                            },
+                            "dir_schemas": {
+                                stage: _file_schema_json(
+                                    stage_rows.schema, drop=pcol
+                                )
+                            },
+                        },
+                    ),
+                    cur["constraints"],
+                    manifest=cur,
+                )
+
+        # ---- deletion-vector bookkeeping ----
+        new_dv = cur.get("dv", [])
+        dv_key = cur.get("dv_key")
+        if tomb_vals or (new_dv and n_ins):
+            # dv files carry the PHYSICAL key names (the whole
+            # read/typed-feed side addresses them that way); the
+            # consolidation joins run in logical names and the
+            # final write aliases back
+            dv_key = _dv_key_field(pkeys)
+            tomb_df = None
+            if tomb_vals:
+                # driver-known literal set: isin folds into the
+                # plan (the semi join against a tiny createDataFrame
+                # paid a defaultParallelism-task collect per merge)
+                tomb_df = (
+                    dec.filter(F.col("_action") == "delete")
+                    .filter(F.col("_t_part").isin(sorted(tomb_vals)))
+                    .select(*keys)
+                )
+            if new_dv and n_ins:
+                # consolidate: re-inserted keys must leave the DV or
+                # the old tombstone hides the new row
+                ins_keys = (
+                    dec.filter(F.col("_action") == "insert")
+                    .select(*keys)
+                    .distinct()
+                )
+                kept = _dv_key_frame(spark, table_dir, cur, keys).join(
+                    ins_keys, on=keys, how="left_anti"
+                )
+                tomb_df = (
+                    kept
+                    if tomb_df is None
+                    else kept.unionByName(tomb_df)
+                )
+                new_dv = []
+            dv_stage = new_stage()
+            dvf = tomb_df.distinct().select(
+                *[F.col(k).alias(pk) for k, pk in zip(keys, pkeys)]
+            )
+            dvf.write.mode("overwrite").parquet(
+                os.path.join(table_dir, dv_stage)
+            )
+            new_dv = new_dv + [dv_stage]
+
+        # ---- manifest ----
+        new_parts = dict(cur["partitions"])
+        for v in rewrite_vals:
+            new_parts.pop(f"{prefix}{v}", None)
+        for e in written:
+            v = e.split("=", 1)[1]
+            if v in extend_vals and e in cur["partitions"]:
+                new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
+            else:
+                new_parts[e] = stage
+        new_stats, new_bloom = _carry_stats_blooms(
+            cur, written, new_parts, extend_vals, stage_path, stats_cols
+        )
+        if not write_vals and not dv_stage:
+            # nothing changed (every row carried): Delta skips
+            # empty commits; so do we
+            if n_upd or n_del or n_ins:
+                raise AssertionError("actions counted but nothing staged")
+            res["noop"] = {"version": cur["version"], "carried": n_carry}
+            return None
+
+        # ---- CDC sidecar (Delta's _change_data files) ----
+        # The decision frame knows every row-level action, so the
+        # commit records its EXACT images: update rows as
+        # update_preimage/update_postimage PAIRS (keyed by
+        # construction — same dec row), deletes as their before
+        # image, inserts as their after image, carried rows absent
+        # (Delta's dataChange discipline). The typed change feed
+        # (batch and stream) then reads this O(changed rows) dir
+        # instead of reconstructing pair images from map diffs —
+        # VERDICT r10 #1 / ADVICE r09 #5 second half. One
+        # change-sized write per commit; `change_data=False` skips it
+        # and consumers fall back to the pair reconstruction.
+        if change_data:
+            pre_fields, cur_fields, _img = _cdc_image_parts(
+                tcols, ttypes, pre_have
+            )
+            cdc_rows = (
+                dec.filter(F.col("_action") != "carry")
+                .select(
+                    F.explode(
+                        F.when(
+                            F.col("_action") == "update",
+                            F.array(
+                                _img(pre_fields, "update_preimage"),
+                                _img(cur_fields, "update_postimage"),
+                            ),
+                        )
+                        .when(
+                            F.col("_action") == "delete",
+                            F.array(_img(cur_fields, "delete")),
+                        )
+                        .otherwise(
+                            F.array(_img(cur_fields, "insert"))
+                        )
+                    ).alias("_c")
+                )
+                .select("_c.*")
+                # the sidecar stores PHYSICAL names so the feeds' one
+                # end-projection is uniform across the DML triad
+                .select(
+                    *[F.col(c).alias(cmap.get(c, c)) for c in tcols],
+                    F.col("_change_type"),
+                )
+            )
+            cdc_stage = new_stage("cdc")
+            cdc_rows.write.mode("overwrite").parquet(
+                os.path.join(table_dir, cdc_stage)
+            )
+        res["counts"] = {
+            "updated": n_upd, "deleted": n_del, "inserted": n_ins,
+            "carried": n_carry,
+        }
+        return _next_manifest(
+            cur, op,
+            # a delete-only merge stages no data files: anchor the
+            # manifest on the DV stage instead (tombstone_keys' shape)
+            stage if write_vals else dv_stage,
+            partition_col=pcol,
+            partitions=new_parts,
+            stats=new_stats,
+            bloom=new_bloom,
+            dv=new_dv,
+            dv_key=dv_key,
+            cdc=cdc_stage,
+            dir_schemas={
+                stage: (
+                    _file_schema_json(stage_rows.schema, drop=pcol)
+                    if written
+                    else None
+                ),
+                dv_stage: (
+                    _file_schema_json(dvf.schema) if dv_stage else None
+                ),
+                cdc_stage: (
+                    _file_schema_json(cdc_rows.schema)
+                    if cdc_stage
+                    else None
+                ),
+            },
+        )
+    finally:
+        dec.unpersist()
+
+
 def merge_into_table(
     spark: SparkSession,
     table_dir: str,
@@ -4407,12 +4899,7 @@ def merge_into_table(
                 f"{table_dir} is a single-dir committed table; use "
                 "merge_into + committed_transaction"
             )
-        if cur.get("legacy_layouts"):
-            raise ValueError(
-                f"{table_dir} has unmigrated legacy partition layouts; a "
-                "merge computed against the current layout would miss "
-                "their rows — run migrate_legacy_layouts first"
-            )
+        _check_dml_target(table_dir, cur, "a merge")
         # column mapping (r13 — the VERDICT r12 #1 lift): like
         # UPDATE/DELETE, the whole decision frame runs in LOGICAL
         # names — keys, clause expressions (``s.col``/``t.col``), the
@@ -4431,7 +4918,6 @@ def merge_into_table(
                 "deletion vectors — materialize_tombstones first"
             )
         pcol = cur["partition_col"]
-        prefix = f"{pcol}="
 
         # ---- touched-partition pruning (no BY SOURCE clause only) ----
         scan_parts = cur["partitions"]
@@ -4513,14 +4999,11 @@ def merge_into_table(
                         for row in ks
                     )
                 }
-        scanned_vals = {e.split("=", 1)[1] for e in scan_parts}
 
-        # target LOGICAL schema from the full map (plan resolve, zero
-        # jobs) — on a mapped table the merge surface is the logical
-        # view throughout
-        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
-        tcols = list(full.columns)
-        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
+        # target LOGICAL schema and the scanned base (`_dml_base`) — on
+        # a mapped table the merge surface is the logical view
+        # throughout
+        tcols, ttypes, base = _dml_base(spark, table_dir, cur, scan_parts)
         base_cols = set(tcols)
         if evolve_schema:
             # Delta's schema auto-merge: source-only columns join the
@@ -4556,57 +5039,15 @@ def merge_into_table(
             if k not in source.columns:
                 raise ValueError(f"merge key {k!r} not a source column")
 
-        base = None
-        if scan_parts:
-            base = _apply_tombstones(
-                spark, table_dir, cur,
-                _read_partition_map(
-                    spark, table_dir,
-                    {
-                        "partition_col": pcol,
-                        "partitions": scan_parts,
-                        "dir_schemas": cur.get("dir_schemas") or {},
-                    },
-                ),
-            )
-            if base is not None and (cmap or _dropped_physical(cur)):
-                # mapped table: lift the physical base read to the
-                # LOGICAL view once, padding columns the pruned scan
-                # lacks as typed NULLs — the tombstone anti-join above
-                # ran first (dv key files carry physical names)
-                bhave = set(base.columns)
-                base = base.select(
-                    *[
-                        (
-                            F.col(cmap.get(c, c))
-                            if cmap.get(c, c) in bhave
-                            else F.lit(None).cast(ttypes[c])
-                        ).alias(c)
-                        for c in tcols
-                        if c in base_cols
-                    ]
-                )
-
         # ---- the one-shuffle decision pass ----
         s2 = source.select(
             *keys, F.lit("s").alias("_side"),
             F.struct(*[F.col(c) for c in source.columns]).alias("s"),
         )
         if base is not None:
-            # the pruned base may lack columns only UNSCANNED
-            # generations carry (schema evolution + stats pruning) —
-            # pad them as typed NULLs so the full-table struct resolves
-            # (r10 review #1)
-            have = set(base.columns)
             t2 = base.select(
                 *keys, F.lit("t").alias("_side"),
-                F.struct(
-                    *[
-                        F.col(c) if c in have
-                        else F.lit(None).cast(ttypes[c]).alias(c)
-                        for c in sorted(base_cols, key=tcols.index)
-                    ]
-                ).alias("t"),
+                F.struct(*base.columns).alias("t"),
             )
             u = t2.unionByName(s2, allowMissingColumns=True)
         else:
@@ -4736,418 +5177,28 @@ def merge_into_table(
                     ).cast("string"),
                 ).otherwise(col).cast("string")
             out_cols.append(col.alias(c))
+        is_update = F.col("_act").isin(*update_labels)
         dec = dec.select(
             *out_cols,
-            (
-                F.when(
-                    F.col("_act").isin(*update_labels), F.lit("update")
-                ).otherwise(F.col("_act"))
-                if update_labels
-                else F.col("_act")
-            ).alias("_action"),
+            F.when(is_update, F.lit("update"))
+            .otherwise(F.col("_act"))
+            .alias("_action"),
             F.expr(f"t.{pcol}").cast("string").alias("_t_part"),
             # pre-image carrier for the CDC sidecar: update rows keep
             # their full BEFORE struct (NULL for everything else, so
             # the materialized frame stays change-sized on that column)
-            (
-                F.when(F.col("_act").isin(*update_labels), F.col("t"))
-                if update_labels
-                else F.lit(None).cast(
-                    T.StructType(
-                        [
-                            T.StructField(c, ttypes[c])
-                            for c in tcols
-                            if c in base_cols
-                        ]
-                    )
-                )
-            ).alias("_pre"),
+            F.when(is_update, F.col("t")).alias("_pre"),
+        )
+        return _dml_commit(
+            spark, table_dir, cur, new_stage, "merge", dec, res,
+            scan_parts=scan_parts, stats_cols=stats_cols,
+            change_data=change_data, keys=keys,
         )
 
-        stage = new_stage()
-        stage_path = os.path.join(table_dir, stage)
-        dv_stage = None
-        cdc_stage = None
-        try:
-            dec = _materialize_decision(dec)
-
-            # per-partition action rollup — bounded by the partition
-            # domain (the repo's sanctioned bounded-collect shape)
-            null_key = F.lit(False)
-            for k in keys:
-                null_key = null_key | F.col(k).isNull()
-            rollup = (
-                dec.groupBy(
-                    "_action", "_t_part", F.col(pcol).alias("_p"),
-                    null_key.alias("_kn"),
-                )
-                .count()
-                .collect()
-            )
-            upd_in, ins_in, del_in, moved_out = set(), set(), set(), set()
-            null_del = set()  # partitions with NULL-key delete rows
-            n_upd = n_del = n_ins = n_carry = 0
-            for r in rollup:
-                if r._action == "carry":
-                    n_carry += r["count"]
-                elif r._action == "update":
-                    n_upd += r["count"]
-                    upd_in.add(r._p)
-                    if r._p != r._t_part:
-                        moved_out.add(r._t_part)
-                elif r._action == "delete":
-                    n_del += r["count"]
-                    del_in.add(r._t_part)
-                    if r._kn:
-                        # a NULL merge key cannot be expressed as a key
-                        # tombstone: the read-side anti-join on NULL
-                        # matches nothing, so the "deleted" row would
-                        # silently survive (and poison the dv key files
-                        # for the typed stream reader) — force the
-                        # partition to rewrite instead (ADVICE r10)
-                        null_del.add(r._t_part)
-                else:
-                    n_ins += r["count"]
-                    ins_in.add(r._p)
-            # Inserts do NOT force a rewrite by themselves (VERDICT r10
-            # #3 — Delta appends new files for pure inserts): a scanned
-            # partition whose only change is arrivals of NEW keys takes
-            # a generation append below (extend_vals), O(new rows)
-            # instead of O(partition). Only in-place updates, moves,
-            # and (non-tombstonable) deletes rewrite.
-            rewrite_vals = {v for v in upd_in if v in scanned_vals} | moved_out
-            if cur.get("dv") and n_ins:
-                # re-inserting a tombstoned key clears it from the DV
-                # (consolidation below) — which would RESURRECT the
-                # key's stale physical rows in their old partitions.
-                # Those partitions must be rewritten (purged) in this
-                # same commit: their staged content is the tombstone-
-                # filtered base read, so the stale rows drop out. They
-                # are necessarily in the scan set (a re-inserted key is
-                # a source key, and pruning kept every partition whose
-                # stats can hold one); one extra bounds job, only on
-                # the dv-and-inserts path. (Found by the CDC-apply
-                # replica≠head pin, r10.)
-                reins = (
-                    dec.filter(F.col("_action") == "insert")
-                    .select(*keys)
-                    .join(
-                        _read_parquet_fast(
-                            spark,
-                            *[
-                                os.path.join(table_dir, d)
-                                for d in cur["dv"]
-                            ],
-                            schema_json=_dirs_schema(cur, cur["dv"]),
-                        )
-                        # dv files carry PHYSICAL key names; the
-                        # decision frame is logical
-                        .select(
-                            *[
-                                F.col(pk).alias(k)
-                                for k, pk in zip(keys, pkeys)
-                            ]
-                        )
-                        .distinct(),
-                        on=keys,
-                        how="left_semi",
-                    )
-                )
-                rb = reins.agg(
-                    *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
-                    *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
-                ).collect()[0]
-                if rb["_lo0"] is not None:
-                    stale = _stats_prune(
-                        {
-                            "partitions": dict(scan_parts),
-                            "stats": cur.get("stats", {}),
-                        },
-                        {
-                            pkeys[i]: (rb[f"_lo{i}"], rb[f"_hi{i}"])
-                            for i in range(len(keys))
-                        },
-                    )
-                    rewrite_vals |= {
-                        e.split("=", 1)[1] for e in stale
-                    }
-            rewrite_vals |= null_del & del_in
-            cand = del_in - rewrite_vals
-            if cand:
-                # the DV path is sound only for WHOLE-KEY deletes: a key
-                # with duplicate target rows and a row-divergent delete
-                # condition (one row deletes here, another carries or
-                # updates elsewhere) must NOT be tombstoned — the
-                # key-wide tombstone would hide the surviving row
-                # everywhere (ADVICE r10 high). One bounded aggregation
-                # over the decision frame (guarded: only merges with
-                # tombstone-candidate partitions pay it); the output is
-                # the mixed keys' delete partitions — partition-domain
-                # bounded, the sanctioned collect shape.
-                keyed_rows = F.lit(True)
-                for k in keys:
-                    keyed_rows = keyed_rows & F.col(k).isNotNull()
-                mixed = (
-                    dec.filter((F.col("_action") != "insert") & keyed_rows)
-                    .groupBy(*keys)
-                    .agg(
-                        F.collect_set(
-                            F.when(
-                                F.col("_action") == "delete",
-                                F.col("_t_part"),
-                            )
-                        ).alias("_dp"),
-                        F.max(
-                            (F.col("_action") != "delete").cast("int")
-                        ).alias("_live"),
-                    )
-                    .filter((F.size("_dp") > 0) & (F.col("_live") == 1))
-                    .select(F.explode("_dp").alias("_p"))
-                    .distinct()
-                    .collect()
-                )
-                rewrite_vals |= {r._p for r in mixed} & cand
-            # extend = generation append: unscanned arrival partitions
-            # (whole partition absent from the base read) AND scanned
-            # insert-only partitions (their carried rows stay in the old
-            # generations; only the _act == "insert" rows are staged)
-            extend_vals = (upd_in | ins_in) - scanned_vals - rewrite_vals
-            extend_vals |= (ins_in & scanned_vals) - rewrite_vals
-            tomb_vals = del_in - rewrite_vals  # delete-only: DV, not rewrite
-
-            write_vals = sorted(rewrite_vals | extend_vals)
-            written: set[str] = set()
-            if write_vals:
-                # per-partition staging mode: rewrites stage every
-                # surviving row; extended entries stage ONLY the rows
-                # this merge created there (inserts, moved-in updates) —
-                # their carried rows live on in the prior generations.
-                # The value sets are driver-known literals, so they fold
-                # into the plan as isin predicates — the old tiny
-                # createDataFrame + broadcast join cost a
-                # defaultParallelism-task collect job per merge for rows
-                # the driver already held (guide §1; same class as the
-                # r14 VALUES bloom-probe rewrite).
-                _rw = (
-                    F.col(pcol).isin(sorted(rewrite_vals))
-                    if rewrite_vals
-                    else F.lit(False)
-                )
-                stage_rows = (
-                    dec.filter(F.col("_action") != "delete")
-                    .filter(F.col(pcol).isin(write_vals))
-                    .filter(
-                        _rw
-                        | F.col("_action").isin("insert", "update")
-                    )
-                    .drop("_action", "_t_part", "_pre")
-                    # back to the stable PHYSICAL names for the staged
-                    # files (evolved source-only columns map to
-                    # themselves)
-                    .select(
-                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols]
-                    )
-                )
-                _distribute_for_partitioned_write(
-                    stage_rows, pcol, nvals=len(write_vals)
-                ).write.mode("overwrite").partitionBy(pcol).parquet(
-                    stage_path
-                )
-                written = {
-                    n for n in os.listdir(stage_path) if n.startswith(prefix)
-                }
-                _check_entry_values(written)
-                if cur.get("constraints") and written:
-                    _enforce_constraints(
-                        _read_partition_map(
-                            spark, table_dir,
-                            {
-                                "partition_col": pcol,
-                                "partitions": {
-                                    e: stage for e in sorted(written)
-                                },
-                                "dir_schemas": {
-                                    stage: _file_schema_json(
-                                        stage_rows.schema, drop=pcol
-                                    )
-                                },
-                            },
-                        ),
-                        cur["constraints"],
-                        manifest=cur,
-                    )
-
-            # ---- deletion-vector bookkeeping ----
-            new_dv = cur.get("dv", [])
-            dv_key = cur.get("dv_key")
-            if tomb_vals or (new_dv and n_ins):
-                # dv files carry the PHYSICAL key names (the whole
-                # read/typed-feed side addresses them that way); the
-                # consolidation joins run in logical names and the
-                # final write aliases back
-                dv_key = _dv_key_field(pkeys)
-                tomb_df = None
-                if tomb_vals:
-                    # driver-known literal set: isin folds into the
-                    # plan (the semi join against a tiny createDataFrame
-                    # paid a defaultParallelism-task collect per merge)
-                    tomb_df = (
-                        dec.filter(F.col("_action") == "delete")
-                        .filter(F.col("_t_part").isin(sorted(tomb_vals)))
-                        .select(*keys)
-                    )
-                if new_dv and n_ins:
-                    # consolidate: re-inserted keys must leave the DV or
-                    # the old tombstone hides the new row
-                    old_keys = (
-                        _read_parquet_fast(
-                            spark,
-                            *[os.path.join(table_dir, d) for d in new_dv],
-                        )
-                        .select(
-                            *[
-                                F.col(pk).alias(k)
-                                for k, pk in zip(keys, pkeys)
-                            ]
-                        )
-                        .distinct()
-                    )
-                    ins_keys = (
-                        dec.filter(F.col("_action") == "insert")
-                        .select(*keys)
-                        .distinct()
-                    )
-                    kept = old_keys.join(ins_keys, on=keys, how="left_anti")
-                    tomb_df = (
-                        kept
-                        if tomb_df is None
-                        else kept.unionByName(tomb_df)
-                    )
-                    new_dv = []
-                dv_stage = new_stage()
-                dvf = tomb_df.distinct().select(
-                    *[F.col(k).alias(pk) for k, pk in zip(keys, pkeys)]
-                )
-                dvf.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, dv_stage)
-                )
-                new_dv = new_dv + [dv_stage]
-
-            # ---- manifest ----
-            new_parts = dict(cur["partitions"])
-            for v in rewrite_vals:
-                new_parts.pop(f"{prefix}{v}", None)
-            for e in written:
-                v = e.split("=", 1)[1]
-                if v in extend_vals and e in cur["partitions"]:
-                    new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
-                else:
-                    new_parts[e] = stage
-            new_stats, new_bloom = _carry_stats_blooms(
-                cur, written, new_parts, extend_vals, stage_path, stats_cols
-            )
-            if not write_vals and not dv_stage:
-                # nothing changed (every row carried): Delta skips
-                # empty commits; so do we
-                if n_upd or n_del or n_ins:
-                    raise AssertionError("actions counted but nothing staged")
-                res["noop"] = {
-                    "version": cur["version"], "updated": 0, "deleted": 0,
-                    "inserted": 0, "carried": n_carry,
-                }
-                return None
-
-            # ---- CDC sidecar (Delta's _change_data files) ----
-            # The decision frame knows every row-level action, so the
-            # merge records its EXACT images at commit time: update rows
-            # as update_preimage/update_postimage PAIRS (keyed by
-            # construction — same dec row), deletes as their before
-            # image, inserts as their after image, carried rows absent
-            # (Delta's dataChange discipline). The typed change feed
-            # (batch and stream) then reads this O(changed rows) dir
-            # instead of reconstructing pair images from map diffs —
-            # VERDICT r10 #1 / ADVICE r09 #5 second half. One
-            # change-sized write per merge; `change_data=False` skips it
-            # and consumers fall back to the pair reconstruction.
-            if change_data and (n_upd or n_del or n_ins):
-                pre_fields, cur_fields, _img = _cdc_image_parts(
-                    tcols, ttypes, base_cols
-                )
-                cdc_rows = (
-                    dec.filter(F.col("_action") != "carry")
-                    .select(
-                        F.explode(
-                            F.when(
-                                F.col("_action") == "update",
-                                F.array(
-                                    _img(pre_fields, "update_preimage"),
-                                    _img(cur_fields, "update_postimage"),
-                                ),
-                            )
-                            .when(
-                                F.col("_action") == "delete",
-                                F.array(_img(cur_fields, "delete")),
-                            )
-                            .otherwise(
-                                F.array(_img(cur_fields, "insert"))
-                            )
-                        ).alias("_c")
-                    )
-                    .select("_c.*")
-                    # the sidecar stores PHYSICAL names (update_table's
-                    # contract) so the feeds' one end-projection is
-                    # uniform across the DML triad
-                    .select(
-                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols],
-                        F.col("_change_type"),
-                    )
-                )
-                cdc_stage = new_stage("cdc")
-                cdc_rows.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, cdc_stage)
-                )
-            res["counts"] = {
-                "updated": n_upd, "deleted": n_del, "inserted": n_ins,
-                "carried": n_carry,
-            }
-            return _next_manifest(
-                cur, "merge",
-                # a delete-only merge stages no data files: anchor the
-                # manifest on the DV stage instead (tombstone_keys' shape)
-                stage if write_vals else dv_stage,
-                partition_col=pcol,
-                partitions=new_parts,
-                stats=new_stats,
-                bloom=new_bloom,
-                dv=new_dv,
-                dv_key=dv_key,
-                cdc=cdc_stage,
-                dir_schemas={
-                    stage: (
-                        _file_schema_json(stage_rows.schema, drop=pcol)
-                        if written
-                        else None
-                    ),
-                    dv_stage: (
-                        _file_schema_json(dvf.schema) if dv_stage else None
-                    ),
-                    cdc_stage: (
-                        _file_schema_json(cdc_rows.schema)
-                        if cdc_stage
-                        else None
-                    ),
-                },
-            )
-        finally:
-            dec.unpersist()
-
     m = transact(table_dir, attempt, batch_id=batch_id)
-    if m is not None:
-        return {"version": m["version"], **res["counts"]}
-    return res.get("noop") or {
-        "version": current_commit(table_dir)["version"], "updated": 0,
-        "deleted": 0, "inserted": 0, "carried": 0, "replayed": True,
-    }
+    return _dml_result(
+        table_dir, m, res, ("updated", "deleted", "inserted", "carried")
+    )
 
 
 def update_table(
@@ -5169,9 +5220,9 @@ def update_table(
     ``set_exprs`` maps columns to SQL expressions evaluated over the
     OLD row (``{"v": "v * 2", "flag": "'hot'"}``).
 
-    Partition economics mirror the merge's: only partitions holding a
-    matched row (or receiving a moved one) rewrite; a partition-moving
-    update rewrites the departure side and EXTENDS unscanned arrival
+    Partition economics are the DML triad's one rule (`_dml_commit`):
+    only partitions holding a matched row (or receiving a moved one)
+    rewrite; a partition-moving update rewrites the departure side and EXTENDS unscanned arrival
     partitions with just the moved rows; everything else carries
     byte-identical. ``prune`` is the advisory manifest-stats hint
     (``{col: (lo, hi)}`` etc. — same spec as `read_keyed_table`):
@@ -5199,16 +5250,7 @@ def update_table(
     res: dict = {}  # the no-commit answer, or the committed counts
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
-        if cur.get("legacy_layouts"):
-            raise ValueError(
-                f"{table_dir} has unmigrated legacy partition layouts; an "
-                "update computed against the current layout would miss "
-                "their rows — run migrate_legacy_layouts first"
-            )
+        _check_dml_target(table_dir, cur, "an update")
         if cur.get("dv") and set(_dv_keys(cur)) & set(set_exprs):
             # assigning a tombstoned key column can write a value the
             # carried-forward deletion vector HIDES — silent row loss
@@ -5220,83 +5262,31 @@ def update_table(
                 "deletion vector hides — materialize_tombstones first, "
                 "or use merge_into_table (which consolidates the DV)"
             )
-        pcol = cur["partition_col"]
-        prefix = f"{pcol}="
         # column mapping (r12): the whole decision frame runs in
         # LOGICAL names — ``where``/``set_exprs``/``prune``/
-        # ``stats_cols`` are what the user sees — and translates back
-        # to the stable PHYSICAL names exactly twice: at the survivor
-        # stage and at the CDC sidecar (both on-disk artifacts). A
-        # rewritten partition physically sheds DROPPED columns' data
-        # (state-identical: the current version never projects them,
-        # old versions keep their old dirs).
-        cmap = _column_map(cur)
-        # full prune spec support, same as read_keyed_table: range/null
-        # bounds through stats, ("eq", v) probes through stats' (v, v)
-        # degenerate range AND the Bloom bitmaps (r11 review — passing
-        # the raw eq tuple into _stats_prune mis-compared it as bounds)
-        base_prune, eq = _split_prune(_physical_names(prune, cur))
-        scan_parts = dict(_stats_prune(cur, base_prune))
-        if eq and scan_parts:
-            scan_parts = dict(_bloom_prune(spark, cur, scan_parts, eq))
-        scanned_vals = {e.split("=", 1)[1] for e in scan_parts}
+        # ``stats_cols`` are what the user sees — and `_dml_commit`
+        # translates back to the stable PHYSICAL names at the on-disk
+        # artifacts (survivor stage, CDC sidecar)
+        pcol = cur["partition_col"]
+        scan_parts = _prune_entries(spark, cur, _physical_names(prune, cur))
         if not scan_parts:
             # every partition disproven: O(manifest) no-op — the full
-            # mergeSchema resolve below reads every live footer, which
-            # a pruned-empty update must not pay (r12 review sweep 2
-            # #6; SET-column name validation is skipped on this path)
-            res["noop"] = {
-                "version": cur["version"], "updated": 0, "carried": 0,
-            }
+            # mergeSchema resolve in `_dml_base` reads every live
+            # footer, which a pruned-empty update must not pay (r12
+            # review sweep 2 #6; SET-column name validation is skipped
+            # on this path)
+            res["noop"] = {"version": cur["version"]}
             return None
-
-        # full-table LOGICAL schema (plan resolve, zero jobs) so a
-        # pruned base missing evolved columns still projects them as
-        # typed NULLs
-        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
-        tcols = list(full.columns)
-        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
+        tcols, ttypes, base = _dml_base(spark, table_dir, cur, scan_parts)
         for c in set_exprs:
             if c not in tcols:
                 raise ValueError(f"SET column {c!r} not a table column")
 
-        base = (
-            _apply_tombstones(
-                spark, table_dir, cur,
-                _read_partition_map(
-                    spark, table_dir,
-                    {
-                        "partition_col": pcol,
-                        "partitions": scan_parts,
-                        "dir_schemas": cur.get("dir_schemas") or {},
-                    },
-                ),
-            )
-            if scan_parts
-            else None
-        )
-        if base is None:
-            res["noop"] = {
-                "version": cur["version"], "updated": 0, "carried": 0,
-            }
-            return None
-        have = set(base.columns)  # PHYSICAL names on disk
-        dec = base.select(
-            *[
-                (
-                    F.col(cmap.get(c, c))
-                    if cmap.get(c, c) in have
-                    else F.lit(None).cast(ttypes[c])
-                ).alias(c)
-                for c in tcols
-            ]
-        )
-        lhave = {c for c in tcols if cmap.get(c, c) in have}
         # NULL predicate = not matched (Delta's UPDATE rule)
         upd = F.coalesce(
             F.expr(where) if where is not None else F.lit(True), F.lit(False)
         )
-        dec = dec.withColumn("_upd", upd)
+        dec = base.withColumn("_upd", upd)
         out_cols = []
         for c in tcols:
             col = (
@@ -5319,158 +5309,21 @@ def update_table(
             out_cols.append(col.alias(c))
         dec = dec.select(
             *out_cols,
-            F.col("_upd"),
-            F.col(pcol).cast("string").alias("_t_part"),
+            F.when(F.col("_upd"), F.lit("update"))
+            .otherwise(F.lit("carry"))
+            .alias("_action"),
+            F.col(pcol).alias("_t_part"),
             # pre-image carrier for the CDC sidecar (updated rows only)
-            F.when(
-                F.col("_upd"),
-                F.struct(*[F.col(c) for c in tcols if c in lhave]),
-            ).alias("_pre"),
+            F.when(F.col("_upd"), F.struct(*tcols)).alias("_pre"),
+        )
+        return _dml_commit(
+            spark, table_dir, cur, new_stage, "update", dec, res,
+            scan_parts=scan_parts, stats_cols=stats_cols,
+            change_data=change_data,
         )
 
-        stage = new_stage()
-        stage_path = os.path.join(table_dir, stage)
-        cdc_stage = None
-        try:
-            dec = _materialize_decision(dec)
-
-            rollup = (
-                dec.groupBy("_upd", "_t_part", F.col(pcol).alias("_p"))
-                .count()
-                .collect()
-            )
-            n_upd = n_carry = 0
-            upd_old, upd_new = set(), set()
-            for r in rollup:
-                if r._upd:
-                    n_upd += r["count"]
-                    upd_old.add(r._t_part)
-                    upd_new.add(r._p)
-                else:
-                    n_carry += r["count"]
-            if not n_upd:
-                res["noop"] = {
-                    "version": cur["version"], "updated": 0,
-                    "carried": n_carry,
-                }
-                return None
-            # departures and scanned arrivals rewrite; arrivals into
-            # UNSCANNED partitions extend with just the moved rows
-            rewrite_vals = upd_old | (upd_new & scanned_vals)
-            extend_vals = upd_new - scanned_vals
-            write_vals = sorted(rewrite_vals | extend_vals)
-            # driver-known literal sets fold into the plan as isin
-            # predicates (no tiny-createDataFrame broadcast job)
-            _rw = (
-                F.col(pcol).isin(sorted(rewrite_vals))
-                if rewrite_vals
-                else F.lit(False)
-            )
-            stage_rows = (
-                dec.filter(F.col(pcol).isin(write_vals))
-                .filter(_rw | F.col("_upd"))
-                .drop("_upd", "_t_part", "_pre")
-                # back to the stable PHYSICAL names for the staged files
-                .select(*[F.col(c).alias(cmap.get(c, c)) for c in tcols])
-            )
-            _distribute_for_partitioned_write(
-                stage_rows, pcol, nvals=len(write_vals)
-            ).write.mode("overwrite").partitionBy(pcol).parquet(
-                stage_path
-            )
-            written = {
-                n for n in os.listdir(stage_path) if n.startswith(prefix)
-            }
-            _check_entry_values(written)
-            if cur.get("constraints") and written:
-                _enforce_constraints(
-                    _read_partition_map(
-                        spark, table_dir,
-                        {
-                            "partition_col": pcol,
-                            "partitions": {e: stage for e in sorted(written)},
-                            "dir_schemas": {
-                                stage: _file_schema_json(
-                                    stage_rows.schema, drop=pcol
-                                )
-                            },
-                        },
-                    ),
-                    cur["constraints"],
-                    manifest=cur,
-                )
-
-            if change_data:
-                # same sidecar contract as MERGE: exact pre/post pairs,
-                # carried rows absent; the sidecar stores PHYSICAL
-                # names so the feeds' one end-projection is uniform
-                pre_fields, cur_fields, _img = _cdc_image_parts(
-                    tcols, ttypes, lhave
-                )
-                cdc_rows = (
-                    dec.filter(F.col("_upd"))
-                    .select(
-                        F.explode(
-                            F.array(
-                                _img(pre_fields, "update_preimage"),
-                                _img(cur_fields, "update_postimage"),
-                            )
-                        ).alias("_c")
-                    )
-                    .select("_c.*")
-                    .select(
-                        *[F.col(c).alias(cmap.get(c, c)) for c in tcols],
-                        F.col("_change_type"),
-                    )
-                )
-                cdc_stage = new_stage("cdc")
-                cdc_rows.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, cdc_stage)
-                )
-
-            new_parts = dict(cur["partitions"])
-            for v in rewrite_vals:
-                new_parts.pop(f"{prefix}{v}", None)
-            for e in written:
-                v = e.split("=", 1)[1]
-                if v in extend_vals and e in cur["partitions"]:
-                    new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
-                else:
-                    new_parts[e] = stage
-            new_stats, new_bloom = _carry_stats_blooms(
-                cur, written, new_parts, extend_vals, stage_path, stats_cols
-            )
-            res["counts"] = {"updated": n_upd, "carried": n_carry}
-            return _next_manifest(
-                cur, "update", stage,
-                partition_col=pcol,
-                partitions=new_parts,
-                stats=new_stats,
-                bloom=new_bloom,
-                cdc=cdc_stage,
-                dir_schemas={
-                    stage: (
-                        _file_schema_json(stage_rows.schema, drop=pcol)
-                        if written
-                        else None
-                    ),
-                    cdc_stage: (
-                        _file_schema_json(cdc_rows.schema)
-                        if cdc_stage
-                        else None
-                    ),
-                },
-            )
-        finally:
-            dec.unpersist()
-
     m = transact(table_dir, attempt, batch_id=batch_id)
-    if m is not None:
-        return {"version": m["version"], **res["counts"]}
-    return res.get("noop") or {
-        "version": current_commit(table_dir)["version"], "updated": 0,
-        "carried": 0, "replayed": True,
-    }
+    return _dml_result(table_dir, m, res, ("updated", "carried"))
 
 
 def delete_table(
@@ -5493,9 +5346,9 @@ def delete_table(
     erasure demo (`apply_erasure_rewrite`, reference consumer
     nshmdb/nshmdb.py:263-266): any predicate, any table, one commit.
 
-    Partition economics mirror `update_table`'s: after ONE decision
-    scan, only partitions holding ≥1 matched row rewrite (their
-    survivors restage); a partition whose rows ALL matched simply
+    Partition economics are the DML triad's one rule (`_dml_commit`):
+    after ONE decision scan, only partitions holding ≥1 matched row
+    rewrite (their survivors restage); a partition whose rows ALL matched simply
     leaves the manifest (no empty file is written — its old files
     remain readable history); every other partition's mapping carries
     forward byte-identical. Two narrowing hints bound the decision
@@ -5540,28 +5393,12 @@ def delete_table(
     res: dict = {}  # the no-commit answer, or the committed counts
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
-        if cur.get("legacy_layouts"):
-            raise ValueError(
-                f"{table_dir} has unmigrated legacy partition layouts; a "
-                "delete computed against the current layout would miss "
-                "their rows — run migrate_legacy_layouts first"
-            )
-        pcol = cur["partition_col"]
-        prefix = f"{pcol}="
+        _check_dml_target(table_dir, cur, "a delete")
         # column mapping (r12): decision frame in LOGICAL names,
-        # translated back to the stable PHYSICAL names at the survivor
-        # stage and the CDC sidecar (same contract as update_table); a
-        # rewritten partition physically sheds dropped columns' data
-        # (state-identical)
-        cmap = _column_map(cur)
-        base_prune, eq = _split_prune(_physical_names(prune, cur))
-        scan_parts = dict(_stats_prune(cur, base_prune))
-        if eq and scan_parts:
-            scan_parts = dict(_bloom_prune(spark, cur, scan_parts, eq))
+        # translated back to the stable PHYSICAL names by
+        # `_dml_commit` (same contract as update_table)
+        pcol = cur["partition_col"]
+        scan_parts = _prune_entries(spark, cur, _physical_names(prune, cur))
         if partition_values is not None:
             allowed = set(partition_values)
             scan_parts = {
@@ -5571,162 +5408,27 @@ def delete_table(
             }
         if not scan_parts:
             # every partition disproven/out of scope: O(manifest) no-op
-            # without the full-footer mergeSchema resolve below (r12
-            # review sweep 2 #6)
-            res["noop"] = {
-                "version": cur["version"], "deleted": 0, "carried": 0,
-            }
+            # without the full-footer mergeSchema resolve in `_dml_base`
+            # (r12 review sweep 2 #6)
+            res["noop"] = {"version": cur["version"]}
             return None
-
-        # full-table LOGICAL schema (plan resolve, zero jobs) so a
-        # pruned base missing evolved columns still projects them as
-        # typed NULLs
-        full = _to_logical(_read_partition_map(spark, table_dir, cur), cur)
-        tcols = list(full.columns)
-        ttypes = dict(zip(full.schema.names, [f.dataType for f in full.schema]))
-
-        base = (
-            _apply_tombstones(
-                spark, table_dir, cur,
-                _read_partition_map(
-                    spark, table_dir,
-                    {
-                        "partition_col": pcol,
-                        "partitions": scan_parts,
-                        "dir_schemas": cur.get("dir_schemas") or {},
-                    },
-                ),
-            )
-            if scan_parts
-            else None
-        )
-        if base is None:
-            res["noop"] = {
-                "version": cur["version"], "deleted": 0, "carried": 0,
-            }
-            return None
-        have = set(base.columns)  # PHYSICAL names on disk
-        dec = base.select(
-            *[
-                (
-                    F.col(cmap.get(c, c))
-                    if cmap.get(c, c) in have
-                    else F.lit(None).cast(ttypes[c])
-                ).cast(ttypes[c]).alias(c)
-                for c in tcols
-            ]
-        )
+        tcols, _, base = _dml_base(spark, table_dir, cur, scan_parts)
         # NULL predicate = not matched (Delta's DELETE rule)
-        dec = dec.withColumn(
-            "_del", F.coalesce(F.expr(where), F.lit(False))
+        dec = base.select(
+            *tcols,
+            F.when(F.coalesce(F.expr(where), F.lit(False)), F.lit("delete"))
+            .otherwise(F.lit("carry"))
+            .alias("_action"),
+            F.col(pcol).alias("_t_part"),
         )
-
-        stage = new_stage()
-        stage_path = os.path.join(table_dir, stage)
-        cdc_stage = None
-        try:
-            # materialize the decision once: the rollup, the survivor
-            # stage, and the CDC sidecar would otherwise each re-run
-            # the scan (separate actions share no ReusedExchange)
-            dec = _materialize_decision(dec)
-
-            rollup = (
-                dec.groupBy("_del", F.col(pcol).cast("string").alias("_p"))
-                .count()
-                .collect()
-            )
-            n_del = n_carry = 0
-            del_vals = set()
-            for r in rollup:
-                if r._del:
-                    n_del += r["count"]
-                    del_vals.add(r._p)
-                else:
-                    n_carry += r["count"]
-            if not n_del:
-                res["noop"] = {
-                    "version": cur["version"], "deleted": 0,
-                    "carried": n_carry,
-                }
-                return None
-            # ONLY partitions holding a matched row rewrite (survivors
-            # restage); a fully-deleted partition writes nothing and
-            # its entry drops from the map below
-            # driver-known literal set folds into the plan as an isin
-            # predicate (no tiny-createDataFrame broadcast job)
-            stage_rows = (
-                dec.filter(~F.col("_del"))
-                .withColumn(pcol, F.col(pcol).cast("string"))
-                .filter(F.col(pcol).isin(sorted(del_vals)))
-                .drop("_del")
-                # back to the stable PHYSICAL names for the staged files
-                .select(*[F.col(c).alias(cmap.get(c, c)) for c in tcols])
-            )
-            _distribute_for_partitioned_write(
-                stage_rows, pcol, nvals=len(del_vals)
-            ).write.mode("overwrite").partitionBy(pcol).parquet(
-                stage_path
-            )
-            written = {
-                n for n in os.listdir(stage_path) if n.startswith(prefix)
-            }
-            _check_entry_values(written)
-
-            if change_data:
-                # Delta's _change_data for DELETE: one full-row image
-                # per deleted row, tagged 'delete'; carried rows absent
-                # sidecar stores PHYSICAL names (feeds end-project once)
-                cdc_rows = dec.filter(F.col("_del")).select(
-                    *[
-                        F.col(c).cast(ttypes[c]).alias(cmap.get(c, c))
-                        for c in tcols
-                    ],
-                    F.lit("delete").alias("_change_type"),
-                )
-                cdc_stage = new_stage("cdc")
-                cdc_rows.write.mode("overwrite").parquet(
-                    os.path.join(table_dir, cdc_stage)
-                )
-
-            new_parts = dict(cur["partitions"])
-            for v in del_vals:
-                new_parts.pop(f"{prefix}{v}", None)
-            for e in written:
-                new_parts[e] = stage
-            new_stats, new_bloom = _carry_stats_blooms(
-                cur, written, new_parts, set(), stage_path, stats_cols
-            )
-            res["counts"] = {"deleted": n_del, "carried": n_carry}
-            return _next_manifest(
-                cur, "delete", stage,
-                partition_col=pcol,
-                partitions=new_parts,
-                stats=new_stats,
-                bloom=new_bloom,
-                cdc=cdc_stage,
-                dir_schemas={
-                    stage: (
-                        _file_schema_json(stage_rows.schema, drop=pcol)
-                        if written
-                        else None
-                    ),
-                    cdc_stage: (
-                        _file_schema_json(cdc_rows.schema)
-                        if cdc_stage
-                        else None
-                    ),
-                },
-            )
-        finally:
-            dec.unpersist()
+        return _dml_commit(
+            spark, table_dir, cur, new_stage, "delete", dec, res,
+            scan_parts=scan_parts, stats_cols=stats_cols,
+            change_data=change_data,
+        )
 
     m = transact(table_dir, attempt, batch_id=batch_id)
-    if m is not None:
-        return {"version": m["version"], **res["counts"]}
-    return res.get("noop") or {
-        "version": current_commit(table_dir)["version"], "deleted": 0,
-        "carried": 0, "replayed": True,
-    }
+    return _dml_result(table_dir, m, res, ("deleted", "carried"))
 
 
 def upsert_stream_to_table(

@@ -5424,12 +5424,7 @@ class TestManifestDirSchemas:
 def _manifest_trail(spark, t: str) -> list[dict]:
     """Drive every writer that builds a successor manifest through one
     accepted sequence and return, per published manifest, its op, its
-    key set and a digest of its content (commit time aside), with data
-    dirs named by the version and role that introduced them — uuid-free,
-    so runs compare."""
-    import hashlib
-    import json
-
+    key set and a digest of its content (`_history_digests`)."""
     from nshm2022db_spark.streaming import sinks
 
     schema = "k int, day string, v int, w int, x int"
@@ -5465,6 +5460,18 @@ def _manifest_trail(spark, t: str) -> list[dict]:
     )
     sinks.evolve_partition_column(spark, t, "v")
     sinks.restore_table_version(t, 6)
+    return _history_digests(t)
+
+
+def _history_digests(t: str) -> list[tuple]:
+    """Per published manifest of ``t``: its op, its key set and a digest
+    of its content (commit time aside), with data dirs named by the
+    version and role that introduced them — uuid-free, so runs
+    compare."""
+    import hashlib
+    import json
+
+    from nshm2022db_spark.streaming import sinks
 
     hist = sinks.table_history(t)
     names: dict[str, str] = {}
@@ -5613,3 +5620,314 @@ class TestTransact:
             with open(path) as fh:
                 visit(ast.parse(fh.read()), None)
         assert callers == allowed
+
+
+def _dml_trail(spark, t: str) -> tuple[list[tuple], list[tuple], str]:
+    """Drive the DML paths `_manifest_trail` does not reach — a
+    delete-only merge (tombstone), UPDATE and DELETE over tombstones,
+    partition-moving updates (a new entry and an extended unscanned
+    one), a merge re-inserting a tombstoned key, a
+    ``partition_values``-scoped delete, a delete emptying a partition,
+    and ``change_data=False`` on all three writers. Returns the
+    manifest digests, the final rows and a digest of the typed change
+    feed over the whole history."""
+    import hashlib
+
+    from nshm2022db_spark.streaming import sinks
+
+    schema = "k int, day string, v int"
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), schema)
+
+    sinks.append_partition_transaction(
+        spark, t, "day",
+        rows((1, "d1", 10), (2, "d1", 20), (3, "d1", 30), (4, "d2", 40),
+             (5, "d2", 50), (6, "d2", 60), (7, "d3", 70), (8, "d3", 80)),
+        stats_cols=["k"], bloom_cols=["k"],
+    )
+    sinks.set_table_constraints(spark, t, ["v >= 0"])
+    sinks.merge_into_table(
+        spark, t, rows((2, "d1", 0)), keys=["k"], when_matched_delete=True,
+        stats_cols=["k"],
+    )
+    sinks.update_table(spark, t, {"v": "v + 1"}, where="k = 1", stats_cols=["k"])
+    sinks.update_table(
+        spark, t, {"day": "'d4'"}, where="k = 4", prune={"k": (4, 4)},
+        stats_cols=["k"],
+    )
+    sinks.update_table(
+        spark, t, {"day": "'d3'", "v": "v + 5"}, where="k = 5",
+        prune={"k": (5, 5)}, stats_cols=["k"],
+    )
+    sinks.merge_into_table(
+        spark, t, rows((2, "d1", 21)), keys=["k"],
+        when_not_matched_insert=True, stats_cols=["k"],
+    )
+    sinks.merge_into_table(
+        spark, t, rows((8, "d3", 0)), keys=["k"], when_matched_delete=True,
+        stats_cols=["k"],
+    )
+    sinks.delete_table(
+        spark, t, where="k = 7", partition_values=["d3"], stats_cols=["k"]
+    )
+    sinks.delete_table(spark, t, where="day = 'd4'", stats_cols=["k"])
+    sinks.update_table(
+        spark, t, {"v": "v * 2"}, where="k = 6", change_data=False
+    )
+    sinks.delete_table(spark, t, where="k = 3", change_data=False)
+    sinks.merge_into_table(
+        spark, t, rows((9, "d5", 90), (1, "d1", 0)), keys=["k"],
+        when_matched_update={"v": "s.v"}, when_not_matched_insert=True,
+        change_data=False,
+    )
+    final = sorted(
+        (r.k, r.day, r.v) for r in sinks.read_keyed_table(spark, t).collect()
+    )
+    feed = sorted(
+        repr(tuple(r))
+        for r in sinks.read_table_changes_typed(spark, t, 0)
+        .drop("_commit_timestamp")
+        .collect()
+    )
+    return (
+        _history_digests(t),
+        final,
+        hashlib.sha1("\n".join(feed).encode()).hexdigest()[:12],
+    )
+
+
+# (op, manifest keys, content digest) for every commit _dml_trail
+# publishes, recorded before UPDATE and DELETE moved onto merge's
+# commit pipeline (`_dml_commit`)
+_DML_TRAIL_GOLDEN = [
+    ("append", ["batch_ids", "bloom", "dir", "dir_schemas", "op",
+                "partition_col", "partitions", "stats", "version"],
+     "32cb01eefddd"),
+    ("set-constraints", ["batch_ids", "bloom", "constraints", "dir",
+                         "dir_schemas", "op", "partition_col", "partitions",
+                         "stats", "version"],
+     "289ea9ed8297"),
+    ("merge", ["batch_ids", "bloom", "cdc", "constraints", "dir",
+               "dir_schemas", "dv", "dv_key", "op", "partition_col",
+               "partitions", "stats", "version"],
+     "601bdf2cf6f9"),
+    ("update", ["batch_ids", "bloom", "cdc", "constraints", "dir",
+                "dir_schemas", "dv", "dv_key", "op", "partition_col",
+                "partitions", "stats", "version"],
+     "28b504275cf0"),
+    ("update", ["batch_ids", "bloom", "cdc", "constraints", "dir",
+                "dir_schemas", "dv", "dv_key", "op", "partition_col",
+                "partitions", "stats", "version"],
+     "409684af9b56"),
+    ("update", ["batch_ids", "cdc", "constraints", "dir", "dir_schemas", "dv",
+                "dv_key", "op", "partition_col", "partitions", "stats",
+                "version"],
+     "a28c44a8081e"),
+    ("merge", ["batch_ids", "cdc", "constraints", "dir", "dir_schemas", "dv",
+               "dv_key", "op", "partition_col", "partitions", "stats",
+               "version"],
+     "57e05fa1b082"),
+    ("merge", ["batch_ids", "cdc", "constraints", "dir", "dir_schemas", "dv",
+               "dv_key", "op", "partition_col", "partitions", "stats",
+               "version"],
+     "ebda6c9d3002"),
+    ("delete", ["batch_ids", "cdc", "constraints", "dir", "dir_schemas", "dv",
+                "dv_key", "op", "partition_col", "partitions", "stats",
+                "version"],
+     "6b3dab4d2c97"),
+    ("delete", ["batch_ids", "cdc", "constraints", "dir", "dir_schemas", "dv",
+                "dv_key", "op", "partition_col", "partitions", "stats",
+                "version"],
+     "5f076ed6f5c0"),
+    ("update", ["batch_ids", "constraints", "dir", "dir_schemas", "dv",
+                "dv_key", "op", "partition_col", "partitions", "stats",
+                "version"],
+     "0f120d270eb8"),
+    ("delete", ["batch_ids", "constraints", "dir", "dir_schemas", "dv",
+                "dv_key", "op", "partition_col", "partitions", "stats",
+                "version"],
+     "bc53759e272a"),
+    ("merge", ["batch_ids", "constraints", "dir", "dir_schemas", "dv",
+               "dv_key", "op", "partition_col", "partitions", "stats",
+               "version"],
+     "ce71ab16f40d"),
+]
+
+
+class TestDmlCommit:
+    """The one DML commit path (`_dml_commit`) that MERGE, UPDATE and
+    DELETE share."""
+
+    def test_dml_trail_matches_golden(self, spark, tmp_path):
+        trail, final, feed = _dml_trail(spark, str(tmp_path / "t"))
+        assert trail == _DML_TRAIL_GOLDEN
+        assert final == [
+            (1, "d1", 0), (2, "d1", 21), (5, "d3", 55), (6, "d2", 120),
+            (9, "d5", 90),
+        ]
+        assert feed == "eccfa024b1e4"
+
+    def test_dv_consolidation_reads_no_footers(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A merge re-inserting a tombstoned key reads the deletion
+        vectors through their recorded schema, never their footers."""
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string, v int"
+        sinks.append_partition_transaction(
+            spark, t, "day",
+            spark.createDataFrame([(1, "a", 1), (2, "b", 2)], schema),
+            stats_cols=["k"],
+        )
+        sinks.tombstone_keys(spark, t, "k", spark.createDataFrame([(1,)], "k int"))
+        calls = []
+        footer = sinks._footer_schema
+        monkeypatch.setattr(
+            sinks, "_footer_schema",
+            lambda paths: calls.append(paths) or footer(paths),
+        )
+        m = sinks.merge_into_table(
+            spark, t, spark.createDataFrame([(1, "a", 5)], schema),
+            keys=["k"], when_not_matched_insert=True,
+        )
+        assert m["inserted"] == 1
+        assert calls == []
+        assert sorted(
+            (r.k, r.v) for r in sinks.read_keyed_table(spark, t).collect()
+        ) == [(1, 5), (2, 2)]
+
+    def test_one_dml_commit_path(self):
+        """CI guard against re-forking the DML tail: only `_dml_commit`
+        materializes a decision frame, builds CDC images, carries
+        stats/blooms or stages a ``cdc`` dir; and no DML writer stages
+        or publishes by itself."""
+        import ast
+        import inspect
+
+        from nshm2022db_spark.streaming import sinks
+
+        owned = {"_materialize_decision", "_cdc_image_parts", "_carry_stats_blooms"}
+        callers: set = set()
+
+        def visit(node, owner):
+            # a call belongs to its innermost enclosing function
+            for child in ast.iter_child_nodes(node):
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    visit(child, child.name)
+                    continue
+                if isinstance(child, ast.Call):
+                    f = child.func
+                    name = getattr(f, "id", None) or getattr(f, "attr", None)
+                    cdc = name == "new_stage" and any(
+                        isinstance(a, ast.Constant) and a.value == "cdc"
+                        for a in child.args
+                    )
+                    if name in owned or cdc:
+                        callers.add((owner, name))
+                visit(child, owner)
+
+        tree = ast.parse(inspect.getsource(sinks))
+        visit(tree, None)
+        assert {owner for owner, _ in callers} == {"_dml_commit"}
+        assert {name for _, name in callers} == owned | {"new_stage"}
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and fn.name in (
+                "merge_into_table", "update_table", "delete_table",
+            ):
+                called = {
+                    getattr(n.func, "id", None) or getattr(n.func, "attr", None)
+                    for n in ast.walk(fn)
+                    if isinstance(n, ast.Call)
+                }
+                assert not called & (
+                    owned | {"_distribute_for_partitioned_write", "_next_manifest"}
+                ), fn.name
+
+
+def _jobs_of(spark, call) -> int:
+    """Spark jobs ``call()`` runs, counted through its job group once the
+    listener bus has delivered every job-start event to the status store."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        call()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+class TestDmlWork:
+    """Spark jobs per DML call on a 200-row, 4-partition table with key
+    stats and Bloom bitmaps. Job counts do not drift with host load, so
+    they pin the plan shapes of the shared commit path."""
+
+    def _table(self, spark, tmp_path) -> str:
+        from nshm2022db_spark.streaming.sinks import append_partition_transaction
+
+        t = str(tmp_path / "t")
+        append_partition_transaction(
+            spark, t, "day",
+            spark.createDataFrame(
+                [(k, f"d{k // 50}", float(k)) for k in range(200)],
+                "k long, day string, v double",
+            ),
+            stats_cols=["k"], bloom_cols=["k"],
+        )
+        return t
+
+    def test_update_jobs(self, spark, tmp_path):
+        from nshm2022db_spark.streaming.sinks import update_table
+
+        t = self._table(spark, tmp_path)
+        assert [
+            # moving update, no-match update, pruned-empty update
+            _jobs_of(spark, lambda: update_table(
+                spark, t, {"day": "'d3'", "v": "v + 1"}, where="k < 5",
+                stats_cols=["k"],
+            )),
+            _jobs_of(spark, lambda: update_table(
+                spark, t, {"v": "v + 1"}, where="k < 0",
+            )),
+            _jobs_of(spark, lambda: update_table(
+                spark, t, {"v": "v + 1"}, where="k > 1000",
+                prune={"k": (1000, None)},
+            )),
+        ] == [6, 3, 0]
+
+    def test_delete_jobs(self, spark, tmp_path):
+        from nshm2022db_spark.streaming.sinks import delete_table
+
+        t = self._table(spark, tmp_path)
+        assert _jobs_of(spark, lambda: delete_table(
+            spark, t, where="k % 7 = 0", stats_cols=["k"],
+        )) == 6
+
+    def test_merge_jobs(self, spark, tmp_path):
+        from nshm2022db_spark.streaming.sinks import merge_into_table
+
+        t = self._table(spark, tmp_path)
+        schema = "k long, day string, v double"
+        assert [
+            # upsert, delete-only (tombstones k=60), re-insert of k=60
+            _jobs_of(spark, lambda: merge_into_table(
+                spark, t,
+                spark.createDataFrame([(5, "d0", -1.0), (250, "d5", 1.0)], schema),
+                keys=["k"], when_matched_update={"v": "s.v"},
+                when_not_matched_insert=True, stats_cols=["k"],
+            )),
+            _jobs_of(spark, lambda: merge_into_table(
+                spark, t, spark.createDataFrame([(60, "d1", 0.0)], schema),
+                keys=["k"], when_matched_delete=True, stats_cols=["k"],
+            )),
+            _jobs_of(spark, lambda: merge_into_table(
+                spark, t, spark.createDataFrame([(60, "d1", 6.0)], schema),
+                keys=["k"], when_not_matched_insert=True, stats_cols=["k"],
+            )),
+        ] == [11, 13, 20]
