@@ -3133,6 +3133,11 @@ def read_table_changes(
     # of once per range — O(V) metadata cost over a refresh, not O(V²)
     hist = history if history is not None else table_history(table_dir)
     by_v = {m["version"]: m for m in hist}
+    head = max(by_v, default=0)
+    _require_retained(
+        by_v, table_dir, from_version,
+        head if to_version is None else min(to_version, head),
+    )
     for m in hist:
         v = m["version"]
         republished = m.get("dir") in seen_dirs
@@ -3159,14 +3164,7 @@ def read_table_changes(
                 f"{table_dir} is not partition-mapped; read versions "
                 "directly for single-dir tables"
             )
-        stage = m["dir"]
-        prefix = f"{m['partition_col']}="
-        stage_abs = os.path.join(table_dir, stage)
-        entries = (
-            {n for n in os.listdir(stage_abs) if n.startswith(prefix)}
-            if os.path.isdir(stage_abs)
-            else set()
-        )
+        entries = _stage_entries(table_dir, m)
         if not entries:
             continue  # metadata-only commit (e.g. RESTORE)
         part = _read_partition_map(
@@ -3174,7 +3172,7 @@ def read_table_changes(
             table_dir,
             {
                 "partition_col": m["partition_col"],
-                "partitions": {e: stage for e in sorted(entries)},
+                "partitions": {e: m["dir"] for e in entries},
                 # the commit's own recorded schemas serve its stage dir
                 "dir_schemas": m.get("dir_schemas") or {},
             },
@@ -3183,6 +3181,245 @@ def read_table_changes(
             part, allowMissingColumns=True
         )
     return _to_logical(out, end_m)
+
+
+def _require_retained(by_v: dict, table_dir: str, start: int, end: int) -> None:
+    """Raise when a commit in ``(start, end]`` was vacuumed: its rows
+    are gone, and a feed that skipped it would silently drop them."""
+    for v in range(start + 1, end + 1):
+        if v not in by_v:
+            raise ValueError(
+                f"commit {v} of {table_dir} was vacuumed; its changes "
+                "cannot be read — keep retention above the consumer's lag "
+                "or read from a later version"
+            )
+
+
+def _stage_entries(table_dir: str, m: dict) -> list[str]:
+    """The partition entries commit ``m`` wrote into its own stage dir
+    (none for a metadata-only commit such as RESTORE)."""
+    stage_abs = os.path.join(table_dir, m["dir"])
+    if not os.path.isdir(stage_abs):
+        return []
+    prefix = f"{m['partition_col']}="
+    return sorted(n for n in os.listdir(stage_abs) if n.startswith(prefix))
+
+
+def _dv_added_bounds(
+    table_dir: str, keys: list[str], cur_dirs: list[str], prev_dirs: list[str]
+) -> tuple:
+    """(per-column {col: (lo, hi)} bounds, any) over the key TUPLES
+    ADDED by a dv change (cur − prev) — driver-side pyarrow over the
+    delete-sized key files, zero Spark jobs (the same data the feeds
+    semi-join on). ``keys`` may be composite (VERDICT r10 #2)."""
+    import pyarrow.parquet as pq
+
+    def keys_of(dirs: list[str]) -> set:
+        out: set = set()
+        for d in dirs:
+            for f in _parquet_files(os.path.join(table_dir, d)):
+                t = pq.read_table(f, columns=keys)
+                out.update(zip(*[t[k].to_pylist() for k in keys]))
+        return out
+
+    added = {
+        tup
+        for tup in keys_of(cur_dirs) - keys_of(prev_dirs)
+        if all(x is not None for x in tup)
+    }
+    if not added:
+        return None, False
+    bounds = {
+        k: (min(vs), max(vs)) for k, vs in zip(keys, zip(*added))
+    }
+    return bounds, True
+
+
+# ops whose row images one commit's files define; metadata-only ops
+# (set-constraints, evolve) have none, every other op raises
+_IMAGE_OPS = ("append", "overwrite", "rewrite", "delete", "merge", "update")
+
+
+def _change_images(
+    table_dir: str, hist: list[dict], start: int, end: int, admit=None
+) -> list[dict]:
+    """The ONE plan of the typed change feed for versions ``(start,
+    end]``: which row images each commit has, decided from the commit
+    log alone — metadata plus the delete-sized dv key files, never a
+    Spark job. `read_table_changes_typed` executes the images as Spark
+    reads; the commitlog stream (`table_source._typed_plan`,
+    `_plan_changes`) expands them into per-entry file units. Each
+    image is a dict:
+
+    * ``version``, ``ts`` (the manifest's ``committed_at``) and
+      ``ctype`` (``insert``/``delete``; None for a CDC sidecar, whose
+      rows carry their own ``_change_type``);
+    * ``cdc`` — the commit's change-data sidecar dir, served as
+      recorded (``map`` is then None and ``dv_of`` is the commit);
+    * ``map`` / ``prune`` — a partition map `_read_partition_map`
+      accepts, and optional stats bounds for it;
+    * ``dv_of`` — the manifest whose tombstones hide rows of ``map``:
+      images are STATE diffs, so a row its version already hides is
+      never an image (r9 review #1);
+    * ``keys`` / ``added`` — for delete images of tombstoned keys, the
+      key columns and ``(inc dv dirs, exc dv dirs)``: only rows whose
+      key is in ``inc − exc`` are images;
+    * ``legacy`` — the map is an unmigrated legacy layout.
+
+    ``admit(m)`` runs first on every in-range commit: a caller's own
+    admission rules (the stream's column-mapping capture, the untyped
+    stream's additive allow-list) without the planner branching on
+    its caller."""
+    by_v = {m["version"]: m for m in hist}
+    _require_retained(by_v, table_dir, start, end)
+    images: list[dict] = []
+    for v in range(start + 1, end + 1):
+        m = by_v[v]
+        if "partitions" not in m:
+            raise ValueError(
+                f"{table_dir} is not partition-mapped; change feeds read "
+                "partition-mapped tables only (read versions directly)"
+            )
+        if admit is not None:
+            admit(m)
+        op = m.get("op")
+        if op in ("set-constraints", "evolve"):
+            continue  # metadata-only commits move no rows
+        if op not in _IMAGE_OPS:
+            raise ValueError(
+                f"commit {v} is {op!r} — its row images are not defined "
+                "by a single commit's files; consume it via a recompute"
+            )
+        if m.get("data_change") is False:
+            # compaction / Z-order / tombstone materialization: the
+            # commit provably restates rows (Delta's dataChange=false)
+            # — no images, and no diff base needed. A column-mapping
+            # materialize re-based the physical names, so a range
+            # spanning it must raise instead (r12 review #1).
+            _check_map_stable(by_v, m, table_dir, start)
+            continue
+        base = {
+            "version": v, "ts": m.get("committed_at"), "cdc": None,
+            "prune": None, "keys": None, "added": None, "legacy": False,
+        }
+        if m.get("cdc"):
+            # Delta's _change_data path: the merge/update/delete
+            # recorded exact row-level images (update pre/post pairs,
+            # deletes, inserts; carried rows absent) at commit time —
+            # served directly, no diff base, no reconstruction
+            images.append(
+                {**base, "ctype": None, "cdc": m["cdc"], "map": None,
+                 "dv_of": m}
+            )
+            continue
+        if op != "append" and v - 1 >= 1 and v - 1 not in by_v:
+            # the DIFF BASE one below the range: defaulting it to an
+            # empty table would emit the whole table as inserts and
+            # re-emit every historical tombstone (r9 review #2). An
+            # append's inserts are its own stage, so a vacuumed v-1
+            # under a plain append is fine (ADVICE r09)
+            raise ValueError(
+                f"commit {v - 1} of {table_dir} (the diff base for "
+                f"{v}) was vacuumed; typed changes cannot be "
+                "reconstructed from this from_version"
+            )
+        prev = by_v.get(v - 1, {"partitions": {}})
+        pcol = m["partition_col"]
+
+        def pmap(parts: dict, of: dict) -> dict:
+            # the map reads dirs `of` references — its recorded schemas
+            # serve them (zero footer reads on reconstruction reads)
+            return {
+                "partition_col": pcol, "partitions": parts,
+                "dir_schemas": of.get("dir_schemas") or {},
+            }
+
+        # a "delete" commit is either a PREDICATE delete (delete_table
+        # with change_data=False — no new dv file, its diff is the
+        # partition-map rewrite) or a KEY tombstone (tombstone_keys — a
+        # new dv file, partitions untouched); route on the artifact
+        new_dv = [d for d in m.get("dv", []) if d not in prev.get("dv", [])]
+        if op == "append":
+            entries = _stage_entries(table_dir, m)
+            if entries:
+                images.append(
+                    {**base, "ctype": "insert", "dv_of": m,
+                     "map": pmap({e: m["dir"] for e in entries}, m)}
+                )
+        elif op == "delete" and new_dv:
+            # key tombstone: the PRIOR version's rows holding the added
+            # keys, one image per layout (current plus legacy_layouts),
+            # each pruned by its own stats to the keys' bounds — without
+            # stats on the key column that is a prior-version scan
+            kcols = _dv_keys(m)
+            bounds, any_ = _dv_added_bounds(table_dir, kcols, new_dv, [])
+            for lay in _layouts(prev) if any_ else []:
+                images.append(
+                    {**base, "ctype": "delete", "map": lay, "prune": bounds,
+                     "dv_of": prev, "keys": kcols, "added": (new_dv, []),
+                     "legacy": lay is not prev}
+                )
+        else:
+            cur_p, prev_p = m["partitions"], prev.get("partitions", {})
+            ins, dels, extended = {}, {}, {}
+            for e in sorted(set(cur_p) | set(prev_p)):
+                if cur_p.get(e) == prev_p.get(e):
+                    continue
+                cd = _entry_dirs(cur_p[e]) if e in cur_p else []
+                pd_ = _entry_dirs(prev_p[e]) if e in prev_p else []
+                if pd_ and cd[: len(pd_)] == pd_:
+                    # pure generation EXTENSION (a merge insert): only
+                    # the added dirs are new rows — a full pair would
+                    # re-state unchanged data. The PRIOR generations
+                    # still join the dv delete-image base below (r11
+                    # review #1): an extension emits no pair deletes.
+                    ins[e] = cd[len(pd_):]
+                    extended[e] = pd_
+                else:
+                    if e in cur_p:
+                        ins[e] = cur_p[e]
+                    if e in prev_p:
+                        dels[e] = prev_p[e]
+            if ins:
+                images.append(
+                    {**base, "ctype": "insert", "map": pmap(ins, m),
+                     "dv_of": m}
+                )
+            if dels:
+                images.append(
+                    {**base, "ctype": "delete", "map": pmap(dels, prev),
+                     "dv_of": prev}
+                )
+            kcols = _dv_keys(m)
+            if op == "merge" and kcols and m.get("dv") != prev.get("dv"):
+                # a merge's delete clauses may tombstone keys (and a
+                # consolidation may CLEAR re-inserted ones — those rows
+                # reappear via the map diff above). New hidden keys =
+                # key-set difference, not dir-list difference: the
+                # consolidated file holds old keys too. Delete images
+                # come from entries whose prior rows are NOT already
+                # pair deletes: untouched entries plus the prior
+                # generations of pure extensions (a REWRITTEN entry's
+                # removed rows are in its pair deletes — including it
+                # would double-delete, r10 review #2). The write path
+                # refuses merges over legacy layouts, so the current
+                # map is the whole prior state.
+                added = (m.get("dv", []), prev.get("dv", []))
+                bounds, any_ = _dv_added_bounds(table_dir, kcols, *added)
+                untouched = {
+                    e: d for e, d in prev_p.items() if cur_p.get(e) == d
+                }
+                untouched.update(extended)
+                parts = _stats_prune(
+                    {"partitions": untouched, "stats": prev.get("stats", {})},
+                    bounds,
+                ) if any_ else {}
+                if parts:
+                    images.append(
+                        {**base, "ctype": "delete", "map": pmap(parts, prev),
+                         "dv_of": prev, "keys": kcols, "added": added}
+                    )
+    return images
 
 
 def read_table_changes_typed(
@@ -3239,13 +3476,16 @@ def read_table_changes_typed(
       row images are not defined by one commit's files, and guessing
       would double-fold downstream consumers.
 
-    Cost: insert images are the commit's own immutable stage and
+    Cost: the plan (`_change_images`) is driver metadata work — the
+    commit log plus the delete-sized dv key files, whose bounds are
+    computed driver-side with pyarrow — so building the feed runs no
+    Spark job. Insert images are the commit's own immutable stage and
     overwrite/rewrite delete images open only the touched entries'
     prior dirs — O(changed data). The tombstone branch's delete-image
-    read resolves the prior VERSION and prunes it to partitions whose
-    recorded stats can hold the deleted keys; without stats on the key
-    column that one commit costs a prior-version scan (disclosed — the
-    keys are arbitrary, so only stats can narrow it). Every image is
+    read opens the prior VERSION pruned to partitions whose recorded
+    stats can hold the deleted keys; without stats on the key column
+    that one commit costs a prior-version scan (disclosed — the keys
+    are arbitrary, so only stats can narrow it). Every image is
     filtered through ITS version's tombstones, so an already-hidden row
     never appears in an insert or re-deletes. Rows carry
     ``_commit_version``, ``_change_type``, and ``_commit_timestamp``
@@ -3253,315 +3493,56 @@ def read_table_changes_typed(
     manifests) — Delta CDF's metadata columns."""
     hist = history if history is not None else table_history(table_dir)
     by_v = {m["version"]: m for m in hist}
-    head = max(by_v) if by_v else 0
-    hi = head if to_version is None else to_version
+    hi = max(by_v, default=0) if to_version is None else to_version
     out = None
 
-    def _commit_ts(version: int):
-        # Delta CDF's _commit_timestamp, from the manifest's publish
-        # wall-clock (committed_at, recorded once at try_commit); NULL
-        # for pre-feature manifests without one (ADVICE r09)
-        ts = by_v.get(version, {}).get("committed_at")
-        return (
-            F.timestamp_seconds(F.lit(float(ts)))
-            if ts is not None
-            else F.lit(None).cast("timestamp")
-        )
+    def dv_key_set(dirs: list[str], of: dict) -> DataFrame:
+        return _read_parquet_fast(
+            spark,
+            *[os.path.join(table_dir, d) for d in dirs],
+            schema_json=_dirs_schema(of, dirs),
+        ).distinct()
 
-    def _entries_df(manifest_like: dict, dv_of: dict, version: int, ctype: str):
-        # images are STATE diffs: rows a version's own tombstones hide
-        # are not part of that state, so they never appear as images
-        # (r9 review #1 — the function's own contract)
-        nonlocal out
-        if dv_of.get("dir_schemas"):
-            # the synthetic map reads dirs referenced by `dv_of`'s real
-            # manifest — its recorded schemas serve them (zero footer
-            # reads on the reconstruction reads too)
-            manifest_like.setdefault("dir_schemas", dv_of["dir_schemas"])
-        part = _apply_tombstones(
-            spark, table_dir, dv_of,
-            _read_partition_map(spark, table_dir, manifest_like),
-        )
-        if part is None:
-            return
-        part = (
-            part.withColumn("_commit_version", F.lit(version).cast("long"))
-            .withColumn("_change_type", F.lit(ctype))
-            .withColumn("_commit_timestamp", _commit_ts(version))
+    for im in _change_images(table_dir, hist, from_version, hi):
+        version = F.lit(im["version"]).cast("long")
+        if im["cdc"]:
+            # the sidecar carries `_change_type` as a data column, so
+            # its version column follows it
+            part = _read_parquet_fast(
+                spark,
+                os.path.join(table_dir, im["cdc"]),
+                schema_json=_dir_schema(im["dv_of"], im["cdc"]),
+            ).withColumn("_commit_version", version)
+        else:
+            part = _apply_tombstones(
+                spark, table_dir, im["dv_of"],
+                _read_partition_map(spark, table_dir, im["map"], im["prune"]),
+            )
+            if part is None:
+                continue
+            if im["added"]:
+                inc, exc = im["added"]
+                keys = dv_key_set(inc, by_v[im["version"]])
+                if exc:
+                    keys = keys.join(
+                        dv_key_set(exc, im["dv_of"]), on=im["keys"],
+                        how="left_anti",
+                    )
+                part = part.join(
+                    F.broadcast(keys), on=im["keys"], how="left_semi"
+                )
+            part = part.withColumn("_commit_version", version).withColumn(
+                "_change_type", F.lit(im["ctype"])
+            )
+        part = part.withColumn(
+            "_commit_timestamp",
+            F.timestamp_seconds(F.lit(float(im["ts"])))
+            if im["ts"] is not None
+            else F.lit(None).cast("timestamp"),
         )
         out = part if out is None else out.unionByName(
             part, allowMissingColumns=True
         )
-
-    for v in range(from_version + 1, hi + 1):
-        m = by_v.get(v)
-        if m is None:
-            raise ValueError(
-                f"commit {v} of {table_dir} was vacuumed; typed changes "
-                "for it cannot be reconstructed"
-            )
-        op = m.get("op")
-        if op in ("set-constraints", "evolve"):
-            continue  # metadata-only commits move no rows
-        if op not in (
-            "append", "overwrite", "rewrite", "delete", "merge", "update"
-        ):
-            raise ValueError(
-                f"commit {v} is {op!r} — its row images are not defined "
-                "by a single commit's files; consume it via a recompute"
-            )
-        if op == "rewrite" and m.get("data_change") is False:
-            # compaction / Z-order / tombstone materialization: the
-            # commit provably restates rows (Delta's dataChange=false)
-            # — no images, and no diff base needed. A column-mapping
-            # materialize re-based the physical names, so a range
-            # spanning it must raise instead (r12 review #1).
-            _check_map_stable(by_v, m, table_dir, from_version)
-            continue
-        if op in ("merge", "update", "delete") and m.get("cdc"):
-            # Delta's _change_data path: the merge/update/delete
-            # recorded exact row-level images (update pre/post pairs,
-            # deletes, inserts; carried rows absent) at commit time —
-            # read them directly, no diff base, no reconstruction joins
-            cdc = _read_parquet_fast(
-                spark,
-                os.path.join(table_dir, m["cdc"]),
-                schema_json=_dir_schema(m, m["cdc"]),
-            )
-            cdc = cdc.withColumn(
-                "_commit_version", F.lit(v).cast("long")
-            ).withColumn("_commit_timestamp", _commit_ts(v))
-            out = cdc if out is None else out.unionByName(
-                cdc, allowMissingColumns=True
-            )
-            continue
-        if (
-            op in ("overwrite", "rewrite", "delete", "merge", "update")
-            and v - 1 >= 1
-            and v - 1 not in by_v
-        ):
-            # the DIFF BASE one below the range: defaulting it to an
-            # empty table would emit the whole table as inserts and
-            # re-emit every historical tombstone (r9 review #2). Only
-            # these ops diff against v-1 — an append's inserts are its
-            # own stage, so a vacuumed v-1 under a plain append is fine
-            # (ADVICE r09: a from_version just below the retention
-            # horizon must not fail when the range is all appends)
-            raise ValueError(
-                f"commit {v - 1} of {table_dir} (the diff base for "
-                f"{v}) was vacuumed; typed changes cannot be "
-                "reconstructed from this from_version"
-            )
-        prev = by_v.get(v - 1, {"partitions": {}}) if v > 1 else {
-            "partitions": {}
-        }
-        if "partitions" not in m:
-            raise ValueError(
-                f"{table_dir} is not partition-mapped; read versions "
-                "directly for single-dir tables"
-            )
-        pcol = m["partition_col"]
-        # a "delete" commit is either a PREDICATE delete (delete_table
-        # with change_data=False landing here — no new dv file, its
-        # diff is the partition-map rewrite) or a KEY tombstone
-        # (tombstone_keys — a new dv file, partitions untouched);
-        # route on which artifact it produced
-        new_dv = (
-            [d for d in m.get("dv", []) if d not in prev.get("dv", [])]
-            if op == "delete"
-            else []
-        )
-        if op == "append":
-            stage_abs = os.path.join(table_dir, m["dir"])
-            entries = (
-                {
-                    n
-                    for n in os.listdir(stage_abs)
-                    if n.startswith(f"{pcol}=")
-                }
-                if os.path.isdir(stage_abs)
-                else set()
-            )
-            if entries:
-                _entries_df(
-                    {
-                        "partition_col": pcol,
-                        "partitions": {e: m["dir"] for e in sorted(entries)},
-                    },
-                    m,
-                    v,
-                    "insert",
-                )
-        elif op in ("overwrite", "rewrite", "merge", "update") or (
-            op == "delete" and not new_dv
-        ):
-            cur_p, prev_p = m["partitions"], prev.get("partitions", {})
-            touched = {
-                e for e in set(cur_p) | set(prev_p)
-                if cur_p.get(e) != prev_p.get(e)
-            }
-            ins, dels, extended = {}, {}, {}
-            for e in sorted(touched):
-                cd = _entry_dirs(cur_p[e]) if e in cur_p else []
-                pd_ = _entry_dirs(prev_p[e]) if e in prev_p else []
-                if pd_ and cd[: len(pd_)] == pd_:
-                    # pure generation EXTENSION (a merge insert): only
-                    # the added dirs are new rows — emitting a full
-                    # pair would re-state unchanged data. The PRIOR
-                    # generations still join the dv delete-image base
-                    # below (r11 review #1): an extension emits no pair
-                    # deletes, so keys the same merge tombstoned there
-                    # would otherwise lose their delete images.
-                    ins[e] = cd[len(pd_):]
-                    extended[e] = pd_
-                else:
-                    if e in cur_p:
-                        ins[e] = cur_p[e]
-                    if e in prev_p:
-                        dels[e] = prev_p[e]
-            if ins:
-                _entries_df(
-                    {"partition_col": pcol, "partitions": ins}, m, v, "insert"
-                )
-            if dels:
-                _entries_df(
-                    {"partition_col": pcol, "partitions": dels},
-                    prev, v, "delete",
-                )
-            if op == "merge" and m.get("dv") != prev.get("dv"):
-                # a merge's delete clauses may tombstone keys (and a
-                # consolidation may CLEAR re-inserted ones — those rows
-                # reappear via the map diff above). New hidden keys =
-                # key-set difference, not dir-list difference: the
-                # consolidated file holds old keys too.
-                cur_keys = (
-                    _read_parquet_fast(
-                        spark,
-                        *[os.path.join(table_dir, d) for d in m["dv"]],
-                        schema_json=_dirs_schema(m, m["dv"]),
-                    ).distinct()
-                    if m.get("dv")
-                    else None
-                )
-                if cur_keys is not None:
-                    kcols = _dv_keys(m)
-                    if prev.get("dv"):
-                        prev_keys = _read_parquet_fast(
-                            spark,
-                            *[os.path.join(table_dir, d) for d in prev["dv"]],
-                            schema_json=_dirs_schema(prev, prev["dv"]),
-                        ).distinct()
-                        added = cur_keys.join(
-                            prev_keys, on=kcols, how="left_anti"
-                        )
-                    else:
-                        added = cur_keys
-                    lo_hi = added.agg(
-                        *[
-                            F.min(k).alias(f"_lo{i}")
-                            for i, k in enumerate(kcols)
-                        ],
-                        *[
-                            F.max(k).alias(f"_hi{i}")
-                            for i, k in enumerate(kcols)
-                        ],
-                    ).collect()[0]
-                    if lo_hi["_lo0"] is not None:  # empty set hides nothing
-                        # delete images come from entries whose prior
-                        # rows are NOT already re-stated as pair
-                        # deletes: untouched entries, plus the PRIOR
-                        # generations of pure EXTENSIONS (their pair
-                        # images are insert-only — r11 review #1; a
-                        # REWRITTEN entry's removed rows are in its
-                        # pair deletes, so including it would
-                        # double-delete keys whose rows span both,
-                        # r10 review #2). Legacy layouts cannot exist
-                        # under a merge commit (the write path refuses
-                        # them), so the current-layout map is the
-                        # whole prior state.
-                        untouched = {
-                            e: prev_p[e] for e in prev_p if e not in touched
-                        }
-                        untouched.update(extended)
-                        sub = {
-                            "partition_col": pcol,
-                            "partitions": dict(
-                                _stats_prune(
-                                    {
-                                        "partitions": untouched,
-                                        "stats": prev.get("stats", {}),
-                                    },
-                                    {
-                                        k: (lo_hi[f"_lo{i}"], lo_hi[f"_hi{i}"])
-                                        for i, k in enumerate(kcols)
-                                    },
-                                )
-                            ),
-                            "dir_schemas": prev.get("dir_schemas") or {},
-                        }
-                        before = (
-                            _apply_tombstones(
-                                spark, table_dir, prev,
-                                _read_partition_map(spark, table_dir, sub),
-                            )
-                            if sub["partitions"]
-                            else None
-                        )
-                        if before is not None:
-                            deleted = before.join(
-                                F.broadcast(added), on=kcols, how="left_semi"
-                            )
-                            deleted = (
-                                deleted.withColumn(
-                                    "_commit_version", F.lit(v).cast("long")
-                                )
-                                .withColumn("_change_type", F.lit("delete"))
-                                .withColumn("_commit_timestamp", _commit_ts(v))
-                            )
-                            out = (
-                                deleted
-                                if out is None
-                                else out.unionByName(
-                                    deleted, allowMissingColumns=True
-                                )
-                            )
-        else:  # op == "delete" with a new dv file: key tombstone commit
-            kcols = _dv_keys(m)
-            keys = _read_parquet_fast(
-                spark,
-                *[os.path.join(table_dir, d) for d in new_dv],
-                schema_json=_dirs_schema(m, new_dv),
-            ).distinct()
-            # narrow the prior-version read to partitions whose stats
-            # can hold the deleted keys (the key file is O(deleted
-            # keys), so its bounds are one tiny job — r9 review #5)
-            lo_hi = keys.agg(
-                *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(kcols)],
-                *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(kcols)],
-            ).collect()[0]
-            prune = (
-                {
-                    k: (lo_hi[f"_lo{i}"], lo_hi[f"_hi{i}"])
-                    for i, k in enumerate(kcols)
-                }
-                if lo_hi["_lo0"] is not None
-                else None
-            )
-            before = read_keyed_table(
-                spark, table_dir, version=v - 1, prune=prune,
-                _logical=False,
-            )
-            if before is None:
-                continue
-            deleted = before.join(F.broadcast(keys), on=kcols, how="left_semi")
-            deleted = (
-                deleted.withColumn("_commit_version", F.lit(v).cast("long"))
-                .withColumn("_change_type", F.lit("delete"))
-                .withColumn("_commit_timestamp", _commit_ts(v))
-            )
-            out = deleted if out is None else out.unionByName(
-                deleted, allowMissingColumns=True
-            )
     # surface the END version's LOGICAL schema (Delta CDF reads a range
     # with the end schema): frames and sidecars are physical throughout,
     # and rename is metadata-only, so one final projection is coherent
@@ -3765,6 +3746,15 @@ def _entry_dirs(v) -> list[str]:
     """A partition-map value is one data dir (rewrite) or a LIST of data
     dirs (append generations) — normalize to a list."""
     return [v] if isinstance(v, str) else list(v)
+
+
+def _parquet_files(d: str) -> list[str]:
+    """The parquet files of one dir, sorted (none when it is absent)."""
+    if not os.path.isdir(d):
+        return []
+    return sorted(
+        os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+    )
 
 
 _ESCAPED_VALUE = re.compile(r"%[0-9A-Fa-f]{2}")
@@ -4076,18 +4066,27 @@ def _read_all_layouts(
     evolution): each layout prunes against ITS OWN partition column and
     stats; unionByName(allowMissingColumns) supplies NULL for the new
     partition column in legacy files that never stored it as data."""
-    out = _read_partition_map(spark, table_dir, manifest, prune)
+    out = None
+    for lay in _layouts(manifest):
+        part = _read_partition_map(spark, table_dir, lay, prune)
+        if part is not None:
+            out = part if out is None else out.unionByName(
+                part, allowMissingColumns=True
+            )
+    return out
+
+
+def _layouts(manifest: dict) -> list[dict]:
+    """The manifest itself (its current layout) followed by every legacy
+    layout, each a partition map `_read_partition_map` accepts."""
+    out = [manifest]
     for lay in manifest.get("legacy_layouts", []):
         if manifest.get("dir_schemas") and "dir_schemas" not in lay:
             # schemas are keyed by data dir, so the head manifest's map
             # serves the legacy layouts' dirs too (they were recorded
             # when those layouts were current and carried since)
             lay = {**lay, "dir_schemas": manifest["dir_schemas"]}
-        part = _read_partition_map(spark, table_dir, lay, prune)
-        if part is not None:
-            out = part if out is None else out.unionByName(
-                part, allowMissingColumns=True
-            )
+        out.append(lay)
     return out
 
 

@@ -17,8 +17,10 @@ the last committed micro-batch, and each emitted row carries its
 `_commit_version` so downstream folds stay attributable.
 
 Scale shape: offsets and partition PLANNING are metadata-only driver
-work over the commit log (O(tail) manifests, never data); the DATA read
-plans one unit per (commit, partition entry) and byte-packs units into
+work over the commit log (O(tail) manifests, never data). The plan is
+`_change_images` (sinks.py), the one per-commit image planner the batch
+typed feed also executes; this module only expands its images into read
+units, one per (commit, partition entry), and byte-packs units into
 executor tasks against a maxPartitionBytes target (r15 — a tiny batch
 reads in one task, a real commit still fans out wide), Arrow-batched
 end to end (the reader hands pyarrow RecordBatches straight to Spark —
@@ -38,9 +40,9 @@ nothing; a commit vacuumed before it was read also raises.
 
 `.option("changeTypes", "true")` switches to the TYPED feed (r10,
 VERDICT r09 #6): the streaming half of Delta CDF. Each micro-batch
-emits the same images `read_table_changes_typed` computes for its
-version range — a merge's CDC sidecar rows verbatim (update
-pre/post-image pairs, deletes, inserts — r11, VERDICT r10 #1),
+executes the same `_change_images` plan `read_table_changes_typed`
+executes for its version range — a merge's CDC sidecar rows verbatim
+(update pre/post-image pairs, deletes, inserts — r11, VERDICT r10 #1),
 insert/delete pairs for non-keyed rewrites, added-generation inserts
 for merge extensions, tombstone delete images semi-filtered to the
 commit's added keys — plus `_change_type` and `_commit_timestamp`.
@@ -136,7 +138,10 @@ def _plan_changes(
 ) -> list[dict]:
     """Driver-side plan of the add-rows feed for versions (start, end]:
     one dict per (commit, partition entry) with the entry's immutable
-    file list. Metadata-only commits plan nothing; a RESTORE (or any
+    file list — the insert images of `_change_images` (sinks.py), the
+    planner the typed feeds share, expanded into file units. Admission
+    is the additive allow-list: metadata-only commits and
+    ``data_change: false`` rewrites plan nothing; a RESTORE (or any
     other non-additive op) in the range always RAISES — unlike
     `read_table_changes`'s snapshot diff, a version-cursor stream
     cannot re-attribute republished rows without double-counting.
@@ -149,121 +154,47 @@ def _plan_changes(
     stream's logical schema); a LATER map change raises (restart), and
     a materialize in range raises via `_check_map_stable` (it re-based
     the physical names, so one projection cannot span it)."""
-    from nshm2022db_spark.streaming.sinks import table_history
+    from nshm2022db_spark.streaming.sinks import _change_images, table_history
 
-    out: list[dict] = []
     hist = table_history(table_dir)
     mats = _materialize_versions(hist)
-    have = {m["version"] for m in hist}
-    for v in range(start + 1, end + 1):
-        if v not in have:
-            raise ValueError(
-                f"commit {v} of {table_dir} was vacuumed before the "
-                "stream read it; keep retention above the max consumer "
-                "lag or restart the stream from the current version"
-            )
-    for m in hist:
-        v = m["version"]
-        if v <= start or v > end:
-            continue
-        if "partitions" not in m or "mor" in m:
-            raise ValueError(
-                f"{table_dir} is not an append-only partition-mapped "
-                "table; the commitlog stream source reads those only"
-            )
-        op = m.get("op")
+
+    def admit(m: dict) -> None:
         _check_stream_map(m, map_meta, map_version, table_dir, mats)
-        if op not in _ADDITIVE_OPS:
-            if op == "rewrite" and m.get("data_change") is False:
-                # compaction / Z-order (Delta's dataChange=false): a
-                # provable restatement — the stream keeps flowing
-                # across table maintenance instead of dying on it (a
-                # materialize is caught by _check_stream_map above for
-                # every commit BELOW it; itself it stages nothing)
-                continue
+        if m.get("op") not in _ADDITIVE_OPS and m.get("data_change") is not False:
             raise ValueError(
-                f"commit {v} of {table_dir} is {op!r} — a streaming "
-                "read is only sound over append-only history "
+                f"commit {m['version']} of {table_dir} is {m.get('op')!r} — "
+                "a streaming read is only sound over append-only history "
                 "(rewrites/deletes/restores would double-count or "
                 "silently drop state); recompute downstream instead"
             )
-        stage = m["dir"]
-        prefix = f"{m['partition_col']}="
-        stage_abs = os.path.join(table_dir, stage)
-        entries = (
-            sorted(n for n in os.listdir(stage_abs) if n.startswith(prefix))
-            if os.path.isdir(stage_abs)
-            else []
-        )
-        for e in entries:
-            d = os.path.join(stage_abs, e)
-            files = sorted(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            )
-            if not files:
-                continue
-            out.append(
-                {
-                    "version": v,
-                    "pcol": m["partition_col"],
-                    "value": e.split("=", 1)[1],
-                    "files": files,
-                }
-            )
+
+    out: list[dict] = []
+    for im in _change_images(table_dir, hist, start, end, admit):
+        for e, dirs in sorted(im["map"]["partitions"].items()):
+            files = _entry_files(table_dir, dirs, e)
+            if files:
+                out.append(
+                    {
+                        "version": im["version"],
+                        "pcol": im["map"]["partition_col"],
+                        "value": e.split("=", 1)[1],
+                        "files": files,
+                    }
+                )
     return out
 
 
 def _entry_files(table_dir: str, dirs, entry: str) -> list[str]:
     """Every parquet file of one partition entry across its generation
     dirs — the immutable file list a read unit captures at plan time."""
-    from nshm2022db_spark.streaming.sinks import _entry_dirs
+    from nshm2022db_spark.streaming.sinks import _entry_dirs, _parquet_files
 
-    files: list[str] = []
-    for dirname in _entry_dirs(dirs):
-        d = os.path.join(table_dir, dirname, entry)
-        if os.path.isdir(d):
-            files += sorted(
-                os.path.join(d, f)
-                for f in os.listdir(d)
-                if f.endswith(".parquet")
-            )
-    return files
-
-
-def _dv_added_bounds(
-    table_dir: str, keys: list[str], cur_dirs: list[str], prev_dirs: list[str]
-) -> tuple:
-    """(per-column {col: (lo, hi)} bounds, any) over the key TUPLES
-    ADDED by a dv change (cur − prev) — driver-side pyarrow over the
-    delete-sized key files, zero Spark jobs (the same data the batch
-    path broadcasts). ``keys`` may be composite (VERDICT r10 #2)."""
-    import pyarrow.parquet as pq
-
-    def keys_of(dirs: list[str]) -> set:
-        out: set = set()
-        for d in dirs:
-            dd = os.path.join(table_dir, d)
-            if not os.path.isdir(dd):
-                continue
-            for f in sorted(os.listdir(dd)):
-                if f.endswith(".parquet"):
-                    t = pq.read_table(os.path.join(dd, f), columns=keys)
-                    out.update(zip(*[t[k].to_pylist() for k in keys]))
-        return out
-
-    added = {
-        tup
-        for tup in keys_of(cur_dirs) - keys_of(prev_dirs)
-        if all(x is not None for x in tup)
-    }
-    if not added:
-        return None, False
-    bounds = {
-        k: (min(vs), max(vs)) for k, vs in zip(keys, zip(*added))
-    }
-    return bounds, True
+    return [
+        f
+        for dirname in _entry_dirs(dirs)
+        for f in _parquet_files(os.path.join(table_dir, dirname, entry))
+    ]
 
 
 def _typed_plan(
@@ -271,233 +202,73 @@ def _typed_plan(
     map_meta: tuple = (None, None), map_version: int = 0,
 ) -> list[dict]:
     """Driver-side plan of the TYPED change feed for versions
-    (start, end] — the streaming half of `read_table_changes_typed`
-    (sinks.py), unit for unit:
+    (start, end] — the images `_change_images` (sinks.py) plans for
+    `read_table_changes_typed`, expanded into file units:
 
-    * append → the stage's entries as ``insert`` units;
-    * overwrite / rewrite / merge → map-diff PAIRS (cur content insert,
-      prev content delete) per touched entry, except entries whose dir
-      list merely GREW (a merge's unscanned-partition insert): those
-      plan only the added generations as inserts;
-    * delete (key tombstone) and a merge's dv change → ``delete`` image
-      units over the PRIOR version's stats-pruned entries, carrying the
-      key-file lists; the executor semi-filters rows to the ADDED keys
-      (cur dv − prev dv) after anti-filtering the prior version's own
-      tombstones — no re-deletes;
-    * metadata-only commits plan nothing; restore/clone/migrate raise.
+    * a CDC image → one unit over the sidecar's files; ``_change_type``
+      and the partition column are DATA columns there (value=None /
+      ctype=None sentinels);
+    * every other image → one unit per stats-surviving entry of its
+      map, carrying the image version's dv file list (``anti``): the
+      executor anti-filters hidden keys, so an image matches what the
+      batch feed computes for the same commit (pinned
+      stream-equals-batch by the oracle);
+    * delete images of tombstoned keys additionally carry the key
+      columns and the dv lists ``inc``/``exc``: the executor keeps only
+      rows whose key the commit ADDED (inc − exc) — no re-deletes.
 
-    Every unit is tombstone-aware: insert/delete file units carry their
-    version's dv file list and the executor anti-filters hidden keys,
-    so an image matches what `read_table_changes_typed` computes for
-    the same commit (pinned stream-equals-batch by the oracle)."""
+    A legacy-layout image raises: the stream's schema carries only the
+    current partition column, so a tombstone whose deleted keys live in
+    an unmigrated layout cannot stream its delete images (r10 review
+    #4). Admission is the column-mapping capture (`_check_stream_map`)."""
     from nshm2022db_spark.streaming.sinks import (
+        _change_images,
         _dv_keys,
-        _entry_dirs,
+        _parquet_files,
         _stats_prune,
         table_history,
     )
 
     hist = table_history(table_dir)
-    by_v = {m["version"]: m for m in hist}
     mats = _materialize_versions(hist)
     units: list[dict] = []
-    for v in range(start + 1, end + 1):
-        m = by_v.get(v)
-        if m is None:
+    for im in _change_images(
+        table_dir, hist, start, end,
+        lambda m: _check_stream_map(m, map_meta, map_version, table_dir, mats),
+    ):
+        if im["legacy"]:
             raise ValueError(
-                f"commit {v} of {table_dir} was vacuumed before the "
-                "stream read it; keep retention above the max consumer lag"
+                f"commit {im['version']} of {table_dir} tombstones keys "
+                "over unmigrated legacy partition layouts; run "
+                "migrate_legacy_layouts or consume "
+                "read_table_changes_typed in batch"
             )
-        if "partitions" not in m or "mor" in m:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped table; the typed "
-                "commitlog stream reads those only"
-            )
-        op = m.get("op")
-        # ONE hoisted map guard ahead of the op dispatch (r13 — the
-        # r12 refusal lifted): commits covered by the map the stream
-        # captured at start serve through it (the executor projects
-        # physical file names to the stream's logical schema — rename
-        # and drop are metadata-only, so physical names are stable); a
-        # LATER map change is a schema change the fixed stream schema
-        # cannot express and raises for a restart, Delta's own
-        # streaming schema-change behavior
-        _check_stream_map(m, map_meta, map_version, table_dir, mats)
-        if op in ("set-constraints", "evolve"):
-            continue
-        if op not in (
-            "append", "overwrite", "rewrite", "delete", "merge", "update"
-        ):
-            raise ValueError(
-                f"commit {v} is {op!r} — its row images are not defined "
-                "by a single commit's files; consume it via a recompute"
-            )
-        if op == "rewrite" and m.get("data_change") is False:
-            # compaction (dataChange=false): restatement only — a
-            # materialize is caught by _check_stream_map above for
-            # every commit BELOW it; itself it stages nothing
-            continue
-        if op in ("merge", "update", "delete") and m.get("cdc"):
-            # the merge's/update's/delete's _change_data sidecar holds its exact images
-            # (update pre/post pairs, deletes, inserts) — plan one unit
-            # per cdc file; _change_type and the partition column are
-            # DATA columns there (value=None / ctype=None sentinels)
-            cdc_abs = os.path.join(table_dir, m["cdc"])
-            files = (
-                sorted(
-                    os.path.join(cdc_abs, f)
-                    for f in os.listdir(cdc_abs)
-                    if f.endswith(".parquet")
-                )
-                if os.path.isdir(cdc_abs)
-                else []
-            )
-            if files:
-                units.append(
-                    {
-                        "files": files, "pcol": m["partition_col"],
-                        "value": None, "version": v, "ctype": None,
-                        "ts": m.get("committed_at"), "key": None,
-                        "anti": [], "inc": [], "exc": [],
-                    }
-                )
-            continue
-        if (
-            op in ("overwrite", "rewrite", "delete", "merge", "update")
-            and v - 1 >= 1
-            and v - 1 not in by_v
-        ):
-            raise ValueError(
-                f"commit {v - 1} of {table_dir} (the diff base for {v}) "
-                "was vacuumed; typed changes cannot stream from here"
-            )
-        prev = by_v.get(v - 1, {"partitions": {}}) if v > 1 else {
-            "partitions": {}
+        unit = {
+            "version": im["version"], "ctype": im["ctype"], "ts": im["ts"],
+            "key": None, "anti": [], "inc": [], "exc": [],
         }
-        pcol = m["partition_col"]
-        ts = m.get("committed_at")
-        m_dv = [os.path.join(table_dir, d) for d in m.get("dv", [])]
-        p_dv = [os.path.join(table_dir, d) for d in prev.get("dv", [])]
-        # "delete" routing (same as the batch feed): a PREDICATE delete
-        # (delete_table, change_data=False) has no new dv file and
-        # diffs as a partition-map rewrite; a KEY tombstone has one
-        new_dv = (
-            [d for d in m.get("dv", []) if d not in prev.get("dv", [])]
-            if op == "delete"
-            else []
-        )
-
-        def unit(files, value, ctype, anti, key=None, inc=None, exc=None):
+        if im["cdc"]:
+            files = _parquet_files(os.path.join(table_dir, im["cdc"]))
             if files:
                 units.append(
-                    {
-                        "files": files, "pcol": pcol, "value": value,
-                        "version": v, "ctype": ctype, "ts": ts,
-                        "key": key or _dv_keys(m) or _dv_keys(prev) or None,
-                        "anti": anti, "inc": inc or [], "exc": exc or [],
-                    }
+                    {**unit, "files": files, "value": None,
+                     "pcol": im["dv_of"]["partition_col"]}
                 )
-
-        if op == "append":
-            stage_abs = os.path.join(table_dir, m["dir"])
-            entries = (
-                sorted(
-                    n for n in os.listdir(stage_abs)
-                    if n.startswith(f"{pcol}=")
-                )
-                if os.path.isdir(stage_abs)
-                else []
-            )
-            for e in entries:
-                unit(
-                    _entry_files(table_dir, m["dir"], e),
-                    e.split("=", 1)[1], "insert", m_dv,
-                )
-        elif op in ("overwrite", "rewrite", "merge", "update") or (
-            op == "delete" and not new_dv
-        ):
-            cur_p, prev_p = m["partitions"], prev.get("partitions", {})
-            touched = {
-                e for e in set(cur_p) | set(prev_p)
-                if cur_p.get(e) != prev_p.get(e)
-            }
-            extended: dict = {}
-            for e in sorted(touched):
-                cd = _entry_dirs(cur_p[e]) if e in cur_p else []
-                pd_ = _entry_dirs(prev_p[e]) if e in prev_p else []
-                value = e.split("=", 1)[1]
-                if pd_ and cd[: len(pd_)] == pd_:
-                    unit(
-                        _entry_files(table_dir, cd[len(pd_):], e),
-                        value, "insert", m_dv,
-                    )
-                    extended[e] = pd_
-                else:
-                    if e in cur_p:
-                        unit(
-                            _entry_files(table_dir, cur_p[e], e),
-                            value, "insert", m_dv,
-                        )
-                    if e in prev_p:
-                        unit(
-                            _entry_files(table_dir, prev_p[e], e),
-                            value, "delete", p_dv,
-                        )
-            if op == "merge" and m.get("dv") != prev.get("dv"):
-                kcols = _dv_keys(m)
-                if kcols:
-                    bounds, any_ = _dv_added_bounds(
-                        table_dir, kcols, m.get("dv", []), prev.get("dv", [])
-                    )
-                    if any_:
-                        # delete-image base: untouched entries PLUS
-                        # the prior generations of pure EXTENSIONS —
-                        # their pair images are insert-only, so keys
-                        # tombstoned there need their delete images
-                        # from here (r11 review #1); a REWRITTEN
-                        # entry's removed rows are already in its pair
-                        # deletes (r10 review #2, same as the batch
-                        # path)
-                        base_parts = {
-                            e: d
-                            for e, d in prev.get("partitions", {}).items()
-                            if e not in touched
-                        }
-                        base_parts.update(extended)
-                        untouched = {
-                            "partitions": base_parts,
-                            "stats": prev.get("stats", {}),
-                        }
-                        for e, dirs in sorted(
-                            _stats_prune(untouched, bounds).items()
-                        ):
-                            unit(
-                                _entry_files(table_dir, dirs, e),
-                                e.split("=", 1)[1], "delete", p_dv,
-                                key=kcols, inc=m_dv, exc=p_dv,
-                            )
-        else:  # op == "delete" with a new dv file: key tombstone commit
-            if m.get("legacy_layouts") or prev.get("legacy_layouts"):
-                # the deleted keys' rows may live in a legacy layout the
-                # current-layout plan below cannot see — the batch feed
-                # reads all layouts, a silent stream would miss delete
-                # images (r10 review #4)
-                raise ValueError(
-                    f"commit {v} of {table_dir} tombstones keys over "
-                    "unmigrated legacy partition layouts; run "
-                    "migrate_legacy_layouts or consume "
-                    "read_table_changes_typed in batch"
-                )
-            kcols = _dv_keys(m)
-            bounds, any_ = _dv_added_bounds(table_dir, kcols, new_dv, [])
-            if not any_:
-                continue
-            nd_abs = [os.path.join(table_dir, d) for d in new_dv]
-            for e, dirs in sorted(_stats_prune(prev, bounds).items()):
-                unit(
-                    _entry_files(table_dir, dirs, e),
-                    e.split("=", 1)[1], "delete", p_dv,
-                    key=kcols, inc=nd_abs, exc=[],
+            continue
+        dv_of = im["dv_of"]
+        inc, exc = im["added"] or ([], [])
+        unit.update(
+            key=im["keys"] or _dv_keys(dv_of) or None,
+            anti=[os.path.join(table_dir, d) for d in dv_of.get("dv", [])],
+            inc=[os.path.join(table_dir, d) for d in inc],
+            exc=[os.path.join(table_dir, d) for d in exc],
+        )
+        for e, dirs in sorted(_stats_prune(im["map"], im["prune"]).items()):
+            files = _entry_files(table_dir, dirs, e)
+            if files:
+                units.append(
+                    {**unit, "files": files, "value": e.split("=", 1)[1],
+                     "pcol": im["map"]["partition_col"]}
                 )
     return units
 
@@ -802,30 +573,11 @@ class CommitLogStreamReader(DataSourceStreamReader):
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         self._observed = True
         self._floor = max(self._floor, end["version"])
-        if self._typed:
-            plan = _typed_plan(
-                self._path, start["version"], end["version"],
-                map_meta=self._map_meta, map_version=self._map_version,
-            )
-            units = [
-                CommitLogPartition(
-                    p["files"], p["pcol"], p["value"], p["version"],
-                    ctype=p["ctype"], ts=p["ts"], key=p["key"],
-                    anti=p["anti"], inc=p["inc"], exc=p["exc"],
-                )
-                for p in plan
-            ]
-        else:
-            plan = _plan_changes(
-                self._path, start["version"], end["version"],
-                map_meta=self._map_meta, map_version=self._map_version,
-            )
-            units = [
-                CommitLogPartition(
-                    p["files"], p["pcol"], p["value"], p["version"]
-                )
-                for p in plan
-            ]
+        plan = (_typed_plan if self._typed else _plan_changes)(
+            self._path, start["version"], end["version"],
+            map_meta=self._map_meta, map_version=self._map_version,
+        )
+        units = [CommitLogPartition(**p) for p in plan]
         return _pack_units(units, self._target_bytes, self._open_cost)
 
     # -- data read (executors) ------------------------------------------
@@ -839,6 +591,8 @@ class CommitLogStreamReader(DataSourceStreamReader):
         import pyarrow.parquet as pq
         from pyspark.sql.pandas.types import to_arrow_schema
 
+        from nshm2022db_spark.streaming.sinks import _parquet_files
+
         def key_set(dirs: list[str]) -> frozenset:
             # per-worker memo: a commit fanning out to many units would
             # otherwise re-parse the same immutable dv key files once
@@ -850,16 +604,9 @@ class CommitLogStreamReader(DataSourceStreamReader):
                 return hit
             out: set = set()
             for d in dirs:
-                if not os.path.isdir(d):
-                    continue
-                for f in sorted(os.listdir(d)):
-                    if f.endswith(".parquet"):
-                        t = pq.read_table(
-                            os.path.join(d, f), columns=partition.key
-                        )
-                        out.update(
-                            zip(*[t[k].to_pylist() for k in partition.key])
-                        )
+                for f in _parquet_files(d):
+                    t = pq.read_table(f, columns=partition.key)
+                    out.update(zip(*[t[k].to_pylist() for k in partition.key]))
             if len(_KEYSET_CACHE) >= 64:
                 _KEYSET_CACHE.clear()
             res = frozenset(out)

@@ -5931,3 +5931,249 @@ class TestDmlWork:
                 keys=["k"], when_not_matched_insert=True, stats_cols=["k"],
             )),
         ] == [11, 13, 20]
+
+
+def _typed_feed_history(spark, t: str) -> None:
+    """Eight commits over every image kind of the typed change feed: v1
+    append over two partitions with key stats, v2 append, v3 key
+    tombstone, v4 non-CDC merge that tombstones one key and inserts
+    another into an existing partition (a generation extension), v5
+    overwrite, v6 non-CDC update, v7 non-CDC predicate delete, v8 CDC
+    merge."""
+    from nshm2022db_spark.streaming import sinks
+
+    schema = "k long, day string, v double"
+
+    def rows(*r):
+        return spark.createDataFrame(list(r), schema)
+
+    sinks.append_partition_transaction(
+        spark, t, "day",
+        rows((1, "d1", 1.0), (2, "d1", 2.0), (3, "d2", 3.0), (4, "d2", 4.0)),
+        stats_cols=["k"],
+    )
+    sinks.append_partition_transaction(
+        spark, t, "day", rows((5, "d1", 5.0), (6, "d3", 6.0)), stats_cols=["k"]
+    )
+    sinks.tombstone_keys(spark, t, "k", spark.createDataFrame([(2,)], "k long"))
+    sinks.merge_into_table(
+        spark, t, rows((3, "d2", 0.0), (7, "d1", 7.0)), keys=["k"],
+        when_matched_delete=True, when_not_matched_insert=True,
+        stats_cols=["k"], change_data=False,
+    )
+    sinks.overwrite_partition_transaction(
+        spark, t, "day", rows((8, "d3", 8.0), (10, "d3", 10.0)),
+        stats_cols=["k"],
+    )
+    sinks.update_table(
+        spark, t, {"v": "v * 10"}, where="k = 1", stats_cols=["k"],
+        change_data=False,
+    )
+    sinks.delete_table(
+        spark, t, where="k = 5", stats_cols=["k"], change_data=False
+    )
+    sinks.merge_into_table(
+        spark, t, rows((4, "d2", 40.0), (9, "d4", 9.0)), keys=["k"],
+        when_matched_update={"v": "s.v"}, when_not_matched_insert=True,
+        stats_cols=["k"],
+    )
+
+
+def _legacy_feed_history(spark, t: str) -> None:
+    """A key tombstone over two partition layouts: v1 append by ``day``,
+    v2 evolves the partition column to ``k``, v3 appends in the new
+    layout, v4 tombstones one key from each layout."""
+    from nshm2022db_spark.streaming import sinks
+
+    schema = "k long, day string, v double"
+    sinks.append_partition_transaction(
+        spark, t, "day",
+        spark.createDataFrame(
+            [(1, "d1", 1.0), (2, "d2", 2.0), (3, "d2", 3.0)], schema
+        ),
+        stats_cols=["k"],
+    )
+    sinks.evolve_partition_column(spark, t, "k")
+    sinks.append_partition_transaction(
+        spark, t, "k",
+        spark.createDataFrame([(4, "d1", 4.0), (5, "d3", 5.0)], schema),
+    )
+    sinks.tombstone_keys(
+        spark, t, "k", spark.createDataFrame([(2,), (5,)], "k long")
+    )
+
+
+def _feed_digest(df) -> str:
+    """Column list plus sorted rows of a typed feed, commit time aside."""
+    import hashlib
+
+    if df is None:
+        return "none"
+    df = df.drop("_commit_timestamp")
+    text = ",".join(df.columns) + "\n" + "\n".join(
+        sorted(repr(tuple(r)) for r in df.collect())
+    )
+    return hashlib.sha1(text.encode()).hexdigest()[:12]
+
+
+# `_feed_digest` of `read_table_changes_typed` per single-commit range
+# (v-1, v] and over the whole history, recorded before the batch feed
+# and the commitlog stream shared one per-commit image planner
+_TYPED_FEED_GOLDEN = {
+    "v1": "0f84121a3534",
+    "v2": "c309a828ecce",
+    "v3": "c90f2fbffe2f",
+    "v4": "9ca85769cdaf",
+    "v5": "596360e1044a",
+    "v6": "a0fdbb6b4935",
+    "v7": "453b2b3e4707",
+    "v8": "f33ff514a62f",
+    "all": "24aa3b11d934",
+    "legacy_v4": "0d51184fc30a",
+    "legacy_all": "05db416874ba",
+}
+
+
+class TestTypedFeedTrail:
+    """The typed change feed over `_typed_feed_history` and
+    `_legacy_feed_history`: digests pinned per commit and per range, and
+    the typed commitlog stream equal to the batch feed row for row."""
+
+    def test_typed_feed_matches_golden(self, spark, tmp_path):
+        from nshm2022db_spark.streaming.sinks import read_table_changes_typed
+
+        t = str(tmp_path / "t")
+        _typed_feed_history(spark, t)
+        got = {
+            f"v{v}": _feed_digest(read_table_changes_typed(spark, t, v - 1, v))
+            for v in range(1, 9)
+        }
+        got["all"] = _feed_digest(read_table_changes_typed(spark, t, 0))
+        leg = str(tmp_path / "leg")
+        _legacy_feed_history(spark, leg)
+        got["legacy_v4"] = _feed_digest(
+            read_table_changes_typed(spark, leg, 3, 4)
+        )
+        got["legacy_all"] = _feed_digest(read_table_changes_typed(spark, leg, 0))
+        assert got == _TYPED_FEED_GOLDEN
+
+    def test_typed_stream_matches_batch(self, spark, tmp_path):
+        from nshm2022db_spark.streaming.sinks import read_table_changes_typed
+        from nshm2022db_spark.streaming.table_source import (
+            register_commitlog_source,
+        )
+
+        t = str(tmp_path / "t")
+        _typed_feed_history(spark, t)
+        register_commitlog_source(spark)
+        q = (
+            spark.readStream.format("commitlog")
+            .option("path", t)
+            .option("changeTypes", "true")
+            .option("maxVersionsPerBatch", "1")
+            .load()
+            .writeStream.outputMode("append")
+            .format("memory")
+            .queryName("typed_feed_trail")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        cols = "k, day, v, _commit_version, _change_type"
+        stream_rows = spark.sql(f"select {cols} from typed_feed_trail").collect()
+        spark.catalog.dropTempView("typed_feed_trail")
+        batch_rows = read_table_changes_typed(spark, t, 0).selectExpr(
+            *cols.split(", ")
+        ).collect()
+        assert sorted(map(tuple, stream_rows)) == sorted(map(tuple, batch_rows))
+        assert {r._commit_version for r in stream_rows} == set(range(1, 9))
+
+
+class TestChangeFeedWork:
+    """Eager Spark jobs of `read_table_changes_typed` on
+    `_typed_feed_history`: planning the feed is driver metadata work, so
+    building the frame runs no job."""
+
+    def test_typed_feed_runs_no_job(self, spark, tmp_path):
+        from nshm2022db_spark.streaming.sinks import read_table_changes_typed
+
+        t = str(tmp_path / "t")
+        _typed_feed_history(spark, t)
+        assert [
+            # key tombstone, non-CDC merge, whole history
+            _jobs_of(spark, lambda: read_table_changes_typed(spark, t, 2, 3)),
+            _jobs_of(spark, lambda: read_table_changes_typed(spark, t, 3, 4)),
+            _jobs_of(spark, lambda: read_table_changes_typed(spark, t, 0)),
+        ] == [0, 0, 0]
+
+
+class TestChangeFeedPlanner:
+    """One planner decides which row images a commit has
+    (`_change_images`); the batch feed and the commitlog stream only
+    execute them."""
+
+    def test_untyped_feed_refuses_vacuumed_commits(self, spark, tmp_path):
+        """A vacuumed commit in the range raises like the typed feed, the
+        stream and the incremental maintainer do, instead of silently
+        dropping its rows."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming.sinks import (
+            append_partition_transaction,
+            read_table_changes,
+            vacuum_versions,
+        )
+
+        t = str(tmp_path / "t")
+        for lo in (0, 3, 6):
+            append_partition_transaction(
+                spark, t, "day",
+                spark.range(lo, lo + 3).selectExpr("id as k", "'d' as day"),
+            )
+        vacuum_versions(t, keep_last=1)
+        with _pytest.raises(ValueError, match="vacuumed"):
+            read_table_changes(spark, t, 0)
+        rows = read_table_changes(spark, t, 2).collect()
+        assert sorted((r.k, r._commit_version) for r in rows) == [
+            (6, 3), (7, 3), (8, 3),
+        ]
+
+    def test_one_change_feed_planner(self):
+        """CI guard against re-forking the image decision: `_dv_added_bounds`
+        is defined once and only `_change_images` calls it, and the
+        executors (`read_table_changes_typed`, `_typed_plan`,
+        `_plan_changes`) compare nothing against the op names whose
+        images the planner decides."""
+        import ast
+        import inspect
+
+        from nshm2022db_spark.streaming import sinks, table_source
+
+        ops = {"overwrite", "rewrite", "merge", "update"}
+        executors = {"read_table_changes_typed", "_typed_plan", "_plan_changes"}
+        defined, callers, compared = [], set(), set()
+        for mod in (sinks, table_source):
+            for fn in ast.parse(inspect.getsource(mod)).body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                for node in ast.walk(fn):
+                    if isinstance(node, ast.FunctionDef) and (
+                        node.name == "_dv_added_bounds"
+                    ):
+                        defined.append(mod.__name__)
+                    if isinstance(node, ast.Call):
+                        f = node.func
+                        name = getattr(f, "id", None) or getattr(f, "attr", None)
+                        if name == "_dv_added_bounds":
+                            callers.add(fn.name)
+                    if isinstance(node, ast.Compare) and fn.name in executors:
+                        if any(
+                            isinstance(c, ast.Constant) and c.value in ops
+                            for c in ast.walk(node)
+                        ):
+                            compared.add(fn.name)
+        assert defined == [sinks.__name__]
+        assert callers == {"_change_images"}
+        assert compared == set()
