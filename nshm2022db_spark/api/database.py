@@ -5,8 +5,8 @@ Differences from the reference, all deliberate and documented:
   * one engine — no SQLite/DuckDB split (nshmdb.py:655 re-attaches the
     SQLite file to DuckDB for the one analytical query);
   * `query()` runs as TWO plans whatever the result size: the membership
-    plan (agg + top-k), then one geometry join for every hit, its rows
-    sorted and grouped on the driver — 9 Spark jobs (5 + 4) on the test
+    plan (agg + top-k), then one bridge collect for every hit, its rows
+    sorted and grouped on the driver — 6 Spark jobs (5 + 1) on the test
     fixture, where the reference issues one extra SQL round trip per
     result rupture (N+1, nshmdb.py:663-683);
   * `get_rupture_fault_info` filters on BOTH fault_system and nshm_id —
@@ -18,14 +18,24 @@ Differences from the reference, all deliberate and documented:
     (nshmdb.py:414,564); projection here is a pluggable hook
     (``projection=`` callable) rather than a hard dependency.
 
-Scale: every dimension (fault, parent_fault, fault_plane) broadcasts;
-point lookups are parquet scans with pushed natural-key predicates; at
-100 TB partition the fact tables by fault_system for partition pruning.
+Scale: the dimension tables (fault, parent_fault, fault_plane) are small —
+hundreds to thousands of rows — and a broadcast join already collected
+them to the driver on every call. The read path keeps one driver-side
+copy of each per SparkSession instead (`_load_snapshot`), keyed by the
+recursive listing of its table dir (file name, size, mtime_ns), so any
+writer, this API's inserts or an outside overwrite, invalidates it on the
+next call. Spark then scans only the fact tables (rupture, rupture_faults,
+magnitude_frequency_distribution), with pushed natural-key predicates;
+names, natural keys and plane corners resolve on the driver. The
+membership plan of `query()` keeps its Spark join of fault and
+parent_fault, since it is shared with the registered star-schema queries.
+At 100 TB partition the fact tables by fault_system for partition pruning.
 """
 
 from __future__ import annotations
 
 import os
+import weakref
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -90,17 +100,76 @@ class Rupture:
     faults: dict[str, Fault] = field(default_factory=dict)
 
 
-def _planes_from_rows(rows) -> list[tuple[str, Plane]]:
-    out = []
-    for r in rows:
-        corners = np.array(
+def _plane(r: dict) -> Plane:
+    return Plane(
+        np.array(
             [
                 [r[f"{c}_lat"], r[f"{c}_lon"], r["top_depth" if c.startswith("top") else "bottom_depth"]]
                 for c in _CORNERS
             ]
         )
-        out.append((r["name"], Plane(corners)))
-    return out
+    )
+
+
+def _listing(table_dir: str) -> tuple:
+    """Every file under ``table_dir`` as (relative path, size, mtime_ns),
+    sorted. Writers add, replace or remove files, so any write changes it."""
+    out = []
+    for root, _, files in os.walk(table_dir):
+        for name in files:
+            path = os.path.join(root, name)
+            try:
+                st = os.stat(path)
+            except FileNotFoundError:  # removed by a concurrent writer
+                continue
+            out.append((os.path.relpath(path, table_dir), st.st_size, st.st_mtime_ns))
+    return tuple(sorted(out))
+
+
+class _Snapshot:
+    """One table's rows on the driver, as of one listing of its dir, with
+    lookup indexes built on first use. Holds plain data only: no session,
+    no NSHMDB."""
+
+    def __init__(self, listing: tuple, rows: list[dict]):
+        self.listing = listing
+        self.rows = rows
+        self._indexes: dict[tuple, dict[tuple, list[dict]]] = {}
+
+    def by(self, *cols: str) -> dict[tuple, list[dict]]:
+        """Rows grouped by the values of ``cols``, in scan order."""
+        index = self._indexes.get(cols)
+        if index is None:
+            index = {}
+            for r in self.rows:
+                index.setdefault(tuple(r[c] for c in cols), []).append(r)
+            self._indexes[cols] = index
+        return index
+
+
+# {SparkSession: {table dir: _Snapshot}}; weak, so a dropped session frees
+# its snapshots (a value that referenced its session would never be freed)
+_SNAPSHOTS: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _load_snapshot(
+    spark: SparkSession, table_dir: str, scan: Callable[[], DataFrame]
+) -> _Snapshot:
+    """The session's snapshot of ``table_dir``, reloaded with ``scan()``
+    when the dir's listing has changed since the last load. The rows are
+    kept only when the listing is the same after the scan (no writer ran
+    meanwhile) and not empty (an empty table, or a path that is not a
+    local dir, has no listing to key on). No lock: threads that race at
+    worst both scan, since an entry is used only while its listing is
+    the dir's current one."""
+    tables = _SNAPSHOTS.setdefault(spark, {})
+    listing = _listing(table_dir)
+    snap = tables.get(table_dir)
+    if snap is None or snap.listing != listing:
+        snap = _Snapshot(listing, [r.asDict() for r in scan().collect()])
+        if listing and _listing(table_dir) == listing:
+            tables[table_dir] = snap
+    return snap
 
 
 class NSHMDB:
@@ -446,104 +515,99 @@ class NSHMDB:
         )
 
     # -- point lookups (reference: nshmdb.py:368-527) ------------------------
+    #
+    # Spark scans only the fact tables (rupture, rupture_faults,
+    # magnitude_frequency_distribution); the dimension joins run on the
+    # driver over the session's snapshots, with inner-join semantics: a
+    # fact row whose fault_id is not in fault, or a fault whose parent_id
+    # is not in parent_fault, is dropped.
+
+    def _snapshot(self, name: str) -> _Snapshot:
+        """This session's driver-side copy of dimension table ``name``,
+        scanned on first use and again after any write to its dir."""
+        return _load_snapshot(
+            self.spark, os.path.abspath(self._table_path(name)), lambda: self.table(name)
+        )
+
+    def _faults(self, *key) -> list[tuple[dict, dict]]:
+        """fault ⋈ parent_fault for the faults with ``key`` — a fault_id,
+        or a (fault_system, nshm_id) natural key — as (fault, parent) rows
+        in scan order."""
+        cols = ("fault_id",) if len(key) == 1 else ("fault_system", "nshm_id")
+        parents = self._snapshot("parent_fault").by("parent_id")
+        return [
+            (f, pf)
+            for f in self._snapshot("fault").by(*cols).get(key, ())
+            for pf in parents.get((f["parent_id"],), ())
+        ]
+
+    @staticmethod
+    def _info(f: dict, pf: dict) -> FaultInfo:
+        return FaultInfo(f["fault_system"], f["nshm_id"], pf["name"], f["rake"], f["tect_type"])
 
     def _fault_rows(self, fault_system: int, fault_nshm_id: int) -> list[dict]:
-        """One fault's plane rows in plane_id order. A fault has a handful
-        of planes, so they are sorted on the driver: a global orderBy
-        would add a range-sampling job and a shuffle."""
-        fp = self.table("fault_plane").alias("fp")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        rows = (
-            fp.join(F.broadcast(f), F.col("fp.fault_id") == F.col("f.fault_id"))
-            .join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id"))
-            .filter(
-                (F.col("f.nshm_id") == fault_nshm_id)
-                & (F.col("f.fault_system") == fault_system)
-            )
-            .collect()
-        )
-        return sorted((r.asDict() for r in rows), key=lambda d: d["plane_id"])
+        """The plane rows of the faults with this natural key, in plane_id
+        order; every match's planes when the key is duplicated."""
+        planes = self._snapshot("fault_plane").by("fault_id")
+        rows = [
+            p
+            for f, _ in self._faults(fault_system, fault_nshm_id)
+            for p in planes.get((f["fault_id"],), ())
+        ]
+        return sorted(rows, key=lambda d: d["plane_id"])
 
     def get_fault(self, fault_system: int, fault_nshm_id: int) -> Fault:
         """reference: nshmdb.py:368-415 (J1)"""
-        rows = self._fault_rows(fault_system, fault_nshm_id)
-        planes = [p for _, p in _planes_from_rows(rows)]
+        planes = [_plane(r) for r in self._fault_rows(fault_system, fault_nshm_id)]
         if self.projection:
             planes = [Plane(self.projection(p.corners)) for p in planes]
         return Fault(planes)
 
     def get_fault_info(self, fault_system: int, fault_nshm_id: int) -> FaultInfo:
         """reference: nshmdb.py:417-450 (J2)"""
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        row = (
-            f.join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id"))
-            .filter(
-                (F.col("f.nshm_id") == fault_nshm_id)
-                & (F.col("f.fault_system") == fault_system)
-            )
-            .select("f.fault_system", "f.nshm_id", "pf.name", "f.rake", "f.tect_type")
-            .collect()
-        )
-        if not row:
+        rows = self._faults(fault_system, fault_nshm_id)
+        if not rows:
             raise KeyError(f"no fault ({fault_system}, {fault_nshm_id})")
-        r = row[0]
-        return FaultInfo(r.fault_system, r.nshm_id, r.name, r.rake, r.tect_type)
+        return self._info(*rows[0])
 
     def _rupture_faults_bulk(self, rupture_ids: list[int]) -> dict[int, dict[str, Fault]]:
-        """Geometry for MANY ruptures in one plan (replaces the reference's
-        per-rupture query loop, nshmdb.py:663-683). One join pipeline, one
-        collect; rows sorted on the driver by (rupture, parent, plane) —
-        a handful per rupture, where a global orderBy would cost a
-        range-sampling job and a shuffle — then regrouped by (rupture,
+        """Geometry for MANY ruptures in one Spark job (replaces the
+        reference's per-rupture query loop, nshmdb.py:663-683): one
+        filter-and-collect of the ruptures' (rupture_id, fault_id) bridge
+        rows; labels, parents and plane corners come from the dimension
+        snapshots. Rows are sorted on the driver by (rupture, parent,
+        plane) — a handful per rupture — then regrouped by (rupture,
         section label)."""
         if not rupture_ids:
             return {}
-        fp = self.table("fault_plane").alias("fp")
-        rf = self.table("rupture_faults").alias("rf")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        rows = (
-            rf.filter(F.col("rf.rupture_id").isin(rupture_ids))
-            .join(fp, F.col("fp.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .select(
-                F.col("rf.rupture_id").alias("rid"),
-                "pf.parent_id",
-                "fp.plane_id",
-                # reference labeling (nshmdb.py:559-563): CRUSTAL
-                # ruptures merge every section of a parent into ONE
-                # fault keyed by the bare parent name (geometries are
-                # only connected in the crustal setting); other systems
-                # keep per-section labels, and the numeric part is the
-                # SURROGATE fault_id, exactly as the reference formats
-                F.when(
-                    F.col("f.fault_system") == 3,  # FaultSystem.Crustal
-                    F.col("pf.name"),
-                )
-                .otherwise(
-                    F.concat(
-                        F.col("pf.name"), F.lit(": Section "), F.col("f.fault_id")
-                    )
-                )
-                .alias("name"),
-                *[F.col(f"fp.{c}_{ax}") for c in _CORNERS for ax in ("lat", "lon")],
-                "fp.top_depth",
-                "fp.bottom_depth",
-            )
+        pairs = (
+            self.table("rupture_faults")
+            .filter(F.col("rupture_id").isin(rupture_ids))
+            .select("rupture_id", "fault_id")
             .collect()
         )
+        planes = self._snapshot("fault_plane").by("fault_id")
+        rows = []
+        for rid, fid in pairs:
+            for f, pf in self._faults(fid):
+                # reference labeling (nshmdb.py:559-563): CRUSTAL ruptures
+                # merge every section of a parent into ONE fault keyed by
+                # the bare parent name (geometries are only connected in
+                # the crustal setting); other systems keep per-section
+                # labels, and the numeric part is the SURROGATE fault_id,
+                # exactly as the reference formats
+                if f["fault_system"] == 3:  # FaultSystem.Crustal
+                    name = pf["name"]
+                else:
+                    name = f"{pf['name']}: Section {fid}"
+                rows += [(rid, pf["parent_id"], p["plane_id"], name, p)
+                         for p in planes.get((fid,), ())]
         out: dict[int, dict[str, Fault]] = {rid: {} for rid in rupture_ids}
-        for d in sorted(
-            (r.asDict() for r in rows),
-            key=lambda d: (d["rid"], d["parent_id"], d["plane_id"]),
-        ):
-            (name, plane), = _planes_from_rows([d])
+        for rid, _, _, name, p in sorted(rows, key=lambda t: t[:3]):
+            plane = _plane(p)
             if self.projection:
                 plane = Plane(self.projection(plane.corners))
-            out[d["rid"]].setdefault(name, Fault([])).planes.append(plane)
+            out[rid].setdefault(name, Fault([])).planes.append(plane)
         return out
 
     def get_rupture_faults(self, rupture_id: int) -> dict[str, Fault]:
@@ -577,38 +641,30 @@ class NSHMDB:
             faults=self.get_rupture_faults(r.rupture_id),
         )
 
+    def _rupture_sections(self, fault_system: int, rupture_nshm_id: int) -> DataFrame:
+        """The bridge rows of one rupture: rupture ⋈ rupture_faults."""
+        r = self.table("rupture").alias("r")
+        rf = self.table("rupture_faults").alias("rf")
+        return r.filter(
+            (F.col("r.nshm_id") == rupture_nshm_id)
+            & (F.col("r.fault_system") == fault_system)
+        ).join(rf, F.col("rf.rupture_id") == F.col("r.rupture_id"))
+
     def get_rupture_fault_info(
         self, fault_system: int, rupture_nshm_id: int
     ) -> list[FaultInfo]:
         """Fault info for every section of a rupture (reference:
         nshmdb.py:567-621, J4). Fixed: filters on fault_system too."""
-        r = self.table("rupture").alias("r")
-        rf = self.table("rupture_faults").alias("rf")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        rows = (
-            r.filter(
-                (F.col("r.nshm_id") == rupture_nshm_id)
-                & (F.col("r.fault_system") == fault_system)
-            )
-            .join(rf, F.col("rf.rupture_id") == F.col("r.rupture_id"))
-            .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .select("f.fault_system", "f.nshm_id", "pf.name", "f.rake", "f.tect_type")
-            .collect()
-        )
-        return [
-            FaultInfo(x.fault_system, x.nshm_id, x.name, x.rake, x.tect_type)
-            for x in rows
-        ]
+        ids = self._rupture_sections(fault_system, rupture_nshm_id).select("rf.fault_id").collect()
+        return [self._info(f, pf) for (fid,) in ids for f, pf in self._faults(fid)]
 
     def get_fault_names(self) -> set[str]:
         """reference: nshmdb.py:596-607 (A9)"""
-        return {r.name for r in self.table("parent_fault").select("name").distinct().collect()}
+        return {r["name"] for r in self._snapshot("parent_fault").rows}
 
     def get_fault_ids(self) -> set[int]:
         """reference: nshmdb.py:609-621"""
-        return {r.nshm_id for r in self.table("fault").select("nshm_id").distinct().collect()}
+        return {r["nshm_id"] for r in self._snapshot("fault").rows}
 
     # -- rates (reference: most_likely_fault, nshmdb.py:165-248) -------------
 
@@ -625,27 +681,21 @@ class NSHMDB:
         reference's equality join drops it (rounding within each
         parent's own set would fabricate an answer instead).
 
-        One plan and one collect of the rupture's (name, magnitude, rate)
-        rows; the rounding (``nearest_ge_values``) and the sums run on the
-        driver."""
-        r = self.table("rupture").alias("r")
-        rf = self.table("rupture_faults").alias("rf")
+        One plan and one collect of the rupture's (fault_id, magnitude,
+        rate) rows; the parent names (``_faults``), the rounding
+        (``nearest_ge_values``) and the sums run on the driver."""
         mfd = self.table("magnitude_frequency_distribution").alias("mfd")
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-
-        rows = (
-            r.filter(
-                (F.col("r.nshm_id") == rupture_nshm_id)
-                & (F.col("r.fault_system") == fault_system)
-            )
-            .join(rf, F.col("rf.rupture_id") == F.col("r.rupture_id"))
+        collected = (
+            self._rupture_sections(fault_system, rupture_nshm_id)
             .join(mfd, F.col("mfd.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(f), F.col("f.fault_id") == F.col("rf.fault_id"))
-            .join(F.broadcast(pf), F.col("pf.parent_id") == F.col("f.parent_id"))
-            .select("pf.name", "mfd.magnitude", "mfd.rate")
+            .select("rf.fault_id", "mfd.magnitude", "mfd.rate")
             .collect()
         )
+        rows = [
+            (pf["name"], x.magnitude, x.rate)
+            for x in collected
+            for _, pf in self._faults(x.fault_id)
+        ]
         # GLOBAL domain: one distinct-magnitude set across the whole
         # rupture (the reference's single searchsorted array), shared by
         # every requested parent. It is at most sections × MFD bins rows:
@@ -653,13 +703,13 @@ class NSHMDB:
         rounded = dict(
             zip(
                 magnitudes,
-                nearest_ge_values((x.magnitude for x in rows), list(magnitudes.values())),
+                nearest_ge_values((m for _, m, _ in rows), list(magnitudes.values())),
             )
         )
         rates: dict[str, float] = {}
-        for x in rows:
-            if x.name in rounded and x.magnitude == rounded[x.name]:
-                rates[x.name] = rates.get(x.name, 0.0) + x.rate
+        for name, magnitude, rate in rows:
+            if name in rounded and magnitude == rounded[name]:
+                rates[name] = rates.get(name, 0.0) + rate
         return rates
 
     # -- the advanced query (reference: nshmdb.py:623-683) -------------------
@@ -673,13 +723,18 @@ class NSHMDB:
         fault_count_limit: int | None = None,
     ) -> list[Rupture]:
         """Membership-DSL query → hydrated Ruptures WITH geometry in two
-        plans: the membership plan's collect, then one geometry join for
-        all hits (``_rupture_faults_bulk``) — no per-row round trips
-        (§3.1)."""
-        f = self.table("fault").alias("f")
-        pf = self.table("parent_fault").alias("pf")
-        dim = f.join(F.broadcast(pf), F.col("f.parent_id") == F.col("pf.parent_id")).select(
-            F.col("f.fault_id").alias("fault_id"), F.col("pf.name").alias("name")
+        plans: the shared membership plan (``advanced_query``, whose
+        ``dim`` is the one Spark join of fault and parent_fault left on the
+        read path) and its collect, then one bridge collect for all hits
+        whose geometry comes from the dimension snapshots
+        (``_rupture_faults_bulk``) — no per-row round trips (§3.1)."""
+        dim = (
+            self.table("fault").alias("f")
+            .join(
+                F.broadcast(self.table("parent_fault").alias("pf")),
+                F.col("f.parent_id") == F.col("pf.parent_id"),
+            )
+            .select(F.col("f.fault_id").alias("fault_id"), F.col("pf.name").alias("name"))
         )
         t = AdvancedQueryTables(
             fact=self.table("rupture"),

@@ -17,9 +17,10 @@ fact key; flags fold into one hash aggregate with map-side combine. The
 dim-side join is an explicit broadcast. Top-k never performs a global sort
 (TakeOrderedAndProject keeps k rows per partition, then merges on the
 driver). The reference's N+1 geometry hydration is replaced by ONE
-geometry join for the whole result set (``NSHMDB._rupture_faults_bulk``),
-a second plan run after this one's collect: ``NSHMDB.query`` is two
-plans, 9 Spark jobs (5 + 4) on the API test fixture.
+geometry step for the whole result set (``NSHMDB._rupture_faults_bulk``),
+a second plan run after this one's collect — a bridge collect whose
+geometry comes from the session's dimension snapshots: ``NSHMDB.query``
+is two plans, 6 Spark jobs (5 + 1) on the API test fixture.
 
 Deliberate deviations (documented, SURVEY §7): bounds equal to 0/0.0 are
 honored (reference truthiness drops them, query.py:298-314); ties at the

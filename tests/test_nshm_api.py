@@ -5,8 +5,11 @@ its golden expectations (:73-133) and the ETL pipeline round trip."""
 from __future__ import annotations
 
 import ast
+import gc
 import inspect
+import os
 import uuid
+import weakref
 
 import numpy as np
 import pytest
@@ -14,6 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nshm2022db_spark.api import NSHMDB
+from nshm2022db_spark.api import database
 from nshm2022db_spark.api.database import Fault, FaultInfo, Plane
 from nshm2022db_spark.etl import (
     merge_branches,
@@ -141,34 +145,84 @@ def _jobs_of(spark, call) -> int:
 
 class TestReadPathWork:
     """Work counters of the read path. Job counts do not drift with host
-    load, so they pin the plan shapes: most_likely_fault is one plan and
-    one collect with the rounding on the driver; get_fault and the
-    geometry step of get_rupture and query sort their few rows on the
-    driver instead of a global orderBy."""
+    load, so they pin the plan shapes: the dimension tables come from the
+    session's driver-side snapshot, so Spark runs only over the fact
+    tables; most_likely_fault is one plan and one collect with the
+    rounding on the driver; the geometry step of get_rupture and query is
+    one bridge collect, sorted on the driver instead of a global orderBy.
+    The warm pins call once first, so the snapshot is loaded."""
+
+    @staticmethod
+    def _warm_jobs_of(spark, call) -> int:
+        call()
+        return _jobs_of(spark, call)
 
     def test_most_likely_fault_jobs(self, db, spark):
-        assert _jobs_of(spark, lambda: db.most_likely_fault(3, 2, {"Alpine Fault": 6.7})) <= 5
+        assert self._warm_jobs_of(
+            spark, lambda: db.most_likely_fault(3, 2, {"Alpine Fault": 6.7})) <= 3
 
     def test_get_fault_jobs(self, db, spark):
-        assert _jobs_of(spark, lambda: db.get_fault(3, 1)) <= 3
+        assert self._warm_jobs_of(spark, lambda: db.get_fault(3, 1)) == 0
+        assert self._warm_jobs_of(spark, lambda: db.get_fault_info(3, 1)) == 0
 
     def test_geometry_step_jobs(self, db, spark):
-        assert _jobs_of(spark, lambda: db.get_rupture(3, 2)) <= 5
-        assert _jobs_of(spark, lambda: db.query("Alpine Fault")) <= 9
+        assert self._warm_jobs_of(spark, lambda: db.get_rupture(3, 2)) <= 2
+        assert self._warm_jobs_of(spark, lambda: db.query("Alpine Fault")) <= 6
+
+    def test_get_rupture_fault_info_jobs(self, db, spark):
+        assert self._warm_jobs_of(spark, lambda: db.get_rupture_fault_info(3, 2)) <= 2
+
+    def test_cold_get_fault_info_jobs(self, db, spark):
+        """A fresh session loads its snapshots: one scan of fault and one
+        of parent_fault."""
+        cold = NSHMDB(spark.newSession(), db.path)
+        assert _jobs_of(spark, lambda: cold.get_fault_info(3, 1)) <= 2
 
     def test_read_methods_build_no_python_backed_relation(self):
-        """No NSHMDB read method calls createDataFrame: a relation built
-        from driver-side Python data is backed by a Python RDD, and every
-        plan that uses it starts Python workers. Inserts are exempt."""
-        tree = ast.parse(inspect.getsource(NSHMDB))
-        reads = {"_fault_rows", "_rupture_faults_bulk", "most_likely_fault", "query"}
-        checked = set()
-        for fn in tree.body[0].body:
-            if not isinstance(fn, ast.FunctionDef):
-                continue
-            if not (fn.name.startswith("get_") or fn.name in reads):
-                continue
-            checked.add(fn.name)
+        """No NSHMDB read method, and not the module-level snapshot loader,
+        calls createDataFrame: a relation built from driver-side Python
+        data is backed by a Python RDD, and every plan that uses it starts
+        Python workers. Inserts are exempt.
+
+        And no read method names a dimension table (fault, parent_fault,
+        fault_plane) in a ``self.table(...)`` call: they come from the
+        session's snapshot (``_snapshot``). The one exception is query's
+        membership ``dim``, the shared ``advanced_query`` plan's input.
+        Read methods are the get_* methods, most_likely_fault and query,
+        and every method they reach through ``self``."""
+        tree = ast.parse(inspect.getsource(database))
+        (cls,) = [n for n in tree.body if isinstance(n, ast.ClassDef) and n.name == "NSHMDB"]
+        (loader,) = [
+            n for n in tree.body if isinstance(n, ast.FunctionDef) and n.name == "_load_snapshot"
+        ]
+        methods = {fn.name: fn for fn in cls.body if isinstance(fn, ast.FunctionDef)}
+
+        def self_calls(fn):
+            return [
+                n
+                for n in ast.walk(fn)
+                if isinstance(n, ast.Call)
+                and isinstance(n.func, ast.Attribute)
+                and isinstance(n.func.value, ast.Name)
+                and n.func.value.id == "self"
+            ]
+
+        reads: set[str] = set()
+        todo = [m for m in methods if m.startswith("get_")] + ["most_likely_fault", "query"]
+        while todo:
+            name = todo.pop()
+            if name not in reads:
+                reads.add(name)
+                todo += [c.func.attr for c in self_calls(methods[name]) if c.func.attr in methods]
+        assert {"_fault_rows", "_rupture_faults_bulk", "most_likely_fault", "query",
+                "get_fault", "_snapshot"} <= reads
+
+        (dim,) = [
+            n for n in ast.walk(methods["query"])
+            if isinstance(n, ast.Assign) and [ast.unparse(t) for t in n.targets] == ["dim"]
+        ]
+        membership = {id(n) for n in ast.walk(dim.value)}
+        for fn in [loader, *(methods[m] for m in sorted(reads))]:
             calls = [
                 n.lineno
                 for n in ast.walk(fn)
@@ -176,8 +230,16 @@ class TestReadPathWork:
                 and isinstance(n.func, ast.Attribute)
                 and n.func.attr == "createDataFrame"
             ]
-            assert not calls, f"NSHMDB.{fn.name} calls createDataFrame"
-        assert reads <= checked and "get_fault" in checked
+            assert not calls, f"{fn.name} calls createDataFrame"
+            dims = [
+                ast.unparse(c)
+                for c in self_calls(fn)
+                if c.func.attr == "table"
+                and any(isinstance(a, ast.Constant) and a.value in ("fault", "parent_fault", "fault_plane")
+                        for a in c.args)
+                and id(c) not in membership
+            ]
+            assert not dims, f"NSHMDB.{fn.name} scans a dimension table: {dims}"
 
 
 class TestAdvancedQueryOnDomain:
@@ -532,3 +594,359 @@ class TestReferenceParityDetails:
             "A": 0.01,
             "B": 0.03,
         }
+
+
+# -- same answers on the edge cases of the dimension joins -------------------
+
+
+def _plane_row(plane_id: int, fault_id: int) -> tuple:
+    """A fault_plane row whose twelve corner values are all distinct."""
+    lat, lon = -40.0 - plane_id, 170.0 + plane_id
+    return (plane_id, lat, lon, lat, lon + 0.5, lat - 0.25, lon + 0.5, lat - 0.25, lon,
+            0.5 * plane_id, 5.0 + plane_id, fault_id)
+
+
+def _edge_db(spark, path: str, **kw) -> NSHMDB:
+    """A database with the join edge cases: parent 3 has no fault; fault 3
+    names a missing parent (9); faults 4 and 5 share the natural key
+    (3, 4); faults 6 and 7 are non-crustal sections; bridge row 4 names a
+    missing fault (99), and so does an MFD row; rupture 4 has no faults.
+    Each table is one file, so scan order, and with it the order of
+    unsorted answers, does not depend on the session's width."""
+    db = NSHMDB.create(spark, path, **kw)
+
+    def mk(rows, schema):
+        return spark.createDataFrame(rows, schema).coalesce(1)
+
+    db.insert("parent_fault", mk(
+        [(1, "Alpine Fault"), (2, "Hope Fault"), (3, "Lonely Parent"), (5, "Kermadec")],
+        schemas.PARENT_FAULT))
+    db.insert("fault", mk(
+        [(1, 1, 3, 90.0, None, 1), (2, 2, 3, 45.0, 1, 2), (3, 3, 3, 30.0, None, 9),
+         (4, 4, 3, 60.0, 2, 1), (5, 4, 3, 60.0, 2, 1), (6, 1, 1, 20.0, None, 5),
+         (7, 2, 1, 25.0, None, 5)],
+        schemas.FAULT))
+    db.insert("fault_plane", mk(
+        [_plane_row(p, f) for p, f in
+         [(9, 7), (6, 4), (1, 1), (2, 2), (3, 3), (4, 5), (5, 4), (7, 6), (8, 7)]],
+        schemas.FAULT_PLANE))
+    db.insert("rupture", mk(
+        [(1, 3, 1, 100.0, 6.5, 10.0, 0.01), (2, 3, 2, 250.0, 7.1, 30.0, 0.002),
+         (3, 3, 3, 80.0, 6.8, 8.0, 0.003), (4, 3, 4, 10.0, 6.0, 1.0, 0.05),
+         (5, 1, 1, 900.0, 8.1, 90.0, 0.0007), (6, 3, 5, 300.0, 7.3, 35.0, 0.004)],
+        schemas.RUPTURE))
+    db.insert("rupture_faults", mk(
+        [(1, 1, 1), (2, 2, 1), (3, 2, 2), (4, 3, 99), (5, 3, 3), (6, 3, 1), (7, 5, 6),
+         (8, 5, 7), (9, 6, 4), (10, 6, 5), (11, 6, 2)],
+        schemas.RUPTURE_FAULTS))
+    db.insert("magnitude_frequency_distribution", mk(
+        [(1, 1, 6.5, 0.01), (2, 1, 7.0, 0.004), (3, 2, 7.2, 0.001), (4, 99, 6.6, 0.5),
+         (5, 3, 6.8, 0.3), (6, 6, 7.5, 0.02), (7, 7, 7.5, 0.03), (8, 7, 8.0, 0.01),
+         (9, 4, 6.9, 0.05), (10, 5, 6.9, 0.07)],
+        schemas.MFD))
+    return db
+
+
+def _plane_id(plane: Plane, unproject=lambda c: c):
+    """The id of the `_plane_row` whose corners, in reference corner order,
+    are ``plane``'s after ``unproject``; the raw corners if none are."""
+    c = unproject(plane.corners).ravel().tolist()
+    for pid in range(1, 10):
+        r = _plane_row(pid, 0)
+        want = [r[1], r[2], r[9], r[3], r[4], r[9], r[5], r[6], r[10], r[7], r[8], r[10]]
+        if c == want:
+            return pid
+    return tuple(c)
+
+
+def _fault_answer(fault: Fault, unproject=lambda c: c) -> list:
+    return [_plane_id(p, unproject) for p in fault.planes]
+
+
+def _rupture_answer(r, unproject=lambda c: c) -> tuple:
+    return (r.fault_system, r.rupture_nshm_id, r.magnitude, r.area, r.length, r.rate,
+            [(k, _fault_answer(v, unproject)) for k, v in r.faults.items()])
+
+
+def _info_answer(i: FaultInfo) -> tuple:
+    return (i.fault_system, i.fault_nshm_id, i.name, i.rake, i.tect_type, i.fault)
+
+
+def _answer(call):
+    try:
+        return call()
+    except KeyError:
+        return "KeyError"
+
+
+def _edge_answers(db: NSHMDB, shifted: NSHMDB) -> dict:
+    """Every read method's answer on the edge-case fixture, as plain data
+    (planes as their `_plane_row` ids); ``shifted`` is the same database
+    with the projection ``2c + 1``."""
+    out = {}
+    for fs, nid in [(3, 1), (3, 2), (3, 3), (3, 4), (1, 1), (1, 2), (9, 9)]:
+        out[f"get_fault{(fs, nid)}"] = _answer(lambda: _fault_answer(db.get_fault(fs, nid)))
+        out[f"get_fault_info{(fs, nid)}"] = _answer(
+            lambda: _info_answer(db.get_fault_info(fs, nid)))
+    for fs, nid in [(3, 1), (3, 2), (3, 3), (3, 4), (1, 1), (3, 5), (9, 9)]:
+        out[f"get_rupture{(fs, nid)}"] = _answer(lambda: _rupture_answer(db.get_rupture(fs, nid)))
+        out[f"get_rupture_fault_info{(fs, nid)}"] = [
+            _info_answer(i) for i in db.get_rupture_fault_info(fs, nid)]
+    for rid in (1, 3, 4, 6, 99):
+        out[f"get_rupture_faults({rid})"] = [
+            (k, _fault_answer(v)) for k, v in db.get_rupture_faults(rid).items()]
+    for fs, nid, mags in [
+        (3, 1, {"Alpine Fault": 6.5}),
+        (3, 3, {"Alpine Fault": 6.55}),
+        (3, 3, {"Alpine Fault": 6.0, "Lonely Parent": 6.0}),
+        (1, 1, {"Kermadec": 7.4}),
+        (3, 5, {"Alpine Fault": 6.9, "Hope Fault": 7.0}),
+        (3, 4, {"Alpine Fault": 6.5}),
+    ]:
+        out[f"most_likely_fault{(fs, nid, mags)}"] = db.most_likely_fault(fs, nid, mags)
+    for q, kw in [
+        ("Alpine Fault", {}),
+        ("Hope Fault | Kermadec", {}),
+        ("Alpine Fault & !Hope Fault", {}),
+        ("Alpine Fault | Kermadec", {"fault_count_limit": 1}),
+        ("Lonely Parent", {}),
+        ("Alpine Fault", {"rate_bounds": (0.003, None), "magnitude_bounds": (6.6, 8.0)}),
+    ]:
+        out[f"query({q!r}, {kw})"] = [_rupture_answer(r) for r in db.query(q, **kw)]
+    out["get_fault_names()"] = sorted(db.get_fault_names())
+    out["get_fault_ids()"] = sorted(db.get_fault_ids())
+    def unproject(c):
+        return (c - 1.0) / 2.0
+
+    out["projection get_fault(3, 4)"] = _fault_answer(shifted.get_fault(3, 4), unproject)
+    out["projection get_rupture(1, 1)"] = _rupture_answer(shifted.get_rupture(1, 1), unproject)
+    out["projection query('Alpine Fault')"] = [
+        _rupture_answer(r, unproject) for r in shifted.query("Alpine Fault")]
+    return out
+
+
+# recorded from the join-based read path, before the dimension snapshot
+_EDGE_ANSWERS = {
+    'get_fault(3, 1)': [1],
+    'get_fault_info(3, 1)': (3, 1, 'Alpine Fault', 90.0, None, None),
+    'get_fault(3, 2)': [2],
+    'get_fault_info(3, 2)': (3, 2, 'Hope Fault', 45.0, 1, None),
+    'get_fault(3, 3)': [],
+    'get_fault_info(3, 3)': 'KeyError',
+    'get_fault(3, 4)': [4, 5, 6],
+    'get_fault_info(3, 4)': (3, 4, 'Alpine Fault', 60.0, 2, None),
+    'get_fault(1, 1)': [7],
+    'get_fault_info(1, 1)': (1, 1, 'Kermadec', 20.0, None, None),
+    'get_fault(1, 2)': [8, 9],
+    'get_fault_info(1, 2)': (1, 2, 'Kermadec', 25.0, None, None),
+    'get_fault(9, 9)': [],
+    'get_fault_info(9, 9)': 'KeyError',
+    'get_rupture(3, 1)': (3, 1, 6.5, 100.0, 10.0, 0.01, [('Alpine Fault', [1])]),
+    'get_rupture_fault_info(3, 1)': [(3, 1, 'Alpine Fault', 90.0, None, None)],
+    'get_rupture(3, 2)': (
+        3, 2, 7.1, 250.0, 30.0, 0.002,
+        [('Alpine Fault', [1]), ('Hope Fault', [2])],
+    ),
+    'get_rupture_fault_info(3, 2)': [
+        (3, 1, 'Alpine Fault', 90.0, None, None),
+        (3, 2, 'Hope Fault', 45.0, 1, None),
+    ],
+    'get_rupture(3, 3)': (3, 3, 6.8, 80.0, 8.0, 0.003, [('Alpine Fault', [1])]),
+    'get_rupture_fault_info(3, 3)': [(3, 1, 'Alpine Fault', 90.0, None, None)],
+    'get_rupture(3, 4)': (3, 4, 6.0, 10.0, 1.0, 0.05, []),
+    'get_rupture_fault_info(3, 4)': [],
+    'get_rupture(1, 1)': (
+        1, 1, 8.1, 900.0, 90.0, 0.0007,
+        [('Kermadec: Section 6', [7]), ('Kermadec: Section 7', [8, 9])],
+    ),
+    'get_rupture_fault_info(1, 1)': [
+        (1, 1, 'Kermadec', 20.0, None, None),
+        (1, 2, 'Kermadec', 25.0, None, None),
+    ],
+    'get_rupture(3, 5)': (
+        3, 5, 7.3, 300.0, 35.0, 0.004,
+        [('Alpine Fault', [4, 5, 6]), ('Hope Fault', [2])],
+    ),
+    'get_rupture_fault_info(3, 5)': [
+        (3, 4, 'Alpine Fault', 60.0, 2, None),
+        (3, 4, 'Alpine Fault', 60.0, 2, None),
+        (3, 2, 'Hope Fault', 45.0, 1, None),
+    ],
+    'get_rupture(9, 9)': 'KeyError',
+    'get_rupture_fault_info(9, 9)': [],
+    'get_rupture_faults(1)': [('Alpine Fault', [1])],
+    'get_rupture_faults(3)': [('Alpine Fault', [1])],
+    'get_rupture_faults(4)': [],
+    'get_rupture_faults(6)': [('Alpine Fault', [4, 5, 6]), ('Hope Fault', [2])],
+    'get_rupture_faults(99)': [],
+    "most_likely_fault(3, 1, {'Alpine Fault': 6.5})": {'Alpine Fault': 0.01},
+    "most_likely_fault(3, 3, {'Alpine Fault': 6.55})": {'Alpine Fault': 0.004},
+    "most_likely_fault(3, 3, {'Alpine Fault': 6.0, 'Lonely Parent': 6.0})": {'Alpine Fault': 0.01},
+    "most_likely_fault(1, 1, {'Kermadec': 7.4})": {'Kermadec': 0.05},
+    "most_likely_fault(3, 5, {'Alpine Fault': 6.9, 'Hope Fault': 7.0})": {
+        'Alpine Fault': 0.12000000000000001,
+        'Hope Fault': 0.001,
+    },
+    "most_likely_fault(3, 4, {'Alpine Fault': 6.5})": {},
+    "query('Alpine Fault', {})": [
+        (3, 1, 6.5, 100.0, 10.0, 0.01, [('Alpine Fault', [1])]),
+        (3, 5, 7.3, 300.0, 35.0, 0.004, [('Alpine Fault', [4, 5, 6]), ('Hope Fault', [2])]),
+        (3, 3, 6.8, 80.0, 8.0, 0.003, [('Alpine Fault', [1])]),
+        (3, 2, 7.1, 250.0, 30.0, 0.002, [('Alpine Fault', [1]), ('Hope Fault', [2])]),
+    ],
+    "query('Hope Fault | Kermadec', {})": [
+        (3, 5, 7.3, 300.0, 35.0, 0.004, [('Alpine Fault', [4, 5, 6]), ('Hope Fault', [2])]),
+        (3, 2, 7.1, 250.0, 30.0, 0.002, [('Alpine Fault', [1]), ('Hope Fault', [2])]),
+        (1, 1, 8.1, 900.0, 90.0, 0.0007, [('Kermadec: Section 6', [7]), ('Kermadec: Section 7', [8, 9])]),
+    ],
+    "query('Alpine Fault & !Hope Fault', {})": [
+        (3, 1, 6.5, 100.0, 10.0, 0.01, [('Alpine Fault', [1])]),
+        (3, 3, 6.8, 80.0, 8.0, 0.003, [('Alpine Fault', [1])]),
+    ],
+    "query('Alpine Fault | Kermadec', {'fault_count_limit': 1})": [
+        (3, 1, 6.5, 100.0, 10.0, 0.01, [('Alpine Fault', [1])]),
+        (3, 3, 6.8, 80.0, 8.0, 0.003, [('Alpine Fault', [1])]),
+        (1, 1, 8.1, 900.0, 90.0, 0.0007, [('Kermadec: Section 6', [7]), ('Kermadec: Section 7', [8, 9])]),
+    ],
+    "query('Lonely Parent', {})": [],
+    "query('Alpine Fault', {'rate_bounds': (0.003, None), 'magnitude_bounds': (6.6, 8.0)})": [
+        (3, 5, 7.3, 300.0, 35.0, 0.004, [('Alpine Fault', [4, 5, 6]), ('Hope Fault', [2])]),
+        (3, 3, 6.8, 80.0, 8.0, 0.003, [('Alpine Fault', [1])]),
+    ],
+    'get_fault_names()': ['Alpine Fault', 'Hope Fault', 'Kermadec', 'Lonely Parent'],
+    'get_fault_ids()': [1, 2, 3, 4],
+    'projection get_fault(3, 4)': [4, 5, 6],
+    'projection get_rupture(1, 1)': (
+        1, 1, 8.1, 900.0, 90.0, 0.0007,
+        [('Kermadec: Section 6', [7]), ('Kermadec: Section 7', [8, 9])],
+    ),
+    "projection query('Alpine Fault')": [
+        (3, 1, 6.5, 100.0, 10.0, 0.01, [('Alpine Fault', [1])]),
+        (3, 5, 7.3, 300.0, 35.0, 0.004, [('Alpine Fault', [4, 5, 6]), ('Hope Fault', [2])]),
+        (3, 3, 6.8, 80.0, 8.0, 0.003, [('Alpine Fault', [1])]),
+        (3, 2, 7.1, 250.0, 30.0, 0.002, [('Alpine Fault', [1]), ('Hope Fault', [2])]),
+    ],
+}
+
+
+class TestEdgeCaseAnswers:
+    """Every read method answers the join edge cases of `_edge_db` as it did
+    when each call joined the dimension tables in Spark; both layouts."""
+
+    @pytest.mark.parametrize("partition_facts", [False, True])
+    def test_answers_unchanged(self, spark, tmp_path, partition_facts):
+        db = _edge_db(spark, str(tmp_path / "db"), partition_facts=partition_facts)
+        shifted = NSHMDB(spark, db.path, projection=lambda c: c * 2.0 + 1.0)
+        assert _edge_answers(db, shifted) == _EDGE_ANSWERS
+
+
+class TestDimensionSnapshot:
+    """The read path's driver-side copies of fault, parent_fault and
+    fault_plane (``database._load_snapshot``): one load per SparkSession
+    and table-dir listing, so any write to a dimension dir shows on the
+    next read."""
+
+    @pytest.fixture()
+    def edge(self, spark, tmp_path):
+        return _edge_db(spark, str(tmp_path / "db"))
+
+    _CORNERS = np.array(
+        [[-42.0, 172.0, 0.0], [-42.0, 173.0, 0.0], [-43.0, 173.0, 10.0], [-43.0, 172.0, 10.0]]
+    )
+
+    def test_api_writers_are_visible_on_next_read(self, spark, edge):
+        assert edge.get_fault_info(3, 1).name == "Alpine Fault"
+        assert len(edge.get_fault(3, 1).planes) == 1
+        assert edge.query("Wairau") == []
+
+        edge.insert_parent_faults(spark.createDataFrame([("Wairau",)], "name string"))
+        assert "Wairau" in edge.get_fault_names()
+
+        edge.insert_many_faults(
+            [FaultInfo(3, 40, "Wairau", 70.0, 1, Fault([Plane(self._CORNERS)]))]
+        )
+        assert edge.get_fault_info(3, 40) == FaultInfo(3, 40, "Wairau", 70.0, 1)
+        np.testing.assert_array_equal(edge.get_fault(3, 40).planes[0].corners, self._CORNERS)
+        edge.insert_many_ruptures(
+            spark.createDataFrame(
+                [(50, 3, 7.5, 1.0, 1.0, 0.9)],
+                "nshm_id long, fault_system int, magnitude double, area double,"
+                " len double, rate double",
+            ),
+            spark.createDataFrame(
+                [(50, 40, 3)], "rupture_nshm_id long, fault_nshm_id long, fault_system int"
+            ),
+        )
+        (hit,) = edge.query("Wairau")
+        assert hit.rupture_nshm_id == 50 and list(hit.faults) == ["Wairau"]
+
+        edge.insert_solution(
+            {
+                "faults": spark.createDataFrame(
+                    [(60, "Awatere", 90.0, 60.0, 150.0, 0.0, 12.0,
+                      [[172.0, -42.0], [172.1, -41.95]], 3)],
+                    "fault_nshm_id long, name string, rake double, dip double,"
+                    " dip_dir double, top_depth double, bottom_depth double,"
+                    " trace array<array<double>>, fault_system int",
+                ),
+                "rupture_properties": spark.createDataFrame(
+                    [(61, 3, 7.0, 1.0, 1.0, 0.8)],
+                    "nshm_id long, fault_system int, magnitude double, area double,"
+                    " len double, rate double",
+                ),
+                "rupture_join_table": spark.createDataFrame(
+                    [(61, 60, 3)], "rupture_id long, fault_id long, fault_system int"
+                ),
+                "magnitude_frequency_distribution": None,
+            }
+        )
+        assert edge.get_fault_info(3, 60).name == "Awatere"
+        np.testing.assert_allclose(edge.get_fault(3, 60).planes[0].corners[0], [-42.0, 172.0, 0.0])
+        (hit,) = edge.query("Awatere")
+        assert hit.rupture_nshm_id == 61 and list(hit.faults) == ["Awatere"]
+
+    def test_outside_overwrite_is_visible(self, spark, edge):
+        assert edge.get_fault_info(3, 1).name == "Alpine Fault"
+        assert edge.get_fault(3, 1).planes[0].corners[0, 0] == -41.0
+        spark.createDataFrame(
+            [(1, "Alpine Fault North"), (2, "Hope Fault")], schemas.PARENT_FAULT
+        ).write.mode("overwrite").parquet(edge._table_path("parent_fault"))
+        spark.createDataFrame([_plane_row(8, 1)], schemas.FAULT_PLANE).write.mode(
+            "overwrite"
+        ).parquet(edge._table_path("fault_plane"))
+        assert edge.get_fault_info(3, 1).name == "Alpine Fault North"
+        assert edge.get_fault_names() == {"Alpine Fault North", "Hope Fault"}
+        assert _fault_answer(edge.get_fault(3, 1)) == [8]
+        assert _rupture_answer(edge.get_rupture(3, 1))[-1] == [("Alpine Fault North", [8])]
+
+    def test_partitioned_layout(self, spark, tmp_path):
+        db = _edge_db(spark, str(tmp_path / "db"), partition_facts=True)
+        assert db.get_fault_info(1, 2).name == "Kermadec"
+        db.insert_many_faults(
+            [FaultInfo(2, 8, "Puysegur", 10.0, None, Fault([Plane(self._CORNERS)]))]
+        )
+        assert os.path.isdir(os.path.join(db._table_path("fault"), "fault_system=2"))
+        assert db.get_fault_info(2, 8).name == "Puysegur"
+        np.testing.assert_array_equal(db.get_fault(2, 8).planes[0].corners, self._CORNERS)
+
+    def test_instances_on_one_path_share_one_load(self, spark, edge):
+        edge.get_fault_info(3, 1)
+        other = NSHMDB(spark, edge.path)
+        assert _jobs_of(spark, lambda: other.get_fault_info(3, 2)) == 0
+
+    def test_new_session_starts_cold(self, spark, edge):
+        edge.get_fault_info(3, 1)
+        cold = NSHMDB(spark.newSession(), edge.path)
+        assert _jobs_of(spark, lambda: cold.get_fault_info(3, 1)) > 0
+
+    def test_snapshot_holds_no_reference_to_its_session(self, spark, edge):
+        session = spark.newSession()
+        NSHMDB(session, edge.path).get_fault(3, 1)
+        assert database._SNAPSHOTS.get(session)
+        ref = weakref.ref(session)
+        del session
+        # PySpark's RDD.toDF closure holds the newest session; the next
+        # session created releases it
+        spark.newSession()
+        gc.collect()
+        assert ref() is None
