@@ -23,8 +23,9 @@ import tempfile
 _MARKER = "_LANDED"
 # bumped when a landing's on-disk table layout changes, so tables landed
 # by older code are rebuilt instead of read (2: commit-log tables only —
-# no `_CURRENT`-pointer / `v{N}` dir tables)
-_LAYOUT = 2
+# no `_CURRENT`-pointer / `v{N}` dir tables; 3: every table a partition
+# map — no single-dir or `dirs`-list merge-on-read manifests)
+_LAYOUT = 3
 
 
 def _corpus_fingerprint(sf: str) -> str:

@@ -1,14 +1,6 @@
-"""Streaming sinks: exactly-once parquet landing with checkpoint resume,
-and a foreachBatch MERGE sink into a versioned keyed table.
-
-The memory sink in events.py exists for the synchronous oracle contract;
-this is the production shape — readStream → parquet writeStream with a
-checkpoint directory. The checkpoint's WAL records which source files each
-micro-batch committed, so a restarted query resumes AFTER the last
-committed batch: already-processed input is never re-emitted (end-to-end
-exactly-once for a replayable source + transactional file sink).
-tests/test_streaming_sink.py pins that: stop mid-stream, restart, and the
-landed rows equal the batch read exactly — no duplicates, no gaps.
+"""Streaming sinks and the commit log they publish into: foreachBatch
+upsert / rollup / merge-on-read sinks and the versioned keyed tables
+they maintain.
 
 The upsert sink is the other half of the lakehouse write path: append-only
 landing keeps every version of a key, while `upsert_stream_to_table`
@@ -32,6 +24,12 @@ protocol is explicit and minimal — the same model those formats use:
   * readers resolve the max committed manifest and only ever see a
     fully-written version; the `_CURRENT` file is a non-authoritative
     hint beside the log.
+
+Every table is a PARTITION MAP (``partition_col`` + ``partitions`` +
+``op`` in each manifest). A keyed table that commits its whole state at
+once (`committed_transaction`, the merge-on-read appends) is the map's
+degenerate case: one constant entry, ``_ONE_ENTRY``, whose column no
+reader sees.
 
 `transact` is the one publish loop: every writer here and in catalog.py
 states only its attempt (head in, successor manifest out) and
@@ -64,27 +62,12 @@ from pyspark.sql.streaming import StreamingQuery
 
 _POINTER = "_CURRENT"
 _COMMITS = "_commits"
-
-
-def land_stream_to_parquet(
-    df: DataFrame,
-    out_dir: str,
-    checkpoint_dir: str,
-    trigger_available_now: bool = True,
-) -> StreamingQuery:
-    """Start (or resume, if the checkpoint exists) landing a stream to
-    parquet. ``availableNow`` processes everything currently available in
-    bounded micro-batches then stops — the batch-backfill trigger; pass
-    False for a continuously running query."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+# the one entry of a table that commits its whole state at once: its
+# data lives under ``{stage}/_one=0`` and `_read_partition_map` never
+# attaches the column, so readers and ``compute`` see the table's own
+# columns only
+_ONE_COL = "_one"
+_ONE_ENTRY = f"{_ONE_COL}=0"
 
 
 def _write_hint(table_dir: str, manifest: dict) -> None:
@@ -340,18 +323,18 @@ def transact(table_dir: str, attempt, *, batch_id=None, rebase=None):
 _CARRIED = (
     "partition_col", "partitions", "stats", "bloom", "constraints",
     "legacy_layouts", "column_map", "dropped_columns", "dv", "dv_key",
-    "mor", "dirs",
+    "mor",
 )
 
 
-def _next_manifest(cur: dict, op: str | None, stage: str, **fields) -> dict:
+def _next_manifest(cur: dict, op: str, stage: str, **fields) -> dict:
     """The one rule for what a new manifest carries: version + 1,
-    anchored (``dir``) on ``stage``, every `_CARRIED` key of ``cur``
-    forward, then ``fields`` on top. An empty or None value drops its
-    key — stat-less, bloom-less, tombstone-less and map-less are all
-    the absent state — except ``partitions``, whose presence marks a
-    partition-mapped table; ``dv_key`` leaves with the last tombstone.
-    ``op=None`` writes no ``op`` (single-dir and merge-on-read tables).
+    anchored (``dir``) on ``stage``, tagged ``op``, every `_CARRIED` key
+    of ``cur`` forward, then ``fields`` on top. An empty or None value
+    drops its key — stat-less, bloom-less, tombstone-less and map-less
+    are all the absent state — except ``partitions``, which every table
+    carries even when every entry was dropped; ``dv_key`` leaves with
+    the last tombstone.
 
     ``dir_schemas`` names the NEW dirs' file schemas (Spark schema json
     of that dir's parquet files; partition-mapped stages exclude the
@@ -370,9 +353,7 @@ def _next_manifest(cur: dict, op: str | None, stage: str, **fields) -> dict:
     }
     if "dv" not in m:
         m.pop("dv_key", None)
-    m.update(version=cur["version"] + 1, dir=stage, batch_ids=[])
-    if op is not None:
-        m["op"] = op
+    m.update(version=cur["version"] + 1, dir=stage, batch_ids=[], op=op)
     live = _manifest_dirs(m)
     schemas = {
         d: sj for d, sj in (cur.get("dir_schemas") or {}).items() if d in live
@@ -385,44 +366,50 @@ def _next_manifest(cur: dict, op: str | None, stage: str, **fields) -> dict:
     return m
 
 
+def _write_one(df: DataFrame, table_dir: str, stage: str) -> dict:
+    """Write ``df`` as the one entry of ``stage`` — the rows of a table
+    that commits its whole state at once — and return the stage's file
+    schema for the manifest."""
+    df.write.mode("overwrite").parquet(
+        os.path.join(table_dir, stage, _ONE_ENTRY)
+    )
+    return {stage: _file_schema_json(df.schema)}
+
+
 def committed_transaction(
     spark: SparkSession,
     table_dir: str,
     compute,
     batch_id: int | None = None,
 ) -> None:
-    """Run one optimistic-concurrency transaction: read the current
-    version, `compute(base_df_or_None) -> DataFrame`, stage the result in
-    a unique data dir, CAS the next version into the commit log. On
+    """Run one optimistic-concurrency transaction that rewrites a whole
+    keyed table: read the current version, `compute(base_df_or_None) ->
+    DataFrame`, stage the result in a unique data dir as the table's one
+    constant entry (``_ONE_ENTRY``, a column ``compute`` never sees),
+    CAS the next version into the commit log as a ``rewrite``. On
     conflict the stage is deleted and the whole transaction retries
     against the winner's version, so concurrent writers SERIALIZE — no
     lost updates. With `batch_id`, an already-committed id no-ops
-    (replayed micro-batch idempotence)."""
+    (replayed micro-batch idempotence). The rewrite materializes the
+    table's tombstones and column map, so it clears them."""
 
     def attempt(cur, new_stage):
-        if "partitions" in cur:
+        if cur.get("partition_col", _ONE_COL) != _ONE_COL:
             raise ValueError(
-                f"{table_dir} is a partition-mapped table; "
+                f"{table_dir} is partitioned by {cur['partition_col']!r}; "
                 "use committed_partition_transaction"
             )
-        if "mor" in cur:
-            raise ValueError(
-                f"{table_dir} is a merge-on-read keyed table; "
-                "use append_keyed_mor"
-            )
-        base = None
-        if cur["version"] > 0:
-            base = _read_parquet_fast(
-                spark,
-                os.path.join(table_dir, cur["dir"]),
-                schema_json=_dir_schema(cur, cur["dir"]),
-            )
+        base = _read_keyed(spark, table_dir, cur) if cur["version"] else None
         merged = compute(base)
+        _enforce_constraints(merged, cur.get("constraints"))
         stage = new_stage()
-        merged.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
         return _next_manifest(
-            cur, None, stage,
-            dir_schemas={stage: _file_schema_json(merged.schema)},
+            cur, "rewrite", stage,
+            partition_col=_ONE_COL,
+            partitions={_ONE_ENTRY: stage},
+            stats=None, bloom=None, dv=None,
+            **dict.fromkeys(_SCHEMA_MAP_KEYS),
+            dir_schemas=_write_one(merged, table_dir, stage),
         )
 
     transact(table_dir, attempt, batch_id=batch_id)
@@ -732,8 +719,8 @@ def _dir_schema(m: dict, d: str) -> dict | None:
 
 
 def _dirs_schema(m: dict, dirs) -> dict | None:
-    """One schema json valid for a MULTI-dir read (dv keys, MOR
-    generations): every dir must have a recorded schema and they must
+    """One schema json valid for a MULTI-dir read (dv key files): every
+    dir must have a recorded schema and they must
     all be identical — otherwise None and the caller's original
     footer/inference read runs (the schema-evolution path)."""
     ds = m.get("dir_schemas") or {}
@@ -1189,13 +1176,7 @@ def committed_partition_transaction(
     prefix = f"{partition_col}="
 
     def attempt(cur, new_stage):
-        if cur["version"] > 0:
-            if "partitions" not in cur:
-                raise ValueError(
-                    f"{table_dir} is a single-dir committed table; "
-                    "use committed_transaction"
-                )
-        else:
+        if cur["version"] == 0:
             # migrate a raw partitionBy layout in place (version 0 =
             # the uncommitted top-level dirs)
             cur = {
@@ -1359,10 +1340,8 @@ def set_table_constraints(
         F.expr(e)  # fail fast on unparseable expressions
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
+        if cur["version"] == 0:
+            raise ValueError(f"{table_dir} is not a committed table")
         existing = read_keyed_table(spark, table_dir)
         bad = _first_violation(existing, exprs)
         if bad is not None:
@@ -1730,11 +1709,6 @@ def _partition_batch_commit(
     def attempt(cur, new_stage):
         if cur["version"] == 0:
             cur = {"version": 0, "partitions": {}}
-        elif "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is a single-dir committed table; "
-                "use committed_transaction"
-            )
         elif cur["partition_col"] != partition_col:
             # the current SPEC owns the layout — after partition
             # evolution a write with the old column would land data
@@ -2063,11 +2037,8 @@ def compact_partition_table(
         # table's current file counts
         raise ValueError("pass sort_within or cluster_by, not both")
     cur = current_commit(table_dir)
-    if "partitions" not in cur:
-        raise ValueError(
-            f"{table_dir} is not partition-mapped; compact_parquet handles "
-            "single-dir layouts"
-        )
+    if cur["version"] == 0:
+        raise ValueError(f"{table_dir} is not a committed table")
     pcol = cur["partition_col"]
     frag = []
     for entry, dirs in cur["partitions"].items():
@@ -2144,12 +2115,11 @@ def compact_partition_table(
 
 
 def _manifest_dirs(m: dict) -> set[str]:
-    """Every data dir a manifest references: its own stage, MOR
-    generation list, partition map, any legacy-layout partition maps
-    (partition evolution), and key-tombstone dirs — the reference set
-    vacuum must respect."""
+    """Every data dir a manifest references: its own stage, partition
+    map (each entry's generation list), any legacy-layout partition
+    maps (partition evolution), and key-tombstone dirs — the reference
+    set vacuum must respect."""
     out = {m["dir"]} if "dir" in m else set()
-    out.update(m.get("dirs", []))
     out.update(m.get("dv", []))
     if m.get("cdc"):
         out.add(m["cdc"])  # the merge's change-data sidecar
@@ -2190,10 +2160,8 @@ def tombstone_keys(
     kcols = [key_col] if isinstance(key_col, str) else list(key_col)
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
+        if cur["version"] == 0:
+            raise ValueError(f"{table_dir} is not a committed table")
         if "dv_key" in cur and _dv_keys(cur) != kcols:
             raise ValueError(
                 f"{table_dir} tombstones key {cur['dv_key']!r}; "
@@ -2510,10 +2478,8 @@ def evolve_partition_column(
     it."""
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
+        if cur["version"] == 0:
+            raise ValueError(f"{table_dir} is not a committed table")
         if cur["partition_col"] == new_partition_col:
             return None  # already that spec: no-op
         cmap = _column_map(cur)
@@ -2609,10 +2575,8 @@ def rename_column(
         raise ValueError(f"rename {old!r} -> {new!r} is not a rename")
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
+        if cur["version"] == 0:
+            raise ValueError(f"{table_dir} is not a committed table")
         logical = _logical_columns(spark, cur, table_dir)
         if old not in logical:
             raise ValueError(f"no column {old!r} in {table_dir}")
@@ -2666,10 +2630,8 @@ def drop_column(spark: SparkSession, table_dir: str, col: str) -> int:
     columns. Returns the new version."""
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0 or "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is not a partition-mapped committed table"
-            )
+        if cur["version"] == 0:
+            raise ValueError(f"{table_dir} is not a committed table")
         logical = _logical_columns(spark, cur, table_dir)
         if col not in logical:
             raise ValueError(f"no column {col!r} in {table_dir}")
@@ -2838,9 +2800,12 @@ def clone_table_shallow(
             raise ValueError(f"version {version} not committed in {src_dir}")
     if src.get("version", 0) == 0:
         raise ValueError(f"{src_dir} has no commits to clone")
-    if "partitions" not in src or "mor" in src or src.get("legacy_layouts"):
+    if "mor" in src or src.get("legacy_layouts"):
+        # a MOR clone restarts at version 1, so its own generations'
+        # `_gen` stamps would lose ties to the source's
         raise ValueError(
-            "shallow clone supports plain partition-mapped tables"
+            "shallow clone supports tables without merge-on-read "
+            "generations or legacy layouts"
         )
     src_abs = os.path.abspath(src_dir)
 
@@ -3159,11 +3124,6 @@ def read_table_changes(
             # the physical names, so the range cannot span it.
             _check_map_stable(by_v, m, table_dir, from_version)
             continue
-        if "partitions" not in m:
-            raise ValueError(
-                f"{table_dir} is not partition-mapped; read versions "
-                "directly for single-dir tables"
-            )
         entries = _stage_entries(table_dir, m)
         if not entries:
             continue  # metadata-only commit (e.g. RESTORE)
@@ -3275,11 +3235,6 @@ def _change_images(
     images: list[dict] = []
     for v in range(start + 1, end + 1):
         m = by_v[v]
-        if "partitions" not in m:
-            raise ValueError(
-                f"{table_dir} is not partition-mapped; change feeds read "
-                "partition-mapped tables only (read versions directly)"
-            )
         if admit is not None:
             admit(m)
         op = m.get("op")
@@ -3593,15 +3548,14 @@ def read_partition_counts(spark: SparkSession, table_dir: str) -> DataFrame:
     back to a full counted read (manifest counts don't see deletion
     vectors or other layouts — correctness before cleverness). The
     result schema is (partition_col string, n long) either way, so
-    callers can't tell which path answered — only how fast."""
+    callers can't tell which path answered — only how fast. A one-entry
+    table has no partition column to count by and is refused."""
     cur = current_commit(table_dir)
     if cur["version"] == 0:
         raise ValueError(f"{table_dir} has no commits")
-    if "partitions" not in cur or "mor" in cur:
-        raise ValueError(
-            f"{table_dir} is not a partition-mapped committed table"
-        )
     pcol = cur["partition_col"]
+    if pcol == _ONE_COL:  # a one-entry table, merge-on-read ones included
+        raise ValueError(f"{table_dir} is not a partitioned committed table")
 
     def scan_counts(df: DataFrame) -> DataFrame:
         return df.groupBy(pcol).agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -3849,7 +3803,9 @@ def _read_partition_map(
     ``"col=value" -> data_dir`` is read from ``table_dir/data_dir/col=value``
     (``"."`` = a pre-migration top-level partition dir) with the partition
     column re-attached as a literal — the same column the original
-    ``partitionBy`` write encoded in the dir name. Catalyst folds a filter
+    ``partitionBy`` write encoded in the dir name — except ``_ONE_COL``,
+    the constant column of a table kept as one entry, which no reader
+    sees. Catalyst folds a filter
     on that literal per union branch, so partition pruning survives: a
     predicate on the partition column collapses unaffected branches to
     empty relations and their files are never scanned (the erasure
@@ -3915,7 +3871,8 @@ def _read_partition_map(
                 df = spark.read.option("mergeSchema", "true").parquet(
                     paths[0]
                 )
-            df = df.withColumn(pcol, F.lit(value))
+            if pcol != _ONE_COL:
+                df = df.withColumn(pcol, F.lit(value))
         elif fast is not None:
             # partition-dir discovery with a user schema: the dir-name
             # column takes the SUPPLIED string type (same raw values as
@@ -3972,6 +3929,63 @@ def resolve_version_as_of(table_dir: str, as_of: float) -> int | None:
     return best
 
 
+def _resolve_manifest(
+    table_dir: str, version: int | None, as_of: float | None
+) -> dict | None:
+    """The manifest a read addresses: ``version``, the newest version
+    published at or before ``as_of``, or the head — None when there is
+    no such commit yet."""
+    if as_of is not None:
+        if version is not None:
+            raise ValueError("pass either version or as_of, not both")
+        version = resolve_version_as_of(table_dir, as_of)
+        if version is None:
+            return None
+    if version is None:
+        cur = current_commit(table_dir)
+        return cur if cur["version"] else None
+    for m in table_history(table_dir):
+        if m["version"] == version:
+            return m
+    raise ValueError(f"version {version} not committed in {table_dir}")
+
+
+def _read_manifest(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    prune: dict | None = None,
+    logical: bool = True,
+) -> DataFrame | None:
+    """The one read of a committed manifest: every layout's partition
+    map, through its tombstones, lifted to the LOGICAL names. ``prune``
+    names logical columns; stats and blooms are keyed by the stable
+    PHYSICAL names. Time travel is map-correct for free: each version's
+    manifest carries the map that was live when it committed."""
+    df = _apply_tombstones(
+        spark, table_dir, m,
+        _read_all_layouts(spark, table_dir, m, _physical_names(prune, m)),
+    )
+    return _to_logical(df, m) if logical else df
+
+
+def _read_keyed(
+    spark: SparkSession,
+    table_dir: str,
+    m: dict,
+    prune: dict | None = None,
+    logical: bool = True,
+) -> DataFrame | None:
+    """`_read_manifest` for a table whose rows are its state — refused
+    for a merge-on-read table, whose generations need `read_keyed_mor`'s
+    window."""
+    if "mor" in m:
+        raise ValueError(
+            f"{table_dir} is a merge-on-read keyed table; use read_keyed_mor"
+        )
+    return _read_manifest(spark, table_dir, m, prune, logical)
+
+
 def read_keyed_table(
     spark: SparkSession,
     table_dir: str,
@@ -3980,23 +3994,22 @@ def read_keyed_table(
     as_of: float | None = None,
     _logical: bool = True,
 ) -> DataFrame | None:
-    """Resolve a committed version and read its data dir, or None before
-    the first commit. ``version`` time-travels to an older snapshot
-    (committed data dirs are immutable and never overwritten, so every
-    version stays readable until vacuumed away by a retention policy —
-    this repo never deletes committed versions). Partition-mapped
-    manifests (``committed_partition_transaction``) resolve through their
-    partition map instead of a single data dir.
+    """Resolve a committed version and read its partition map, or None
+    before the first commit. ``version`` time-travels to an older
+    snapshot (committed data dirs are immutable and never overwritten,
+    so every version stays readable until vacuumed away by a retention
+    policy — this repo never deletes committed versions). The head and
+    every older version share one read (`_read_manifest`).
 
     ``prune`` — ``{col: (lo, hi)}`` inclusive bounds, ``{col:
     "notnull"}`` / ``{col: "null"}``, or ``{col: ("eq", value)}`` —
-    enables manifest-stats data skipping on partition-mapped tables:
-    partitions whose recorded min/max (or null counts) disprove the
-    predicate are dropped before any file opens. An ``("eq", value)``
-    probe additionally consults the entry's Bloom bitmap when the table
-    was written with ``bloom_cols`` — the high-cardinality equality
-    case range stats can't disprove (numeric eq values still get the
-    degenerate (v, v) range check too). Pruning is advisory-only (entries without stats
+    enables manifest-stats data skipping: partitions whose recorded
+    min/max (or null counts) disprove the predicate are dropped before
+    any file opens. An ``("eq", value)`` probe additionally consults
+    the entry's Bloom bitmap when the table was written with
+    ``bloom_cols`` — the high-cardinality equality case range stats
+    can't disprove (numeric eq values still get the degenerate (v, v)
+    range check too). Pruning is advisory-only (entries without stats
     always read); the caller still applies its real filter, so a pruned
     read composed with that filter is ALWAYS equal to the unpruned
     one.
@@ -4005,58 +4018,10 @@ def read_keyed_table(
     resolves to the newest version published at or before that moment
     (None if the table didn't exist yet). Mutually exclusive with
     ``version``."""
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        version = resolve_version_as_of(table_dir, as_of)
-        if version is None:
-            return None
-    if version is not None:
-        for m in table_history(table_dir):
-            if m["version"] == version:
-                if "mor" in m:
-                    raise ValueError(
-                        f"{table_dir} is a merge-on-read keyed table; "
-                        "use read_keyed_mor"
-                    )
-                if "partitions" in m:
-                    # prune specs name LOGICAL columns; stats/blooms are
-                    # keyed by the stable PHYSICAL names. Time travel is
-                    # map-correct for free: THIS version's manifest
-                    # carries the map that was live when it committed.
-                    df = _apply_tombstones(
-                        spark, table_dir, m,
-                        _read_all_layouts(
-                            spark, table_dir, m, _physical_names(prune, m)
-                        ),
-                    )
-                    return _to_logical(df, m) if _logical else df
-                return _read_parquet_fast(
-                    spark,
-                    os.path.join(table_dir, m["dir"]),
-                    schema_json=_dir_schema(m, m["dir"]),
-                )
-        raise ValueError(f"version {version} not committed in {table_dir}")
-    cur = current_commit(table_dir)
-    if cur["version"] == 0:
+    m = _resolve_manifest(table_dir, version, as_of)
+    if m is None:
         return None
-    if "mor" in cur:
-        raise ValueError(
-            f"{table_dir} is a merge-on-read keyed table; use read_keyed_mor"
-        )
-    if "partitions" in cur:
-        df = _apply_tombstones(
-            spark, table_dir, cur,
-            _read_all_layouts(
-                spark, table_dir, cur, _physical_names(prune, cur)
-            ),
-        )
-        return _to_logical(df, cur) if _logical else df
-    return _read_parquet_fast(
-        spark,
-        os.path.join(table_dir, cur["dir"]),
-        schema_json=_dir_schema(cur, cur["dir"]),
-    )
+    return _read_keyed(spark, table_dir, m, prune, _logical)
 
 
 def _read_all_layouts(
@@ -4156,13 +4121,13 @@ def _materialize_decision(dec: DataFrame) -> DataFrame:
 
 
 def _check_dml_target(table_dir: str, cur: dict, what: str) -> None:
-    """A DML writer needs a partition-mapped committed table whose rows
-    all live in the current layout: a decision frame computed against
-    it would miss the rows of unmigrated legacy layouts."""
-    if cur["version"] == 0 or "partitions" not in cur:
-        raise ValueError(
-            f"{table_dir} is not a partition-mapped committed table"
-        )
+    """A DML writer needs a committed table partitioned by a real
+    column (a one-entry table's rows carry no ``_ONE_COL`` to stage
+    by) whose rows all live in the current layout: a decision frame
+    computed against it would miss the rows of unmigrated legacy
+    layouts."""
+    if cur["version"] == 0 or cur["partition_col"] == _ONE_COL:
+        raise ValueError(f"{table_dir} is not a partitioned committed table")
     if cur.get("legacy_layouts"):
         raise ValueError(
             f"{table_dir} has unmigrated legacy partition layouts; {what} "
@@ -4893,11 +4858,6 @@ def merge_into_table(
                 f"{table_dir} has no commits; a merge into an empty table "
                 "is an append — use append_partition_transaction"
             )
-        if "partitions" not in cur:
-            raise ValueError(
-                f"{table_dir} is a single-dir committed table; use "
-                "merge_into + committed_transaction"
-            )
         _check_dml_target(table_dir, cur, "a merge")
         # column mapping (r13 — the VERDICT r12 #1 lift): like
         # UPDATE/DELETE, the whole decision frame runs in LOGICAL
@@ -5444,16 +5404,19 @@ def upsert_stream_to_table(
     (max order_col, then greatest `tiebreak` columns — pass one to make
     equal-order rows deterministic) is reduced first, then merged over
     the current table version inside a `committed_transaction`: staged
-    to a unique data dir, CAS'd into the commit log (concurrent writers
-    serialize via retry), batch id recorded — replayed batches no-op, so
-    restart between write and checkpoint commit cannot double-apply.
+    as the table's one entry in a unique data dir, CAS'd into the
+    commit log as a ``rewrite`` (concurrent writers serialize via
+    retry), batch id recorded — replayed batches no-op, so restart
+    between write and checkpoint commit cannot double-apply.
 
     Scale shape: the per-batch reduce and the merge share the key
     partitioning (one shuffle each on `keys`); the rewrite cost is the
-    TABLE size per batch — the COPY-ON-WRITE trade. The merge-on-read
-    twin (`upsert_stream_to_table_mor`) moves that cost to the readers:
-    O(batch) appends, one read-side window, periodic compaction — pick
-    per workload exactly as you would between Delta COW and Hudi MOR.
+    TABLE size per batch — the COPY-ON-WRITE trade.
+    `upsert_stream_to_table_mor` keeps the same one-entry table as
+    merge-on-read generations instead and moves that cost to the
+    readers: O(batch) appends, one read-side window, periodic
+    compaction — pick per workload exactly as you would between Delta
+    COW and Hudi MOR.
     State lives in the table, not the state store, so the stream itself
     is stateless and unbounded keys are fine."""
     os.makedirs(table_dir, exist_ok=True)
@@ -5551,17 +5514,21 @@ def append_keyed_mor(
     max_open_generations: int | None = None,
 ) -> None:
     """MERGE-ON-READ upsert append: the batch's newest row per key lands
-    as a NEW immutable generation (one manifest commit, O(batch) write —
-    never a table rewrite), and `read_keyed_mor` resolves latest-per-key
-    at read time. This is the Hudi-MOR / Delta deletion-vector trade the
-    copy-on-write `upsert_stream_to_table` docstring promises a real
-    format would make: hot write path pays O(batch), readers pay one
-    window over the generations until `compact_keyed_mor` folds them.
+    as a NEW immutable generation of the table's one entry (one
+    manifest commit, O(batch) write — never a table rewrite), and
+    `read_keyed_mor` resolves latest-per-key at read time. This is the
+    Hudi-MOR / Delta deletion-vector trade against the copy-on-write
+    `upsert_stream_to_table`: hot write path pays O(batch), readers pay
+    one window over the generations until `compact_keyed_mor` folds
+    them. The commit is an ``upsert``: its rows supersede earlier
+    generations' rows by key, so additive consumers and the typed
+    change feed refuse it.
 
     Each staged generation carries a literal `_gen` = its commit version
     so equal (order_col, tiebreak) values across generations resolve to
     the later COMMIT deterministically (update-wins, same contract as
-    `merge_into`).
+    `merge_into`). The stamp is taken inside the attempt, so a CAS loser
+    re-stages with the winner's successor version.
 
     ``max_open_generations`` is the Hudi-style compaction trigger,
     enforced at ENTRY (before the idempotence short-circuit, so a
@@ -5573,8 +5540,7 @@ def append_keyed_mor(
     thus bounded at N+1 generations over a stream's whole life at the
     cost of a periodic rewrite."""
     if max_open_generations is not None:
-        head = current_commit(table_dir)
-        if len(head.get("dirs", [])) > max_open_generations:
+        if len(_generations(current_commit(table_dir))) > max_open_generations:
             compact_keyed_mor(spark, table_dir)
     w = Window.partitionBy(*keys).orderBy(
         F.col(order_col).desc(), *[F.col(c).desc() for c in tiebreak or []]
@@ -5587,32 +5553,33 @@ def append_keyed_mor(
     want = {"keys": keys, "order_col": order_col, "tiebreak": tiebreak or []}
 
     def attempt(cur, new_stage):
-        if cur["version"] > 0 and "mor" not in cur:
-            raise ValueError(f"{table_dir} is not a merge-on-read keyed table")
         # the merge contract (keys/order/tiebreak) is a TABLE property: a
         # mismatched append would silently rewrite it in the new head
         # manifest and change how read_keyed_mor resolves every PRIOR
-        # generation — reject instead.
-        if cur["version"] > 0 and cur["mor"] != want:
+        # generation — reject instead (a table without one is not a
+        # merge-on-read table)
+        if cur["version"] > 0 and cur.get("mor") != want:
             raise ValueError(
                 f"merge config mismatch for {table_dir}: table has "
-                f"{cur['mor']}, append supplied {want}"
+                f"{cur.get('mor')}, append supplied {want}"
             )
         stage = new_stage()
-        gen_df = latest.withColumn("_gen", F.lit(cur["version"] + 1))
-        gen_df.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
         return _next_manifest(
-            cur, None, stage,
-            dirs=cur.get("dirs", []) + [stage],
+            cur, "upsert", stage,
+            partition_col=_ONE_COL,
+            partitions={_ONE_ENTRY: _generations(cur) + [stage]},
             mor=want,
-            dir_schemas={stage: _file_schema_json(gen_df.schema)},
+            dir_schemas=_write_one(
+                latest.withColumn("_gen", F.lit(cur["version"] + 1)),
+                table_dir, stage,
+            ),
         )
 
     m = transact(table_dir, attempt, batch_id=batch_id)
     if (
         m is not None
         and max_open_generations is not None
-        and len(m["dirs"]) > max_open_generations
+        and len(_generations(m)) > max_open_generations
     ):
         try:
             compact_keyed_mor(spark, table_dir)
@@ -5623,76 +5590,66 @@ def append_keyed_mor(
             pass
 
 
-def read_keyed_mor(
-    spark: SparkSession,
-    table_dir: str,
-    version: int | None = None,
-    as_of: float | None = None,
-) -> DataFrame | None:
-    """Latest-per-key view of a merge-on-read keyed table: ONE multi-path
-    scan over the generation dirs (same schema throughout, so no union
-    chain), one window keyed on the merge keys — the read-side merge.
-    The window shuffle is on the key columns, the same exchange the
-    copy-on-write merge paid PER BATCH at write time. ``as_of`` (epoch
-    seconds) resolves TIMESTAMP AS OF exactly like read_keyed_table."""
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        version = resolve_version_as_of(table_dir, as_of)
-        if version is None:
-            return None
-    if version is not None:
-        cur = next(
-            (m for m in table_history(table_dir) if m["version"] == version),
-            None,
-        )
-        if cur is None:
-            raise ValueError(f"version {version} not committed in {table_dir}")
-    else:
-        cur = current_commit(table_dir)
-    if cur["version"] == 0:
-        return None
-    if "mor" not in cur:
+def _generations(m: dict) -> list[str]:
+    """The generation dirs of a merge-on-read table's one entry."""
+    return _entry_dirs(m.get("partitions", {}).get(_ONE_ENTRY, []))
+
+
+def _mor_view(spark: SparkSession, table_dir: str, m: dict) -> DataFrame:
+    """Latest-per-key rows of merge-on-read manifest ``m``: the shared
+    partition-map read, then one window keyed on the merge keys — the
+    read-side merge. The window shuffle is on the key columns, the same
+    exchange the copy-on-write merge paid PER BATCH at write time."""
+    if "mor" not in m:
         raise ValueError(f"{table_dir} is not a merge-on-read keyed table")
-    mor = cur["mor"]
-    df = _read_parquet_fast(
-        spark,
-        *[os.path.join(table_dir, d) for d in cur["dirs"]],
-        schema_json=_dirs_schema(cur, cur["dirs"]),
-    )
+    mor = m["mor"]
     w = Window.partitionBy(*mor["keys"]).orderBy(
         F.col(mor["order_col"]).desc(),
         *[F.col(c).desc() for c in mor["tiebreak"]],
         F.col("_gen").desc(),
     )
     return (
-        df.withColumn("_rn", F.row_number().over(w))
+        _read_manifest(spark, table_dir, m)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
         .drop("_rn", "_gen")
     )
 
 
+def read_keyed_mor(
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None = None,
+    as_of: float | None = None,
+) -> DataFrame | None:
+    """Latest-per-key view of a merge-on-read keyed table (`_mor_view`)
+    at the head, ``version`` or ``as_of`` (epoch seconds) — resolved
+    exactly like read_keyed_table. None before the first commit."""
+    m = _resolve_manifest(table_dir, version, as_of)
+    return None if m is None else _mor_view(spark, table_dir, m)
+
+
 def compact_keyed_mor(spark: SparkSession, table_dir: str) -> bool:
     """Fold a merge-on-read table's generations into one materialized
-    latest-per-key dir (the compaction that moves the merge cost from
-    every read back to one write) — published as a normal commit, so the
-    un-compacted generations stay readable as history. Returns False if
-    the table already has a single generation."""
+    latest-per-key generation (the compaction that moves the merge cost
+    from every read back to one write) — published as a one-entry
+    ``rewrite`` tagged ``data_change: false`` (it restates rows), so
+    the un-compacted generations stay readable as history. Returns
+    False if the table already has a single generation."""
 
     def attempt(cur, new_stage):
-        if "mor" not in cur:
-            raise ValueError(f"{table_dir} is not a merge-on-read keyed table")
-        if len(cur["dirs"]) <= 1:
+        view = _mor_view(spark, table_dir, cur)
+        if len(_generations(cur)) <= 1:
             return None
-        merged = read_keyed_mor(spark, table_dir).withColumn(
-            "_gen", F.lit(cur["version"] + 1)
-        )
         stage = new_stage()
-        merged.write.mode("overwrite").parquet(os.path.join(table_dir, stage))
         return _next_manifest(
-            cur, None, stage,
-            dirs=[stage],
-            dir_schemas={stage: _file_schema_json(merged.schema)},
+            cur, "rewrite", stage,
+            partitions={_ONE_ENTRY: stage},
+            data_change=False,
+            dir_schemas=_write_one(
+                view.withColumn("_gen", F.lit(cur["version"] + 1)),
+                table_dir, stage,
+            ),
         )
 
     return transact(table_dir, attempt) is not None
@@ -5708,10 +5665,10 @@ def upsert_stream_to_table_mor(
     trigger_available_now: bool = True,
     max_open_generations: int | None = None,
 ) -> StreamingQuery:
-    """The merge-on-read twin of `upsert_stream_to_table`: each
-    micro-batch appends its per-key-latest rows as a generation
-    (`append_keyed_mor`, O(batch) write, batch-id idempotent) instead of
-    rewriting the table; `read_keyed_mor` serves the merged view and
+    """`upsert_stream_to_table` as merge-on-read: each micro-batch
+    appends its per-key-latest rows as a generation of the table's one
+    entry (`append_keyed_mor`, O(batch) write, batch-id idempotent)
+    instead of rewriting the table; `read_keyed_mor` serves the merged view and
     `compact_keyed_mor` folds generations on a maintenance cadence —
     either explicitly, or inline whenever the open-generation count
     passes ``max_open_generations`` (the Hudi compaction trigger)."""

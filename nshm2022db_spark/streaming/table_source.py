@@ -292,10 +292,8 @@ def table_stream_schema(
     )
 
     cur = current_commit(table_dir)
-    if cur["version"] == 0 or "partitions" not in cur:
-        raise ValueError(
-            f"{table_dir} is not a committed partition-mapped table"
-        )
+    if cur["version"] == 0:
+        raise ValueError(f"{table_dir} is not a committed table")
     pcol = cur["partition_col"]
     merged = None
     seen: set[str] = set()

@@ -1,6 +1,6 @@
-"""Checkpoint-resume test for the parquet streaming sink: interrupt after
-the first micro-batch, restart from the same checkpoint, and the landed
-output must equal the batch read exactly — no duplicates, no gaps."""
+"""Tests for the streaming sinks and the commit log behind them: the
+upsert, rollup and merge-on-read sinks, the transaction core, DML,
+change feeds and table maintenance."""
 
 from __future__ import annotations
 
@@ -9,45 +9,12 @@ import os
 import pyspark.sql.functions as F
 
 from nshm2022db_spark.sources import read_table
-from nshm2022db_spark.streaming.sinks import land_stream_to_parquet
 
 
-def test_checkpoint_resume_exactly_once(spark, sf_dir, tmp_path):
-    src = str(tmp_path / "src")
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    events = read_table(spark, sf_dir, "events")
-    events.repartition(4).write.parquet(src)
-
-    def stream():
-        return (
-            spark.readStream.schema(
-                "event_id long, user_id long, event_type string, value double,"
-                " props string, ts timestamp"
-            )
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-        )
-
-    # First run: stop after the first committed micro-batch (1 file of 4).
-    q = land_stream_to_parquet(stream(), out, ckpt, trigger_available_now=False)
-    while not q.recentProgress:
-        q.awaitTermination(0.2)
-    q.stop()
-    q.awaitTermination()
-
-    landed_partial = spark.read.parquet(out).count()
-    assert 0 < landed_partial  # something committed before the stop
-
-    # Restart from the same checkpoint: availableNow drains the rest.
-    q2 = land_stream_to_parquet(stream(), out, ckpt, trigger_available_now=True)
-    q2.awaitTermination()
-
-    got = spark.read.parquet(out)
-    assert got.count() == events.count()  # no gaps, no duplicates
-    assert got.select(F.sum("event_id")).collect()[0][0] == (
-        events.select(F.sum("event_id")).collect()[0][0]
-    )
+def _generation_count(m: dict) -> int:
+    """Generations of a merge-on-read table's one partition entry."""
+    (gens,) = m["partitions"].values()
+    return 1 if isinstance(gens, str) else len(gens)
 
 
 class TestUpsertSink:
@@ -828,7 +795,7 @@ class TestCommitLog:
             spark.createDataFrame([(1, "stale", 5)], schema),
             keys=["k"], order_col="ord", batch_id=2,
         )
-        assert len(current_commit(t)["dirs"]) == 3
+        assert _generation_count(current_commit(t)) == 3
 
         def view():
             return {
@@ -843,10 +810,10 @@ class TestCommitLog:
             spark.createDataFrame([(1, "dup", 99)], schema),
             keys=["k"], order_col="ord", batch_id=1,
         )
-        assert len(current_commit(t)["dirs"]) == 3
+        assert _generation_count(current_commit(t)) == 3
         # compaction folds to one generation, view unchanged
         assert compact_keyed_mor(spark, t)
-        assert len(current_commit(t)["dirs"]) == 1
+        assert _generation_count(current_commit(t)) == 1
         assert view() == expect
         assert not compact_keyed_mor(spark, t)  # already folded
 
@@ -899,7 +866,7 @@ class TestCommitLog:
                 keys=["k"], order_col="ord", batch_id=i,
                 max_open_generations=2,
             )
-            assert len(current_commit(t)["dirs"]) <= 2
+            assert _generation_count(current_commit(t)) <= 2
         got = {(r.k, r.v) for r in read_keyed_mor(spark, t).collect()}
         assert got == {(0, "v6"), (1, "v4"), (2, "v5")}
 
@@ -5416,7 +5383,8 @@ class TestManifestDirSchemas:
         committed_transaction(spark, t, lambda base: rows)
         cur = current_commit(t)
         sj = cur["dir_schemas"][cur["dir"]]
-        derived = _footer_schema([os.path.join(t, cur["dir"])])
+        (entry,) = cur["partitions"]
+        derived = _footer_schema([os.path.join(t, cur["dir"], entry)])
         assert derived is not None
         assert sj == derived.jsonValue()
 
@@ -6177,3 +6145,266 @@ class TestChangeFeedPlanner:
         assert defined == [sinks.__name__]
         assert callers == {"_change_images"}
         assert compared == set()
+
+
+_KIND_SCHEMA = "k long, ord long, id long, v long"
+_KIND_BATCHES = [
+    [(1, 10, 1, 5), (2, 10, 1, 7), (1, 11, 2, 1)],
+    [(2, 12, 3, 2), (3, 12, 4, 9), (2, 12, 5, 4)],
+    [(1, 9, 6, 4), (3, 13, 7, 1), (4, 13, 8, 3)],
+]
+
+
+def _kind_tables(spark, root: str) -> dict:
+    """Drive every writer of the keyed tables that commit their whole
+    state as one unpartitioned entry — the upsert sink, the rollup sink,
+    the merge-on-read (MOR) sink with one inline ``max_open_generations``
+    fold followed by one more append and an explicit compaction, and a
+    `maintain_incremental_agg` destination over a three-commit source —
+    then replay each writer's batch ids. Returns ``{name: (table dir,
+    replayed head == head)}``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from nshm2022db_spark.streaming import sinks
+
+    src = os.path.join(root, "src")
+    os.makedirs(src)
+    names = ("k", "ord", "id", "v")
+    for i, rows in enumerate(_KIND_BATCHES):
+        path = os.path.join(src, f"b{i}.parquet")
+        pq.write_table(
+            pa.table({n: [r[j] for r in rows] for j, n in enumerate(names)}),
+            path,
+        )
+        os.utime(path, (1_000_000 + i, 1_000_000 + i))  # file-source order
+
+    def drain(sink, table: str, ckpt: str, **kw) -> None:
+        stream = (
+            spark.readStream.schema(_KIND_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src)
+        )
+        sink(
+            stream, os.path.join(root, table), os.path.join(root, ckpt), **kw
+        ).awaitTermination()
+
+    def replayed(table: str, replay) -> bool:
+        head = sinks.current_commit(os.path.join(root, table))
+        replay()
+        return sinks.current_commit(os.path.join(root, table)) == head
+
+    up = dict(keys=["k"], order_col="ord", tiebreak=["id"])
+    roll = dict(keys=["k"], sum_cols={"v": "total"})
+    mor = dict(up, max_open_generations=2)
+    drain(sinks.upsert_stream_to_table, "upsert", "c_up", **up)
+    drain(sinks.rollup_stream_to_table, "rollup", "c_roll", **roll)
+    drain(sinks.upsert_stream_to_table_mor, "mor", "c_mor", **mor)
+    t_mor = os.path.join(root, "mor")
+    late = spark.createDataFrame([(4, 14, 9, 6), (5, 14, 10, 2)], _KIND_SCHEMA)
+    sinks.append_keyed_mor(spark, t_mor, late, batch_id=3, **mor)
+    assert sinks.compact_keyed_mor(spark, t_mor)
+
+    source, dest = os.path.join(root, "source"), os.path.join(root, "agg")
+
+    def agg(d):
+        return d.groupBy("k").agg(
+            F.count(F.lit(1)).cast("long").alias("n"),
+            F.sum("v").cast("long").alias("total"),
+        )
+
+    def merge(base, add):
+        if base is None:
+            return add
+        return base.unionByName(add).groupBy("k").agg(
+            F.sum("n").cast("long").alias("n"),
+            F.sum("total").cast("long").alias("total"),
+        )
+
+    for i, rows in enumerate(_KIND_BATCHES):
+        sinks.append_partition_transaction(
+            spark, source, "p",
+            spark.createDataFrame(rows, _KIND_SCHEMA).withColumn(
+                "p", (F.col("k") % 2).cast("string")
+            ),
+        )
+        if i:
+            sinks.maintain_incremental_agg(spark, source, dest, agg, merge)
+    return {
+        "upsert": replayed(
+            "upsert",
+            lambda: drain(sinks.upsert_stream_to_table, "upsert", "c_up2", **up),
+        ),
+        "rollup": replayed(
+            "rollup",
+            lambda: drain(
+                sinks.rollup_stream_to_table, "rollup", "c_roll2", **roll
+            ),
+        ),
+        "mor": replayed(
+            "mor",
+            lambda: sinks.append_keyed_mor(
+                spark, t_mor, late, batch_id=1, **mor
+            ),
+        ),
+        "agg": replayed(
+            "agg",
+            lambda: sinks.maintain_incremental_agg(
+                spark, source, dest, agg, merge
+            ),
+        ),
+    }
+
+
+def _kind_trail(spark, root: str) -> dict:
+    """Per table of `_kind_tables`: the replay no-op flag, then per
+    committed version its columns and the sorted rows read by
+    ``version=`` and by ``as_of=`` (the version's publish time)."""
+    from nshm2022db_spark.streaming import sinks
+
+    out = {}
+    for name, noop in _kind_tables(spark, root).items():
+        t = os.path.join(root, name)
+        read = sinks.read_keyed_mor if name == "mor" else sinks.read_keyed_table
+        versions = []
+        for m in sinks.table_history(t):
+            by_v = read(spark, t, version=m["version"])
+            by_t = read(spark, t, as_of=m["committed_at"])
+            versions.append(
+                (
+                    m["version"],
+                    by_v.columns,
+                    sorted(map(tuple, by_v.collect())),
+                    sorted(map(tuple, by_t.collect())),
+                )
+            )
+        out[name] = (noop, versions)
+    return out
+
+
+# (replay no-op, [(version, columns, rows by version, rows by as_of)])
+# per table of `_kind_tables`; recorded before the one-kind fold, when
+# these tables were single-dir and MOR tables
+_KIND_KEYED = ["k", "ord", "id", "v"]
+_KIND_AGG = ["k", "n", "total"]
+_KIND_LATEST = [
+    [(1, 11, 2, 1), (2, 10, 1, 7)],
+    [(1, 11, 2, 1), (2, 12, 5, 4), (3, 12, 4, 9)],
+    [(1, 11, 2, 1), (2, 12, 5, 4), (3, 13, 7, 1), (4, 13, 8, 3)],
+    [(1, 11, 2, 1), (2, 12, 5, 4), (3, 13, 7, 1), (4, 14, 9, 6),
+     (5, 14, 10, 2)],
+]
+_KIND_SUMS = [
+    [(1, 2, 6), (2, 1, 7)],
+    [(1, 2, 6), (2, 3, 13), (3, 1, 9)],
+    [(1, 3, 10), (2, 3, 13), (3, 2, 10), (4, 1, 3)],
+]
+_KIND_GOLDEN = {
+    "upsert": (True, [
+        (v, _KIND_KEYED, _KIND_LATEST[v - 1], _KIND_LATEST[v - 1])
+        for v in (1, 2, 3)
+    ]),
+    "rollup": (True, [
+        (v, _KIND_AGG, _KIND_SUMS[v - 1], _KIND_SUMS[v - 1]) for v in (1, 2, 3)
+    ]),
+    # v4 is the inline fold (max_open_generations=2), v5 the late
+    # append, v6 the explicit compaction
+    "mor": (True, [
+        (v, _KIND_KEYED, _KIND_LATEST[i], _KIND_LATEST[i])
+        for v, i in ((1, 0), (2, 1), (3, 2), (4, 2), (5, 3), (6, 3))
+    ]),
+    "agg": (True, [
+        (v, _KIND_AGG, _KIND_SUMS[v - 1], _KIND_SUMS[v - 1]) for v in (1, 2, 3)
+    ]),
+}
+
+
+class TestOneTableKind:
+    def test_keyed_tables_match_golden(self, spark, tmp_path):
+        """Every version of the upsert, rollup, MOR and incremental-agg
+        tables reads the same rows by version and by time, and every
+        replayed batch id is a no-op."""
+        assert _kind_trail(spark, str(tmp_path)) == _KIND_GOLDEN
+
+    def test_every_manifest_is_a_partition_map(self, spark, tmp_path):
+        """Every writer of the keyed tables — the upsert, rollup and MOR
+        sinks, `maintain_incremental_agg`, `compact_keyed_mor` and
+        `restore_table_version` — publishes a partition map with an
+        ``op``: there is one table kind."""
+        from nshm2022db_spark.streaming import sinks
+
+        root = str(tmp_path)
+        names = list(_kind_tables(spark, root)) + ["source"]
+        for name in names:
+            sinks.restore_table_version(os.path.join(root, name), 1)
+        for name in names:
+            hist = sinks.table_history(os.path.join(root, name))
+            assert hist[-1]["op"] == "restore"
+            for m in hist:
+                assert {"partition_col", "partitions", "op"} <= set(m), (
+                    name, m["version"],
+                )
+
+    def test_rewrite_enforces_and_clears_table_state(self, spark, tmp_path):
+        """A one-entry table takes a rename, tombstones and constraints
+        like any partition map; `committed_transaction` enforces the
+        constraints and, as a whole-table rewrite, materializes the
+        rename and the tombstones."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        rows = spark.createDataFrame([(1, 5), (2, 7)], "k long, v long")
+        sinks.committed_transaction(spark, t, lambda base: rows)
+        sinks.rename_column(spark, t, "v", "w")
+        sinks.tombstone_keys(spark, t, "k", spark.createDataFrame([(2,)], "k long"))
+        sinks.set_table_constraints(spark, t, ["w > 0"])
+        with _pytest.raises(sinks.ConstraintViolation):
+            sinks.committed_transaction(
+                spark, t, lambda base: base.withColumn("w", F.lit(-1).cast("long"))
+            )
+        sinks.committed_transaction(
+            spark, t, lambda base: base.withColumn("w", F.col("w") + 1)
+        )
+        m = sinks.current_commit(t)
+        assert m["version"] == 5 and m["constraints"] == ["w > 0"]
+        assert "column_map" not in m and "dv" not in m
+        got = sinks.read_keyed_table(spark, t)
+        assert got.columns == ["k", "w"] and [tuple(r) for r in got.collect()] == [
+            (1, 6)
+        ]
+
+    def test_no_table_kind_branches(self):
+        """CI guard against a second table kind: no function under
+        streaming/ tests a manifest for a missing (or present)
+        ``partitions`` key or reads a ``dirs`` key."""
+        import ast
+        import glob
+
+        import nshm2022db_spark.streaming as pkg
+
+        def is_const(node, value) -> bool:
+            return isinstance(node, ast.Constant) and node.value == value
+
+        found = []
+        for path in glob.glob(os.path.join(pkg.__path__[0], "*.py")):
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Compare) and is_const(
+                    node.left, "partitions"
+                ) and any(isinstance(op, (ast.In, ast.NotIn)) for op in node.ops):
+                    found.append((path, node.lineno))
+                if isinstance(node, ast.Subscript) and is_const(
+                    node.slice, "dirs"
+                ):
+                    found.append((path, node.lineno))
+                if (
+                    isinstance(node, ast.Call)
+                    and getattr(node.func, "attr", None) == "get"
+                    and node.args
+                    and is_const(node.args[0], "dirs")
+                ):
+                    found.append((path, node.lineno))
+        assert found == []

@@ -84,12 +84,14 @@ class TestPlanning:
         with pytest.raises(ValueError, match="vacuumed"):
             _plan_changes(bronze, 0, 3)
 
-    def test_single_dir_table_rejected(self, spark):
+    def test_committed_transaction_table_rejected(self, spark):
+        """A `committed_transaction` table commits whole-table rewrites,
+        which an additive stream cannot serve."""
         d = tempfile.mkdtemp(prefix="tsrc_single_")
         committed_transaction(
             spark, d, lambda base: _mkrows(spark, 0, 3), batch_id=0
         )
-        with pytest.raises(ValueError, match="partition-mapped"):
+        with pytest.raises(ValueError, match="append-only"):
             _plan_changes(d, 0, 1)
 
 
