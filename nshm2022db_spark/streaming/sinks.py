@@ -390,8 +390,7 @@ def committed_transaction(
     conflict the stage is deleted and the whole transaction retries
     against the winner's version, so concurrent writers SERIALIZE — no
     lost updates. With `batch_id`, an already-committed id no-ops
-    (replayed micro-batch idempotence). The rewrite materializes the
-    table's tombstones and column map, so it clears them."""
+    (replayed micro-batch idempotence)."""
 
     def attempt(cur, new_stage):
         if cur.get("partition_col", _ONE_COL) != _ONE_COL:
@@ -401,14 +400,11 @@ def committed_transaction(
             )
         base = _read_keyed(spark, table_dir, cur) if cur["version"] else None
         merged = compute(base)
-        _enforce_constraints(merged, cur.get("constraints"))
         stage = new_stage()
         return _next_manifest(
             cur, "rewrite", stage,
             partition_col=_ONE_COL,
             partitions={_ONE_ENTRY: stage},
-            stats=None, bloom=None, dv=None,
-            **dict.fromkeys(_SCHEMA_MAP_KEYS),
             dir_schemas=_write_one(merged, table_dir, stage),
         )
 
@@ -719,9 +715,9 @@ def _dir_schema(m: dict, d: str) -> dict | None:
 
 
 def _dirs_schema(m: dict, dirs) -> dict | None:
-    """One schema json valid for a MULTI-dir read (dv key files): every
-    dir must have a recorded schema and they must
-    all be identical — otherwise None and the caller's original
+    """One schema json valid for a MULTI-dir read (dv key files, one
+    entry's generations): every dir must have a recorded schema and
+    they must all be identical — otherwise None and the caller's original
     footer/inference read runs (the schema-evolution path)."""
     ds = m.get("dir_schemas") or {}
     js = [ds.get(d) for d in dirs]
@@ -1189,6 +1185,8 @@ def committed_partition_transaction(
                     and os.path.isdir(os.path.join(table_dir, n))
                 },
             }
+        else:
+            _check_spec(table_dir, cur, partition_col, "transaction")
         if cur.get("legacy_layouts") and not allow_legacy:
             # a rewrite computed from the current layout alone would
             # silently miss legacy-layout rows (an erasure would leave
@@ -1340,8 +1338,7 @@ def set_table_constraints(
         F.expr(e)  # fail fast on unparseable expressions
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0:
-            raise ValueError(f"{table_dir} is not a committed table")
+        _check_partitioned(table_dir, cur)
         existing = read_keyed_table(spark, table_dir)
         bad = _first_violation(existing, exprs)
         if bad is not None:
@@ -1709,15 +1706,8 @@ def _partition_batch_commit(
     def attempt(cur, new_stage):
         if cur["version"] == 0:
             cur = {"version": 0, "partitions": {}}
-        elif cur["partition_col"] != partition_col:
-            # the current SPEC owns the layout — after partition
-            # evolution a write with the old column would land data
-            # under the wrong dir names and corrupt the map
-            raise ValueError(
-                f"{table_dir} is partitioned by "
-                f"{cur['partition_col']!r}; {op} supplied "
-                f"{partition_col!r}"
-            )
+        else:
+            _check_spec(table_dir, cur, partition_col, op)
         if op == "overwrite" and cur.get("legacy_layouts"):
             raise ValueError(
                 f"{table_dir} has unmigrated legacy partition "
@@ -2037,8 +2027,7 @@ def compact_partition_table(
         # table's current file counts
         raise ValueError("pass sort_within or cluster_by, not both")
     cur = current_commit(table_dir)
-    if cur["version"] == 0:
-        raise ValueError(f"{table_dir} is not a committed table")
+    _check_partitioned(table_dir, cur)
     pcol = cur["partition_col"]
     frag = []
     for entry, dirs in cur["partitions"].items():
@@ -2160,8 +2149,7 @@ def tombstone_keys(
     kcols = [key_col] if isinstance(key_col, str) else list(key_col)
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0:
-            raise ValueError(f"{table_dir} is not a committed table")
+        _check_partitioned(table_dir, cur)
         if "dv_key" in cur and _dv_keys(cur) != kcols:
             raise ValueError(
                 f"{table_dir} tombstones key {cur['dv_key']!r}; "
@@ -2478,8 +2466,7 @@ def evolve_partition_column(
     it."""
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0:
-            raise ValueError(f"{table_dir} is not a committed table")
+        _check_partitioned(table_dir, cur)
         if cur["partition_col"] == new_partition_col:
             return None  # already that spec: no-op
         cmap = _column_map(cur)
@@ -2575,8 +2562,7 @@ def rename_column(
         raise ValueError(f"rename {old!r} -> {new!r} is not a rename")
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0:
-            raise ValueError(f"{table_dir} is not a committed table")
+        _check_partitioned(table_dir, cur)
         logical = _logical_columns(spark, cur, table_dir)
         if old not in logical:
             raise ValueError(f"no column {old!r} in {table_dir}")
@@ -2630,8 +2616,7 @@ def drop_column(spark: SparkSession, table_dir: str, col: str) -> int:
     columns. Returns the new version."""
 
     def attempt(cur, new_stage):
-        if cur["version"] == 0:
-            raise ValueError(f"{table_dir} is not a committed table")
+        _check_partitioned(table_dir, cur)
         logical = _logical_columns(spark, cur, table_dir)
         if col not in logical:
             raise ValueError(f"no column {col!r} in {table_dir}")
@@ -2800,13 +2785,9 @@ def clone_table_shallow(
             raise ValueError(f"version {version} not committed in {src_dir}")
     if src.get("version", 0) == 0:
         raise ValueError(f"{src_dir} has no commits to clone")
-    if "mor" in src or src.get("legacy_layouts"):
-        # a MOR clone restarts at version 1, so its own generations'
-        # `_gen` stamps would lose ties to the source's
-        raise ValueError(
-            "shallow clone supports tables without merge-on-read "
-            "generations or legacy layouts"
-        )
+    _check_partitioned(src_dir, src)
+    if src.get("legacy_layouts"):
+        raise ValueError("shallow clone supports tables without legacy layouts")
     src_abs = os.path.abspath(src_dir)
 
     def _ref(d: str) -> str:
@@ -3553,9 +3534,8 @@ def read_partition_counts(spark: SparkSession, table_dir: str) -> DataFrame:
     cur = current_commit(table_dir)
     if cur["version"] == 0:
         raise ValueError(f"{table_dir} has no commits")
+    _check_partitioned(table_dir, cur)
     pcol = cur["partition_col"]
-    if pcol == _ONE_COL:  # a one-entry table, merge-on-read ones included
-        raise ValueError(f"{table_dir} is not a partitioned committed table")
 
     def scan_counts(df: DataFrame) -> DataFrame:
         return df.groupBy(pcol).agg(F.count(F.lit(1)).cast("long").alias("n"))
@@ -3839,12 +3819,19 @@ def _read_partition_map(
     for entry, dirs in sorted(parts.items()):
         for dirname in _entry_dirs(dirs):
             by_dir.setdefault(dirname, []).append(entry)
+    groups = [([d], entries) for d, entries in sorted(by_dir.items())]
+    if len(parts) == 1 and len(by_dir) > 1 and _dirs_schema(manifest, by_dir):
+        # one entry over generations sharing one recorded schema (a
+        # merge-on-read table's generations, a partition several commits
+        # appended to) reads as ONE multi-path scan, not a union branch
+        # per generation
+        groups = [(sorted(by_dir), list(parts))]
     out = None
     # mergeSchema + allowMissingColumns = schema evolution: a generation
     # appended with an extra column reads as NULL in older generations,
     # exactly parquet's own evolution contract.
-    for dirname, entries in sorted(by_dir.items()):
-        root = os.path.normpath(os.path.join(table_dir, dirname))
+    for dirnames, entries in groups:
+        root = os.path.normpath(os.path.join(table_dir, dirnames[0]))
         # Footer fast path (guide §1/§6): committed entry dirs almost
         # always hold ONE write's identically-schema'd files, so the
         # schema is derivable driver-side and the read runs ZERO Spark
@@ -3853,11 +3840,15 @@ def _read_partition_map(
         # back to the original mergeSchema read whenever footers differ
         # or a type is outside the proven-safe map, and the fast path
         # refuses dirs that already contain the partition column.
-        paths = [os.path.join(root, e) for e in entries]
+        paths = [
+            os.path.join(os.path.normpath(os.path.join(table_dir, d)), e)
+            for d in dirnames
+            for e in entries
+        ]
         # manifest-recorded schema first (written once at commit time —
         # zero footer reads AND zero stat() calls per read); footer
         # derivation remains the fallback for pre-feature manifests
-        sj = _dir_schema(manifest, dirname)
+        sj = _dirs_schema(manifest, dirnames)
         fast = T.StructType.fromJson(sj) if sj is not None else (
             _footer_schema(paths)
         )
@@ -3866,11 +3857,9 @@ def _read_partition_map(
         if len(entries) == 1:
             value = entries[0].split("=", 1)[1]
             if fast is not None:
-                df = spark.read.schema(fast).parquet(paths[0])
+                df = spark.read.schema(fast).parquet(*paths)
             else:
-                df = spark.read.option("mergeSchema", "true").parquet(
-                    paths[0]
-                )
+                df = spark.read.option("mergeSchema", "true").parquet(*paths)
             if pcol != _ONE_COL:
                 df = df.withColumn(pcol, F.lit(value))
         elif fast is not None:
@@ -4120,14 +4109,37 @@ def _materialize_decision(dec: DataFrame) -> DataFrame:
     return dec.localCheckpoint(eager=True)
 
 
-def _check_dml_target(table_dir: str, cur: dict, what: str) -> None:
-    """A DML writer needs a committed table partitioned by a real
-    column (a one-entry table's rows carry no ``_ONE_COL`` to stage
-    by) whose rows all live in the current layout: a decision frame
-    computed against it would miss the rows of unmigrated legacy
-    layouts."""
+def _check_partitioned(table_dir: str, cur: dict) -> None:
+    """Refuse an uncommitted or one-entry table where the caller needs a
+    real partition column — DML, counts, partition compaction, spec
+    evolution, column mapping, tombstones, constraints and clones. A
+    one-entry table is written whole by its own writers
+    (`committed_transaction`, `append_keyed_mor`), its rows carry no
+    ``_ONE_COL`` to group or stage by, and a merge-on-read table's
+    window reads its ``mor`` contract's columns by their stored names,
+    which a column map or tombstone would silently decouple."""
     if cur["version"] == 0 or cur["partition_col"] == _ONE_COL:
         raise ValueError(f"{table_dir} is not a partitioned committed table")
+
+
+def _check_spec(table_dir: str, cur: dict, partition_col: str, what: str) -> None:
+    """The current SPEC owns the layout: after partition evolution a
+    write with the old column would land data under the wrong dir names
+    and corrupt the map, and a one-entry table's writers replace its
+    entry wholesale."""
+    if cur["partition_col"] != partition_col:
+        raise ValueError(
+            f"{table_dir} is partitioned by {cur['partition_col']!r}; "
+            f"{what} supplied {partition_col!r}"
+        )
+
+
+def _check_dml_target(table_dir: str, cur: dict, what: str) -> None:
+    """A DML writer needs a committed partitioned table
+    (`_check_partitioned`) whose rows all live in the current layout: a
+    decision frame computed against it would miss the rows of
+    unmigrated legacy layouts."""
+    _check_partitioned(table_dir, cur)
     if cur.get("legacy_layouts"):
         raise ValueError(
             f"{table_dir} has unmigrated legacy partition layouts; {what} "
@@ -5558,11 +5570,13 @@ def append_keyed_mor(
         # manifest and change how read_keyed_mor resolves every PRIOR
         # generation — reject instead (a table without one is not a
         # merge-on-read table)
-        if cur["version"] > 0 and cur.get("mor") != want:
-            raise ValueError(
-                f"merge config mismatch for {table_dir}: table has "
-                f"{cur.get('mor')}, append supplied {want}"
-            )
+        if cur["version"] > 0:
+            if cur.get("mor") != want:
+                raise ValueError(
+                    f"merge config mismatch for {table_dir}: table has "
+                    f"{cur.get('mor')}, append supplied {want}"
+                )
+            _check_spec(table_dir, cur, _ONE_COL, "append_keyed_mor")
         stage = new_stage()
         return _next_manifest(
             cur, "upsert", stage,

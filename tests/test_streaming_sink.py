@@ -6345,40 +6345,87 @@ class TestOneTableKind:
                     name, m["version"],
                 )
 
-    def test_rewrite_enforces_and_clears_table_state(self, spark, tmp_path):
-        """A one-entry table takes a rename, tombstones and constraints
-        like any partition map; `committed_transaction` enforces the
-        constraints and, as a whole-table rewrite, materializes the
-        rename and the tombstones."""
+    def test_one_entry_tables_refuse_partition_maintenance(
+        self, spark, tmp_path
+    ):
+        """A one-entry table — a `committed_transaction` table or a
+        merge-on-read (MOR) one — is written whole by its own writers:
+        column mapping, tombstones, spec evolution, constraints,
+        partition compaction, counts, clones and partition transactions
+        all refuse it and leave its head unchanged, so later reads and
+        appends still resolve."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+
+        rows = spark.createDataFrame(
+            [(1, 5, 1, 10), (2, 7, 2, 20)], "k long, ord long, id long, v long"
+        )
+        cow, mor = str(tmp_path / "cow"), str(tmp_path / "mor")
+        contract = dict(keys=["k"], order_col="ord", tiebreak=["id"])
+        sinks.committed_transaction(spark, cow, lambda base: rows)
+        for b in (0, 1):
+            sinks.append_keyed_mor(spark, mor, rows, batch_id=b, **contract)
+        t_keys = spark.createDataFrame([(2,)], "k long")
+        for t in (cow, mor):
+            head = sinks.current_commit(t)
+            refusals = [
+                lambda: sinks.rename_column(spark, t, "k", "key"),
+                lambda: sinks.rename_column(spark, t, "v", "w"),
+                lambda: sinks.drop_column(spark, t, "v"),
+                lambda: sinks.drop_column(spark, t, "_gen"),
+                lambda: sinks.tombstone_keys(spark, t, "k", t_keys),
+                lambda: sinks.evolve_partition_column(spark, t, "k"),
+                lambda: sinks.set_table_constraints(spark, t, ["v > 0"]),
+                lambda: sinks.compact_partition_table(
+                    spark, t, max_files_per_partition=0
+                ),
+                lambda: sinks.read_partition_counts(spark, t),
+                lambda: sinks.clone_table_shallow(t, str(tmp_path / "c")),
+                lambda: sinks.committed_partition_transaction(
+                    spark, t, "k", lambda base: rows, affected=["1"]
+                ),
+            ]
+            for call in refusals:
+                with _pytest.raises(ValueError, match="partition"):
+                    call()
+            assert sinks.current_commit(t) == head
+        got = sinks.read_keyed_table(spark, cow)
+        assert sorted(map(tuple, got.collect())) == [(1, 5, 1, 10), (2, 7, 2, 20)]
+        sinks.append_keyed_mor(
+            spark, mor, rows.withColumn("v", F.col("v") + 1), batch_id=2,
+            **contract,
+        )
+        got = sinks.read_keyed_mor(spark, mor)
+        assert got.columns == ["k", "ord", "id", "v"]
+        assert sorted(map(tuple, got.collect())) == [(1, 5, 1, 11), (2, 7, 2, 21)]
+
+    def test_partition_transaction_keeps_the_spec(self, spark, tmp_path):
+        """`committed_partition_transaction` on a committed table must
+        name the table's own partition column, as appends and overwrites
+        must: a rewrite under another column would re-key the map."""
         import pytest as _pytest
 
         from nshm2022db_spark.streaming import sinks
 
         t = str(tmp_path / "t")
-        rows = spark.createDataFrame([(1, 5), (2, 7)], "k long, v long")
-        sinks.committed_transaction(spark, t, lambda base: rows)
-        sinks.rename_column(spark, t, "v", "w")
-        sinks.tombstone_keys(spark, t, "k", spark.createDataFrame([(2,)], "k long"))
-        sinks.set_table_constraints(spark, t, ["w > 0"])
-        with _pytest.raises(sinks.ConstraintViolation):
-            sinks.committed_transaction(
-                spark, t, lambda base: base.withColumn("w", F.lit(-1).cast("long"))
+        rows = spark.createDataFrame([(1, "a"), (2, "b")], "id long, k string")
+        sinks.append_partition_transaction(spark, t, "k", rows)
+        head = sinks.current_commit(t)
+        with _pytest.raises(ValueError, match="partitioned by 'k'"):
+            sinks.committed_partition_transaction(
+                spark, t, "id", lambda base: base, affected=["1"]
             )
-        sinks.committed_transaction(
-            spark, t, lambda base: base.withColumn("w", F.col("w") + 1)
-        )
-        m = sinks.current_commit(t)
-        assert m["version"] == 5 and m["constraints"] == ["w > 0"]
-        assert "column_map" not in m and "dv" not in m
-        got = sinks.read_keyed_table(spark, t)
-        assert got.columns == ["k", "w"] and [tuple(r) for r in got.collect()] == [
-            (1, 6)
-        ]
+        assert sinks.current_commit(t) == head
 
     def test_no_table_kind_branches(self):
         """CI guard against a second table kind: no function under
         streaming/ tests a manifest for a missing (or present)
-        ``partitions`` key or reads a ``dirs`` key."""
+        ``partitions`` key or reads a ``dirs`` key, and the one-entry and
+        merge-on-read tests stay at their listed sites — the one read
+        that hides ``_ONE_COL``, the two writers of one-entry tables,
+        the one refusal of them (`_check_partitioned`), and the two MOR
+        read guards."""
         import ast
         import glob
 
@@ -6387,10 +6434,25 @@ class TestOneTableKind:
         def is_const(node, value) -> bool:
             return isinstance(node, ast.Constant) and node.value == value
 
-        found = []
+        def kind_test(node) -> bool:
+            if not isinstance(node, ast.Compare):
+                return False
+            sides = [node.left, *node.comparators]
+            membership = any(isinstance(op, (ast.In, ast.NotIn)) for op in node.ops)
+            return any(
+                isinstance(n, ast.Name) and n.id == "_ONE_COL" for n in sides
+            ) or (membership and is_const(node.left, "mor"))
+
+        found, sites = [], set()
         for path in glob.glob(os.path.join(pkg.__path__[0], "*.py")):
             with open(path) as fh:
                 tree = ast.parse(fh.read())
+            for fn in tree.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                for node in ast.walk(fn):
+                    if kind_test(node):
+                        sites.add((os.path.basename(path), fn.name))
             for node in ast.walk(tree):
                 if isinstance(node, ast.Compare) and is_const(
                     node.left, "partitions"
@@ -6408,3 +6470,10 @@ class TestOneTableKind:
                 ):
                     found.append((path, node.lineno))
         assert found == []
+        assert sites == {
+            ("sinks.py", "_read_partition_map"),
+            ("sinks.py", "committed_transaction"),
+            ("sinks.py", "_check_partitioned"),
+            ("sinks.py", "_read_keyed"),
+            ("sinks.py", "_mor_view"),
+        }
