@@ -24,8 +24,9 @@ _MARKER = "_LANDED"
 # bumped when a landing's on-disk table layout changes, so tables landed
 # by older code are rebuilt instead of read (2: commit-log tables only —
 # no `_CURRENT`-pointer / `v{N}` dir tables; 3: every table a partition
-# map — no single-dir or `dirs`-list merge-on-read manifests)
-_LAYOUT = 3
+# map — no single-dir or `dirs`-list merge-on-read manifests; 4: a
+# migrated raw layout's `"."` dir carries a recorded schema)
+_LAYOUT = 4
 
 
 def _corpus_fingerprint(sf: str) -> str:

@@ -45,39 +45,25 @@ from nshm2022db_spark.registry import register
 from nshm2022db_spark.sources import read_table
 from nshm2022db_spark.streaming.sinks import (
     _COMMITS,
-    _is_manifest,
+    _manifest_names,
     _read_json,
+    current_commit,
     transact,
 )
-
-
-def _catalog_manifest_names(catalog_dir: str) -> list[str]:
-    """Sorted catalog manifest names — the SAME _is_manifest filter the
-    per-table log scan uses, so a ledger checkpoint (*.checkpoint.json)
-    landing in a catalog dir (or a catalog_dir pointed at a table dir)
-    is never parsed as a snapshot vector (ADVICE r13)."""
-    log = os.path.join(catalog_dir, _COMMITS)
-    try:
-        return sorted(n for n in os.listdir(log) if _is_manifest(n))
-    except FileNotFoundError:
-        return []
 
 
 def current_catalog(catalog_dir: str) -> dict:
     """The latest committed catalog manifest
     ``{version, tables: {name: {dir, version}}}`` — version 0 with an
-    empty vector before the first publish. Same append-only log scan
-    as sinks.current_commit, built on the same primitives: manifests
-    are linked fully-written (try_commit), so a missing file can only
-    be a concurrent retention unlink of an OLDER name (_read_json's
-    FileNotFoundError tolerance); anything else — corruption, IO
-    faults — propagates instead of silently serving a stale vector."""
-    log = os.path.join(catalog_dir, _COMMITS)
-    for n in reversed(_catalog_manifest_names(catalog_dir)):
-        m = _read_json(os.path.join(log, n))
-        if m is not None:
-            return m
-    return {"version": 0, "tables": {}}
+    empty vector before the first publish. The catalog log is a commit
+    log like any table's, so its head is `current_commit`'s (ledger
+    checkpoints beside it are never parsed as a vector, ADVICE r13): a
+    missing file can only be a concurrent retention unlink of an OLDER
+    name;
+    anything else — corruption, IO faults — propagates instead of
+    silently serving a stale vector."""
+    m = current_commit(catalog_dir)
+    return m if m["version"] else {"version": 0, "tables": {}}
 
 
 def catalog_publish(
@@ -531,7 +517,7 @@ def catalog_at(
             raise ValueError(f"tag {tag!r} does not exist in {catalog_dir}")
         version = int(refs[tag])
     log = os.path.join(catalog_dir, _COMMITS)
-    names = _catalog_manifest_names(catalog_dir)
+    names = _manifest_names(catalog_dir)
     earliest = int(names[0].split(".")[0]) if names else 1
     head = int(names[-1].split(".")[0]) if names else 0
     if version is not None:
@@ -686,7 +672,7 @@ def catalog_vacuum(catalog_dir: str, keep_last_snapshots: int = 1) -> dict:
     if keep_last_snapshots < 1:
         raise ValueError("keep_last_snapshots must be >= 1")
     log = os.path.join(catalog_dir, _COMMITS)
-    names = _catalog_manifest_names(catalog_dir)
+    names = _manifest_names(catalog_dir)
     head = current_catalog(catalog_dir)
     refs = head.get("refs", {})
     branches = head.get("branches", {})

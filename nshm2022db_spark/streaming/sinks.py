@@ -31,6 +31,11 @@ once (`committed_transaction`, the merge-on-read appends) is the map's
 degenerate case: one constant entry, ``_ONE_ENTRY``, whose column no
 reader sees.
 
+Every committed data dir's file schema is recorded once, by the commit
+that references it first (``dir_schemas``), and every read of committed
+data takes its schema from there — never from the files' footers and
+never from Spark's schema inference.
+
 `transact` is the one publish loop: every writer here and in catalog.py
 states only its attempt (head in, successor manifest out) and
 `_next_manifest` is the one rule for the table state a successor
@@ -44,14 +49,12 @@ period (mtime-based, so an in-flight writer's fresh stage survives).
 from __future__ import annotations
 
 import base64
-import contextlib
 import json
 import math
 import os
 import re
 import shutil
 import tempfile
-import threading
 import time
 import uuid
 
@@ -339,11 +342,9 @@ def _next_manifest(cur: dict, op: str, stage: str, **fields) -> dict:
     ``dir_schemas`` names the NEW dirs' file schemas (Spark schema json
     of that dir's parquet files; partition-mapped stages exclude the
     partition column), recorded ONCE at write time — the writer already
-    knew what `_footer_schema` would derive per read (at 100 TB that
-    was O(files) serial driver reads per first touch).
-    Entries of ``cur`` carry forward for the dirs the new manifest
-    still references; a dir without an entry ("." migration dirs,
-    legacy layouts) reads through the exact footer/inference path."""
+    knows it, so no read ever derives it from the files. Entries of
+    ``cur`` carry forward for the dirs the new manifest still
+    references; a read of a dir without an entry raises."""
     stages = fields.pop("dir_schemas", None) or {}
     m = {k: cur[k] for k in _CARRIED if k in cur}
     m.update(fields)
@@ -613,8 +614,7 @@ def _arrow_to_spark_type(at) -> "T.DataType | None":
 
 
 # (file list, sizes, mtimes) -> StructType | False ("unsafe, don't retry").
-# Committed data dirs are immutable and uuid-named, so a hit is always
-# valid; the stat tuple in the key still guards the theoretical rewrite.
+# The stat tuple in the key invalidates a hit on a rewritten file.
 _FOOTER_SCHEMA_MEMO: dict = {}
 _FOOTER_SCHEMA_MEMO_CAP = 8192
 
@@ -626,8 +626,9 @@ def _footer_schema(paths: list[str]) -> "T.StructType | None":
     resolve) with O(files) local metadata reads. Returns a schema ONLY
     when every footer carries the identical Arrow schema and every type
     is in the `_arrow_to_spark_type` whitelist; otherwise None and the
-    caller runs the exact mergeSchema inference read it always did (the
-    semantics-bearing path for schema evolution inside one dir)."""
+    caller runs Spark's own inference read. Non-committed parquet only
+    (the corpus, result scratch): committed dirs read through their
+    recorded schema (`_recorded_schema`)."""
     files: list[tuple[str, int, int]] = []
     try:
         for p in paths:
@@ -661,7 +662,7 @@ def _footer_schema(paths: list[str]) -> "T.StructType | None":
             if schema0 is None:
                 schema0 = s
             elif not s.equals(schema0):
-                schema0 = None  # intra-dir evolution: mergeSchema's job
+                schema0 = None  # footers disagree: Spark's inference
                 break
     except Exception:
         schema0 = None
@@ -686,18 +687,14 @@ def _footer_schema(paths: list[str]) -> "T.StructType | None":
 def _read_parquet_fast(
     spark: SparkSession, *paths: str, schema_json: dict | None = None
 ) -> DataFrame:
-    """`spark.read.parquet(*paths)` minus the schema-inference Spark job
-    when the footers allow it (`_footer_schema`); byte-identical plan
+    """`spark.read.parquet(*paths)` of NON-committed parquet (the
+    corpus, result scratch) minus the schema-inference Spark job when
+    the footers allow it (`_footer_schema`); byte-identical plan
     semantics either way — the fast path only fires when every footer
     agrees, which is exactly the case where inference returns the same
-    schema.
-
-    ``schema_json``: a manifest-recorded schema (`dir_schemas`, written
-    once at commit time by `_next_manifest`). When present the read
-    supplies it directly — ZERO footer reads and ZERO stat() calls on
-    the read path, the O(files) driver cost the footer path still paid
-    per first touch (guide §6/§1: at 100 TB a 10k-file dir meant 10k
-    serial driver footer reads; the writer already knew the schema)."""
+    schema. ``schema_json``: the writer's own schema, supplied directly
+    (zero footer reads). Committed data never reads through here: its
+    schema is the manifest's (`_read_dirs`, `_read_partition_map`)."""
     if schema_json is not None:
         return spark.read.schema(
             T.StructType.fromJson(schema_json)
@@ -708,29 +705,41 @@ def _read_parquet_fast(
     return spark.read.parquet(*paths)
 
 
-def _dir_schema(m: dict, d: str) -> dict | None:
-    """The manifest-recorded schema json for data dir ``d`` (None for
-    pre-feature manifests or dirs whose footers refused a schema)."""
-    return (m.get("dir_schemas") or {}).get(d)
+def _recorded_schema(table_dir: str, m: dict, d: str) -> dict:
+    """The schema json manifest ``m`` recorded for data dir ``d`` — the
+    one schema source of a committed read."""
+    sj = (m.get("dir_schemas") or {}).get(d)
+    if sj is None:
+        raise ValueError(
+            f"{table_dir}: data dir {d!r} has no recorded schema in "
+            f"its manifest"
+        )
+    return sj
 
 
-def _dirs_schema(m: dict, dirs) -> dict | None:
-    """One schema json valid for a MULTI-dir read (dv key files, one
-    entry's generations): every dir must have a recorded schema and
-    they must all be identical — otherwise None and the caller's original
-    footer/inference read runs (the schema-evolution path)."""
-    ds = m.get("dir_schemas") or {}
-    js = [ds.get(d) for d in dirs]
-    if js and all(j is not None for j in js) and all(j == js[0] for j in js):
-        return js[0]
-    return None
+def _read_dirs(
+    spark: SparkSession, table_dir: str, m: dict, dirs: list[str]
+) -> DataFrame:
+    """Flat committed dirs (tombstone key files, a CDC sidecar) read
+    through their recorded schemas: one scan when the schemas agree,
+    otherwise a by-name union of per-dir scans (a column only some
+    dirs carry reads as NULL in the others)."""
+    sjs = [_recorded_schema(table_dir, m, d) for d in dirs]
+    paths = [os.path.join(table_dir, d) for d in dirs]
+    if all(sj == sjs[0] for sj in sjs):
+        return spark.read.schema(T.StructType.fromJson(sjs[0])).parquet(*paths)
+    out = None
+    for sj, p in zip(sjs, paths):
+        df = spark.read.schema(T.StructType.fromJson(sj)).parquet(p)
+        out = df if out is None else out.unionByName(df, allowMissingColumns=True)
+    return out
 
 
 def _nullable_type(dt: "T.DataType") -> "T.DataType":
     """The type with every nesting level forced nullable — what a
     parquet read of the written files reports (the writer's frame may
-    carry non-null fields; parquet file sources surface them nullable,
-    exactly as `_footer_schema` always derived them)."""
+    carry non-null fields; parquet file sources surface them
+    nullable)."""
     if isinstance(dt, T.StructType):
         return T.StructType(
             [
@@ -753,8 +762,7 @@ def _file_schema_json(
     """The as-written file schema of a staged frame, as manifest json:
     the partition column projected out (``partitionBy`` encodes it in
     dir names, not files) and every field nullable. This is what the
-    writer KNOWS and what `_footer_schema` re-derived from the footers
-    on every first read — recording it costs zero I/O."""
+    writer KNOWS, so recording it costs zero I/O."""
     return T.StructType(
         [
             T.StructField(f.name, _nullable_type(f.dataType), True)
@@ -801,83 +809,81 @@ def _distribute_for_partitioned_write(
     return df.repartition(n, F.col(pcol))
 
 
-_INFERENCE_GUARD = threading.Lock()
-_INFERENCE_STATE: dict[int, list] = {}  # id(spark) -> [depth, saved value]
+def _raw_layout_schema(
+    spark: SparkSession, table_dir: str, entries: list[str], pcol: str
+) -> dict:
+    """The file schema of a raw ``partitionBy`` layout's entry dirs, as
+    manifest json with the partition column projected out — derived
+    ONCE, when the layout migrates into the commit log as data dir
+    ``"."``. Spark reads each distinct footer schema (usually one) and
+    the results merge by name in first-seen order, parquet's schema
+    evolution; a column whose type differs between files refuses."""
+    import pyarrow.parquet as pq
+
+    firsts: dict[bytes, str] = {}
+    for e in entries:
+        for f in _parquet_files(os.path.join(table_dir, e)):
+            firsts.setdefault(pq.read_schema(f).serialize().to_pybytes(), f)
+    fields: dict[str, T.StructField] = {}
+    for f in firsts.values():
+        for fld in spark.read.parquet(f).schema:
+            have = fields.setdefault(fld.name, fld)
+            if _nullable_type(have.dataType) != _nullable_type(fld.dataType):
+                raise ValueError(
+                    f"{table_dir}: column {fld.name!r} is "
+                    f"{have.dataType.simpleString()} in some files and "
+                    f"{fld.dataType.simpleString()} in others"
+                )
+    return _file_schema_json(T.StructType(list(fields.values())), drop=pcol)
 
 
-@contextlib.contextmanager
-def _no_partition_inference(spark: SparkSession):
-    """Disable partition-dir type inference for the reads inside the
-    block, REENTRANTLY per session: a bare save/set/restore pair is
-    not — two interleaved callers (concurrent foreachBatch threads on
-    one session) would capture each other's 'false' as the value to
-    restore and leave inference off for the whole session forever.
-    Depth-counted per session id, first caller saves, last restores."""
-    key = "spark.sql.sources.partitionColumnTypeInference.enabled"
-    sid = id(spark)
-    with _INFERENCE_GUARD:
-        st = _INFERENCE_STATE.get(sid)
-        if st is None:
-            st = _INFERENCE_STATE[sid] = [0, spark.conf.get(key)]
-            spark.conf.set(key, "false")
-        st[0] += 1
-    try:
-        yield
-    finally:
-        with _INFERENCE_GUARD:
-            st[0] -= 1
-            if st[0] == 0:
-                spark.conf.set(key, st[1])
-                _INFERENCE_STATE.pop(sid, None)
+def _read_stage(
+    spark: SparkSession,
+    table_dir: str,
+    pcol: str,
+    stage: str,
+    written: set[str],
+    schema_json: dict,
+) -> DataFrame:
+    """The entries ``written`` of a just-staged write, read through the
+    stage's own schema — the one frame its CHECK constraints, audit and
+    Bloom bitmaps see."""
+    return _read_partition_map(
+        spark,
+        table_dir,
+        {
+            "partition_col": pcol,
+            "partitions": {e: stage for e in sorted(written)},
+            "dir_schemas": {stage: schema_json},
+        },
+    )
 
 
 def _collect_stage_blooms(
-    spark: SparkSession,
-    stage_path: str,
+    staged: DataFrame,
     partition_col: str,
-    written: set[str],
     bloom_cols: list[str],
     m: int,
     k: int,
-    schema_json: dict | None = None,
 ) -> dict:
-    """Per-partition Bloom bitmaps over the named columns for a freshly
-    staged write — the manifest half of Delta's bloom-filter index /
-    Iceberg's puffin sidecars: equality predicates on high-cardinality
-    columns can skip partitions whose min/max ranges all overlap (where
-    range stats prove nothing). ONE distributed aggregation over only
-    the staged files regardless of column count (each row contributes
-    (col, position) pairs for every bloom column in one explode); the
-    map-side partial collect_set is bounded by m per (partition, col),
-    so the shuffle is O(partitions × cols × m) regardless of appended
-    row count, and the driver packs each set to m/8 bytes of base64.
-    Each spec records the COLUMN TYPE it hashed through (``t``) so the
-    probe side can cast its literal identically — hashing the string
-    form of a double ('3.0') and probing with an int ('3') would
-    otherwise be a silent false negative. NULLs are not inserted
-    (equality against NULL is the ``"null"`` prune spec's job)."""
-    paths = [os.path.join(stage_path, e) for e in sorted(written)]
-    # the writer's own schema when the caller has it (r16 #1 — zero
-    # footer reads); footer derivation for pre-feature callers
-    fast = (
-        T.StructType.fromJson(schema_json)
-        if schema_json is not None
-        else _footer_schema(paths)
-    )
-    if fast is not None and partition_col not in fast.fieldNames():
-        # zero-job read of the just-staged files (guide §1/§6) — the
-        # schema comes from their own footers; the dir-name partition
-        # column is supplied as string, same as the inference-off read
-        df = (
-            spark.read.schema(fast.add(partition_col, T.StringType()))
-            .option("basePath", stage_path)
-            .parquet(*paths)
-        )
-    else:
-        with _no_partition_inference(spark):
-            df = spark.read.option("basePath", stage_path).parquet(*paths)
-    types = dict(df.dtypes)
-    cols = [c for c in bloom_cols if c in df.columns]
+    """Per-partition Bloom bitmaps over the named columns of a freshly
+    staged write (``staged``, `_read_stage`) — the manifest half of
+    Delta's bloom-filter index / Iceberg's puffin sidecars: equality
+    predicates on high-cardinality columns can skip partitions whose
+    min/max ranges all overlap (where range stats prove nothing). ONE
+    distributed aggregation over only the staged files regardless of
+    column count (each row contributes (col, position) pairs for every
+    bloom column in one explode); the map-side partial collect_set is
+    bounded by m per (partition, col), so the shuffle is O(partitions ×
+    cols × m) regardless of appended row count, and the driver packs
+    each set to m/8 bytes of base64. Each spec records the COLUMN TYPE
+    it hashed through (``t``) so the probe side can cast its literal
+    identically — hashing the string form of a double ('3.0') and
+    probing with an int ('3') would otherwise be a silent false
+    negative. NULLs are not inserted (equality against NULL is the
+    ``"null"`` prune spec's job)."""
+    types = dict(staged.dtypes)
+    cols = [c for c in bloom_cols if c in staged.columns]
     if not cols:
         return {}
     pair_arrays = [
@@ -896,7 +902,7 @@ def _collect_stage_blooms(
         for c in cols
     ]
     rows = (
-        df.select(
+        staged.select(
             F.col(partition_col).cast("string").alias("_e"),
             F.explode(F.flatten(F.array(*pair_arrays))).alias("_cp"),
         )
@@ -1174,17 +1180,24 @@ def committed_partition_transaction(
     def attempt(cur, new_stage):
         if cur["version"] == 0:
             # migrate a raw partitionBy layout in place (version 0 =
-            # the uncommitted top-level dirs)
+            # the uncommitted top-level dirs); its file schema is
+            # recorded for "." like a stage's
+            raw = sorted(
+                n for n in os.listdir(table_dir)
+                if n.startswith(prefix)
+                and os.path.isdir(os.path.join(table_dir, n))
+            )
             cur = {
                 "version": 0,
                 "partition_col": partition_col,
-                "partitions": {
-                    n: "."
-                    for n in os.listdir(table_dir)
-                    if n.startswith(prefix)
-                    and os.path.isdir(os.path.join(table_dir, n))
-                },
+                "partitions": dict.fromkeys(raw, "."),
             }
+            if raw:
+                cur["dir_schemas"] = {
+                    ".": _raw_layout_schema(
+                        spark, table_dir, raw, partition_col
+                    )
+                }
         else:
             _check_spec(table_dir, cur, partition_col, "transaction")
         if cur.get("legacy_layouts") and not allow_legacy:
@@ -1213,20 +1226,11 @@ def committed_partition_transaction(
         }
         _check_entry_values(written)
         stage_schema = _file_schema_json(out.schema, drop=partition_col)
-        if cur.get("constraints") and written:
-            _enforce_constraints(
-                _read_partition_map(
-                    spark,
-                    table_dir,
-                    {
-                        "partition_col": partition_col,
-                        "partitions": {e: stage for e in sorted(written)},
-                        "dir_schemas": {stage: stage_schema},
-                    },
-                ),
-                cur["constraints"],
-                manifest=cur,
+        if written and (cur.get("constraints") or bloom_cols):
+            staged = _read_stage(
+                spark, table_dir, partition_col, stage, written, stage_schema
             )
+            _enforce_constraints(staged, cur.get("constraints"), manifest=cur)
         claimed = (
             set(cur["partitions"]) | written
             if affected is None
@@ -1265,9 +1269,7 @@ def committed_partition_transaction(
             )
             new_bloom.update(
                 _collect_stage_blooms(
-                    spark, stage_path, partition_col, written,
-                    bcols, bloom_bits, bloom_hashes,
-                    schema_json=stage_schema,
+                    staged, partition_col, bcols, bloom_bits, bloom_hashes
                 )
             )
         # tombstones survive rewrites: the rewritten partitions
@@ -1672,14 +1674,9 @@ def _partition_batch_commit(
     def staged_frame() -> DataFrame:
         if not st["written"]:
             return batch_df.limit(0)
-        return _read_partition_map(
-            spark,
-            table_dir,
-            {
-                "partition_col": partition_col,
-                "partitions": {e: st["stage"] for e in sorted(st["written"])},
-                "dir_schemas": {st["stage"]: st["schema"]},
-            },
+        return _read_stage(
+            spark, table_dir, partition_col, st["stage"], st["written"],
+            st["schema"],
         )
 
     def run_audit(cur: dict, staged: DataFrame, what: str) -> None:
@@ -1736,7 +1733,9 @@ def _partition_batch_commit(
             stage=stage, written=written, claimed=claimed, base=cur,
             schema=_file_schema_json(phys.schema, drop=partition_col),
         )
-        if (written and cur.get("constraints")) or audit is not None:
+        if audit is not None or (
+            written and (cur.get("constraints") or bloom_cols)
+        ):
             staged = staged_frame()
             if written:
                 _enforce_constraints(
@@ -1754,10 +1753,8 @@ def _partition_batch_commit(
         )
         st["blooms"] = (
             _collect_stage_blooms(
-                stage_path=stage_path, spark=spark,
-                partition_col=partition_col, written=written,
-                bloom_cols=_physical_names(bloom_cols, cur),
-                m=bloom_bits, k=bloom_hashes, schema_json=st["schema"],
+                staged, partition_col, _physical_names(bloom_cols, cur),
+                bloom_bits, bloom_hashes,
             )
             if bloom_cols and written
             else {}
@@ -2406,11 +2403,7 @@ def _apply_tombstones(
     dvs = manifest.get("dv", [])
     if not dvs or df is None:
         return df
-    keys = _read_parquet_fast(
-        spark,
-        *[os.path.join(table_dir, d) for d in dvs],
-        schema_json=_dirs_schema(manifest, dvs),
-    ).distinct()
+    keys = _read_dirs(spark, table_dir, manifest, dvs).distinct()
     return df.join(F.broadcast(keys), on=_dv_keys(manifest), how="left_anti")
 
 
@@ -2691,7 +2684,7 @@ def migrate_legacy_layouts(
             return None
         pcol = cur["partition_col"]
         old_rows = None
-        for lay in legacy:
+        for lay in _layouts(cur)[1:]:
             part = _read_partition_map(spark, table_dir, lay, None)
             if part is not None:
                 old_rows = part if old_rows is None else old_rows.unionByName(
@@ -2777,12 +2770,7 @@ def clone_table_shallow(
     if version is None:
         src = current_commit(src_dir)  # O(1): the newest manifest
     else:
-        src = next(
-            (m for m in table_history(src_dir) if m["version"] == version),
-            None,
-        )
-        if src is None:
-            raise ValueError(f"version {version} not committed in {src_dir}")
+        src = _manifest_at(src_dir, version)
     if src.get("version", 0) == 0:
         raise ValueError(f"{src_dir} has no commits to clone")
     _check_partitioned(src_dir, src)
@@ -2838,10 +2826,7 @@ def restore_table_version(table_dir: str, version: int) -> int:
     Concurrency-safe via the same CAS: losing the race means someone
     else committed meanwhile — the restore retries against the new head
     so the restored state is always the caller's requested snapshot."""
-    hist = table_history(table_dir)
-    target = next((m for m in hist if m["version"] == version), None)
-    if target is None:
-        raise ValueError(f"version {version} not committed in {table_dir}")
+    target = _manifest_at(table_dir, version)
 
     def _missing_dirs() -> list[str]:
         return [
@@ -3027,6 +3012,15 @@ def vacuum_uncommitted(table_dir: str, grace_sec: float = 3600.0) -> list[str]:
                     pass
                 removed.append(os.path.join(_COMMITS, n))
     return removed
+
+
+def _manifest_at(table_dir: str, version: int) -> dict:
+    """Committed manifest ``version``: one file open, not a log scan.
+    Raises when it was never committed or has been vacuumed."""
+    m = _read_json(os.path.join(table_dir, _COMMITS, f"{version:020d}.json"))
+    if m is None:
+        raise ValueError(f"version {version} not committed in {table_dir}")
+    return m
 
 
 def table_history(table_dir: str) -> list[dict]:
@@ -3433,21 +3427,15 @@ def read_table_changes_typed(
     out = None
 
     def dv_key_set(dirs: list[str], of: dict) -> DataFrame:
-        return _read_parquet_fast(
-            spark,
-            *[os.path.join(table_dir, d) for d in dirs],
-            schema_json=_dirs_schema(of, dirs),
-        ).distinct()
+        return _read_dirs(spark, table_dir, of, dirs).distinct()
 
     for im in _change_images(table_dir, hist, from_version, hi):
         version = F.lit(im["version"]).cast("long")
         if im["cdc"]:
             # the sidecar carries `_change_type` as a data column, so
             # its version column follows it
-            part = _read_parquet_fast(
-                spark,
-                os.path.join(table_dir, im["cdc"]),
-                schema_json=_dir_schema(im["dv_of"], im["cdc"]),
+            part = _read_dirs(
+                spark, table_dir, im["dv_of"], [im["cdc"]]
             ).withColumn("_commit_version", version)
         else:
             part = _apply_tombstones(
@@ -3793,15 +3781,23 @@ def _read_partition_map(
     applies manifest-stats data skipping (`_stats_prune`) so entries the
     stats disprove never even enter the plan.
 
+    Every dir reads through the schema its manifest recorded when it
+    was written (`_recorded_schema`) — no footer read, no inference.
+
     Scale shape: entries are grouped by DATA DIR, one multi-path scan
     per generation (basePath = the data dir, so Spark lists exactly the
     mapped partition dirs — the Delta/Iceberg log → file-index read) and
-    one union branch per generation, not per partition. Generations stay
-    few (each transaction adds one, compaction collapses), so the plan
-    is O(generations) even at lake partition counts. The partition
-    column is normalized to STRING on every branch — dir-name inference
-    would otherwise type `day=2024-01-01` as a date in one generation
-    and the lit() branch as a string."""
+    one union branch per generation, not per partition; one entry over
+    generations sharing one recorded schema (a merge-on-read table's
+    generations, a partition several commits appended to) reads as ONE
+    multi-path scan. Generations stay few (each transaction adds one,
+    compaction collapses), so the plan is O(generations) even at lake
+    partition counts. The partition column is a STRING on every branch:
+    the dir-name discovery takes the supplied string type, so a
+    numeric-looking value stays exactly as written ('007', never 7),
+    matching the single-entry branch's literal and the manifest keys.
+    Generations whose recorded schemas differ (schema evolution) union
+    by name; a column an older generation lacks reads as NULL."""
     parts = _prune_entries(spark, manifest, prune)
     if not parts:
         if not manifest["partitions"]:
@@ -3819,81 +3815,33 @@ def _read_partition_map(
     for entry, dirs in sorted(parts.items()):
         for dirname in _entry_dirs(dirs):
             by_dir.setdefault(dirname, []).append(entry)
+    sjs = {d: _recorded_schema(table_dir, manifest, d) for d in by_dir}
     groups = [([d], entries) for d, entries in sorted(by_dir.items())]
-    if len(parts) == 1 and len(by_dir) > 1 and _dirs_schema(manifest, by_dir):
-        # one entry over generations sharing one recorded schema (a
-        # merge-on-read table's generations, a partition several commits
-        # appended to) reads as ONE multi-path scan, not a union branch
-        # per generation
+    first = next(iter(sjs.values()))
+    if len(parts) == 1 and all(sj == first for sj in sjs.values()):
         groups = [(sorted(by_dir), list(parts))]
     out = None
-    # mergeSchema + allowMissingColumns = schema evolution: a generation
-    # appended with an extra column reads as NULL in older generations,
-    # exactly parquet's own evolution contract.
     for dirnames, entries in groups:
         root = os.path.normpath(os.path.join(table_dir, dirnames[0]))
-        # Footer fast path (guide §1/§6): committed entry dirs almost
-        # always hold ONE write's identically-schema'd files, so the
-        # schema is derivable driver-side and the read runs ZERO Spark
-        # jobs instead of one inference job per generation per read —
-        # the dominant job count in the commit-protocol queries. Falls
-        # back to the original mergeSchema read whenever footers differ
-        # or a type is outside the proven-safe map, and the fast path
-        # refuses dirs that already contain the partition column.
         paths = [
             os.path.join(os.path.normpath(os.path.join(table_dir, d)), e)
             for d in dirnames
             for e in entries
         ]
-        # manifest-recorded schema first (written once at commit time —
-        # zero footer reads AND zero stat() calls per read); footer
-        # derivation remains the fallback for pre-feature manifests
-        sj = _dirs_schema(manifest, dirnames)
-        fast = T.StructType.fromJson(sj) if sj is not None else (
-            _footer_schema(paths)
-        )
-        if fast is not None and pcol in fast.fieldNames():
-            fast = None
+        schema = T.StructType.fromJson(sjs[dirnames[0]])
         if len(entries) == 1:
-            value = entries[0].split("=", 1)[1]
-            if fast is not None:
-                df = spark.read.schema(fast).parquet(*paths)
-            else:
-                df = spark.read.option("mergeSchema", "true").parquet(*paths)
+            df = spark.read.schema(schema).parquet(*paths)
             if pcol != _ONE_COL:
-                df = df.withColumn(pcol, F.lit(value))
-        elif fast is not None:
+                df = df.withColumn(pcol, F.lit(entries[0].split("=", 1)[1]))
+        else:
             # partition-dir discovery with a user schema: the dir-name
-            # column takes the SUPPLIED string type (same raw values as
-            # the inference-off read — no numeric mutation), appended
-            # after the data columns exactly where discovery puts it
+            # column is appended after the data columns, exactly where
+            # discovery puts it
             df = (
-                spark.read.schema(fast.add(pcol, T.StringType()))
+                spark.read.schema(schema.add(pcol, T.StringType()))
                 .option("basePath", root)
                 .parquet(*paths)
             )
-            df = df.withColumn(pcol, F.col(pcol).cast("string"))
-        else:
-            # Disable partition-dir type inference for this resolve:
-            # inferred types mutate numeric-looking values ('007'->7,
-            # '1.50'->1.5) once cast back to string, diverging from the
-            # single-entry branch's exact F.lit and from the manifest
-            # keys. With inference off the discovered column IS the
-            # dir-name string (and equality filters on it still reach
-            # PartitionFilters, which a filter through a date/int cast
-            # would not). The flip only spans this eager resolve, and
-            # every reader in this module normalizes the column to
-            # string anyway, so a concurrent resolve observing it still
-            # reads correct values. The flip itself goes through the
-            # reentrant guard — interleaved callers on one session must
-            # not capture each other's 'false' as the restore value.
-            with _no_partition_inference(spark):
-                df = (
-                    spark.read.option("basePath", root)
-                    .option("mergeSchema", "true")
-                    .parquet(*[os.path.join(root, e) for e in entries])
-                )
-            df = df.withColumn(pcol, F.col(pcol).cast("string"))
         out = df if out is None else out.unionByName(df, allowMissingColumns=True)
     return out
 
@@ -3904,18 +3852,18 @@ def resolve_version_as_of(table_dir: str, as_of: float) -> int | None:
     table had no commits yet at that time. Manifests record
     ``committed_at`` once at publish (try_commit), so the mapping is
     stable across restores and replays."""
-    best = None
-    for m in table_history(table_dir):
-        ts = m.get("committed_at")
-        if ts is None:
-            # pre-feature manifest with no publish timestamp: its place
-            # in time is unknown, so it can never RESOLVE an as_of —
-            # defaulting it to 0 would answer pre-creation instants
-            # with current data
-            continue
-        if ts <= as_of:
-            best = m["version"] if best is None else max(best, m["version"])
-    return best
+    # newest first: the first match is the latest such version, so a
+    # recent ``as_of`` opens a few manifests, not the whole log
+    for n in reversed(_manifest_names(table_dir)):
+        m = _read_json(os.path.join(table_dir, _COMMITS, n))
+        # a manifest with no publish timestamp (pre-feature) has no
+        # known place in time, so it can never RESOLVE an as_of —
+        # defaulting it to 0 would answer pre-creation instants with
+        # current data; None is a manifest a concurrent vacuum dropped
+        ts = None if m is None else m.get("committed_at")
+        if ts is not None and ts <= as_of:
+            return m["version"]
+    return None
 
 
 def _resolve_manifest(
@@ -3933,10 +3881,7 @@ def _resolve_manifest(
     if version is None:
         cur = current_commit(table_dir)
         return cur if cur["version"] else None
-    for m in table_history(table_dir):
-        if m["version"] == version:
-            return m
-    raise ValueError(f"version {version} not committed in {table_dir}")
+    return _manifest_at(table_dir, version)
 
 
 def _read_manifest(
@@ -4196,11 +4141,7 @@ def _dv_key_frame(
     ``keys`` (dv files carry the physical names), read through the
     recorded schema — no footer reads."""
     return (
-        _read_parquet_fast(
-            spark,
-            *[os.path.join(table_dir, d) for d in cur["dv"]],
-            schema_json=_dirs_schema(cur, cur["dv"]),
-        )
+        _read_dirs(spark, table_dir, cur, cur["dv"])
         .select(*[F.col(pk).alias(k) for k, pk in zip(keys, _dv_keys(cur))])
         .distinct()
     )
@@ -4445,19 +4386,9 @@ def _dml_commit(
                 # deletes are committed rows, and row-level CHECKs
                 # hold on any subset of them
                 _enforce_constraints(
-                    _read_partition_map(
-                        spark, table_dir,
-                        {
-                            "partition_col": pcol,
-                            "partitions": {
-                                e: stage for e in sorted(written)
-                            },
-                            "dir_schemas": {
-                                stage: _file_schema_json(
-                                    stage_rows.schema, drop=pcol
-                                )
-                            },
-                        },
+                    _read_stage(
+                        spark, table_dir, pcol, stage, written,
+                        _file_schema_json(stage_rows.schema, drop=pcol),
                     ),
                     cur["constraints"],
                     manifest=cur,
@@ -4733,10 +4664,10 @@ def merge_into_table(
     present only in the source join the target schema — SET/INSERT
     expressions may assign them, carried and by-source rows surface
     them as NULL, and only the files this merge writes carry the new
-    columns (older generations read them as NULL through the
-    mergeSchema read path). Without it, source-only columns are simply
-    not part of the output (the SET/INSERT expressions can still READ
-    them via ``s.<col>``).
+    columns (older generations, whose recorded schemas lack them, read
+    them as NULL through `_read_partition_map`'s by-name union).
+    Without it, source-only columns are simply not part of the output
+    (the SET/INSERT expressions can still READ them via ``s.<col>``).
 
     On a column-mapped table (RENAME/DROP COLUMN history, r13 —
     VERDICT r12 #1) everything the caller writes is the LOGICAL
@@ -4980,7 +4911,7 @@ def merge_into_table(
             # Delta's schema auto-merge: source-only columns join the
             # target schema. Only the rewritten/extended files carry
             # them; older generations read them as NULL through the
-            # mergeSchema read path — parquet's own evolution contract.
+            # by-name union of their recorded schemas.
             src_types = dict(
                 zip(source.schema.names, [f.dataType for f in source.schema])
             )
@@ -5242,10 +5173,9 @@ def update_table(
         scan_parts = _prune_entries(spark, cur, _physical_names(prune, cur))
         if not scan_parts:
             # every partition disproven: O(manifest) no-op — the full
-            # mergeSchema resolve in `_dml_base` reads every live
-            # footer, which a pruned-empty update must not pay (r12
-            # review sweep 2 #6; SET-column name validation is skipped
-            # on this path)
+            # plan resolve over every live dir in `_dml_base` is work a
+            # pruned-empty update must not pay (r12 review sweep 2 #6;
+            # SET-column name validation is skipped on this path)
             res["noop"] = {"version": cur["version"]}
             return None
         tcols, ttypes, base = _dml_base(spark, table_dir, cur, scan_parts)
@@ -5379,8 +5309,8 @@ def delete_table(
             }
         if not scan_parts:
             # every partition disproven/out of scope: O(manifest) no-op
-            # without the full-footer mergeSchema resolve in `_dml_base`
-            # (r12 review sweep 2 #6)
+            # without the full-map plan resolve in `_dml_base` (r12
+            # review sweep 2 #6)
             res["noop"] = {"version": cur["version"]}
             return None
         tcols, _, base = _dml_base(spark, table_dir, cur, scan_parts)

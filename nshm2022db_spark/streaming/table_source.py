@@ -360,10 +360,15 @@ def table_stream_schema(
         ],
         metadata=merged.metadata,
     )
-    # prefer_timestamp_ntz: tz-naive parquet timestamps surface as
-    # TIMESTAMP_NTZ, matching what read_keyed_table's batch scan of the
-    # same files yields (a stream consumer needing watermarking casts to
-    # TIMESTAMP explicitly, the events.py discipline)
+    # prefer_timestamp_ntz: the executor reads units with pyarrow, so
+    # the schema describes pyarrow's view of the files. The session
+    # writes timestamps as INT96 (spark.sql.parquet.outputTimestampType),
+    # which pyarrow reads tz-naive: a TimestampType column streams as
+    # TIMESTAMP_NTZ, while read_keyed_table's batch scan and the
+    # manifest's recorded schema say TIMESTAMP (pinned by
+    # test_stream_timestamp_type_differs_from_batch). A stream consumer
+    # needing watermarking casts to TIMESTAMP explicitly, the events.py
+    # discipline.
     # project the merged PHYSICAL schema through the head's column map
     # (r13): renamed fields surface under their logical names, dropped
     # physical fields disappear — the stream's schema is the same

@@ -5290,9 +5290,8 @@ class TestBloomFormatMerge:
 
 class TestManifestDirSchemas:
     """r16 #1 (VERDICT r15 #1): writers record the staged files' schema
-    in the manifest (``dir_schemas``) at commit time, readers supply it
-    instead of footer-scanning — and pre-feature manifests (no key)
-    keep reading through the footer/inference fallback unchanged."""
+    in the manifest (``dir_schemas``) at commit time, and readers take
+    it from there alone — a manifest without it does not read."""
 
     def test_commits_record_dir_schemas(self, spark, tmp_path):
         from nshm2022db_spark.streaming.sinks import (
@@ -5326,16 +5325,18 @@ class TestManifestDirSchemas:
         # v2 carries v1's entry forward untouched
         assert v1["dir_schemas"][v1["dir"]] == v2["dir_schemas"][v1["dir"]]
 
-    def test_pre_feature_manifest_falls_back(self, spark, tmp_path):
-        """Stripping dir_schemas from a committed manifest (an r15-era
-        table) must leave the read identical — the footer path serves
-        it."""
+    def test_manifest_without_schema_raises(self, spark, tmp_path):
+        """A committed manifest stripped of ``dir_schemas`` has no schema
+        source left: the read refuses, naming the table and the dir,
+        instead of deriving one from the files."""
         import json
-        import os
+
+        import pytest as _pytest
 
         from nshm2022db_spark.streaming.sinks import (
             _COMMITS,
             committed_partition_transaction,
+            current_commit,
             read_keyed_table,
         )
 
@@ -5344,9 +5345,7 @@ class TestManifestDirSchemas:
             [(1, "a", 2.5), (2, "b", None)], "uid long, k string, v double"
         )
         committed_partition_transaction(spark, t, "k", lambda base: rows)
-        before = {
-            (r.uid, r.k, r.v) for r in read_keyed_table(spark, t).collect()
-        }
+        stage = current_commit(t)["dir"]
         log = os.path.join(t, _COMMITS)
         for n in os.listdir(log):
             p = os.path.join(log, n)
@@ -5356,13 +5355,9 @@ class TestManifestDirSchemas:
                 os.unlink(p)  # the commit files are hardlinked read-only
                 with open(p, "w") as f:
                     json.dump(m, f)
-        got = {
-            (r.uid, r.k, r.v) for r in read_keyed_table(spark, t).collect()
-        }
-        assert got == before
-        assert {r.k for r in read_keyed_table(spark, t).collect()} == {
-            "a", "b",
-        }
+        with _pytest.raises(ValueError, match="no recorded schema") as err:
+            read_keyed_table(spark, t)
+        assert t in str(err.value) and repr(stage) in str(err.value)
 
     def test_recorded_schema_matches_footer_derivation(self, spark, tmp_path):
         """The manifest-supplied read and the footer fast path must
@@ -6477,3 +6472,236 @@ class TestOneTableKind:
             ("sinks.py", "_read_keyed"),
             ("sinks.py", "_mor_view"),
         }
+
+
+def _footer_free_trail(spark, root: str, patch) -> dict:
+    """Migrate a raw ``partitionBy`` layout and evolve a second table's
+    spec (both may read footers), call ``patch()``, then drive every
+    committed read and writer whose schema must come from the manifest
+    alone. Returns each step's rows, sorted."""
+    from nshm2022db_spark.streaming import sinks
+
+    def rows(df, *cols):
+        return sorted(tuple(r) for r in df.select(*cols).collect())
+
+    schema = "k int, day string, v int"
+    t = os.path.join(root, "raw")
+    spark.createDataFrame(
+        [(1, "d1", 10), (2, "d1", 20), (3, "d2", 30), (4, "d3", 40)], schema
+    ).write.partitionBy("day").parquet(t)
+    sinks.committed_partition_transaction(
+        spark, t, "day", lambda base: base.filter("day = 'd3'"),
+        affected=["d3"],
+    )
+    # d1 becomes "." plus one appended generation
+    sinks.append_partition_transaction(
+        spark, t, "day", spark.createDataFrame([(5, "d1", 50)], schema)
+    )
+    ev = os.path.join(root, "evolved")
+    evs = "k int, day string, region string"
+    sinks.append_partition_transaction(
+        spark, ev, "day",
+        spark.createDataFrame([(1, "d1", "n"), (2, "d2", "s")], evs),
+    )
+    sinks.evolve_partition_column(spark, ev, "region")
+    sinks.append_partition_transaction(
+        spark, ev, "region", spark.createDataFrame([(3, "d3", "n")], evs)
+    )
+    patch()
+    out = {"migrated": rows(sinks.read_keyed_table(spark, t), "k", "day", "v")}
+    out["legacy"] = rows(
+        sinks.read_keyed_table(spark, ev), "k", "day", "region"
+    )
+    out["compacted"] = sinks.compact_partition_table(
+        spark, t, max_files_per_partition=1, bloom_cols=["k"]
+    )
+    out["after_compact"] = rows(
+        sinks.read_keyed_table(spark, t, prune={"k": ("eq", 5)}),
+        "k", "day", "v",
+    )
+    sinks.tombstone_keys(spark, t, "k", spark.createDataFrame([(2,)], "k int"))
+    sinks.merge_into_table(
+        spark, t, spark.createDataFrame([(2, "d1", 21)], schema),
+        keys=["k"], when_not_matched_insert=True,
+    )
+    sinks.update_table(spark, t, {"v": "v + 1"}, where="k = 1")
+    sinks.delete_table(spark, t, "k = 3")
+    out["dml"] = rows(sinks.read_keyed_table(spark, t), "k", "day", "v")
+    out["feed"] = rows(
+        sinks.read_table_changes_typed(spark, t, 0),
+        "_commit_version", "_change_type", "k", "day", "v",
+    )
+    sinks.migrate_legacy_layouts(spark, ev)
+    out["migrated_legacy"] = rows(
+        sinks.read_keyed_table(spark, ev), "k", "day", "region"
+    )
+    clone = os.path.join(root, "clone")
+    sinks.clone_table_shallow(t, clone)
+    out["clone"] = rows(sinks.read_keyed_table(spark, clone), "k", "day", "v")
+    return out
+
+
+class TestRecordedSchemaOnly:
+    """The manifest's ``dir_schemas`` is the one schema source of a
+    committed read: no footer read, no inference read."""
+
+    def test_committed_reads_need_no_footers(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Once a raw layout has migrated (its migration may read
+        footers), every read and writer of committed data runs with
+        footer schema reads raising, with the rows the footer-reading
+        code gave."""
+        import pyarrow.parquet as pq
+
+        from nshm2022db_spark.streaming import sinks
+
+        def refuse(*a, **kw):
+            raise AssertionError("footer schema read of committed data")
+
+        def patch():
+            monkeypatch.setattr(sinks, "_footer_schema", refuse)
+            monkeypatch.setattr(pq, "read_schema", refuse)
+
+        got = _footer_free_trail(spark, str(tmp_path), patch)
+        assert got == {
+            "migrated": [
+                (1, "d1", 10), (2, "d1", 20), (3, "d2", 30), (4, "d3", 40),
+                (5, "d1", 50),
+            ],
+            "legacy": [(1, "d1", "n"), (2, "d2", "s"), (3, "d3", "n")],
+            "compacted": ["day=d1"],
+            "after_compact": [
+                (1, "d1", 10), (2, "d1", 20), (3, "d2", 30), (4, "d3", 40),
+                (5, "d1", 50),
+            ],
+            "dml": [(1, "d1", 11), (2, "d1", 21), (4, "d3", 40), (5, "d1", 50)],
+            "feed": [
+                (1, "insert", 1, "d1", 10), (1, "insert", 2, "d1", 20),
+                (1, "insert", 3, "d2", 30), (1, "insert", 4, "d3", 40),
+                (2, "insert", 5, "d1", 50), (4, "delete", 2, "d1", 20),
+                (5, "insert", 2, "d1", 21),
+                (6, "update_postimage", 1, "d1", 11),
+                (6, "update_preimage", 1, "d1", 10),
+                (7, "delete", 3, "d2", 30),
+            ],
+            "migrated_legacy": [
+                (1, "d1", "n"), (2, "d2", "s"), (3, "d3", "n"),
+            ],
+            "clone": [
+                (1, "d1", 11), (2, "d1", 21), (4, "d3", 40), (5, "d1", 50),
+            ],
+        }
+
+    def test_migration_records_the_raw_layout_schema(self, spark, tmp_path):
+        """The version-0 migration records the raw files' schema for
+        ``"."`` — partition column projected out, every field nullable,
+        the type Spark reads (an INT96 timestamp stays ``timestamp``) —
+        and merges files written with an added column by name."""
+        import json
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        spark.createDataFrame(
+            [(1, "a")], "k int, day string"
+        ).withColumn("ts", F.to_timestamp(F.lit("2024-01-02 03:04:05"))).write \
+            .partitionBy("day").parquet(t)
+        spark.createDataFrame(
+            [(2, "b", "x")], "k int, day string, extra string"
+        ).withColumn("ts", F.to_timestamp(F.lit("2024-01-03 00:00:00"))).write \
+            .mode("append").partitionBy("day").parquet(t)
+        sinks.committed_partition_transaction(
+            spark, t, "day", lambda base: base.limit(0), affected=[]
+        )
+        sj = sinks.current_commit(t)["dir_schemas"]["."]
+        assert [(f["name"], f["type"], f["nullable"]) for f in sj["fields"]] == [
+            ("k", "integer", True), ("ts", "timestamp", True),
+            ("extra", "string", True),
+        ]
+        got = sorted(
+            (r.k, r.day, r.extra)
+            for r in sinks.read_keyed_table(spark, t).collect()
+        )
+        assert got == [(1, "a", None), (2, "b", "x")]
+        assert json.dumps(sj)  # plain json, as the manifest stores it
+
+    def test_one_schema_source(self):
+        """CI guard: under streaming/ no read asks Spark to merge
+        schemas, the partition-inference conf flip is gone, and
+        `_footer_schema` is referenced only by `_read_parquet_fast` (the
+        reader of non-committed parquet)."""
+        import ast
+        import glob
+
+        import nshm2022db_spark.streaming as pkg
+
+        merge, flip, footer = [], [], set()
+
+        def visit(node, owner):
+            for child in ast.iter_child_nodes(node):
+                name = owner
+                if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    name = child.name
+                    if name == "_no_partition_inference":
+                        flip.append(name)
+                if isinstance(child, ast.Constant) and child.value == "mergeSchema":
+                    merge.append(child.lineno)
+                if isinstance(child, ast.keyword) and child.arg == "mergeSchema":
+                    merge.append(child.value.lineno)
+                ident = getattr(child, "id", None) or getattr(child, "attr", None)
+                if ident == "_no_partition_inference":
+                    flip.append(child.lineno)
+                if ident == "_footer_schema":
+                    footer.add(owner)
+                visit(child, name)
+
+        for path in glob.glob(os.path.join(pkg.__path__[0], "*.py")):
+            with open(path) as fh:
+                visit(ast.parse(fh.read()), None)
+        assert merge == [] and flip == []
+        assert footer == {"_read_parquet_fast"}
+
+
+class TestVersionLookup:
+    def test_versioned_reads_open_one_manifest(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """A ``version=`` read, an ``as_of=`` read, a versioned clone and
+        a restore each find their manifest without scanning the log; a
+        missing version still raises."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string"
+        for i in range(3):
+            sinks.append_partition_transaction(
+                spark, t, "day", spark.createDataFrame([(i, "a")], schema)
+            )
+        at2 = sinks.table_history(t)[1]["committed_at"]
+
+        def no_scan(table_dir):
+            raise AssertionError("full commit-log scan")
+
+        monkeypatch.setattr(sinks, "table_history", no_scan)
+        assert sorted(
+            r.k for r in sinks.read_keyed_table(spark, t, version=2).collect()
+        ) == [0, 1]
+        assert sorted(
+            r.k for r in sinks.read_keyed_table(spark, t, as_of=at2).collect()
+        ) == [0, 1]
+        assert sinks.read_keyed_table(spark, t, as_of=0.0) is None
+        clone = str(tmp_path / "clone")
+        assert sinks.clone_table_shallow(t, clone, version=1) == 1
+        assert [r.k for r in sinks.read_keyed_table(spark, clone).collect()] == [0]
+        assert sinks.restore_table_version(t, 1) == 4
+        assert [r.k for r in sinks.read_keyed_table(spark, t).collect()] == [0]
+        for call in (
+            lambda: sinks.read_keyed_table(spark, t, version=9),
+            lambda: sinks.clone_table_shallow(t, str(tmp_path / "c2"), 9),
+            lambda: sinks.restore_table_version(t, 9),
+        ):
+            with _pytest.raises(ValueError, match="version 9 not committed"):
+                call()

@@ -68,6 +68,30 @@ class TestPlanning:
         assert s["_commit_version"].dataType.simpleString() == "bigint"
         assert s["k"].dataType.simpleString() == "bigint"
 
+    def test_stream_timestamp_type_differs_from_batch(self, spark, tmp_path):
+        """Pins today's split for a ``TimestampType`` column: the session
+        writes INT96, the stream schema describes pyarrow's view of the
+        files (``timestamp_ntz``), while the batch read and the
+        manifest's recorded schema say ``timestamp``. Changing either
+        side must be a deliberate edit of this test."""
+        from nshm2022db_spark.streaming.sinks import current_commit
+
+        t = str(tmp_path / "t")
+        append_partition_transaction(
+            spark, t, "day",
+            spark.createDataFrame([(1, "a")], "k long, day string").withColumn(
+                "ts", F.to_timestamp(F.lit("2024-01-02 03:04:05"))
+            ),
+        )
+        assert table_stream_schema(t)["ts"].dataType.simpleString() == (
+            "timestamp_ntz"
+        )
+        assert read_keyed_table(spark, t).schema["ts"].dataType.simpleString() == (
+            "timestamp"
+        )
+        (sj,) = current_commit(t)["dir_schemas"].values()
+        assert {f["name"]: f["type"] for f in sj["fields"]}["ts"] == "timestamp"
+
     def test_non_append_history_raises(self, spark, bronze):
         tombstone_keys(
             spark, bronze, "k", spark.range(5, 7).select(F.col("id").alias("k"))
