@@ -137,10 +137,6 @@ def _duck_bucket_full(vec: str) -> str:
     return f"({bits})"
 
 
-def _spark_cos(a: str, b: str) -> str:
-    return f"{spark_dot(a, b)} / (sqrt({spark_dot(a, a)}) * sqrt({spark_dot(b, b)}))"
-
-
 def _duck_cos(a: str, b: str) -> str:
     return f"{duck_dot(a, b)} / (sqrt({duck_dot(a, a)}) * sqrt({duck_dot(b, b)}))"
 
@@ -199,14 +195,6 @@ def knn_bruteforce(spark: SparkSession, sf: str) -> DataFrame:
 # entirely on small corpora — both engines evaluate CASE branches
 # lazily, keeping the small-sf cost identical to the original 8-plane
 # bucket while the wide path activates only when the corpus needs it.
-
-
-def _spark_high8(vec: str) -> str:
-    bits = " + ".join(
-        f"(CASE WHEN {spark_hyperplane_dot(vec, j, DIM)} > 0 THEN {1 << (j - N_PLANES)} ELSE 0 END)"
-        for j in range(N_PLANES, DEDUP_MAX_BITS)
-    )
-    return f"({bits})"
 
 
 def _duck_high8(vec: str) -> str:

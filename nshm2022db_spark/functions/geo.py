@@ -29,7 +29,6 @@ from typing import Iterable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # --------------------------------------------------------------------------
@@ -278,14 +277,3 @@ def traces_to_planes(
             yield _planes_batch(b, id_cols, out_cols)
 
     return traces.select(*cols).mapInPandas(gen, schema)
-
-
-@F.pandas_udf(T.DoubleType())
-def dip_direction_udf(
-    lon1: pd.Series, lat1: pd.Series, lon2: pd.Series, lat2: pd.Series
-) -> pd.Series:
-    """Column form of F2 for bulk trace frames."""
-    return pd.Series(
-        (initial_bearing(lon1.values, lat1.values, lon2.values, lat2.values) + 90.0)
-        % 360.0
-    )

@@ -39,7 +39,10 @@ never from Spark's schema inference.
 `transact` is the one publish loop: every writer here and in catalog.py
 states only its attempt (head in, successor manifest out) and
 `_next_manifest` is the one rule for the table state a successor
-carries forward.
+carries forward. Its per-entry data-skipping state (min/max stats and
+Bloom bitmaps) comes from one rule too, `_skipping_successor`, and
+every Bloom-bitmap prune — a read's equality probe, a MERGE's source
+keys — goes through `_bloom_prune`.
 
 Crash after staging but before commit leaves an orphan data dir that no
 manifest references; `vacuum_uncommitted` removes those after a grace
@@ -1101,24 +1104,127 @@ def _bloom_may_contain(
 
 
 def _bloom_prune(
-    spark: SparkSession, manifest: dict, parts: dict, eq: dict
+    spark: SparkSession, manifest: dict, parts: dict, *probes: dict
 ) -> dict:
-    """Entries of ``parts`` whose Bloom bitmaps do not DISPROVE the
-    equality probes ``{col: value}``. Entries or columns without a
+    """Entries of ``parts`` whose Bloom bitmaps do not DISPROVE every
+    equality probe ``{col: value}`` — an entry survives when SOME probe
+    may match on every one of its columns (a read's one ``("eq", v)``
+    set, or a merge's source key rows). Entries or columns without a
     bitmap are always kept — like min/max stats, a bloom only skips
     what it can prove absent. No false negatives by construction: the
     bitmap is the OR of every inserted value's probe positions, so a
     present value always finds all k bits set; a zero bit at any probe
-    position proves the value was never inserted."""
+    position proves the value was never inserted.
+
+    Probe positions come from ONE `_bloom_probes_prefetch` per (column,
+    spec) across all probes, and each (entry, column) bitmap decodes
+    once — a warm `_PROBE_CACHE` touches no Spark at all."""
     blooms = manifest.get("bloom", {})
     if not blooms:
         return parts
+    cols = {c for p in probes for c in p}
+    for c in cols:
+        for spec in {
+            (sp["m"], sp["k"], sp["t"])
+            for e in parts
+            for sp in [blooms.get(e, {}).get(c)]
+            if sp is not None and "t" in sp and sp.get("v") == _BLOOM_FORMAT
+        }:
+            _bloom_probes_prefetch(spark, [p[c] for p in probes if c in p], *spec)
     out = {}
     for entry, dirname in parts.items():
         specs = blooms.get(entry, {})
-        if all(_bloom_may_contain(spark, specs.get(c), v) for c, v in eq.items()):
+        bits = {c: base64.b64decode(specs[c]["bits"]) for c in cols if c in specs}
+        if any(
+            all(
+                _bloom_may_contain(spark, specs.get(c), v, bits.get(c))
+                for c, v in p.items()
+            )
+            for p in probes
+        ):
             out[entry] = dirname
     return out
+
+
+def _merged_stats(old: dict, add: dict) -> dict:
+    """One entry's stats over its prior generations (``old``) and a new
+    one (``add``): row counts sum; min/max widen and null counts sum
+    only for columns BOTH sides recorded — a column one side lacks was
+    never scanned there, so a bound carried over it would not cover
+    every row (absent = never pruned, always safe)."""
+    cols = {}
+    for c, (lo, hi) in add["cols"].items():
+        if c in old["cols"]:
+            los = [x for x in (old["cols"][c][0], lo) if x is not None]
+            his = [x for x in (old["cols"][c][1], hi) if x is not None]
+            cols[c] = [min(los) if los else None, max(his) if his else None]
+    onulls = old.get("nulls", {})
+    return {
+        "n": old["n"] + add["n"],
+        "cols": cols,
+        "nulls": {
+            c: onulls[c] + k for c, k in add.get("nulls", {}).items()
+            if c in onulls
+        },
+    }
+
+
+def _merged_bloom(old: dict, add: dict) -> dict:
+    """One entry's bitmaps over its prior generations and a new one: a
+    Bloom filter is a set union, so bitmaps OR — only for columns both
+    sides hashed under one spec (``m``, ``k``, type tag ``t``, format
+    ``v``); bitmaps from different probe spaces cannot mix, and the
+    column drops instead."""
+    out = {}
+    for c, sp in add.items():
+        osp = old.get(c)
+        if osp and all(osp.get(f) == sp.get(f) for f in ("m", "k", "t", "v")):
+            pairs = zip(base64.b64decode(osp["bits"]), base64.b64decode(sp["bits"]))
+            out[c] = {
+                **sp,
+                "bits": base64.b64encode(bytes(a | b for a, b in pairs)).decode(
+                    "ascii"
+                ),
+            }
+    return out
+
+
+def _skipping_successor(
+    cur: dict,
+    new_parts: dict,
+    written: set[str],
+    extended: set[str],
+    stats: dict,
+    blooms: dict,
+) -> tuple[dict, dict]:
+    """THE data-skipping rule for a successor manifest's per-entry
+    ``stats`` and ``bloom`` — every writer's `_next_manifest` takes its
+    values from here. A recorded min/max or bitmap must cover EVERY row
+    of its entry (a wrong bound silently drops rows), and an entry
+    without one is never pruned. So: entries of ``new_parts`` not
+    ``written`` keep their values; a written entry whose stage is its
+    whole content takes the stage's fresh values (``stats`` /
+    ``blooms``, collected by the writer from its stage) or none; a
+    written entry in ``extended`` gained a generation beside its prior
+    ones and merges its prior values with the fresh ones when both
+    exist (`_merged_stats`, `_merged_bloom`), else has none. Returns
+    ``(stats, bloom)``."""
+    out = []
+    for key, fresh, merge in (
+        ("stats", stats, _merged_stats), ("bloom", blooms, _merged_bloom),
+    ):
+        prior = cur.get(key, {})
+        vals = {e: s for e, s in prior.items() if e in new_parts}
+        for e in written:
+            v = fresh.get(e)
+            if e in extended:
+                v = merge(prior[e], v) if v and e in prior else None
+            if v:
+                vals[e] = v
+            else:
+                vals.pop(e, None)
+        out.append(vals)
+    return out[0], out[1]
 
 
 def committed_partition_transaction(
@@ -1240,38 +1346,19 @@ def committed_partition_transaction(
             e: d for e, d in cur["partitions"].items() if e not in claimed
         }
         new_parts.update({e: stage for e in written})
-        # stats: carry forward for carried entries, recompute for written
-        # (footer metadata — zero extra Spark jobs)
-        new_stats = {
-            e: s
-            for e, s in cur.get("stats", {}).items()
-            if e in new_parts and e not in written
-        }
-        if stats_cols and written:
-            # staged files carry PHYSICAL names — except a materialize
-            # (_drop_map), whose stage IS the new logical-named basis
-            scols = stats_cols if _drop_map else _physical_names(
-                stats_cols, cur
-            )
-            new_stats.update(
-                _collect_stage_stats(stage_path, written, scols)
-            )
-        # blooms: same carry-or-recompute contract as stats — rewritten
-        # entries get fresh bitmaps (or none: bloom-less = never pruned)
-        new_bloom = {
-            e: b
-            for e, b in cur.get("bloom", {}).items()
-            if e in new_parts and e not in written
-        }
-        if bloom_cols and written:
-            bcols = bloom_cols if _drop_map else _physical_names(
-                bloom_cols, cur
-            )
-            new_bloom.update(
-                _collect_stage_blooms(
-                    staged, partition_col, bcols, bloom_bits, bloom_hashes
-                )
-            )
+        # staged files carry PHYSICAL names — except a materialize
+        # (_drop_map), whose stage IS the new logical-named basis
+        names = {} if _drop_map else cur
+        new_stats, new_bloom = _skipping_successor(
+            cur, new_parts, written, set(),
+            _collect_stage_stats(
+                stage_path, written, _physical_names(stats_cols, names)
+            ) if stats_cols and written else {},
+            _collect_stage_blooms(
+                staged, partition_col, _physical_names(bloom_cols, names),
+                bloom_bits, bloom_hashes,
+            ) if bloom_cols and written else {},
+        )
         # tombstones survive rewrites: the rewritten partitions
         # re-materialize their rows unfiltered, but reads keep
         # anti-joining the carried keys (materialize_tombstones is the
@@ -1501,113 +1588,18 @@ def append_partition_transaction(
     state neither audit saw."""
 
     def successor(cur: dict, st: dict) -> dict:
-        written, staged_stats = st["written"], st["stats"]
-        new_parts = {e: v for e, v in cur["partitions"].items()}
+        written = st["written"]
+        new_parts = dict(cur["partitions"])
         for e in written:
             new_parts[e] = (
                 _entry_dirs(new_parts[e]) + [st["stage"]]
                 if e in new_parts
                 else st["stage"]
             )
-        new_stats = {
-            e: s for e, s in cur.get("stats", {}).items() if e in new_parts
-        }
-        if not stats_cols:
-            # this append did not footer-scan: a written entry's
-            # carried bounds no longer cover its new generation, so
-            # keeping them would let pruning skip partitions that now
-            # hold matching rows. Drop them — stat-less = never
-            # pruned, always safe.
-            for e in written:
-                new_stats.pop(e, None)
-        if stats_cols and written:
-            for e, add in staged_stats.items():
-                if e in cur["partitions"] and e not in cur.get("stats", {}):
-                    continue  # pre-existing unstatted data: stay stat-less
-                old = new_stats.get(e)
-                if old is None:
-                    new_stats[e] = add
-                else:
-                    # merge ONLY columns scanned on both sides: an old
-                    # column absent from this append's stats_cols was
-                    # never footer-scanned in the new files, so
-                    # carrying its bounds forward would claim coverage
-                    # of unscanned data — dishonest stats that make
-                    # pruning drop real rows. Dropped = stat-less =
-                    # never pruned.
-                    merged = {
-                        "n": old["n"] + add["n"], "cols": {}, "nulls": {}
-                    }
-                    for c in add["cols"]:
-                        if c in old["cols"]:
-                            lo = [old["cols"][c][0], add["cols"][c][0]]
-                            hi = [old["cols"][c][1], add["cols"][c][1]]
-                            lo = [x for x in lo if x is not None]
-                            hi = [x for x in hi if x is not None]
-                            merged["cols"][c] = [
-                                min(lo) if lo else None,
-                                max(hi) if hi else None,
-                            ]
-                    # null counts are additive, but only when KNOWN on
-                    # both sides — a side without the count (older
-                    # manifest, footer without stats) drops the column
-                    # (absent = never null-pruned, always safe)
-                    for c, k in add.get("nulls", {}).items():
-                        if c in old.get("nulls", {}):
-                            merged["nulls"][c] = old["nulls"][c] + k
-                    new_stats[e] = merged
-        # blooms: a set-union structure, so appends MERGE by OR-ing
-        # bitmaps — but only when both sides exist with the same
-        # (m, k); anything else drops the entry's bloom (bloom-less =
-        # never pruned), mirroring the stats drop-or-merge discipline
-        # above.
-        new_bloom = {
-            e: b for e, b in cur.get("bloom", {}).items() if e in new_parts
-        }
-        if not bloom_cols:
-            for e in written:
-                new_bloom.pop(e, None)
-        elif written:
-            for e in written:
-                add_b = st["blooms"].get(e)
-                if e in cur["partitions"] and e not in cur.get("bloom", {}):
-                    continue  # pre-existing unbloomed data: stay bloom-less
-                old_b = cur.get("bloom", {}).get(e)
-                if add_b is None:
-                    new_bloom.pop(e, None)
-                    continue
-                if old_b is None:
-                    new_bloom[e] = add_b  # brand-new entry
-                    continue
-                merged_b = {}
-                for c, sp in add_b.items():
-                    osp = old_b.get(c)
-                    if (
-                        osp
-                        and osp["m"] == sp["m"]
-                        and osp["k"] == sp["k"]
-                        and osp.get("t") == sp.get("t")
-                        # OR-merging bitmaps hashed under different
-                        # format versions would mix incompatible
-                        # probe spaces; a version mismatch drops
-                        # the column's bloom instead (conservative)
-                        and osp.get("v") == sp.get("v")
-                    ):
-                        ob = base64.b64decode(osp["bits"])
-                        nb = base64.b64decode(sp["bits"])
-                        merged_b[c] = {
-                            "m": sp["m"],
-                            "k": sp["k"],
-                            "t": sp["t"],
-                            "v": sp["v"],
-                            "bits": base64.b64encode(
-                                bytes(a | b for a, b in zip(ob, nb))
-                            ).decode("ascii"),
-                        }
-                if merged_b:
-                    new_bloom[e] = merged_b
-                else:
-                    new_bloom.pop(e, None)
+        new_stats, new_bloom = _skipping_successor(
+            cur, new_parts, written, written & set(cur["partitions"]),
+            st["stats"], st["blooms"],
+        )
         return _next_manifest(
             cur, "append", st["stage"],
             partition_col=partition_col,
@@ -1848,25 +1840,15 @@ def overwrite_partition_transaction(
     def successor(cur: dict, st: dict) -> dict:
         # REPLACE semantics: replaced entries point at the stage alone
         # (or vanish when the batch holds no rows for them); everything
-        # else carries forward. Stats/blooms follow the same
-        # replace-don't-merge rule.
-        replaced = st["claimed"]
+        # else carries forward
         new_parts = {
-            e: v for e, v in cur["partitions"].items() if e not in replaced
+            e: v for e, v in cur["partitions"].items()
+            if e not in st["claimed"]
         }
         new_parts.update({e: st["stage"] for e in st["written"]})
-        new_stats = {
-            e: s
-            for e, s in cur.get("stats", {}).items()
-            if e in new_parts and e not in replaced
-        }
-        new_stats.update(st["stats"])
-        new_bloom = {
-            e: b
-            for e, b in cur.get("bloom", {}).items()
-            if e in new_parts and e not in replaced
-        }
-        new_bloom.update(st["blooms"])
+        new_stats, new_bloom = _skipping_successor(
+            cur, new_parts, st["written"], set(), st["stats"], st["blooms"]
+        )
         return _next_manifest(
             cur, "overwrite", st["stage"],
             partition_col=partition_col,
@@ -1893,7 +1875,6 @@ def land_stream_to_partitioned_table(
     checkpoint_dir: str,
     partition_col: str,
     stats_cols: list[str] | None = None,
-    trigger_available_now: bool = True,
     audit=None,
     bloom_cols: list[str] | None = None,
 ) -> StreamingQuery:
@@ -1926,12 +1907,7 @@ def land_stream_to_partitioned_table(
             bloom_cols=bloom_cols,
         )
 
-    writer = df.writeStream.foreachBatch(land).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(df, checkpoint_dir, land)
 
 
 _ZORDER_BITS = 16  # per-dimension resolution of the clustering key
@@ -2331,46 +2307,6 @@ def _dv_key_field(keys: list[str]):
     return keys[0] if len(keys) == 1 else list(keys)
 
 
-def _carry_stats_blooms(
-    cur: dict,
-    written: set[str],
-    new_parts: dict,
-    extend_vals: set,
-    stage_path: str,
-    stats_cols: list[str] | None,
-) -> tuple[dict, dict]:
-    """Stats/bloom bookkeeping of the one DML commit path (`_dml_commit`,
-    shared by MERGE, UPDATE and DELETE, so the invariant cannot
-    diverge): carried entries keep theirs; rewritten entries recompute
-    stats from the staged footers and drop blooms; an entry that
-    EXTENDED an existing mapping drops both (they no longer cover the
-    new generation — stat-/bloom-less is never pruned, so safe;
-    compaction re-establishes them); a brand-NEW entry's stage IS its
-    full content, so it records stats."""
-    new_stats = {
-        e: st
-        for e, st in cur.get("stats", {}).items()
-        if e in new_parts and e not in written
-    }
-    if stats_cols and written:
-        # staged footers carry PHYSICAL names (column mapping, r12)
-        staged_stats = _collect_stage_stats(
-            stage_path, written, _physical_names(stats_cols, cur)
-        )
-        for e in written:
-            v = e.split("=", 1)[1]
-            if v in extend_vals and e in cur["partitions"]:
-                continue
-            if e in staged_stats:
-                new_stats[e] = staged_stats[e]
-    new_bloom = {
-        e: bm
-        for e, bm in cur.get("bloom", {}).items()
-        if e in new_parts and e not in written
-    }
-    return new_stats, new_bloom
-
-
 def _cdc_image_parts(tcols: list[str], ttypes: dict, have: set):
     """(pre_fields, cur_fields, img) for the DML writers' CDC sidecar:
     pre-images read the ``_pre`` struct (evolved columns pad NULL),
@@ -2714,27 +2650,18 @@ def migrate_legacy_layouts(
                     if e in new_parts
                     else stage
                 )
-        # stats: migrated entries gained an unscanned generation unless
-        # this call footer-scans them; same drop-or-merge contract as
-        # append_partition_transaction
-        new_stats = {
-            e: s for e, s in cur.get("stats", {}).items() if e in new_parts
-        }
-        if not stats_cols:
-            for e in written:
-                new_stats.pop(e, None)
-        elif written:
-            staged = _collect_stage_stats(
-                os.path.join(table_dir, stage), written, stats_cols
-            )
-            for e, add in staged.items():
-                old_s = new_stats.get(e)
-                if e in cur["partitions"] and e not in cur.get("stats", {}):
-                    continue
-                if old_s is None:
-                    new_stats[e] = add
-                else:
-                    new_stats.pop(e, None)  # conservative: re-scan later
+        # new entries record footer stats (staged files carry PHYSICAL
+        # names); entries the migration extended get no fresh values,
+        # so they drop theirs
+        extended = written & set(cur["partitions"])
+        new_stats, _ = _skipping_successor(
+            cur, new_parts, written, extended,
+            _collect_stage_stats(
+                os.path.join(table_dir, stage), written - extended,
+                _physical_names(stats_cols, cur),
+            ) if stats_cols and written else {},
+            {},
+        )
         return _next_manifest(
             cur, "migrate", stage,
             partitions=new_parts,
@@ -3039,7 +2966,6 @@ def read_table_changes(
     table_dir: str,
     from_version: int,
     to_version: int | None = None,
-    history: list[dict] | None = None,
 ) -> DataFrame | None:
     """CHANGE FEED over a partition-mapped committed table: the rows
     each commit in ``(from_version, to_version]`` ADDED, tagged with
@@ -3050,47 +2976,23 @@ def read_table_changes(
 
     Committed data dirs are immutable and version-stamped, so the feed
     is just the stage dirs of the requested commit range — O(changed
-    data) read, zero reconstruction work. Append transactions contribute
-    exactly their batch; rewrite transactions (compaction, erasure)
-    contribute the rewritten partitions' new contents — the "upsert
-    image" granularity. A RESTORE re-publishes an EARLIER version's
-    stage dir without writing a row, so it contributes nothing (the
-    re-published dir is recognized and skipped — emitting it would
+    data) read, zero reconstruction work, and only the range's
+    manifests are opened. Append transactions contribute exactly their
+    batch; rewrite transactions (compaction, erasure) contribute the
+    rewritten partitions' new contents — the "upsert image"
+    granularity. A RESTORE re-publishes an EARLIER version's stage dir
+    without writing a row, so it contributes nothing (emitting it would
     replay the whole restored table as "changes" and double-fold any
     additive consumer). Returns None when the range holds no commits
     with data."""
+    head = current_commit(table_dir)["version"]
+    end = head if to_version is None else min(to_version, head)
+    by_v = _manifests_in(table_dir, from_version + 1, end)
+    _require_retained(by_v, table_dir, from_version, end)
     out = None
-    seen_dirs: set[str] = set()
-    # the feed surfaces the END version's LOGICAL schema (Delta CDF
-    # reads a range with the end schema): frames are physical, one
-    # projection at the end maps them — rename is metadata-only, so
-    # physical names are stable across the whole range; the one commit
-    # that re-bases them (materialize_column_mapping) raises via
-    # _check_map_stable below
-    end_m: dict = {}
-    # ``history`` lets a caller iterating many version ranges (the
-    # incremental maintainer) pay the full commit-log scan ONCE instead
-    # of once per range — O(V) metadata cost over a refresh, not O(V²)
-    hist = history if history is not None else table_history(table_dir)
-    by_v = {m["version"]: m for m in hist}
-    head = max(by_v, default=0)
-    _require_retained(
-        by_v, table_dir, from_version,
-        head if to_version is None else min(to_version, head),
-    )
-    for m in hist:
-        v = m["version"]
-        republished = m.get("dir") in seen_dirs
-        if m.get("dir"):
-            seen_dirs.add(m["dir"])
-        if (to_version is None or v <= to_version) and v > end_m.get(
-            "version", 0
-        ):
-            end_m = m
-        if v <= from_version or (to_version is not None and v > to_version):
-            continue
-        if republished:
-            continue  # metadata-only re-publish (RESTORE)
+    for v, m in by_v.items():
+        if m.get("op") == "restore":
+            continue  # metadata-only re-publish
         if m.get("op") == "rewrite" and m.get("data_change") is False:
             # compaction / Z-order / tombstone materialization: provably
             # a restatement (Delta's dataChange=false) — emitting its
@@ -3101,7 +3003,7 @@ def read_table_changes(
             continue
         entries = _stage_entries(table_dir, m)
         if not entries:
-            continue  # metadata-only commit (e.g. RESTORE)
+            continue  # metadata-only commit
         part = _read_partition_map(
             spark,
             table_dir,
@@ -3115,7 +3017,26 @@ def read_table_changes(
         out = part if out is None else out.unionByName(
             part, allowMissingColumns=True
         )
-    return _to_logical(out, end_m)
+    # the feed surfaces the END version's LOGICAL schema (Delta CDF
+    # reads a range with the end schema): frames are physical, one
+    # projection at the end maps them — rename is metadata-only, so
+    # physical names are stable across the whole range; the one commit
+    # that re-bases them (materialize_column_mapping) raises via
+    # _check_map_stable above
+    return _to_logical(out, by_v.get(end, {}))
+
+
+def _manifests_in(table_dir: str, lo: int, hi: int) -> dict:
+    """``{version: manifest}`` for the retained commits ``lo..hi`` — one
+    log listing plus one open per version in range, never a parse of
+    the whole log."""
+    out = {}
+    for n in _manifest_names(table_dir):
+        if lo <= int(n.split(".")[0]) <= hi:
+            m = _read_json(os.path.join(table_dir, _COMMITS, n))
+            if m is not None:  # dropped by a concurrent retention vacuum
+                out[m["version"]] = m
+    return out
 
 
 def _require_retained(by_v: dict, table_dir: str, start: int, end: int) -> None:
@@ -3357,7 +3278,6 @@ def read_table_changes_typed(
     table_dir: str,
     from_version: int,
     to_version: int | None = None,
-    history: list[dict] | None = None,
 ) -> DataFrame | None:
     """TYPED change feed — `read_table_changes` with a ``_change_type``
     column (Delta CDF's full surface): per commit in
@@ -3421,15 +3341,21 @@ def read_table_changes_typed(
     ``_commit_version``, ``_change_type``, and ``_commit_timestamp``
     (the manifest's publish wall-clock; NULL for pre-feature
     manifests) — Delta CDF's metadata columns."""
-    hist = history if history is not None else table_history(table_dir)
-    by_v = {m["version"]: m for m in hist}
-    hi = max(by_v, default=0) if to_version is None else to_version
+    hi = (
+        current_commit(table_dir)["version"] if to_version is None
+        else to_version
+    )
+    # the range's manifests plus ``from_version`` itself, the first
+    # commit's diff base
+    by_v = _manifests_in(table_dir, from_version, hi)
     out = None
 
     def dv_key_set(dirs: list[str], of: dict) -> DataFrame:
         return _read_dirs(spark, table_dir, of, dirs).distinct()
 
-    for im in _change_images(table_dir, hist, from_version, hi):
+    for im in _change_images(
+        table_dir, list(by_v.values()), from_version, hi
+    ):
         version = F.lit(im["version"]).cast("long")
         if im["cdc"]:
             # the sidecar carries `_change_type` as a data column, so
@@ -3600,8 +3526,7 @@ def maintain_incremental_agg(
     unfoldable, so schedule maintenance inside the retention
     window."""
     applied = 0
-    ordered = table_history(source_dir)
-    hist = {m["version"]: m for m in ordered}
+    hist = {m["version"]: m for m in table_history(source_dir)}
     head = current_commit(source_dir)["version"]
     done = committed_batch_ids(dest_dir) if os.path.isdir(dest_dir) else set()
     for v in range(1, head + 1):
@@ -3649,9 +3574,7 @@ def maintain_incremental_agg(
                 "maintenance is only sound over append-only history; "
                 "recompute the aggregate from the current table instead"
             )
-        delta = read_table_changes(
-            spark, source_dir, v - 1, v, history=ordered
-        )
+        delta = read_table_changes(spark, source_dir, v - 1, v)
         if delta is None:
             continue  # metadata-only commit: nothing to fold
         committed_transaction(
@@ -4165,6 +4088,22 @@ def _dml_result(
     }
 
 
+def _key_bounds(df: DataFrame, keys: list[str], pkeys: list[str]) -> dict:
+    """``{physical key: (min, max)}`` of ``df``'s key columns — the
+    stats-prune spec of the key rows a DML touches, from ONE 1-row
+    bounds job (the sanctioned scalar shape). A column with no
+    non-NULL value is left out (no bound)."""
+    b = df.agg(
+        *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
+        *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
+    ).collect()[0]
+    return {
+        pk: (b[f"_lo{i}"], b[f"_hi{i}"])
+        for i, pk in enumerate(pkeys)
+        if b[f"_lo{i}"] is not None
+    }
+
+
 def _dml_commit(
     spark: SparkSession,
     table_dir: str,
@@ -4277,20 +4216,14 @@ def _dml_commit(
                     how="left_semi",
                 )
             )
-            rb = reins.agg(
-                *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
-                *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
-            ).collect()[0]
-            if rb["_lo0"] is not None:
+            bounds = _key_bounds(reins, keys, pkeys)
+            if bounds:
                 stale = _stats_prune(
                     {
                         "partitions": dict(scan_parts),
                         "stats": cur.get("stats", {}),
                     },
-                    {
-                        pkeys[i]: (rb[f"_lo{i}"], rb[f"_hi{i}"])
-                        for i in range(len(keys))
-                    },
+                    bounds,
                 )
                 rewrite_vals |= {
                     e.split("=", 1)[1] for e in stale
@@ -4443,14 +4376,26 @@ def _dml_commit(
         new_parts = dict(cur["partitions"])
         for v in rewrite_vals:
             new_parts.pop(f"{prefix}{v}", None)
+        extended = {
+            e for e in written
+            if e.split("=", 1)[1] in extend_vals and e in cur["partitions"]
+        }
         for e in written:
-            v = e.split("=", 1)[1]
-            if v in extend_vals and e in cur["partitions"]:
-                new_parts[e] = _entry_dirs(cur["partitions"][e]) + [stage]
-            else:
-                new_parts[e] = stage
-        new_stats, new_bloom = _carry_stats_blooms(
-            cur, written, new_parts, extend_vals, stage_path, stats_cols
+            new_parts[e] = (
+                _entry_dirs(cur["partitions"][e]) + [stage]
+                if e in extended
+                else stage
+            )
+        # rewritten and new entries record footer stats (staged files
+        # carry PHYSICAL names) and no blooms; extended entries get no
+        # fresh values, so they drop both — compaction re-establishes
+        new_stats, new_bloom = _skipping_successor(
+            cur, new_parts, written, extended,
+            _collect_stage_stats(
+                stage_path, written - extended,
+                _physical_names(stats_cols, cur),
+            ) if stats_cols and written else {},
+            {},
         )
         if not write_vals and not dv_stage:
             # nothing changed (every row carried): Delta skips
@@ -4824,23 +4769,13 @@ def merge_into_table(
         # ---- touched-partition pruning (no BY SOURCE clause only) ----
         scan_parts = cur["partitions"]
         if not by_source and cur.get("stats"):
-            b = source.agg(
-                *[F.min(k).alias(f"_lo{i}") for i, k in enumerate(keys)],
-                *[F.max(k).alias(f"_hi{i}") for i, k in enumerate(keys)],
-            ).collect()[0]  # 1-row bounds job (sanctioned shape)
-            prune = {
-                pkeys[i]: (b[f"_lo{i}"], b[f"_hi{i}"])
-                for i in range(len(keys))
-                if b[f"_lo{i}"] is not None
-            }
-            scan_parts = _stats_prune(cur, prune)
+            scan_parts = _stats_prune(cur, _key_bounds(source, keys, pkeys))
         if (
             not by_source
             and scan_parts
-            and cur.get("bloom")
             and any(
                 c in specs
-                for specs in cur["bloom"].values()
+                for specs in cur.get("bloom", {}).values()
                 for c in pkeys
             )
         ):
@@ -4849,10 +4784,8 @@ def merge_into_table(
             # keys are SCATTERED (the CDC-batch case — a handful of
             # keys spanning the table's whole range). When the source's
             # distinct key set is small (<= _MERGE_BLOOM_PROBE_CAP, one
-            # limit-bounded job), probe each partition's Bloom bitmaps
-            # per key instead: a partition survives only if SOME source
-            # key may be present in it. Conservative like all skipping —
-            # a missing bitmap or NULL key component keeps the entry.
+            # limit-bounded job), each key row is one probe: a partition
+            # survives only if SOME source key may be present in it.
             ks = (
                 source.select(*keys)
                 .distinct()
@@ -4860,47 +4793,10 @@ def merge_into_table(
                 .collect()
             )
             if len(ks) <= _MERGE_BLOOM_PROBE_CAP:
-                blooms = cur["bloom"]
-                # ONE probe-position job per (column, spec) across all
-                # keys, and one bitmap decode per (entry, column) —
-                # not per (key, entry) (r11 review #3)
-                for c, pc in zip(keys, pkeys):
-                    for spec in {
-                        (sp["m"], sp["k"], sp["t"])
-                        for e in scan_parts
-                        for sp in [blooms.get(e, {}).get(pc)]
-                        if sp is not None and "t" in sp
-                    }:
-                        _bloom_probes_prefetch(
-                            spark, [row[c] for row in ks], *spec
-                        )
-                bits_of: dict = {}
-
-                def _entry_bits(entry: str, c: str, sp: dict):
-                    ck = (entry, c)
-                    if ck not in bits_of:
-                        bits_of[ck] = base64.b64decode(sp["bits"])
-                    return bits_of[ck]
-
-                def _may(entry: str, pc: str, v) -> bool:
-                    sp = blooms.get(entry, {}).get(pc)
-                    if sp is None or v is None or "t" not in sp:
-                        return True
-                    return _bloom_may_contain(
-                        spark, sp, v, bits=_entry_bits(entry, pc, sp)
-                    )
-
-                scan_parts = {
-                    entry: dirname
-                    for entry, dirname in scan_parts.items()
-                    if any(
-                        all(
-                            _may(entry, pc, row[c])
-                            for c, pc in zip(keys, pkeys)
-                        )
-                        for row in ks
-                    )
-                }
+                scan_parts = _bloom_prune(
+                    spark, cur, scan_parts,
+                    *[dict(zip(pkeys, row)) for row in ks],
+                )
 
         # target LOGICAL schema and the scanned base (`_dml_base`) — on
         # a mapped table the merge surface is the logical view
@@ -5332,6 +5228,37 @@ def delete_table(
     return _dml_result(table_dir, m, res, ("deleted", "carried"))
 
 
+def _start_foreach_batch(
+    df: DataFrame, checkpoint_dir: str, fn
+) -> StreamingQuery:
+    """The one foreachBatch shell of the sinks here: ``fn(batch_df,
+    batch_id)`` per micro-batch, checkpointed at ``checkpoint_dir``,
+    triggered ``availableNow`` — the stream drains what its source
+    holds, then stops (every sink commits per batch with batch-id
+    idempotence, so a rerun picks up where it stopped)."""
+    return (
+        df.writeStream.foreachBatch(fn)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def _latest_per_key(
+    df: DataFrame, keys: list[str], order_col: str, tiebreak: list[str] | None
+) -> DataFrame:
+    """The newest row per key of ``df``: max ``order_col``, then the
+    greatest ``tiebreak`` columns — one window on the keys."""
+    w = Window.partitionBy(*keys).orderBy(
+        F.col(order_col).desc(), *[F.col(c).desc() for c in tiebreak or []]
+    )
+    return (
+        df.withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .drop("_rn")
+    )
+
+
 def upsert_stream_to_table(
     df: DataFrame,
     table_dir: str,
@@ -5339,7 +5266,6 @@ def upsert_stream_to_table(
     keys: list[str],
     order_col: str,
     tiebreak: list[str] | None = None,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain a latest-per-key parquet table from a stream via
     foreachBatch MERGE. Within each micro-batch the newest row per key
@@ -5364,14 +5290,7 @@ def upsert_stream_to_table(
     os.makedirs(table_dir, exist_ok=True)
 
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy(*keys).orderBy(
-            F.col(order_col).desc(), *[F.col(c).desc() for c in tiebreak or []]
-        )
-        latest = (
-            batch_df.withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
+        latest = _latest_per_key(batch_df, keys, order_col, tiebreak)
         committed_transaction(
             batch_df.sparkSession,
             table_dir,
@@ -5379,12 +5298,7 @@ def upsert_stream_to_table(
             batch_id=batch_id,
         )
 
-    writer = df.writeStream.foreachBatch(_merge_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(df, checkpoint_dir, _merge_batch)
 
 
 def merge_stream_to_table(
@@ -5394,7 +5308,6 @@ def merge_stream_to_table(
     keys: list[str],
     reduce_order_col: str | None = None,
     reduce_tiebreak: list[str] | None = None,
-    trigger_available_now: bool = True,
     **merge_clauses,
 ) -> StreamingQuery:
     """Conditional multi-clause MERGE as a foreachBatch sink — the
@@ -5423,26 +5336,13 @@ def merge_stream_to_table(
     def _merge_batch(batch_df: DataFrame, batch_id: int) -> None:
         src = batch_df
         if reduce_order_col:
-            w = Window.partitionBy(*keys).orderBy(
-                F.col(reduce_order_col).desc(),
-                *[F.col(c).desc() for c in reduce_tiebreak or []],
-            )
-            src = (
-                src.withColumn("_rn", F.row_number().over(w))
-                .filter(F.col("_rn") == 1)
-                .drop("_rn")
-            )
+            src = _latest_per_key(src, keys, reduce_order_col, reduce_tiebreak)
         merge_into_table(
             batch_df.sparkSession, table_dir, src, keys,
             batch_id=batch_id, **merge_clauses,
         )
 
-    writer = df.writeStream.foreachBatch(_merge_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(df, checkpoint_dir, _merge_batch)
 
 
 def append_keyed_mor(
@@ -5484,14 +5384,7 @@ def append_keyed_mor(
     if max_open_generations is not None:
         if len(_generations(current_commit(table_dir))) > max_open_generations:
             compact_keyed_mor(spark, table_dir)
-    w = Window.partitionBy(*keys).orderBy(
-        F.col(order_col).desc(), *[F.col(c).desc() for c in tiebreak or []]
-    )
-    latest = (
-        updates.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
+    latest = _latest_per_key(updates, keys, order_col, tiebreak)
     want = {"keys": keys, "order_col": order_col, "tiebreak": tiebreak or []}
 
     def attempt(cur, new_stage):
@@ -5547,17 +5440,10 @@ def _mor_view(spark: SparkSession, table_dir: str, m: dict) -> DataFrame:
     if "mor" not in m:
         raise ValueError(f"{table_dir} is not a merge-on-read keyed table")
     mor = m["mor"]
-    w = Window.partitionBy(*mor["keys"]).orderBy(
-        F.col(mor["order_col"]).desc(),
-        *[F.col(c).desc() for c in mor["tiebreak"]],
-        F.col("_gen").desc(),
-    )
-    return (
-        _read_manifest(spark, table_dir, m)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn", "_gen")
-    )
+    return _latest_per_key(
+        _read_manifest(spark, table_dir, m), mor["keys"], mor["order_col"],
+        [*mor["tiebreak"], "_gen"],
+    ).drop("_gen")
 
 
 def read_keyed_mor(
@@ -5606,7 +5492,6 @@ def upsert_stream_to_table_mor(
     keys: list[str],
     order_col: str,
     tiebreak: list[str] | None = None,
-    trigger_available_now: bool = True,
     max_open_generations: int | None = None,
 ) -> StreamingQuery:
     """`upsert_stream_to_table` as merge-on-read: each micro-batch
@@ -5629,12 +5514,7 @@ def upsert_stream_to_table_mor(
             max_open_generations=max_open_generations,
         )
 
-    writer = df.writeStream.foreachBatch(_append_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(df, checkpoint_dir, _append_batch)
 
 
 def rollup_stream_to_table(
@@ -5644,7 +5524,6 @@ def rollup_stream_to_table(
     keys: list[str],
     sum_cols: dict[str, str],
     count_col: str = "n",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
     """Maintain an ADDITIVE aggregate table (counts + sums per key) from a
     stream via foreachBatch — the incremental-materialized-view pattern:
@@ -5689,9 +5568,4 @@ def rollup_stream_to_table(
             batch_df.sparkSession, table_dir, _add, batch_id=batch_id
         )
 
-    writer = df.writeStream.foreachBatch(_rollup_batch).option(
-        "checkpointLocation", checkpoint_dir
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_foreach_batch(df, checkpoint_dir, _rollup_batch)

@@ -435,6 +435,98 @@ class TestStatsPruningLaws:
         sinks._PROBE_CACHE.clear()
 
     @given(
+        contents=st.dictionaries(
+            st.integers(0, 5),  # partition id
+            st.sets(  # inserted (a, b) rows
+                st.tuples(st.integers(0, 30), st.integers(0, 30)),
+                max_size=12,
+            ),
+            min_size=1,
+            max_size=6,
+        ),
+        bloomless=st.sets(st.integers(0, 5)),
+        a_only=st.sets(st.integers(0, 5)),
+        probes=st.lists(
+            st.one_of(
+                st.tuples(st.integers(0, 30)).map(lambda t: {"a": t[0]}),
+                st.tuples(st.integers(0, 30), st.integers(0, 30)).map(
+                    lambda t: {"a": t[0], "b": t[1]}
+                ),
+            ),
+            min_size=1,
+            max_size=5,
+        ),
+        positions=st.data(),
+    )
+    @settings(max_examples=200, deadline=None)
+    def test_multi_probe_bloom_prune_never_drops_inserted_values(
+        self, contents, bloomless, a_only, probes, positions
+    ):
+        """The many-probe prune a MERGE runs with its source key rows
+        (single keys and two-column key tuples): an entry whose bitmaps
+        hold SOME probe's value on every probed column survives, entries
+        without a bitmap (or without one for a probed column) always
+        survive, and the result is the union of the single-probe
+        prunes. Probe positions are injected through _bloom_probes's
+        cache, so the real prune path runs without a SparkSession."""
+        import base64 as b64
+
+        from nshm2022db_spark.streaming import sinks
+
+        m, k = 256, 4
+        vals = {v for rows in contents.values() for r in rows for v in r}
+        vals |= {v for p in probes for v in p.values()}
+        pos = {
+            v: positions.draw(
+                st.lists(st.integers(0, m - 1), min_size=k, max_size=k),
+                label=f"pos{v}",
+            )
+            for v in sorted(vals)
+        }
+        sinks._PROBE_CACHE.clear()
+        for v, ps in pos.items():
+            sinks._PROBE_CACHE[("int", v, m, k, "bigint")] = ps
+
+        def bitmap(values):
+            bits = bytearray(m // 8)
+            for v in values:
+                for p in pos[v]:
+                    bits[p >> 3] |= 1 << (p & 7)
+            return {
+                "m": m, "k": k, "t": "bigint", "v": sinks._BLOOM_FORMAT,
+                "bits": b64.b64encode(bytes(bits)).decode("ascii"),
+            }
+
+        parts, bloom = {}, {}
+        for pid, rows in contents.items():
+            e = f"k={pid}"
+            parts[e] = "data-x"
+            if pid in bloomless:
+                continue
+            bloom[e] = {"a": bitmap(r[0] for r in rows)}
+            if pid not in a_only:
+                bloom[e]["b"] = bitmap(r[1] for r in rows)
+        manifest = {"partitions": parts, "bloom": bloom, "partition_col": "k"}
+        kept = sinks._bloom_prune(None, manifest, parts, *probes)
+        union = set()
+        for p in probes:
+            union |= set(sinks._bloom_prune(None, manifest, parts, p))
+        sinks._PROBE_CACHE.clear()
+        assert set(kept) == union
+        assert set(kept) <= set(parts)
+        for pid, rows in contents.items():
+            e = f"k={pid}"
+            held = {"a": {r[0] for r in rows}, "b": {r[1] for r in rows}}
+            if pid in bloomless or any(
+                all(v in held[c] for c, v in p.items()) for p in probes
+            ):
+                assert e in kept, (pid, probes)
+            if pid in a_only and pid not in bloomless and any(
+                p["a"] in held["a"] for p in probes
+            ):
+                assert e in kept, (pid, probes)
+
+    @given(
         xs=st.lists(
             st.integers(-1000, 1000), min_size=1, max_size=40
         ),

@@ -5764,15 +5764,16 @@ class TestDmlCommit:
 
     def test_one_dml_commit_path(self):
         """CI guard against re-forking the DML tail: only `_dml_commit`
-        materializes a decision frame, builds CDC images, carries
-        stats/blooms or stages a ``cdc`` dir; and no DML writer stages
-        or publishes by itself."""
+        materializes a decision frame, builds CDC images or stages a
+        ``cdc`` dir; and no DML writer stages or publishes by itself.
+        (Its stats and blooms come from the one successor rule that
+        `TestSkippingTrail.test_one_skipping_rule` guards.)"""
         import ast
         import inspect
 
         from nshm2022db_spark.streaming import sinks
 
-        owned = {"_materialize_decision", "_cdc_image_parts", "_carry_stats_blooms"}
+        owned = {"_materialize_decision", "_cdc_image_parts"}
         callers: set = set()
 
         def visit(node, owner):
@@ -5975,10 +5976,147 @@ _SKIPPING_GOLDEN = [
 
 
 class TestSkippingTrail:
-    """The one successor rule for per-entry stats and Bloom bitmaps."""
+    """The one successor rule for per-entry stats and Bloom bitmaps
+    (`_skipping_successor`) and the one Bloom prune (`_bloom_prune`)."""
 
     def test_skipping_trail_matches_golden(self, spark, tmp_path):
         assert _skipping_trail(spark, str(tmp_path / "t")) == _SKIPPING_GOLDEN
+
+    def test_one_skipping_rule(self):
+        """CI guard against re-forking data skipping: every
+        `_next_manifest` call's ``stats=``/``bloom=`` is a name bound
+        only by unpacking a `_skipping_successor` call, ``None`` or
+        absent, and no ``**`` splat into it can carry either key; only
+        `_bloom_prune` calls `_bloom_may_contain` and
+        `_bloom_probes_prefetch`."""
+        import ast
+        import glob
+
+        import nshm2022db_spark as pkg
+
+        def owned(tree):
+            """(node, innermost enclosing function) for every node."""
+            stack = [(tree, None)]
+            while stack:
+                node, fn = stack.pop()
+                yield node, fn
+                inner = node if isinstance(
+                    node, (ast.FunctionDef, ast.AsyncFunctionDef)
+                ) else fn
+                stack.extend((c, inner) for c in ast.iter_child_nodes(node))
+
+        def bindings(fn, name, uses=False):
+            """Every value ``fn`` binds to ``name`` (None: a parameter,
+            a loop variable or another unchecked binding; with
+            ``uses``, also any ``name[...]`` or ``name.attr`` — an item
+            store or a mutating method call)."""
+            a = fn.args
+            params = a.posonlyargs + a.args + a.kwonlyargs
+            out = [None] if name in {x.arg for x in params} else []
+            for node in ast.walk(fn):
+                if uses and isinstance(
+                    node, (ast.Subscript, ast.Attribute)
+                ) and getattr(node.value, "id", None) == name:
+                    out.append(None)
+                    continue
+                if isinstance(node, ast.Assign):
+                    targets, value = node.targets, node.value
+                elif isinstance(node, (ast.AnnAssign, ast.AugAssign)):
+                    targets, value = [node.target], None
+                elif isinstance(node, (ast.For, ast.comprehension)):
+                    targets, value = [node.target], None
+                elif isinstance(node, ast.NamedExpr):
+                    targets, value = [node.target], None
+                else:
+                    continue
+                if any(
+                    isinstance(n, ast.Name) and n.id == name
+                    for t in targets for n in ast.walk(t)
+                ):
+                    out.append(value)
+            return out
+
+        def is_rule(value):
+            return isinstance(value, ast.Call) and getattr(
+                value.func, "id", None
+            ) == "_skipping_successor"
+
+        def names_key(node):
+            return any(
+                isinstance(n, ast.Constant) and n.value in ("stats", "bloom")
+                for n in ast.walk(node)
+            )
+
+        probers = set()
+        calls = 0
+        for path in glob.glob(
+            os.path.join(pkg.__path__[0], "**", "*.py"), recursive=True
+        ):
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node, fn in owned(tree):
+                if not isinstance(node, ast.Call):
+                    continue
+                name = getattr(node.func, "id", None) or getattr(
+                    node.func, "attr", None
+                )
+                if name in ("_bloom_may_contain", "_bloom_probes_prefetch"):
+                    probers.add(fn.name if fn else None)
+                if name != "_next_manifest":
+                    continue
+                calls += 1
+                for kw in node.keywords:
+                    where = (path, node.lineno, kw.arg)
+                    if kw.arg in ("stats", "bloom"):
+                        v = kw.value
+                        if isinstance(v, ast.Constant) and v.value is None:
+                            continue
+                        assert isinstance(v, ast.Name), where
+                        bound = bindings(fn, v.id, uses=True)
+                        assert bound and all(map(is_rule, bound)), where
+                    elif kw.arg is None:
+                        # a splat: the dict it expands never names either key
+                        assert isinstance(kw.value, ast.Name), where
+                        for b in bindings(fn, kw.value.id):
+                            assert b is not None and not names_key(b), where
+                        for n in ast.walk(fn):
+                            if (
+                                isinstance(n, ast.Call)
+                                and isinstance(n.func, ast.Attribute)
+                                and getattr(n.func.value, "id", None)
+                                == kw.value.id
+                            ):
+                                assert not names_key(n), where
+        assert calls >= 10
+        assert probers == {"_bloom_prune"}
+
+    def test_migrate_records_stats_under_physical_names(self, spark, tmp_path):
+        """A migration on a column-mapped table keys its entries' stats
+        by the PHYSICAL column name, the name every prune looks up."""
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string, g int"
+        sinks.append_partition_transaction(
+            spark, t, "day",
+            spark.createDataFrame([(1, "d1", 1), (2, "d2", 2)], schema),
+        )
+        sinks.rename_column(spark, t, "k", "key")
+        sinks.evolve_partition_column(spark, t, "g")
+        sinks.append_partition_transaction(
+            spark, t, "g",
+            spark.createDataFrame([(3, "d3", 3)], "key int, day string, g int"),
+        )
+        sinks.migrate_legacy_layouts(spark, t, stats_cols=["key"])
+        stats = sinks.current_commit(t)["stats"]
+        assert sorted(stats) == ["g=1", "g=2"]
+        assert {c for s in stats.values() for c in s["cols"]} == {"k"}
+        assert stats["g=1"]["cols"]["k"] == [1, 1]
+        assert sorted(
+            r.key for r in sinks.read_keyed_table(
+                spark, t, prune={"key": (2, 2)}
+            ).collect()
+        ) == [2, 3]  # g=3 has no stats, so it is read
 
 
 def _jobs_of(spark, call) -> int:
@@ -6874,3 +7012,53 @@ class TestVersionLookup:
         ):
             with _pytest.raises(ValueError, match="version 9 not committed"):
                 call()
+
+    def test_one_version_feeds_open_few_manifests(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """On a 30-version table a one-version read through either change
+        feed opens at most 3 manifests — the head, the range and its diff
+        base — not the whole log; a vacuumed range and a vacuumed diff
+        base still raise."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string, v int"
+        sinks.append_partition_transaction(
+            spark, t, "day", spark.createDataFrame([(0, "a", 0)], schema)
+        )
+        for i in range(28):
+            sinks.set_table_constraints(spark, t, [f"v >= {-i}"])
+        sinks.overwrite_partition_transaction(
+            spark, t, "day", spark.createDataFrame([(1, "a", 1)], schema)
+        )
+        opened = []
+        read_json = sinks._read_json
+
+        def spy(path):
+            if os.path.basename(os.path.dirname(path)) == sinks._COMMITS:
+                opened.append(os.path.basename(path))
+            return read_json(path)
+
+        monkeypatch.setattr(sinks, "_read_json", spy)
+        for read, want in (
+            (sinks.read_table_changes, [(1, None)]),
+            (sinks.read_table_changes_typed, [(0, "delete"), (1, "insert")]),
+        ):
+            for to in (30, None):
+                opened.clear()
+                df = read(spark, t, 29, to)
+                assert sorted(
+                    (r.k, r["_change_type"] if "_change_type" in df.columns
+                     else None)
+                    for r in df.collect()
+                ) == want
+                assert len(opened) <= 3, (read.__name__, to, opened)
+        monkeypatch.setattr(sinks, "_read_json", read_json)
+        sinks.vacuum_versions(t, keep_last=1)
+        with _pytest.raises(ValueError, match="commit 29 .* was vacuumed"):
+            sinks.read_table_changes(spark, t, 28)
+        with _pytest.raises(ValueError, match="diff base"):
+            sinks.read_table_changes_typed(spark, t, 29)
