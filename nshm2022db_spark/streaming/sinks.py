@@ -1128,13 +1128,18 @@ def _bloom_prune(
             (sp["m"], sp["k"], sp["t"])
             for e in parts
             for sp in [blooms.get(e, {}).get(c)]
-            if sp is not None and "t" in sp and sp.get("v") == _BLOOM_FORMAT
+            if sp is not None and "t" in sp
+            and sp.get("v") == _BLOOM_FORMAT
         }:
-            _bloom_probes_prefetch(spark, [p[c] for p in probes if c in p], *spec)
+            _bloom_probes_prefetch(
+                spark, [p[c] for p in probes if c in p], *spec
+            )
     out = {}
     for entry, dirname in parts.items():
         specs = blooms.get(entry, {})
-        bits = {c: base64.b64decode(specs[c]["bits"]) for c in cols if c in specs}
+        bits = {
+            c: base64.b64decode(specs[c]["bits"]) for c in cols if c in specs
+        }
         if any(
             all(
                 _bloom_may_contain(spark, specs.get(c), v, bits.get(c))
@@ -1179,13 +1184,12 @@ def _merged_bloom(old: dict, add: dict) -> dict:
     for c, sp in add.items():
         osp = old.get(c)
         if osp and all(osp.get(f) == sp.get(f) for f in ("m", "k", "t", "v")):
-            pairs = zip(base64.b64decode(osp["bits"]), base64.b64decode(sp["bits"]))
-            out[c] = {
-                **sp,
-                "bits": base64.b64encode(bytes(a | b for a, b in pairs)).decode(
-                    "ascii"
-                ),
-            }
+            ors = bytes(
+                a | b for a, b in zip(
+                    base64.b64decode(osp["bits"]), base64.b64decode(sp["bits"])
+                )
+            )
+            out[c] = {**sp, "bits": base64.b64encode(ors).decode("ascii")}
     return out
 
 
