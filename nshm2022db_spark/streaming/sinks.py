@@ -1004,7 +1004,8 @@ def _bloom_probes_prefetch(
     returns driver-side without scheduling a single task (measured r14:
     0.12 s vs 0.49 s for the createDataFrame job — which spread 31 rows
     over defaultParallelism tasks — per merge commit). Exotic value
-    types keep the original one-job path."""
+    types share one 1-row job that computes each value exactly as
+    `_bloom_probes` does."""
     todo = [
         v
         for v in dict.fromkeys(values)
@@ -1042,15 +1043,34 @@ def _bloom_probes_prefetch(
                 lit.isNull().alias("nul"),
                 *[c.alias(f"p{i}") for i, c in enumerate(cols)],
             ).collect()
-    if slow:
-        df = spark.createDataFrame([(i, v) for i, v in slow])
-        lit = df[1].try_cast(t)
-        cols = _bloom_position_cols(lit, m, k)
-        rows += df.select(
-            df[0].alias("_i"),
-            lit.isNull().alias("nul"),
-            *[c.alias(f"p{i}") for i, c in enumerate(cols)],
-        ).collect()
+    # exotic values take `_bloom_probes`' own literal expression, all in
+    # ONE 1-row job: a createDataFrame column would infer its own type
+    # (decimal(38,18) for a Decimal, whose string form hashes apart from
+    # the '1.5' the build side hashed into a string column)
+    exotic = []
+    for i, v in slow:
+        if isinstance(v, int):
+            # only beyond-long ints get here: no Spark literal form, so
+            # a NULL probe — "cannot prune", never a false skip
+            rows.append({"_i": i, "nul": True})
+        else:
+            exotic.append((i, F.lit(v).try_cast(t)))
+    if exotic:
+        row = spark.range(1).select(
+            *[
+                c
+                for i, lit in exotic
+                for c in [lit.isNull().alias(f"n{i}")] + [
+                    p.alias(f"p{i}_{j}")
+                    for j, p in enumerate(_bloom_position_cols(lit, m, k))
+                ]
+            ]
+        ).first()
+        rows += [
+            {"_i": i, "nul": row[f"n{i}"]}
+            | {f"p{j}": row[f"p{i}_{j}"] for j in range(k)}
+            for i, _ in exotic
+        ]
     if len(_PROBE_CACHE) >= 4096:
         _PROBE_CACHE.clear()
     for r in rows:

@@ -6090,6 +6090,37 @@ class TestSkippingTrail:
         assert calls >= 10
         assert probers == {"_bloom_prune"}
 
+    def test_exotic_probe_batch_matches_job_path(self, spark):
+        """Reads warm their probes through the batch prefetch too, so its
+        path for values without a fold-safe literal must hash exactly
+        like `_bloom_probes`' one-row job — a Decimal probing a string
+        column included (a createDataFrame column would hash
+        '1.500000000000000000' where the build side hashed '1.5')."""
+        import datetime
+        from decimal import Decimal
+
+        from nshm2022db_spark.streaming.sinks import (
+            _PROBE_CACHE,
+            _bloom_probes,
+            _bloom_probes_prefetch,
+        )
+
+        m, k = 2**14, 5
+        nan, inf = float("nan"), float("inf")
+        for t, vals in (
+            ("string", [
+                Decimal("1.5"), datetime.date(2020, 1, 2),
+                datetime.datetime(2020, 1, 2, 3, 4, 5), nan, inf,
+            ]),
+            ("double", [Decimal("1.5"), nan, inf]),
+        ):
+            _PROBE_CACHE.clear()
+            _bloom_probes_prefetch(spark, vals, m, k, t)
+            batch = [_PROBE_CACHE[(type(v).__name__, v, m, k, t)] for v in vals]
+            _PROBE_CACHE.clear()
+            assert [_bloom_probes(spark, v, m, k, t) for v in vals] == batch, t
+        _PROBE_CACHE.clear()
+
     def test_migrate_records_stats_under_physical_names(self, spark, tmp_path):
         """A migration on a column-mapped table keys its entries' stats
         by the PHYSICAL column name, the name every prune looks up."""
