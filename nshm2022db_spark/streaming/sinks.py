@@ -1004,8 +1004,7 @@ def _bloom_probes_prefetch(
     returns driver-side without scheduling a single task (measured r14:
     0.12 s vs 0.49 s for the createDataFrame job — which spread 31 rows
     over defaultParallelism tasks — per merge commit). Exotic value
-    types share one 1-row job that computes each value exactly as
-    `_bloom_probes` does."""
+    types take `_bloom_probes`' own 1-row job, one per value."""
     todo = [
         v
         for v in dict.fromkeys(values)
@@ -1014,18 +1013,24 @@ def _bloom_probes_prefetch(
     ]
     if not todo:
         return
+    if len(_PROBE_CACHE) >= 4096:
+        _PROBE_CACHE.clear()
     # one VALUES statement per type CLASS: an inline table demands one
     # compatible type per column, and a mixed CDC key batch (ints and
     # strings) is legal input (pinned by TestBloomProbeFastPath)
     fast: dict[str, list] = {}
-    slow_idx = set(range(len(todo)))
+    rows = []
     for i, v in enumerate(todo):
         sl = _sql_probe_literal(v)
         if sl is not None:
             fast.setdefault(type(v).__name__, []).append((i, sl))
-            slow_idx.discard(i)
-    slow = [(i, todo[i]) for i in slow_idx]
-    rows = []
+        elif isinstance(v, int):
+            # only beyond-long ints get here: no Spark literal form, so
+            # a NULL probe — "cannot prune", never a false skip
+            rows.append({"_i": i, "nul": True})
+        else:
+            # exotic types take `_bloom_probes`' own job, value by value
+            _bloom_probes(spark, v, m, k, t)
     for chunk_src in fast.values():
         # chunk the VALUES text: thousands of CDC keys in one statement
         # would push parser time past the job it replaces
@@ -1043,36 +1048,6 @@ def _bloom_probes_prefetch(
                 lit.isNull().alias("nul"),
                 *[c.alias(f"p{i}") for i, c in enumerate(cols)],
             ).collect()
-    # exotic values take `_bloom_probes`' own literal expression, all in
-    # ONE 1-row job: a createDataFrame column would infer its own type
-    # (decimal(38,18) for a Decimal, whose string form hashes apart from
-    # the '1.5' the build side hashed into a string column)
-    exotic = []
-    for i, v in slow:
-        if isinstance(v, int):
-            # only beyond-long ints get here: no Spark literal form, so
-            # a NULL probe — "cannot prune", never a false skip
-            rows.append({"_i": i, "nul": True})
-        else:
-            exotic.append((i, F.lit(v).try_cast(t)))
-    if exotic:
-        row = spark.range(1).select(
-            *[
-                c
-                for i, lit in exotic
-                for c in [lit.isNull().alias(f"n{i}")] + [
-                    p.alias(f"p{i}_{j}")
-                    for j, p in enumerate(_bloom_position_cols(lit, m, k))
-                ]
-            ]
-        ).first()
-        rows += [
-            {"_i": i, "nul": row[f"n{i}"]}
-            | {f"p{j}": row[f"p{i}_{j}"] for j in range(k)}
-            for i, _ in exotic
-        ]
-    if len(_PROBE_CACHE) >= 4096:
-        _PROBE_CACHE.clear()
     for r in rows:
         v = todo[r["_i"]]
         _PROBE_CACHE[(type(v).__name__, v, m, k, t)] = (
@@ -3013,10 +2988,31 @@ def read_table_changes(
     end = head if to_version is None else min(to_version, head)
     by_v = _manifests_in(table_dir, from_version + 1, end)
     _require_retained(by_v, table_dir, from_version, end)
+    return _added_rows(spark, table_dir, by_v, from_version, end)
+
+
+def _added_rows(
+    spark: SparkSession, table_dir: str, by_v: dict, from_version: int,
+    end: int,
+) -> DataFrame | None:
+    """`read_table_changes` over the range's retained manifests
+    ``by_v``: the rows each data-changing commit added."""
+    dirs = None
     out = None
     for v, m in by_v.items():
         if m.get("op") == "restore":
             continue  # metadata-only re-publish
+        if "op" not in m:
+            # a pre-op manifest is an untagged RESTORE when it re-publishes
+            # an earlier commit's dir; only the earlier log can tell, so
+            # legacy histories (and only they) parse it, once
+            if dirs is None:
+                dirs = [
+                    (h["version"], h.get("dir"))
+                    for h in table_history(table_dir)
+                ]
+            if m.get("dir") in {d for k, d in dirs if k < v and d}:
+                continue
         if m.get("op") == "rewrite" and m.get("data_change") is False:
             # compaction / Z-order / tombstone materialization: provably
             # a restatement (Delta's dataChange=false) — emitting its
@@ -3550,12 +3546,17 @@ def maintain_incremental_agg(
     unfoldable, so schedule maintenance inside the retention
     window."""
     applied = 0
-    hist = {m["version"]: m for m in table_history(source_dir)}
     head = current_commit(source_dir)["version"]
     done = committed_batch_ids(dest_dir) if os.path.isdir(dest_dir) else set()
-    for v in range(1, head + 1):
-        if v in done:
-            continue
+    todo = [v for v in range(1, head + 1) if v not in done]
+    if not todo:
+        return 0
+    # open the unfolded range plus the nearest retained manifest below
+    # it (the rename check's base), never the whole log
+    retained = [int(n.split(".")[0]) for n in _manifest_names(source_dir)]
+    lo = max((k for k in retained if k < todo[0]), default=todo[0])
+    hist = _manifests_in(source_dir, lo, head)
+    for v in todo:
         m = hist.get(v)
         if m is None:
             raise ValueError(
@@ -3598,7 +3599,7 @@ def maintain_incremental_agg(
                 "maintenance is only sound over append-only history; "
                 "recompute the aggregate from the current table instead"
             )
-        delta = read_table_changes(spark, source_dir, v - 1, v)
+        delta = _added_rows(spark, source_dir, {v: m}, v - 1, v)
         if delta is None:
             continue  # metadata-only commit: nothing to fold
         committed_transaction(

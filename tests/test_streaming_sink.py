@@ -6090,37 +6090,6 @@ class TestSkippingTrail:
         assert calls >= 10
         assert probers == {"_bloom_prune"}
 
-    def test_exotic_probe_batch_matches_job_path(self, spark):
-        """Reads warm their probes through the batch prefetch too, so its
-        path for values without a fold-safe literal must hash exactly
-        like `_bloom_probes`' one-row job — a Decimal probing a string
-        column included (a createDataFrame column would hash
-        '1.500000000000000000' where the build side hashed '1.5')."""
-        import datetime
-        from decimal import Decimal
-
-        from nshm2022db_spark.streaming.sinks import (
-            _PROBE_CACHE,
-            _bloom_probes,
-            _bloom_probes_prefetch,
-        )
-
-        m, k = 2**14, 5
-        nan, inf = float("nan"), float("inf")
-        for t, vals in (
-            ("string", [
-                Decimal("1.5"), datetime.date(2020, 1, 2),
-                datetime.datetime(2020, 1, 2, 3, 4, 5), nan, inf,
-            ]),
-            ("double", [Decimal("1.5"), nan, inf]),
-        ):
-            _PROBE_CACHE.clear()
-            _bloom_probes_prefetch(spark, vals, m, k, t)
-            batch = [_PROBE_CACHE[(type(v).__name__, v, m, k, t)] for v in vals]
-            _PROBE_CACHE.clear()
-            assert [_bloom_probes(spark, v, m, k, t) for v in vals] == batch, t
-        _PROBE_CACHE.clear()
-
     def test_migrate_records_stats_under_physical_names(self, spark, tmp_path):
         """A migration on a column-mapped table keys its entries' stats
         by the PHYSICAL column name, the name every prune looks up."""
@@ -7093,3 +7062,79 @@ class TestVersionLookup:
             sinks.read_table_changes(spark, t, 28)
         with _pytest.raises(ValueError, match="diff base"):
             sinks.read_table_changes_typed(spark, t, 29)
+
+    def test_untagged_restore_adds_no_rows(self, spark, tmp_path):
+        """On a legacy history whose manifests carry no ``op`` tag, a
+        RESTORE is still recognised by the earlier commit's dir it
+        re-publishes: the untyped feed replays none of its rows, and the
+        untagged appends still read."""
+        import json
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string"
+        for rows in ([(0, "a"), (1, "b")], [(2, "a")]):
+            sinks.append_partition_transaction(
+                spark, t, "day", spark.createDataFrame(rows, schema)
+            )
+        assert sinks.restore_table_version(t, 1) == 3
+        log = os.path.join(t, sinks._COMMITS)
+        for n in os.listdir(log):
+            p = os.path.join(log, n)
+            with open(p) as f:
+                m = json.load(f)
+            m.pop("op", None)
+            with open(p, "w") as f:
+                json.dump(m, f)
+        assert sorted(
+            (r.k, r._commit_version)
+            for r in sinks.read_table_changes(spark, t, 0).collect()
+        ) == [(0, 1), (1, 1), (2, 2)]
+        assert sinks.read_table_changes(spark, t, 2) is None
+
+    def test_refresh_opens_each_manifest_once(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """One `maintain_incremental_agg` refresh opens each source
+        manifest at most once (the head at most twice), and folding a
+        version re-reads neither the log nor its manifest."""
+        from collections import Counter
+
+        from nshm2022db_spark.streaming import sinks
+
+        src = str(tmp_path / "src")
+        schema = "k int, day string, v int"
+        sinks.append_partition_transaction(
+            spark, src, "day", spark.createDataFrame([(0, "a", 0)], schema)
+        )
+        for i in range(8):
+            sinks.set_table_constraints(spark, src, [f"v >= {-i}"])
+        sinks.append_partition_transaction(
+            spark, src, "day", spark.createDataFrame([(1, "b", 1)], schema)
+        )
+        opened = Counter()
+        read_json = sinks._read_json
+
+        def spy(path):
+            if path.startswith(src + os.sep) and os.path.basename(
+                os.path.dirname(path)
+            ) == sinks._COMMITS:
+                opened[os.path.basename(path)] += 1
+            return read_json(path)
+
+        monkeypatch.setattr(sinks, "_read_json", spy)
+        agg = lambda d: d.groupBy("day").agg(F.count("*").alias("n"))  # noqa: E731
+        merge = lambda c, a: a if c is None else c.unionByName(a).groupBy(  # noqa: E731
+            "day"
+        ).agg(F.sum("n").alias("n"))
+        dst = str(tmp_path / "dst")
+        assert sinks.maintain_incremental_agg(spark, src, dst, agg, merge) == 2
+        head = max(opened)
+        assert opened[head] <= 2, opened
+        assert len(opened) == 10 and all(
+            c == 1 for n, c in opened.items() if n != head
+        ), opened
+        assert sorted(
+            (r.day, r.n) for r in sinks.read_keyed_table(spark, dst).collect()
+        ) == [("a", 1), ("b", 1)]
