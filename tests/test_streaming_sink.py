@@ -6205,6 +6205,81 @@ class TestDmlWork:
         ] == [11, 13, 20]
 
 
+class TestDmlRollup:
+    """The per-partition action rollup that `_dml_commit` derives every
+    partition set and count from."""
+
+    def test_every_action_merge_is_pinned(self, spark, tmp_path):
+        """One MERGE with every action kind — carries, an in-place
+        update, a partition move, whole-key deletes (one tombstoned), a
+        NULL-key delete (BY SOURCE), a fresh insert and the re-insert of
+        a tombstoned key — answers the pinned counts and publishes the
+        pinned manifests."""
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k long, day string, v double"
+        sinks.append_partition_transaction(
+            spark, t, "day",
+            spark.createDataFrame(
+                [(1, "d1", 1.0), (2, "d1", 2.0), (3, "d1", 3.0),
+                 (4, "d2", 4.0), (5, "d2", 5.0), (6, "d2", 6.0),
+                 (7, "d3", 7.0), (None, "d3", 0.0), (8, "d3", 8.0),
+                 (10, "d5", 10.0), (11, "d5", 11.0)],
+                schema,
+            ),
+            stats_cols=["k"], bloom_cols=["k"],
+        )
+        sinks.tombstone_keys(
+            spark, t, "k", spark.createDataFrame([(8,)], "k long")
+        )
+        got = sinks.merge_into_table(
+            spark, t,
+            spark.createDataFrame(
+                [(1, "d1", 10.0), (4, "d3", 40.0), (5, "d2", -1.0),
+                 (8, "d3", 80.0), (9, "d4", 9.0), (10, "d5", -1.0)],
+                schema,
+            ),
+            keys=["k"],
+            when_matched=[
+                ("delete", "s.v < 0"),
+                ("update", None, {"day": "s.day", "v": "s.v"}),
+            ],
+            when_not_matched_insert=True,
+            when_not_matched_by_source_delete="t.k IS NULL",
+            stats_cols=["k"],
+        )
+        assert got == {
+            "version": 3, "updated": 2, "deleted": 3, "inserted": 2,
+            "carried": 5,
+        }
+        assert sorted(
+            (r.k, r.day, r.v) for r in sinks.read_keyed_table(spark, t).collect()
+        ) == [
+            (1, "d1", 10.0), (2, "d1", 2.0), (3, "d1", 3.0), (4, "d3", 40.0),
+            (6, "d2", 6.0), (7, "d3", 7.0), (8, "d3", 80.0), (9, "d4", 9.0),
+            (11, "d5", 11.0),
+        ]
+        assert _history_digests(t) == _ROLLUP_GOLDEN
+
+
+# (op, manifest keys, content digest) for every commit
+# test_every_action_merge_is_pinned publishes, recorded while the
+# rollup ran as its own groupBy job over the materialized frame
+_ROLLUP_GOLDEN = [
+    ("append", ["batch_ids", "bloom", "dir", "dir_schemas", "op",
+                "partition_col", "partitions", "stats", "version"],
+     "3a71e641ed00"),
+    ("delete", ["batch_ids", "bloom", "dir", "dir_schemas", "dv", "dv_key",
+                "op", "partition_col", "partitions", "stats", "version"],
+     "076d91e8810c"),
+    ("merge", ["batch_ids", "bloom", "cdc", "dir", "dir_schemas", "dv",
+               "dv_key", "op", "partition_col", "partitions", "stats",
+               "version"],
+     "a51df037bf37"),
+]
+
+
 def _typed_feed_history(spark, t: str) -> None:
     """Eight commits over every image kind of the typed change feed: v1
     append over two partitions with key stats, v2 append, v3 key
