@@ -4,6 +4,17 @@ Single-JVM local mode for tests/bench; the same configs are what we'd set
 cluster-side (AQE, shuffle partitions sized to parallelism, Arrow for the
 few Pandas-UDF paths). Everything else — broadcast thresholds, partition
 pruning — is left to Catalyst defaults on purpose.
+
+One setting changes no plan, only the driver's bookkeeping: PySpark's
+DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``) is
+off. With it on, every ``pyspark.sql.functions`` call and Column method
+walks the Python stack and makes 4-6 extra py4j round trips to record its
+call site — about half of a `revise` round's 6,400 round trips (PERF.md).
+The cost: a runtime error (ANSI cast, ``raise_error``, divide by zero) no
+longer names the ``file:line`` of the Column call in its "DataFrame query
+context". PySpark reads the flag once per process
+(``pyspark.errors.utils.is_debugging_enabled``), so it is set here, in the
+builder, not at runtime.
 """
 
 from __future__ import annotations
@@ -54,6 +65,8 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
         .config("spark.ui.enabled", "false")
+        # no per-Column-call call-site capture (module docstring)
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
         # bucketed tables (sources.parquet.write_bucketed) need a catalog;
         # keep the warehouse + derby metastore out of the repo tree
         .config(

@@ -61,7 +61,7 @@ import tempfile
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
@@ -296,7 +296,7 @@ def transact(table_dir: str, attempt, *, batch_id=None, rebase=None):
             if manifest is None:
                 return None
             if batch_id is not None:
-                manifest["batch_ids"] = [batch_id]
+                manifest["batch_ids"] = [batch_id, *manifest["batch_ids"]]
             try:
                 if manifest.get("dir") in staged:
                     won = _publish(
@@ -395,6 +395,15 @@ def committed_transaction(
     against the winner's version, so concurrent writers SERIALIZE — no
     lost updates. With `batch_id`, an already-committed id no-ops
     (replayed micro-batch idempotence)."""
+    transact(
+        table_dir, _whole_table_attempt(spark, table_dir, compute),
+        batch_id=batch_id,
+    )
+
+
+def _whole_table_attempt(spark, table_dir: str, compute, covers=()):
+    """`committed_transaction`'s attempt; its manifest also records the
+    batch ids ``covers`` beside the transaction's own."""
 
     def attempt(cur, new_stage):
         if cur.get("partition_col", _ONE_COL) != _ONE_COL:
@@ -405,14 +414,16 @@ def committed_transaction(
         base = _read_keyed(spark, table_dir, cur) if cur["version"] else None
         merged = compute(base)
         stage = new_stage()
-        return _next_manifest(
+        m = _next_manifest(
             cur, "rewrite", stage,
             partition_col=_ONE_COL,
             partitions={_ONE_ENTRY: stage},
             dir_schemas=_write_one(merged, table_dir, stage),
         )
+        m["batch_ids"] = list(covers)
+        return m
 
-    transact(table_dir, attempt, batch_id=batch_id)
+    return attempt
 
 
 def _json_stat(v):
@@ -2025,10 +2036,15 @@ def compact_partition_table(
         {c for s in cur.get("stats", {}).values() for c in s["cols"]}
     ) or None
     # recompute blooms for rewritten entries so equality skipping keeps
-    # working across compactions; spec (m, k) inherited from the table
+    # working across compactions; the geometry (m, k) is the largest the
+    # table records — not the first in dict order, so one table whose
+    # entries carry different ``bloom_bits`` compacts alike either way
     blo = cur.get("bloom", {})
     bloom_cols = bloom_cols or sorted({c for e in blo.values() for c in e}) or None
-    bloom_spec = next((s for e in blo.values() for s in e.values()), None)
+    bloom_m, bloom_k = max(
+        ((s["m"], s["k"]) for e in blo.values() for s in e.values()),
+        default=(_BLOOM_BITS, _BLOOM_HASHES),
+    )
 
     def rewrite(base: DataFrame) -> DataFrame:
         out = base.filter(F.col(pcol).isin(values)).repartition(F.col(pcol))
@@ -2062,8 +2078,8 @@ def compact_partition_table(
         spark, table_dir, pcol, rewrite, affected=values,
         stats_cols=stats_cols, max_records_per_file=max_records_per_file,
         bloom_cols=bloom_cols,
-        bloom_bits=bloom_spec["m"] if bloom_spec else _BLOOM_BITS,
-        bloom_hashes=bloom_spec["k"] if bloom_spec else _BLOOM_HASHES,
+        bloom_bits=bloom_m,
+        bloom_hashes=bloom_k,
         # compaction rewrites only CURRENT-layout entries from
         # current-layout rows, so unmigrated legacy layouts are safe to
         # leave untouched
@@ -3544,11 +3560,18 @@ def maintain_incremental_agg(
     maintenance never breaks incremental refresh. A source commit
     vacuumed before it was folded also raises — its rows are
     unfoldable, so schedule maintenance inside the retention
-    window."""
+    window.
+
+    The cursor is the ledger's HIGHEST id: a refresh walks the source
+    in ascending order and stops at its first error, so every version
+    below a folded one was folded or skipped. Skipped versions after a
+    refresh's last fold ride that fold's commit as extra ledger ids, so
+    trailing metadata-only commits are not re-opened by every later
+    refresh."""
     applied = 0
     head = current_commit(source_dir)["version"]
     done = committed_batch_ids(dest_dir) if os.path.isdir(dest_dir) else set()
-    todo = [v for v in range(1, head + 1) if v not in done]
+    todo = list(range(max(done, default=0) + 1, head + 1))
     if not todo:
         return 0
     # open the unfolded range plus the nearest retained manifest below
@@ -3556,60 +3579,92 @@ def maintain_incremental_agg(
     retained = [int(n.split(".")[0]) for n in _manifest_names(source_dir)]
     lo = max((k for k in retained if k < todo[0]), default=todo[0])
     hist = _manifests_in(source_dir, lo, head)
-    for v in todo:
-        m = hist.get(v)
-        if m is None:
-            raise ValueError(
-                f"source commit {v} was vacuumed before it was folded; "
-                "recompute the aggregate from the current table instead"
-            )
-        op = m.get("op")
-        if op == "rewrite" and m.get("data_change") is False:
-            continue  # compaction: restatement, nothing to fold
-        # nearest RETAINED earlier manifest (same fallback as
-        # _check_map_stable): v-1 may be folded-and-vacuumed, and a
-        # stable carried map compared against a defaulted {} would
-        # falsely read as a rename and wedge the maintainer forever
-        # (r12 review sweep 3 #1)
-        earlier = [k for k in hist if k < v]
-        prev_m = hist[max(earlier)] if earlier else None
-        if prev_m is not None and any(
-            m.get(k) != prev_m.get(k) for k in _SCHEMA_MAP_KEYS
-        ):
-            # a RENAME/DROP COLUMN (or its materialize) changes the
-            # LOGICAL names the per-version deltas surface — folding
-            # across it would union old- and new-named measures as two
-            # NULL-padded columns and silently diverge from a recompute
-            # (r12 review sweep 2 #1). Folds resumed on a table whose
-            # map is stable (even non-empty) stay sound.
-            raise ValueError(
-                f"source commit {v} renamed/dropped columns; additive "
-                "incremental maintenance cannot span a schema rename — "
-                "recompute the aggregate from the current table instead"
-            )
-        if op not in ("append", "set-constraints", "evolve"):
-            # Refuse everything an additive fold cannot express: rewrites
-            # double-count, deletes/restores change state without add
-            # rows, a clone's base table hides behind an empty stage,
-            # and an UNTAGGED commit (pre-op manifest) could be any of
-            # those — raising beats silently wrong (re-land legacy
-            # sources, or recompute).
-            raise ValueError(
-                f"source commit {v} is {op!r} — additive incremental "
-                "maintenance is only sound over append-only history; "
-                "recompute the aggregate from the current table instead"
-            )
-        delta = _added_rows(spark, source_dir, {v: m}, v - 1, v)
-        if delta is None:
-            continue  # metadata-only commit: nothing to fold
-        committed_transaction(
-            spark,
+    fold = None  # (version, delta, skipped versions after it)
+
+    def commit_fold():
+        v, delta, skipped = fold
+        transact(
             dest_dir,
-            lambda base, d=delta: merge(base, agg(d.drop("_commit_version"))),
+            _whole_table_attempt(
+                spark, dest_dir,
+                lambda base: merge(base, agg(delta.drop("_commit_version"))),
+                covers=skipped,
+            ),
             batch_id=v,
         )
+
+    for v in todo:
+        try:
+            delta = _foldable_rows(spark, source_dir, hist, v)
+        except Exception:
+            if fold is not None:
+                commit_fold()  # the folds before an error still commit
+            raise
+        if delta is None:
+            if fold is not None:
+                fold[2].append(v)
+            continue
+        if fold is not None:
+            commit_fold()
+            applied += 1
+        fold = (v, delta, [])
+    if fold is not None:
+        commit_fold()
         applied += 1
     return applied
+
+
+def _foldable_rows(
+    spark: SparkSession, source_dir: str, hist: dict, v: int
+) -> DataFrame | None:
+    """The rows source commit ``v`` adds for `maintain_incremental_agg`
+    to fold, or None when it folds nothing (a restatement or a
+    metadata-only commit); raises on every commit an additive fold
+    cannot express. ``hist`` holds the retained manifests from the
+    nearest one below the unfolded range up to the head."""
+    m = hist.get(v)
+    if m is None:
+        raise ValueError(
+            f"source commit {v} was vacuumed before it was folded; "
+            "recompute the aggregate from the current table instead"
+        )
+    op = m.get("op")
+    if op == "rewrite" and m.get("data_change") is False:
+        return None  # compaction: restatement, nothing to fold
+    # nearest RETAINED earlier manifest (same fallback as
+    # _check_map_stable): v-1 may be folded-and-vacuumed, and a stable
+    # carried map compared against a defaulted {} would falsely read as
+    # a rename and wedge the maintainer forever (r12 review sweep 3 #1)
+    earlier = [k for k in hist if k < v]
+    prev_m = hist[max(earlier)] if earlier else None
+    if prev_m is not None and any(
+        m.get(k) != prev_m.get(k) for k in _SCHEMA_MAP_KEYS
+    ):
+        # a RENAME/DROP COLUMN (or its materialize) changes the LOGICAL
+        # names the per-version deltas surface — folding across it would
+        # union old- and new-named measures as two NULL-padded columns
+        # and silently diverge from a recompute (r12 review sweep 2 #1).
+        # Folds resumed on a table whose map is stable (even non-empty)
+        # stay sound.
+        raise ValueError(
+            f"source commit {v} renamed/dropped columns; additive "
+            "incremental maintenance cannot span a schema rename — "
+            "recompute the aggregate from the current table instead"
+        )
+    if op not in ("append", "set-constraints", "evolve"):
+        # Refuse everything an additive fold cannot express: rewrites
+        # double-count, deletes/restores change state without add rows,
+        # a clone's base table hides behind an empty stage, and an
+        # UNTAGGED commit (pre-op manifest) could be any of those —
+        # raising beats silently wrong (re-land legacy sources, or
+        # recompute).
+        raise ValueError(
+            f"source commit {v} is {op!r} — additive incremental "
+            "maintenance is only sound over append-only history; "
+            "recompute the aggregate from the current table instead"
+        )
+    # None: a metadata-only commit, nothing to fold
+    return _added_rows(spark, source_dir, {v: m}, v - 1, v)
 
 
 def _entry_dirs(v) -> list[str]:
@@ -3978,9 +4033,9 @@ def _merge_cond(cond, default: bool) -> "F.Column":
 
 
 def _materialize_decision(dec: DataFrame) -> DataFrame:
-    """Materialize a DML decision frame ONCE for its 2-4 consumers (the
-    action rollup, the stage write, the tombstone keys, the CDC
-    images).
+    """Materialize a DML decision frame ONCE for its 1-3 consumers (the
+    stage write, the tombstone keys, the CDC images); the action rollup
+    is observed on this same job (`_observed_rollup`).
 
     localCheckpoint(eager) instead of the old scratch-parquet round
     trip: identical materialize-once semantics — consumers read stored
@@ -4129,6 +4184,65 @@ def _key_bounds(df: DataFrame, keys: list[str], pkeys: list[str]) -> dict:
     }
 
 
+_ACTIONS = ("carry", "update", "delete", "insert")
+
+
+def _observed_rollup(dec: DataFrame, pcol: str, keys, name: str):
+    """Attach the per-partition action rollup to the decision frame
+    ``dec`` as ONE named Observation, so it rides the frame's
+    materialization job instead of running its own groupBy jobs.
+    Observed: ``collect_set`` of the non-carry ``(_action, _t_part,
+    partition value, key-is-NULL)`` tuples — bounded by the partition
+    domain, the repo's sanctioned bounded-collect shape — and a
+    ``count_if`` per action. ``name`` must be unique per attempt.
+
+    Returns ``(observed frame, read)``. ``read()`` — call it only after
+    an action on the observed frame has returned, or it waits forever —
+    gives ``(counts, upd_in, ins_in, del_in, moved_out, null_del)``:
+    the committed counts (`_dml_result`'s fields), the partitions
+    receiving updated and inserted rows, the partitions losing deleted
+    rows, the partitions that updates moved rows out of, and the
+    partitions with key-less delete rows (no key — a predicate writer —
+    or a NULL merge key)."""
+    act = F.col("_action")
+    null_key = F.lit(not keys)
+    for k in keys:
+        null_key = null_key | F.col(k).isNull()
+    obs = Observation(name)
+    observed = dec.observe(
+        obs,
+        F.collect_set(
+            F.when(
+                act != "carry",
+                F.struct(act, "_t_part", F.col(pcol).alias("_p"), null_key),
+            )
+        ).alias("_parts"),
+        *[F.count_if(act == a).alias(a) for a in _ACTIONS],
+    )
+
+    def read():
+        m = obs.get
+        upd_in, ins_in, del_in, moved_out, null_del = (set() for _ in range(5))
+        for a, t_part, p, kn in m["_parts"]:
+            if a == "update":
+                upd_in.add(p)
+                if p != t_part:
+                    moved_out.add(t_part)
+            elif a == "delete":
+                del_in.add(t_part)
+                if kn:
+                    null_del.add(t_part)
+            else:
+                ins_in.add(p)
+        counts = {
+            "updated": m["update"], "deleted": m["delete"],
+            "inserted": m["insert"], "carried": m["carry"],
+        }
+        return counts, upd_in, ins_in, del_in, moved_out, null_del
+
+    return observed, read
+
+
 def _dml_commit(
     spark: SparkSession,
     table_dir: str,
@@ -4148,9 +4262,10 @@ def _dml_commit(
     ``_action`` (carry / update / delete / insert), ``_t_part`` (the
     target row's partition; NULL for inserts) and, when it can hold
     updates, ``_pre`` (their before-image struct) — and this commits
-    it: action rollup → rewrite / extend / tombstone partition sets
-    (`merge_into_table`'s scale shape) → stage → CHECK constraints →
-    deletion vectors → CDC sidecar → a manifest tagged ``op``.
+    it: materialization with its observed action rollup → rewrite /
+    extend / tombstone partition sets (`merge_into_table`'s scale
+    shape) → stage → CHECK constraints → deletion vectors → CDC
+    sidecar → a manifest tagged ``op``.
     ``scan_parts`` are the entries the frame scanned, ``keys`` the
     merge keys — empty for the predicate writers, whose deletes no key
     addresses, so their partitions rewrite instead of tombstoning.
@@ -4172,47 +4287,15 @@ def _dml_commit(
     dv_stage = None
     cdc_stage = None
     try:
+        # the action rollup rides the materialization job; its values
+        # are read only once that job has returned, so a failed job
+        # raises here and never waits on metrics
+        dec, rollup = _observed_rollup(dec, pcol, keys, f"rollup-{stage}")
         dec = _materialize_decision(dec)
-
-        # per-partition action rollup — bounded by the partition
-        # domain (the repo's sanctioned bounded-collect shape)
-        null_key = F.lit(not keys)
-        for k in keys:
-            null_key = null_key | F.col(k).isNull()
-        rollup = (
-            dec.groupBy(
-                "_action", "_t_part", F.col(pcol).alias("_p"),
-                null_key.alias("_kn"),
-            )
-            .count()
-            .collect()
+        counts, upd_in, ins_in, del_in, moved_out, null_del = rollup()
+        n_upd, n_del, n_ins = (
+            counts["updated"], counts["deleted"], counts["inserted"]
         )
-        upd_in, ins_in, del_in, moved_out = set(), set(), set(), set()
-        null_del = set()  # partitions with key-less delete rows
-        n_upd = n_del = n_ins = n_carry = 0
-        for r in rollup:
-            if r._action == "carry":
-                n_carry += r["count"]
-            elif r._action == "update":
-                n_upd += r["count"]
-                upd_in.add(r._p)
-                if r._p != r._t_part:
-                    moved_out.add(r._t_part)
-            elif r._action == "delete":
-                n_del += r["count"]
-                del_in.add(r._t_part)
-                if r._kn:
-                    # no key (a predicate writer) or a NULL merge key
-                    # cannot be expressed as a key tombstone: the
-                    # read-side anti-join on NULL matches nothing, so
-                    # the "deleted" row would silently survive (and
-                    # poison the dv key files for the typed stream
-                    # reader) — force the partition to rewrite instead
-                    # (ADVICE r10)
-                    null_del.add(r._t_part)
-            else:
-                n_ins += r["count"]
-                ins_in.add(r._p)
         # Inserts do NOT force a rewrite by themselves (VERDICT r10
         # #3 — Delta appends new files for pure inserts): a scanned
         # partition whose only change is arrivals of NEW keys takes
@@ -4253,6 +4336,12 @@ def _dml_commit(
                 rewrite_vals |= {
                     e.split("=", 1)[1] for e in stale
                 }
+        # a key-less delete (no key — a predicate writer — or a NULL
+        # merge key) cannot be expressed as a key tombstone: the
+        # read-side anti-join on NULL matches nothing, so the "deleted"
+        # row would silently survive (and poison the dv key files for
+        # the typed stream reader) — its partition rewrites instead
+        # (ADVICE r10)
         rewrite_vals |= null_del & del_in
         cand = del_in - rewrite_vals
         if cand:
@@ -4427,7 +4516,9 @@ def _dml_commit(
             # empty commits; so do we
             if n_upd or n_del or n_ins:
                 raise AssertionError("actions counted but nothing staged")
-            res["noop"] = {"version": cur["version"], "carried": n_carry}
+            res["noop"] = {
+                "version": cur["version"], "carried": counts["carried"],
+            }
             return None
 
         # ---- CDC sidecar (Delta's _change_data files) ----
@@ -4478,10 +4569,7 @@ def _dml_commit(
             cdc_rows.write.mode("overwrite").parquet(
                 os.path.join(table_dir, cdc_stage)
             )
-        res["counts"] = {
-            "updated": n_upd, "deleted": n_del, "inserted": n_ins,
-            "carried": n_carry,
-        }
+        res["counts"] = counts
         return _next_manifest(
             cur, op,
             # a delete-only merge stages no data files: anchor the
@@ -4562,9 +4650,10 @@ def merge_into_table(
     each key-group sees the other side via a window max/count, and
     every clause evaluates in that single pass. The decision frame is
     materialized once (_materialize_decision: eager localCheckpoint),
-    then three cheap consumers (a per-partition action rollup — bounded
-    by the partition domain — the stage write, and the tombstone keys)
-    read the stored blocks without recomputing the window.
+    and that one job also yields the per-partition action rollup — an
+    Observation bounded by the partition domain (`_observed_rollup`);
+    the cheap consumers (the stage write, the tombstone keys, the CDC
+    images) read the stored blocks without recomputing the window.
 
     Scale shape (the Delta MERGE cost model at partition granularity):
 

@@ -1,8 +1,9 @@
 """Per-job profile of one or more registered queries (guide §1/§7).
 
-Runs each named query with the Spark UI enabled, then reads the UI REST
-API to print every Spark job's wall time, its description, and the gaps
-between jobs (driver-side time: planning, commit protocol, py4j).
+Runs each named query in the engine's own session (`session.get_spark`),
+then reads the driver's status store — kept with the UI off — to print
+every Spark job's wall time, its description, and the gaps between jobs
+(driver-side time: planning, commit protocol, py4j).
 
 Usage: python tools/profile_query.py <query> [query ...]
        SPARK_GRAFT_SF_DIR / SPARK_GRAFT_CPUS honored as in bench.py.
@@ -13,54 +14,33 @@ breakdown maps 1:1 onto the bench numbers.
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
-from datetime import datetime, timezone
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from nshm2022db_spark.session import get_spark  # noqa: E402
 
 
-def _get_spark_with_ui() -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    builder = (
-        SparkSession.builder.master(f"local[{cpus}]")
-        .appName("profile")
-        .config("spark.sql.shuffle.partitions", str(cpus))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "16g"))
-        .config("spark.ui.enabled", "true")
-        .config("spark.ui.retainedJobs", "5000")
-        .config("spark.ui.showConsoleProgress", "false")
-        .config("spark.sql.warehouse.dir", "/tmp/spark-warehouse")
-        .config("spark.driver.extraJavaOptions", "-Dderby.system.home=/tmp/derby")
-    )
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    return spark
-
-
-def _ui_jobs(spark) -> list[dict]:
-    ui = spark.sparkContext.uiWebUrl
-    app = spark.sparkContext.applicationId
-    with urllib.request.urlopen(f"{ui}/api/v1/applications/{app}/jobs?status=succeeded") as r:
-        return json.loads(r.read())
-
-
-def _ms(ts: str) -> float:
-    # "2026-08-17T11:22:33.123GMT"
-    t = ts.replace("GMT", "+00:00")
-    return datetime.fromisoformat(t).replace(tzinfo=timezone.utc).timestamp() * 1000
+def _jobs(spark) -> list[dict]:
+    """Every job the status store still holds: id, submission and
+    completion times (epoch ms; completion None while running), stage
+    and task counts, and its description."""
+    seq = spark.sparkContext._jsc.sc().statusStore().jobsList(None)
+    out = []
+    for i in range(seq.size()):
+        jd = seq.apply(i)
+        sub, done, desc = jd.submissionTime(), jd.completionTime(), jd.description()
+        out.append({
+            "jobId": jd.jobId(),
+            "submissionTime": sub.get().getTime() if sub.isDefined() else None,
+            "completionTime": done.get().getTime() if done.isDefined() else None,
+            "stages": jd.stageIds().size(),
+            "numTasks": jd.numTasks(),
+            "description": desc.get() if desc.isDefined() else jd.name(),
+        })
+    return out
 
 
 def main() -> None:
@@ -70,7 +50,7 @@ def main() -> None:
         print("usage: profile_query.py <query> [query ...]")
         raise SystemExit(2)
 
-    spark = _get_spark_with_ui()
+    spark = get_spark("profile_query")
 
     import __spark_entry__ as mod
 
@@ -85,7 +65,7 @@ def main() -> None:
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
         spark.catalog.clearCache()
         gc.collect()
-        seen = {j["jobId"] for j in _ui_jobs(spark)}
+        seen = {j["jobId"] for j in _jobs(spark)}
         t_lo = time.time() * 1000
         t0 = time.perf_counter()
         fn(spark, sf_dir).write.mode("overwrite").format("noop").save()
@@ -93,10 +73,11 @@ def main() -> None:
         t_hi = time.time() * 1000
         spark.catalog.clearCache()
         gc.collect()
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
         jobs = [
             j
-            for j in _ui_jobs(spark)
-            if j["jobId"] not in seen and "completionTime" in j
+            for j in _jobs(spark)
+            if j["jobId"] not in seen and j["completionTime"] is not None
         ]
         jobs.sort(key=lambda j: j["submissionTime"])
 
@@ -105,17 +86,16 @@ def main() -> None:
         total_job = 0.0
         total_gap = 0.0
         for j in jobs:
-            sub = _ms(j["submissionTime"])
-            end = _ms(j["completionTime"])
+            sub = j["submissionTime"]
+            end = j["completionTime"]
             dur = (end - sub) / 1000.0
             gap = max(0.0, (sub - prev_end) / 1000.0)
             total_job += dur
             total_gap += gap
-            desc = (j.get("description") or j.get("name") or "")[:100]
             print(
                 f"  job {j['jobId']:>4}  gap {gap:6.3f}  dur {dur:6.3f}  "
-                f"stages {len(j.get('stageIds', [])):>2} "
-                f"tasks {j.get('numTasks', 0):>4}  {desc}"
+                f"stages {j['stages']:>2} "
+                f"tasks {j['numTasks']:>4}  {(j['description'] or '')[:100]}"
             )
             prev_end = end
         tail = max(0.0, (t_hi - prev_end) / 1000.0)
