@@ -256,7 +256,8 @@ def transact(table_dir: str, attempt, *, batch_id=None, rebase=None):
     already in the log makes the whole transaction a no-op (replayed
     micro-batch idempotence); otherwise ``attempt(cur, new_stage)``
     returns the successor manifest, or None when there is nothing to
-    commit. ``new_stage(kind="data")`` names a fresh ``{kind}-<uuid>``
+    commit, and the manifest records ``batch_id`` ahead of any ids the
+    attempt put in its ``batch_ids``. ``new_stage(kind="data")`` names a fresh ``{kind}-<uuid>``
     dir owned by this transaction. A manifest whose ``dir`` is one of
     them publishes through `_publish`; any other manifest (a catalog
     vector, a restore of committed dirs) is stage-less and CASes
@@ -402,8 +403,9 @@ def committed_transaction(
 
 
 def _whole_table_attempt(spark, table_dir: str, compute, covers=()):
-    """`committed_transaction`'s attempt; its manifest also records the
-    batch ids ``covers`` beside the transaction's own."""
+    """`committed_transaction`'s attempt: refuse a partitioned table,
+    then stage ``compute(base)`` as the one entry. Its manifest also
+    records the batch ids ``covers`` beside the transaction's own."""
 
     def attempt(cur, new_stage):
         if cur.get("partition_col", _ONE_COL) != _ONE_COL:
@@ -4184,9 +4186,6 @@ def _key_bounds(df: DataFrame, keys: list[str], pkeys: list[str]) -> dict:
     }
 
 
-_ACTIONS = ("carry", "update", "delete", "insert")
-
-
 def _observed_rollup(dec: DataFrame, pcol: str, keys, name: str):
     """Attach the per-partition action rollup to the decision frame
     ``dec`` as ONE named Observation, so it rides the frame's
@@ -4217,7 +4216,10 @@ def _observed_rollup(dec: DataFrame, pcol: str, keys, name: str):
                 F.struct(act, "_t_part", F.col(pcol).alias("_p"), null_key),
             )
         ).alias("_parts"),
-        *[F.count_if(act == a).alias(a) for a in _ACTIONS],
+        *[
+            F.count_if(act == a).alias(a)
+            for a in ("carry", "update", "delete", "insert")
+        ],
     )
 
     def read():

@@ -7063,7 +7063,7 @@ class TestOneTableKind:
         assert found == []
         assert sites == {
             ("sinks.py", "_read_partition_map"),
-            ("sinks.py", "committed_transaction"),
+            ("sinks.py", "_whole_table_attempt"),
             ("sinks.py", "_check_partitioned"),
             ("sinks.py", "_read_keyed"),
             ("sinks.py", "_mor_view"),
