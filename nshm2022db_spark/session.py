@@ -9,7 +9,7 @@ One setting changes no plan, only the driver's bookkeeping: PySpark's
 DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``) is
 off. With it on, every ``pyspark.sql.functions`` call and Column method
 walks the Python stack and makes 4-6 extra py4j round trips to record its
-call site — about half of a `revise` round's 6,400 round trips (PERF.md).
+call site — over half of a `revise` round's ~6,300 round trips (PERF.md).
 The cost: a runtime error (ANSI cast, ``raise_error``, divide by zero) no
 longer names the ``file:line`` of the Column call in its "DataFrame query
 context". PySpark reads the flag once per process
