@@ -3636,7 +3636,7 @@ def _foldable_rows(
     # nearest RETAINED earlier manifest (same fallback as
     # _check_map_stable): v-1 may be folded-and-vacuumed, and a stable
     # carried map compared against a defaulted {} would falsely read as
-    # a rename and wedge the maintainer forever (r12 review sweep 3 #1)
+    # a rename and wedge the maintainer forever
     earlier = [k for k in hist if k < v]
     prev_m = hist[max(earlier)] if earlier else None
     if prev_m is not None and any(
@@ -3645,9 +3645,8 @@ def _foldable_rows(
         # a RENAME/DROP COLUMN (or its materialize) changes the LOGICAL
         # names the per-version deltas surface — folding across it would
         # union old- and new-named measures as two NULL-padded columns
-        # and silently diverge from a recompute (r12 review sweep 2 #1).
-        # Folds resumed on a table whose map is stable (even non-empty)
-        # stay sound.
+        # and silently diverge from a recompute. Folds resumed on a table
+        # whose map is stable (even non-empty) stay sound.
         raise ValueError(
             f"source commit {v} renamed/dropped columns; additive "
             "incremental maintenance cannot span a schema rename — "
