@@ -36,6 +36,7 @@ multi-table pipelines exactly because it never touches data.
 from __future__ import annotations
 
 import os
+import re
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -47,6 +48,7 @@ from nshm2022db_spark.streaming.sinks import (
     _COMMITS,
     _manifest_names,
     _read_json,
+    _resolve_manifest,
     current_commit,
     transact,
 )
@@ -125,15 +127,10 @@ def catalog_publish(
     return transact(catalog_dir, attempt)
 
 
-_TAG_NAME_RE = None  # compiled lazily; module avoids importing re at top
+_TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
 
 
 def _check_tag_name(name: str) -> None:
-    global _TAG_NAME_RE
-    if _TAG_NAME_RE is None:
-        import re
-
-        _TAG_NAME_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
     if not isinstance(name, str) or not _TAG_NAME_RE.match(name):
         raise ValueError(
             f"invalid tag name {name!r}: use letters, digits, '.', '_', '-'"
@@ -478,17 +475,18 @@ def catalog_at(
     historical vector, every table at the version that was live
     together.
 
-    Retention is the boundary, same contract as per-table time travel:
-    a version ``catalog_vacuum`` retired REFUSES (ValueError) rather
-    than silently serving a neighbor — the retained manifests tell us
-    exactly whether the requested instant predates the earliest one.
-    Version 0 / an instant before the first publish resolve to the
-    empty pre-publish vector only when version 1 is still retained
-    (i.e. nothing was vacuumed out from under the request).
+    ``version`` and ``as_of`` resolve by per-table time travel's own
+    rule (sinks' `_resolve_manifest`): a version or an instant behind
+    the retention boundary — ``catalog_vacuum`` retired it, or a
+    tag-pinned gap may hide it — REFUSES (ValueError) rather than
+    silently serving a neighbor, and version 0 or an instant before the
+    first publish is the empty pre-publish vector only while version 1
+    is retained.
 
-    O(manifests): resolves purely on the tiny JSON log, no data read;
-    the returned vector feeds ``read_catalog_table(snapshot=...)`` so
-    all per-table pruning applies unchanged.
+    A ``version`` opens one manifest; ``as_of`` walks the tiny JSON log
+    newest first. No data is read: the returned vector feeds
+    ``read_catalog_table(snapshot=...)`` so all per-table pruning
+    applies unchanged.
 
     ``tag`` resolves a NAMED ref (catalog_tag) through the CURRENT
     head's ref map — Iceberg's semantics: refs are live names, always
@@ -516,64 +514,8 @@ def catalog_at(
         if tag not in refs:
             raise ValueError(f"tag {tag!r} does not exist in {catalog_dir}")
         version = int(refs[tag])
-    log = os.path.join(catalog_dir, _COMMITS)
-    names = _manifest_names(catalog_dir)
-    earliest = int(names[0].split(".")[0]) if names else 1
-    head = int(names[-1].split(".")[0]) if names else 0
-    if version is not None:
-        if version == 0 and earliest <= 1:
-            return {"version": 0, "tables": {}}
-        if version < earliest:
-            raise ValueError(
-                f"catalog version {version} was vacuumed from {catalog_dir}; "
-                f"earliest retained is {earliest}"
-            )
-        if version > head:
-            raise ValueError(
-                f"catalog version {version} not committed yet in "
-                f"{catalog_dir}; head is {head}"
-            )
-        m = _read_json(os.path.join(log, f"{version:020d}.json"))
-        if m is None:  # unlinked by a concurrent vacuum after our listing
-            raise ValueError(
-                f"catalog version {version} was vacuumed from {catalog_dir}"
-            )
-        return m
-    best = None
-    next_retained = None  # smallest retained version ABOVE best
-    for n in names:
-        m = _read_json(os.path.join(log, n))
-        if m is None:
-            continue
-        ts = m.get("committed_at")
-        if ts is not None and ts <= as_of:
-            if best is None or m["version"] > best["version"]:
-                best = m
-                next_retained = None
-        elif best is not None and next_retained is None:
-            next_retained = m["version"]
-    if best is not None:
-        # Tag-pinned retention leaves GAPS in the manifest sequence. If
-        # the version right after the match was dropped, a dropped
-        # manifest may have been the live vector at ``as_of`` — serving
-        # the older tagged neighbor would be a silently-wrong AS OF, so
-        # refuse exactly like the prefix boundary does. (names are
-        # version-sorted, so the first retained manifest above the
-        # match bounds the gap.)
-        nxt = next_retained if next_retained is not None else head + 1
-        if nxt > best["version"] + 1 and best["version"] < head:
-            raise ValueError(
-                f"catalog state as of {as_of} may be a vacuumed version in "
-                f"({best['version']}, {nxt}) of {catalog_dir}; the retained "
-                "neighbor cannot stand in for it"
-            )
-        return best
-    if earliest <= 1:
-        return {"version": 0, "tables": {}}  # instant predates first publish
-    raise ValueError(
-        f"catalog state as of {as_of} was vacuumed from {catalog_dir}; "
-        f"earliest retained version is {earliest}"
-    )
+    m = _resolve_manifest(catalog_dir, version, as_of)
+    return {"version": 0, "tables": {}} if m is None else m
 
 
 def read_catalog_table(

@@ -22,8 +22,10 @@ protocol is explicit and minimal — the same model those formats use:
     replayed micro-batch (restart between write and checkpoint commit)
     sees its id already committed and no-ops — idempotent end-to-end,
   * readers resolve the max committed manifest and only ever see a
-    fully-written version; the `_CURRENT` file is a non-authoritative
-    hint beside the log.
+    fully-written version. A read of anything but the head goes through
+    one resolver (`_resolve_manifest`: a version or an AS OF instant,
+    refused behind the retention boundary) or one range read
+    (`_manifests_in`).
 
 Every table is a PARTITION MAP (``partition_col`` + ``partitions`` +
 ``op`` in each manifest). A keyed table that commits its whole state at
@@ -66,7 +68,6 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming import StreamingQuery
 
-_POINTER = "_CURRENT"
 _COMMITS = "_commits"
 # the one entry of a table that commits its whole state at once: its
 # data lives under ``{stage}/_one=0`` and `_read_partition_map` never
@@ -74,17 +75,6 @@ _COMMITS = "_commits"
 # columns only
 _ONE_COL = "_one"
 _ONE_ENTRY = f"{_ONE_COL}=0"
-
-
-def _write_hint(table_dir: str, manifest: dict) -> None:
-    """Non-authoritative `_CURRENT` hint (atomic replace). The commit log
-    is the source of truth; the hint is written for a head resolution
-    that starts from it. Two racing hint writes can land out of order —
-    harmless, because the log scan always wins."""
-    fd, tmp = tempfile.mkstemp(dir=table_dir, prefix="_hint-tmp-")
-    with os.fdopen(fd, "w") as f:
-        json.dump(manifest, f)
-    os.replace(tmp, os.path.join(table_dir, _POINTER))
 
 
 def _is_manifest(name: str) -> bool:
@@ -225,8 +215,8 @@ def _publish(table_dir: str, manifest: dict, stage_path: str) -> bool:
     """CAS-publish a manifest anchored on a staged dir: refresh the
     stage mtime so vacuum's grace window restarts, link the manifest
     (the CAS), fail LOUDLY un-publishing if a misconfigured vacuum
-    deleted the stage in the race window, then write the hint and roll
-    the batch-id ledger. Returns False on a version conflict."""
+    deleted the stage in the race window. Returns False on a version
+    conflict."""
     os.utime(stage_path)
     if not try_commit(table_dir, manifest):
         return False
@@ -239,8 +229,6 @@ def _publish(table_dir: str, manifest: dict, stage_path: str) -> bool:
             f"commit on {table_dir}; raise vacuum grace_sec above the "
             "max writer stall"
         )
-    _write_hint(table_dir, manifest)
-    _maybe_checkpoint_ledger(table_dir, manifest["version"])
     return True
 
 
@@ -261,7 +249,8 @@ def transact(table_dir: str, attempt, *, batch_id=None, rebase=None):
     dir owned by this transaction. A manifest whose ``dir`` is one of
     them publishes through `_publish`; any other manifest (a catalog
     vector, a restore of committed dirs) is stage-less and CASes
-    directly.
+    directly. Every published table manifest, staged or not, then rolls
+    the batch-id ledger (`_maybe_checkpoint_ledger`).
 
     A lost CAS deletes the attempt's stages and retries against the
     winner — unless ``rebase`` is given: the stages are then kept, and
@@ -314,6 +303,8 @@ def transact(table_dir: str, attempt, *, batch_id=None, rebase=None):
                 raise
             if won:
                 staged.clear()  # published: the stages are live table data
+                if "batch_ids" in manifest:  # a table's, not a catalog's
+                    _maybe_checkpoint_ledger(table_dir, manifest["version"])
                 return manifest
             if rebase is None:
                 drop_stages()
@@ -1515,10 +1506,10 @@ def _rebase_conflict(
     ):
         if head.get(k) != base.get(k):
             return f"{k} changed"
-    log = os.path.join(table_dir, _COMMITS)
+    by_v = _manifests_in(table_dir, base["version"] + 1, head["version"])
     prev = base.get("partitions", {})
     for v in range(base["version"] + 1, head["version"] + 1):
-        m = _read_json(os.path.join(log, f"{v:020d}.json"))
+        m = by_v.get(v)
         if m is None:
             return f"manifest {v} vacuumed mid-race"
         if m.get("op") not in ("append", "merge", "update", "delete"):
@@ -2711,11 +2702,8 @@ def clone_table_shallow(
     source can break clones made from its history (documented trade;
     deep-copy by reading+landing when that matters). Cloning a
     specific ``version`` time-travels the clone's starting point."""
-    if version is None:
-        src = current_commit(src_dir)  # O(1): the newest manifest
-    else:
-        src = _manifest_at(src_dir, version)
-    if src.get("version", 0) == 0:
+    src = _resolve_manifest(src_dir, version)
+    if src is None:
         raise ValueError(f"{src_dir} has no commits to clone")
     _check_partitioned(src_dir, src)
     if src.get("legacy_layouts"):
@@ -2770,7 +2758,9 @@ def restore_table_version(table_dir: str, version: int) -> int:
     Concurrency-safe via the same CAS: losing the race means someone
     else committed meanwhile — the restore retries against the new head
     so the restored state is always the caller's requested snapshot."""
-    target = _manifest_at(table_dir, version)
+    target = _resolve_manifest(table_dir, version)
+    if target is None:
+        raise ValueError(f"{table_dir} has no version {version} to restore")
 
     def _missing_dirs() -> list[str]:
         return [
@@ -2809,8 +2799,6 @@ def restore_table_version(table_dir: str, version: int) -> int:
             f"({gone[0]} deleted after commit); restore the "
             "table to a live version"
         )
-    _write_hint(table_dir, manifest)
-    _maybe_checkpoint_ledger(table_dir, manifest["version"])
     return manifest["version"]
 
 
@@ -2897,15 +2885,8 @@ def vacuum_uncommitted(table_dir: str, grace_sec: float = 3600.0) -> list[str]:
     failed transaction, never a manifest pointing at missing data."""
     log = os.path.join(table_dir, _COMMITS)
     referenced = set()
-    try:
-        for n in os.listdir(log):
-            if _is_manifest(n):
-                m = _read_json(os.path.join(log, n))
-                if m is None:  # unlinked by a concurrent retention vacuum
-                    continue
-                referenced.update(_manifest_dirs(m))
-    except FileNotFoundError:
-        pass
+    for m in _manifests_in(table_dir).values():
+        referenced.update(_manifest_dirs(m))
     removed = []
     now = time.time()
     for n in os.listdir(table_dir):
@@ -2933,9 +2914,8 @@ def vacuum_uncommitted(table_dir: str, grace_sec: float = 3600.0) -> list[str]:
             and os.path.isfile(p)
             and now - os.path.getmtime(p) > grace_sec
         ):
-            # a writer that crashed inside _write_hint between mkstemp
-            # and os.replace leaves this orphan — same grace-window
-            # sweep as the _commits/*.tmp case
+            # a torn `_CURRENT` hint write, which older writers made
+            # (readers never read the hint); swept like *.tmp below
             os.unlink(p)
             removed.append(n)
     # A writer that crashes between mkstemp and try_commit's finally
@@ -2958,24 +2938,10 @@ def vacuum_uncommitted(table_dir: str, grace_sec: float = 3600.0) -> list[str]:
     return removed
 
 
-def _manifest_at(table_dir: str, version: int) -> dict:
-    """Committed manifest ``version``: one file open, not a log scan.
-    Raises when it was never committed or has been vacuumed."""
-    m = _read_json(os.path.join(table_dir, _COMMITS, f"{version:020d}.json"))
-    if m is None:
-        raise ValueError(f"version {version} not committed in {table_dir}")
-    return m
-
-
 def table_history(table_dir: str) -> list[dict]:
     """All committed manifests, oldest first — the audit trail a real
     table format exposes as DESCRIBE HISTORY."""
-    out = []
-    for n in _manifest_names(table_dir):
-        m = _read_json(os.path.join(table_dir, _COMMITS, n))
-        if m is not None:  # dropped by a concurrent retention vacuum
-            out.append(m)
-    return out
+    return list(_manifests_in(table_dir).values())
 
 
 def read_table_changes(
@@ -3015,7 +2981,7 @@ def _added_rows(
 ) -> DataFrame | None:
     """`read_table_changes` over the range's retained manifests
     ``by_v``: the rows each data-changing commit added."""
-    dirs = None
+    earlier = None
     out = None
     for v, m in by_v.items():
         if m.get("op") == "restore":
@@ -3023,13 +2989,12 @@ def _added_rows(
         if "op" not in m:
             # a pre-op manifest is an untagged RESTORE when it re-publishes
             # an earlier commit's dir; only the earlier log can tell, so
-            # legacy histories (and only they) parse it, once
-            if dirs is None:
-                dirs = [
-                    (h["version"], h.get("dir"))
-                    for h in table_history(table_dir)
-                ]
-            if m.get("dir") in {d for k, d in dirs if k < v and d}:
+            # legacy histories (and only they) read it, once
+            if earlier is None:
+                earlier = _manifests_in(table_dir, hi=end)
+            if m.get("dir") in {
+                h.get("dir") for k, h in earlier.items() if k < v and h.get("dir")
+            }:
                 continue
         if m.get("op") == "rewrite" and m.get("data_change") is False:
             # compaction / Z-order / tombstone materialization: provably
@@ -3064,16 +3029,24 @@ def _added_rows(
     return _to_logical(out, by_v.get(end, {}))
 
 
-def _manifests_in(table_dir: str, lo: int, hi: int) -> dict:
-    """``{version: manifest}`` for the retained commits ``lo..hi`` — one
-    log listing plus one open per version in range, never a parse of
-    the whole log."""
+def _manifests_in(
+    table_dir: str, lo: int = 0, hi: float = math.inf, *, below: bool = False
+) -> dict:
+    """``{version: manifest}``, oldest first, for the retained commits
+    ``lo..hi`` (by default the whole log) — the one range read of the
+    commit log: one listing plus one open per version in range. With
+    ``below``, also the nearest retained commit under ``lo``: the
+    range's predecessor, which a diff base or `_is_materialize` needs
+    (it stands in for a vacuumed ``lo - 1``)."""
+    names = [(int(n.split(".")[0]), n) for n in _manifest_names(table_dir)]
+    picked = [n for v, n in names if lo <= v <= hi]
+    if below:
+        picked[:0] = [n for v, n in names if v < lo][-1:]
     out = {}
-    for n in _manifest_names(table_dir):
-        if lo <= int(n.split(".")[0]) <= hi:
-            m = _read_json(os.path.join(table_dir, _COMMITS, n))
-            if m is not None:  # dropped by a concurrent retention vacuum
-                out[m["version"]] = m
+    for n in picked:
+        m = _read_json(os.path.join(table_dir, _COMMITS, n))
+        if m is not None:  # dropped by a concurrent retention vacuum
+            out[m["version"]] = m
     return out
 
 
@@ -3135,15 +3108,16 @@ _IMAGE_OPS = ("append", "overwrite", "rewrite", "delete", "merge", "update")
 
 
 def _change_images(
-    table_dir: str, hist: list[dict], start: int, end: int, admit=None
+    table_dir: str, by_v: dict, start: int, end: int, admit=None
 ) -> list[dict]:
     """The ONE plan of the typed change feed for versions ``(start,
-    end]``: which row images each commit has, decided from the commit
-    log alone — metadata plus the delete-sized dv key files, never a
-    Spark job. `read_table_changes_typed` executes the images as Spark
-    reads; the commitlog stream (`table_source._typed_plan`,
-    `_plan_changes`) expands them into per-entry file units. Each
-    image is a dict:
+    end]`` over their manifests ``by_v`` (`_manifests_in` of the range
+    and its predecessor): which row images each commit has, decided
+    from the commit log alone — metadata plus the delete-sized dv key
+    files, never a Spark job. `read_table_changes_typed` executes the
+    images as Spark reads; the commitlog stream
+    (`table_source._typed_plan`, `_plan_changes`) expands them into
+    per-entry file units. Each image is a dict:
 
     * ``version``, ``ts`` (the manifest's ``committed_at``) and
       ``ctype`` (``insert``/``delete``; None for a CDC sidecar, whose
@@ -3164,7 +3138,6 @@ def _change_images(
     admission rules (the stream's column-mapping capture, the untyped
     stream's additive allow-list) without the planner branching on
     its caller."""
-    by_v = {m["version"]: m for m in hist}
     _require_retained(by_v, table_dir, start, end)
     images: list[dict] = []
     for v in range(start + 1, end + 1):
@@ -3383,17 +3356,15 @@ def read_table_changes_typed(
         current_commit(table_dir)["version"] if to_version is None
         else to_version
     )
-    # the range's manifests plus ``from_version`` itself, the first
-    # commit's diff base
-    by_v = _manifests_in(table_dir, from_version, hi)
+    # the range's manifests plus its predecessor, the first commit's
+    # diff base
+    by_v = _manifests_in(table_dir, from_version + 1, hi, below=True)
     out = None
 
     def dv_key_set(dirs: list[str], of: dict) -> DataFrame:
         return _read_dirs(spark, table_dir, of, dirs).distinct()
 
-    for im in _change_images(
-        table_dir, list(by_v.values()), from_version, hi
-    ):
+    for im in _change_images(table_dir, by_v, from_version, hi):
         version = F.lit(im["version"]).cast("long")
         if im["cdc"]:
             # the sidecar carries `_change_type` as a data column, so
@@ -3576,11 +3547,9 @@ def maintain_incremental_agg(
     todo = list(range(max(done, default=0) + 1, head + 1))
     if not todo:
         return 0
-    # open the unfolded range plus the nearest retained manifest below
-    # it (the rename check's base), never the whole log
-    retained = [int(n.split(".")[0]) for n in _manifest_names(source_dir)]
-    lo = max((k for k in retained if k < todo[0]), default=todo[0])
-    hist = _manifests_in(source_dir, lo, head)
+    # open the unfolded range plus its predecessor (the rename check's
+    # base), never the whole log
+    hist = _manifests_in(source_dir, todo[0], head, below=True)
     fold = None  # (version, delta, skipped versions after it)
 
     def commit_fold():
@@ -3852,40 +3821,72 @@ def _read_partition_map(
 
 def resolve_version_as_of(table_dir: str, as_of: float) -> int | None:
     """Latest committed version whose publish wall-clock is <= ``as_of``
-    (epoch seconds) — Delta's TIMESTAMP AS OF resolution. None when the
-    table had no commits yet at that time. Manifests record
-    ``committed_at`` once at publish (try_commit), so the mapping is
-    stable across restores and replays."""
-    # newest first: the first match is the latest such version, so a
-    # recent ``as_of`` opens a few manifests, not the whole log
-    for n in reversed(_manifest_names(table_dir)):
-        m = _read_json(os.path.join(table_dir, _COMMITS, n))
-        # a manifest with no publish timestamp (pre-feature) has no
-        # known place in time, so it can never RESOLVE an as_of —
-        # defaulting it to 0 would answer pre-creation instants with
-        # current data; None is a manifest a concurrent vacuum dropped
-        ts = None if m is None else m.get("committed_at")
-        if ts is not None and ts <= as_of:
-            return m["version"]
-    return None
+    (epoch seconds) — Delta's TIMESTAMP AS OF resolution, by
+    `_resolve_manifest`'s rule: None when the table had no commits yet
+    at that time, ValueError when the answer may be a vacuumed version.
+    Manifests record ``committed_at`` once at publish (try_commit), so
+    the mapping is stable across restores and replays."""
+    m = _resolve_manifest(table_dir, as_of=as_of)
+    return None if m is None else m["version"]
 
 
 def _resolve_manifest(
-    table_dir: str, version: int | None, as_of: float | None
+    table_dir: str, version: int | None = None, as_of: float | None = None
 ) -> dict | None:
-    """The manifest a read addresses: ``version``, the newest version
-    published at or before ``as_of``, or the head — None when there is
-    no such commit yet."""
-    if as_of is not None:
-        if version is not None:
-            raise ValueError("pass either version or as_of, not both")
-        version = resolve_version_as_of(table_dir, as_of)
-        if version is None:
-            return None
-    if version is None:
+    """The manifest a read addresses — ``version``, the newest version
+    published at or before ``as_of``, or (neither) the head — by the ONE
+    retention rule tables and the catalog share. None is the state
+    before the first commit (version 0, an earlier instant), served only
+    while version 1 is retained; an answer that may lie behind the
+    retention boundary raises rather than serve a neighbor, as Delta
+    refuses a timestamp before its earliest retained version.
+
+    A hit on ``version`` opens one file and lists nothing. ``as_of``
+    walks the log newest first to the first manifest published at or
+    before it; a manifest without ``committed_at`` (pre-feature) has no
+    known place in time and never resolves an instant. The match stands
+    only when its successor is retained: a gap above it (tag-pinned
+    catalog retention) may hide the version live at ``as_of``."""
+    if version is None and as_of is None:
         cur = current_commit(table_dir)
         return cur if cur["version"] else None
-    return _manifest_at(table_dir, version)
+    if version is not None and as_of is not None:
+        raise ValueError("pass either version or as_of, not both")
+    if as_of is None and version > 0:
+        m = _read_json(os.path.join(table_dir, _COMMITS, f"{version:020d}.json"))
+        if m is not None:
+            return m
+    names = _manifest_names(table_dir)
+    retained = [int(n.split(".")[0]) for n in names]
+    if as_of is not None:
+        above = None  # the retained version just above the walk
+        for v, n in zip(reversed(retained), reversed(names)):
+            m = _read_json(os.path.join(table_dir, _COMMITS, n))
+            if m is None:  # dropped by a concurrent retention vacuum
+                continue
+            ts = m.get("committed_at")
+            if ts is not None and ts <= as_of:
+                if above is not None and above > v + 1:
+                    raise ValueError(
+                        f"state of {table_dir} as of {as_of} may be a "
+                        f"vacuumed version in ({v}, {above}); the retained "
+                        "neighbor cannot stand in for it"
+                    )
+                return m
+            above = v
+    if retained[:1] in ([], [1]) and (as_of is not None or version == 0):
+        return None  # before the first commit, and version 1 is retained
+    if as_of is not None:
+        raise ValueError(
+            f"state of {table_dir} as of {as_of} was vacuumed; earliest "
+            f"retained version is {retained[0]}"
+        )
+    why = (
+        f"vacuumed, earliest retained is {retained[0]}"
+        if retained and 0 <= version <= retained[-1]
+        else f"the head is version {retained[-1] if retained else 0}"
+    )
+    raise ValueError(f"version {version} not committed in {table_dir}: {why}")
 
 
 def _read_manifest(
@@ -3935,9 +3936,9 @@ def read_keyed_table(
     """Resolve a committed version and read its partition map, or None
     before the first commit. ``version`` time-travels to an older
     snapshot (committed data dirs are immutable and never overwritten,
-    so every version stays readable until vacuumed away by a retention
-    policy — this repo never deletes committed versions). The head and
-    every older version share one read (`_read_manifest`).
+    so every version stays readable until `vacuum_versions` retires
+    it). The head and every older version share one read
+    (`_read_manifest`).
 
     ``prune`` — ``{col: (lo, hi)}`` inclusive bounds, ``{col:
     "notnull"}`` / ``{col: "null"}``, or ``{col: ("eq", value)}`` —
@@ -3955,7 +3956,8 @@ def read_keyed_table(
     ``as_of`` (epoch seconds) is TIMESTAMP AS OF time travel: the read
     resolves to the newest version published at or before that moment
     (None if the table didn't exist yet). Mutually exclusive with
-    ``version``."""
+    ``version``. Both resolve by `_resolve_manifest`'s retention rule:
+    a version or an instant behind the retention boundary raises."""
     m = _resolve_manifest(table_dir, version, as_of)
     if m is None:
         return None

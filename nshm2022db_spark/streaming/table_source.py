@@ -78,15 +78,24 @@ _KEYSET_CACHE: dict = {}
 _ADDITIVE_OPS = ("append", "set-constraints", "evolve")
 
 
-def _materialize_versions(hist: list[dict]) -> list[int]:
-    """Versions at which `materialize_column_mapping` re-based the
-    table's PHYSICAL names — delegates the detection to sinks'
-    `_is_materialize` so the batch feeds and the stream admission share
-    ONE definition of a map re-base (r13 review #2)."""
-    from nshm2022db_spark.streaming.sinks import _is_materialize
+def _plan_log(
+    table_dir: str, start: int, end: int, map_version: int
+) -> tuple[dict, list[int]]:
+    """The manifests a plan over ``(start, end]`` reads — the range up
+    to the captured ``map_version`` plus its predecessor
+    (`_manifests_in`), never the whole log — and the versions among
+    them at which `materialize_column_mapping` re-based the table's
+    PHYSICAL names. The detection is sinks' `_is_materialize`, so the
+    batch feeds and the stream admission share ONE definition of a map
+    re-base."""
+    from nshm2022db_spark.streaming.sinks import _is_materialize, _manifests_in
 
-    by_v = {m["version"]: m for m in hist}
-    return sorted(v for v, m in by_v.items() if _is_materialize(by_v, m))
+    by_v = _manifests_in(
+        table_dir, start + 1, max(end, map_version), below=True
+    )
+    return by_v, sorted(
+        v for v, m in by_v.items() if _is_materialize(by_v, m)
+    )
 
 
 def _check_stream_map(
@@ -154,10 +163,9 @@ def _plan_changes(
     stream's logical schema); a LATER map change raises (restart), and
     a materialize in range raises via `_check_map_stable` (it re-based
     the physical names, so one projection cannot span it)."""
-    from nshm2022db_spark.streaming.sinks import _change_images, table_history
+    from nshm2022db_spark.streaming.sinks import _change_images
 
-    hist = table_history(table_dir)
-    mats = _materialize_versions(hist)
+    by_v, mats = _plan_log(table_dir, start, end, map_version)
 
     def admit(m: dict) -> None:
         _check_stream_map(m, map_meta, map_version, table_dir, mats)
@@ -170,7 +178,7 @@ def _plan_changes(
             )
 
     out: list[dict] = []
-    for im in _change_images(table_dir, hist, start, end, admit):
+    for im in _change_images(table_dir, by_v, start, end, admit):
         for e, dirs in sorted(im["map"]["partitions"].items()):
             files = _entry_files(table_dir, dirs, e)
             if files:
@@ -226,14 +234,12 @@ def _typed_plan(
         _dv_keys,
         _parquet_files,
         _stats_prune,
-        table_history,
     )
 
-    hist = table_history(table_dir)
-    mats = _materialize_versions(hist)
+    by_v, mats = _plan_log(table_dir, start, end, map_version)
     units: list[dict] = []
     for im in _change_images(
-        table_dir, hist, start, end,
+        table_dir, by_v, start, end,
         lambda m: _check_stream_map(m, map_meta, map_version, table_dir, mats),
     ):
         if im["legacy"]:

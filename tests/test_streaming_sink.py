@@ -7425,3 +7425,147 @@ class TestVersionLookup:
         assert sorted(
             (r.day, r.n) for r in sinks.read_keyed_table(spark, dst).collect()
         ) == [("a", 1), ("b", 1)]
+
+    def test_as_of_behind_retention_refuses(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """Past the retention boundary a version or an AS OF instant
+        refuses instead of answering "no table yet"; the pre-first-commit
+        state reads None only while version 1 is retained, an instant
+        after the retained head still resolves, and a retained version
+        opens its one manifest without listing the log."""
+        import time
+
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string"
+        for i in range(3):
+            sinks.append_partition_transaction(
+                spark, t, "day", spark.createDataFrame([(i, "a")], schema)
+            )
+        assert sinks.read_keyed_table(spark, t, version=0) is None
+        at2 = sinks.table_history(t)[1]["committed_at"]
+        sinks.vacuum_versions(t, keep_last=1)
+        for call in (
+            lambda: sinks.read_keyed_table(spark, t, as_of=at2),
+            lambda: sinks.resolve_version_as_of(t, at2),
+            lambda: sinks.read_keyed_table(spark, t, version=0),
+        ):
+            with _pytest.raises(ValueError, match="vacuumed"):
+                call()
+        with _pytest.raises(ValueError, match="not committed.*vacuumed"):
+            sinks.read_keyed_table(spark, t, version=1)
+        now = time.time()
+        assert sinks.resolve_version_as_of(t, now) == 3
+        assert sorted(
+            r.k for r in sinks.read_keyed_table(spark, t, as_of=now).collect()
+        ) == [0, 1, 2]
+        opened, listed = [], []
+        read_json, names = sinks._read_json, sinks._manifest_names
+        monkeypatch.setattr(
+            sinks, "_read_json", lambda p: opened.append(p) or read_json(p)
+        )
+        monkeypatch.setattr(
+            sinks, "_manifest_names", lambda d: listed.append(d) or names(d)
+        )
+        df = sinks.read_keyed_table(spark, t, version=3)
+        assert [os.path.basename(p) for p in opened] == [f"{3:020d}.json"]
+        assert listed == []
+        assert sorted(r.k for r in df.collect()) == [0, 1, 2]
+
+    def test_stream_plans_read_only_their_range(
+        self, spark, tmp_path, monkeypatch
+    ):
+        """On a 30-version table a one-version plan of either commitlog
+        stream planner opens at most 3 manifests, not the whole log; a
+        materialize inside ``(start, map_version]`` and a vacuumed range
+        still raise."""
+        import pytest as _pytest
+
+        from nshm2022db_spark.streaming import sinks
+        from nshm2022db_spark.streaming.table_source import (
+            _plan_changes,
+            _typed_plan,
+        )
+
+        t = str(tmp_path / "t")
+        schema = "k int, day string, v int"
+        for k in range(2):
+            sinks.append_partition_transaction(
+                spark, t, "day", spark.createDataFrame([(k, "a", k)], schema)
+            )
+            for i in range(28 * (1 - k)):
+                sinks.set_table_constraints(spark, t, [f"v >= {-i}"])
+        assert sinks.current_commit(t)["version"] == 30
+        opened = []
+        read_json = sinks._read_json
+
+        def spy(path):
+            if os.path.basename(os.path.dirname(path)) == sinks._COMMITS:
+                opened.append(os.path.basename(path))
+            return read_json(path)
+
+        monkeypatch.setattr(sinks, "_read_json", spy)
+        for plan in (_plan_changes, _typed_plan):
+            opened.clear()
+            assert {u["version"] for u in plan(t, 29, 30)} == {30}
+            assert len(opened) <= 3, (plan.__name__, opened)
+        monkeypatch.setattr(sinks, "_read_json", read_json)
+
+        m = str(tmp_path / "m")
+        sinks.append_partition_transaction(
+            spark, m, "day", spark.createDataFrame([(0, "a", 0)], schema)
+        )
+        sinks.rename_column(spark, m, "v", "score")
+        sinks.materialize_column_mapping(spark, m)  # v3, beyond the range
+        head = sinks.current_commit(m)
+        sinks.vacuum_versions(t, keep_last=1)
+        for plan in (_plan_changes, _typed_plan):
+            with _pytest.raises(ValueError, match="materialize"):
+                plan(m, 0, 1, sinks._map_meta(head), head["version"])
+            with _pytest.raises(ValueError, match="vacuumed"):
+                plan(t, 28, 30)
+
+    def test_one_commit_log_read_side(self):
+        """CI guard: history reads go through `_manifests_in` — no package
+        caller of `table_history` but `vacuum_versions`; `catalog_at`
+        resolves through `_resolve_manifest` without opening or listing
+        the log itself; and nothing writes the retired `_CURRENT` hint."""
+        import ast
+        import glob
+
+        import nshm2022db_spark as pkg
+
+        root = os.path.dirname(pkg.__path__[0])
+        paths = [
+            p
+            for d in ("nshm2022db_spark", "tools", "examples")
+            for p in glob.glob(os.path.join(root, d, "**", "*.py"), recursive=True)
+        ]
+        history_callers, catalog_at_reads, hint = set(), set(), []
+        for path in paths:
+            with open(path) as fh:
+                tree = ast.parse(fh.read())
+            for node in ast.walk(tree):
+                if isinstance(node, ast.Constant) and node.value == "_CURRENT":
+                    hint.append((path, node.lineno))
+                if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                for child in ast.walk(node):
+                    ident = getattr(child, "id", None) or getattr(
+                        child, "attr", None
+                    )
+                    if ident == "table_history" and path.startswith(
+                        pkg.__path__[0]
+                    ):
+                        history_callers.add(node.name)
+                    if node.name == "catalog_at" and ident in (
+                        "_read_json", "_manifest_names",
+                    ):
+                        catalog_at_reads.add(ident)
+        assert history_callers == {"vacuum_versions"}
+        assert catalog_at_reads == set()
+        assert hint == []
