@@ -226,6 +226,13 @@ class NSHMDB:
             self._table_path(name)
         )
 
+    def _max_id(self, name: str, col: str) -> int:
+        """The largest ``col`` in table ``name`` (0 when empty): the
+        offset the next surrogate keys start after. One Spark job."""
+        return int(
+            self.table(name).agg(F.coalesce(F.max(col), F.lit(0))).collect()[0][0]
+        )
+
     def _append(self, name: str, df: DataFrame) -> None:
         writer = df.select(
             *[F.col(f.name).cast(f.dataType) for f in schemas.NSHM_TABLES[name].fields]
@@ -242,10 +249,10 @@ class NSHMDB:
         anti-join against existing, windowed dense keys from MAX(id)."""
         existing = self.table("parent_fault")
         fresh = upsert_missing(names.select("name").distinct(), existing, ["name"])
-        offset = existing.agg(F.coalesce(F.max("parent_id"), F.lit(0))).collect()[0][0]
+        offset = self._max_id("parent_fault", "parent_id")
         self._append(
             "parent_fault",
-            dense_surrogate_keys(fresh, ["name"], "parent_id", offset=int(offset)),
+            dense_surrogate_keys(fresh, ["name"], "parent_id", offset=offset),
         )
 
     def insert(self, name: str, df: DataFrame) -> None:
@@ -271,11 +278,7 @@ class NSHMDB:
         parent_ids = {
             r["name"]: r["parent_id"] for r in self.table("parent_fault").collect()
         }
-        offset = int(
-            self.table("fault")
-            .agg(F.coalesce(F.max("fault_id"), F.lit(0)))
-            .collect()[0][0]
-        )
+        offset = self._max_id("fault", "fault_id")
 
         fault_rows, plane_rows = [], []
         for i, f in enumerate(faults):
@@ -306,11 +309,7 @@ class NSHMDB:
                 + ", fault_id long, __seq long"
             )
             planes = spark.createDataFrame(plane_rows, schema_str)
-            existing_max = int(
-                self.table("fault_plane")
-                .agg(F.coalesce(F.max("plane_id"), F.lit(0)))
-                .collect()[0][0]
-            )
+            existing_max = self._max_id("fault_plane", "plane_id")
             self._append(
                 "fault_plane",
                 dense_surrogate_keys(
@@ -363,11 +362,7 @@ class NSHMDB:
         len, rate). ``rupture_faults``: NATURAL keys — (rupture_nshm_id,
         fault_nshm_id, fault_system) — resolved to surrogates via the two
         broadcast id-map joins before the bridge append."""
-        offset = int(
-            self.table("rupture")
-            .agg(F.coalesce(F.max("rupture_id"), F.lit(0)))
-            .collect()[0][0]
-        )
+        offset = self._max_id("rupture", "rupture_id")
         self._append(
             "rupture",
             dense_surrogate_keys(
@@ -379,11 +374,7 @@ class NSHMDB:
             ["rupture_id", "fault_id"],
             "insert_many_ruptures bridge",
         )
-        b_offset = int(
-            self.table("rupture_faults")
-            .agg(F.coalesce(F.max("rupture_fault_id"), F.lit(0)))
-            .collect()[0][0]
-        )
+        b_offset = self._max_id("rupture_faults", "rupture_fault_id")
         self._append(
             "rupture_faults",
             dense_surrogate_keys(
@@ -431,11 +422,7 @@ class NSHMDB:
         self.insert_parent_faults(faults.select("name"))
         parent_map = F.broadcast(self.table("parent_fault"))
 
-        offset = int(
-            self.table("fault")
-            .agg(F.coalesce(F.max("fault_id"), F.lit(0)))
-            .collect()[0][0]
-        )
+        offset = self._max_id("fault", "fault_id")
         keyed = dense_surrogate_keys(
             faults, ["fault_system", "fault_nshm_id"], "fault_id", offset=offset
         ).localCheckpoint(eager=True)  # keys must not be recomputed per branch below
@@ -452,11 +439,7 @@ class NSHMDB:
         )
 
         planes = traces_to_planes(keyed, id_cols=["fault_id"])
-        p_offset = int(
-            self.table("fault_plane")
-            .agg(F.coalesce(F.max("plane_id"), F.lit(0)))
-            .collect()[0][0]
-        )
+        p_offset = self._max_id("fault_plane", "plane_id")
         self._append(
             "fault_plane",
             dense_surrogate_keys(
@@ -499,11 +482,7 @@ class NSHMDB:
             ["fault_id"],
             "insert_magnitude_frequency_distribution",
         )
-        offset = int(
-            self.table("magnitude_frequency_distribution")
-            .agg(F.coalesce(F.max("entry_id"), F.lit(0)))
-            .collect()[0][0]
-        )
+        offset = self._max_id("magnitude_frequency_distribution", "entry_id")
         self._append(
             "magnitude_frequency_distribution",
             dense_surrogate_keys(

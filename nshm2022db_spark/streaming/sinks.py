@@ -1540,7 +1540,6 @@ def append_partition_transaction(
     audit=None,
     bloom_cols: list[str] | None = None,
     bloom_bits: int = _BLOOM_BITS,
-    bloom_hashes: int = _BLOOM_HASHES,
     n_partition_values: int | None = None,
 ) -> set[str] | None:
     """APPEND a batch to a partition-mapped table as one commit — the
@@ -1617,7 +1616,7 @@ def append_partition_transaction(
         lambda written: written, successor,
         batch_id=batch_id, audit=audit, stats_cols=stats_cols,
         bloom_cols=bloom_cols, bloom_bits=bloom_bits,
-        bloom_hashes=bloom_hashes, n_partition_values=n_partition_values,
+        n_partition_values=n_partition_values,
     )
 
 
@@ -1635,7 +1634,6 @@ def _partition_batch_commit(
     stats_cols: list[str] | None,
     bloom_cols: list[str] | None,
     bloom_bits: int,
-    bloom_hashes: int,
     n_partition_values: int | None,
 ) -> set[str] | None:
     """The stage / enforce / audit / rebase path APPEND and OVERWRITE
@@ -1660,7 +1658,7 @@ def _partition_batch_commit(
     must not skip its pipeline's gate, ADVICE r09). Returns the written
     entries, or None when nothing was committed."""
     if bloom_cols:
-        _check_bloom_spec(bloom_bits, bloom_hashes)
+        _check_bloom_spec(bloom_bits, _BLOOM_HASHES)
     prefix = f"{partition_col}="
     # the kept stage: name, file schema, written and claimed entries,
     # footer stats/blooms, and the table state it was last validated on
@@ -1749,7 +1747,7 @@ def _partition_batch_commit(
         st["blooms"] = (
             _collect_stage_blooms(
                 staged, partition_col, _physical_names(bloom_cols, cur),
-                bloom_bits, bloom_hashes,
+                bloom_bits, _BLOOM_HASHES,
             )
             if bloom_cols and written
             else {}
@@ -1771,9 +1769,6 @@ def overwrite_partition_transaction(
     batch_id: int | None = None,
     audit=None,
     bloom_cols: list[str] | None = None,
-    bloom_bits: int = _BLOOM_BITS,
-    bloom_hashes: int = _BLOOM_HASHES,
-    n_partition_values: int | None = None,
 ) -> None:
     """INSERT OVERWRITE a partition-mapped table as one commit — the
     last Delta-core write mode beside append/delete/rewrite/evolve/
@@ -1867,8 +1862,8 @@ def overwrite_partition_transaction(
         spark, table_dir, partition_col, batch_df, "overwrite",
         claim, successor,
         batch_id=batch_id, audit=audit, stats_cols=stats_cols,
-        bloom_cols=bloom_cols, bloom_bits=bloom_bits,
-        bloom_hashes=bloom_hashes, n_partition_values=n_partition_values,
+        bloom_cols=bloom_cols, bloom_bits=_BLOOM_BITS,
+        n_partition_values=None,
     )
 
 
@@ -1878,8 +1873,6 @@ def land_stream_to_partitioned_table(
     checkpoint_dir: str,
     partition_col: str,
     stats_cols: list[str] | None = None,
-    audit=None,
-    bloom_cols: list[str] | None = None,
 ) -> StreamingQuery:
     """Land a stream into a partition-mapped committed table via
     foreachBatch appends — the streaming half of the lakehouse write
@@ -1889,14 +1882,7 @@ def land_stream_to_partitioned_table(
     see exactly the committed batches at the versions they committed.
     Compaction (`compact_partition_table`) and erasure
     (`apply_erasure_rewrite`) run as ordinary transactions on the same
-    table — one commit model across the stream/maintenance boundary.
-    ``audit`` applies write-audit-publish to every micro-batch: a batch
-    the audit rejects is never published and fails the stream loudly
-    (no silent data loss; the operator decides whether to fix and
-    restart — the checkpoint has not advanced past the bad batch).
-    ``bloom_cols`` builds per-partition Bloom bitmaps per micro-batch
-    (OR-merged across batches in the manifest) so equality skipping
-    works on the streamed table too."""
+    table — one commit model across the stream/maintenance boundary."""
 
     def land(batch_df: DataFrame, bid: int) -> None:
         append_partition_transaction(
@@ -1906,8 +1892,6 @@ def land_stream_to_partitioned_table(
             batch_df,
             stats_cols=stats_cols,
             batch_id=bid,
-            audit=audit,
-            bloom_cols=bloom_cols,
         )
 
     return _start_foreach_batch(df, checkpoint_dir, land)
@@ -3894,7 +3878,6 @@ def _read_manifest(
     table_dir: str,
     m: dict,
     prune: dict | None = None,
-    logical: bool = True,
 ) -> DataFrame | None:
     """The one read of a committed manifest: every layout's partition
     map, through its tombstones, lifted to the LOGICAL names. ``prune``
@@ -3905,7 +3888,7 @@ def _read_manifest(
         spark, table_dir, m,
         _read_all_layouts(spark, table_dir, m, _physical_names(prune, m)),
     )
-    return _to_logical(df, m) if logical else df
+    return _to_logical(df, m)
 
 
 def _read_keyed(
@@ -3913,7 +3896,6 @@ def _read_keyed(
     table_dir: str,
     m: dict,
     prune: dict | None = None,
-    logical: bool = True,
 ) -> DataFrame | None:
     """`_read_manifest` for a table whose rows are its state — refused
     for a merge-on-read table, whose generations need `read_keyed_mor`'s
@@ -3922,7 +3904,7 @@ def _read_keyed(
         raise ValueError(
             f"{table_dir} is a merge-on-read keyed table; use read_keyed_mor"
         )
-    return _read_manifest(spark, table_dir, m, prune, logical)
+    return _read_manifest(spark, table_dir, m, prune)
 
 
 def read_keyed_table(
@@ -3931,7 +3913,6 @@ def read_keyed_table(
     version: int | None = None,
     prune: dict | None = None,
     as_of: float | None = None,
-    _logical: bool = True,
 ) -> DataFrame | None:
     """Resolve a committed version and read its partition map, or None
     before the first commit. ``version`` time-travels to an older
@@ -3961,7 +3942,7 @@ def read_keyed_table(
     m = _resolve_manifest(table_dir, version, as_of)
     if m is None:
         return None
-    return _read_keyed(spark, table_dir, m, prune, _logical)
+    return _read_keyed(spark, table_dir, m, prune)
 
 
 def _read_all_layouts(
@@ -5640,10 +5621,10 @@ def rollup_stream_to_table(
     checkpoint_dir: str,
     keys: list[str],
     sum_cols: dict[str, str],
-    count_col: str = "n",
 ) -> StreamingQuery:
-    """Maintain an ADDITIVE aggregate table (counts + sums per key) from a
-    stream via foreachBatch — the incremental-materialized-view pattern:
+    """Maintain an ADDITIVE aggregate table (a row count ``n`` + sums
+    per key) from a stream via foreachBatch — the
+    incremental-materialized-view pattern:
     each micro-batch is reduced to per-key partials, then ADDED into the
     current table version (union + one hash re-aggregation — additive
     merges need no row precedence, unlike the upsert sink's argmax).
@@ -5664,7 +5645,7 @@ def rollup_stream_to_table(
     os.makedirs(table_dir, exist_ok=True)
 
     def _rollup_batch(batch_df: DataFrame, batch_id: int) -> None:
-        aggs = [F.count(F.lit(1)).cast("long").alias(count_col)] + [
+        aggs = [F.count(F.lit(1)).cast("long").alias("n")] + [
             F.sum(c).alias(out) for c, out in sum_cols.items()
         ]
         partial = batch_df.groupBy(*keys).agg(*aggs)
@@ -5676,7 +5657,7 @@ def rollup_stream_to_table(
                 base.unionByName(partial)
                 .groupBy(*keys)
                 .agg(
-                    F.sum(count_col).cast("long").alias(count_col),
+                    F.sum("n").cast("long").alias("n"),
                     *[F.sum(out).alias(out) for out in sum_cols.values()],
                 )
             )

@@ -21,12 +21,15 @@ work over the commit log (O(tail) manifests, never data). The plan is
 `_change_images` (sinks.py), the one per-commit image planner the batch
 typed feed also executes; this module only expands its images into read
 units, one per (commit, partition entry), and byte-packs units into
-executor tasks against a maxPartitionBytes target (r15 — a tiny batch
-reads in one task, a real commit still fans out wide), Arrow-batched
-end to end (the reader hands pyarrow RecordBatches straight to Spark —
-no per-row Python). On
-a real cluster the commit log lives on shared storage exactly as every
-other reader in sinks.py assumes. Admission control via
+executor tasks against a 128 MiB target (r15 — a tiny batch reads in
+one task, a real commit still fans out wide), Arrow-batched end to end
+(the reader hands pyarrow RecordBatches straight to Spark — no per-row
+Python). The stream's schema is the head manifest's recorded
+`dir_schemas` (`table_stream_schema`), the one schema source every
+committed read uses: planning opens no data file, and a column streams
+with the type `read_keyed_table` serves. On a real cluster the commit
+log lives on shared storage exactly as every other reader in sinks.py
+assumes. Admission control via
 `maxVersionsPerBatch` bounds a micro-batch to N commits, so a source
 that fell far behind catches up in bounded-memory steps instead of one
 giant batch (Delta's maxFilesPerTrigger analog).
@@ -65,7 +68,7 @@ from pyspark.sql.datasource import (
     DataSourceStreamReader,
     InputPartition,
 )
-from pyspark.sql.types import StructType
+from pyspark.sql.types import StructField, StructType
 
 FORMAT_NAME = "commitlog"
 
@@ -76,6 +79,17 @@ _KEYSET_CACHE: dict = {}
 # (same allow-list as maintain_incremental_agg — evolve and
 # set-constraints are metadata-only for the ADD-rows feed)
 _ADDITIVE_OPS = ("append", "set-constraints", "evolve")
+
+# task sizing for the unit packer, Spark's file-scan defaults: a 128 MiB
+# target per task and a 4 MiB open cost per file
+_TARGET_BYTES = 128 << 20
+_OPEN_COST = 4 << 20
+
+
+def _change_types(options) -> bool:
+    """True when ``.option("changeTypes", ...)`` selects the typed feed
+    (option keys arrive lower-cased)."""
+    return str(options.get("changetypes", "")).lower() in ("true", "1", "yes")
 
 
 def _plan_log(
@@ -282,129 +296,58 @@ def _typed_plan(
 def table_stream_schema(
     table_dir: str, change_types: bool = False
 ) -> StructType:
-    """The stream's schema: the union of every live generation's parquet
-    schema (schema evolution — later generations may add columns; older
-    ones read those as NULL) + the partition column (string, the
+    """The stream's schema, from the head manifest alone: the by-name
+    union (first seen first) of the schema `dir_schemas` recorded for
+    each live dir — sorted entries, then generation order; a column
+    only later dirs carry reads as NULL in the older ones — with every
+    nesting level forced nullable, projected through the head's column
+    map to the LOGICAL names, + the partition column (string, the
     module-wide normalization) + `_commit_version` (long); with
     ``change_types``, also `_change_type` (string) and
     `_commit_timestamp` (timestamp) — the Delta CDF metadata columns.
-    Footer-only metadata work, no Spark jobs."""
-    import pyarrow.parquet as pq
-    from pyspark.sql.pandas.types import from_arrow_schema
-
+    The same types `read_keyed_table` serves; no file opens, no Spark
+    jobs."""
     from nshm2022db_spark.streaming.sinks import (
+        _column_map,
+        _dropped_physical,
         _entry_dirs,
+        _nullable_type,
+        _recorded_schema,
         current_commit,
     )
 
     cur = current_commit(table_dir)
     if cur["version"] == 0:
         raise ValueError(f"{table_dir} is not a committed table")
-    pcol = cur["partition_col"]
-    merged = None
-    seen: set[str] = set()
-    for entry, dirs in sorted(cur["partitions"].items()):
-        for dirname in _entry_dirs(dirs):
-            d = os.path.join(table_dir, dirname, entry)
-            key = os.path.normpath(d)
-            if key in seen or not os.path.isdir(d):
-                continue
-            seen.add(key)
-            files = sorted(f for f in os.listdir(d) if f.endswith(".parquet"))
-            if not files:
-                continue
-            s = pq.read_schema(os.path.join(d, files[0]))
-            if merged is None:
-                merged = s
-            else:
-                for f in s:
-                    if f.name not in merged.names:
-                        merged = merged.append(f)
-    if merged is None:
-        raise ValueError(f"{table_dir} holds no data files to infer from")
-    # Force every data field NULLABLE — RECURSIVELY: Spark writes
-    # REQUIRED parquet fields for non-nullable DataFrame columns, but
-    # under schema evolution a column added by a later commit must
-    # surface as NULL for rows from earlier generations — a required
-    # field there makes the JVM reject the Arrow batch outright. A
-    # top-level-only rewrite would leave an evolution-added STRUCT
-    # column's children required and hit the same rejection when
-    # old-generation files fill it with null children (r9 review).
-    import pyarrow as pa
-
-    def _force_nullable(t: pa.DataType) -> pa.DataType:
-        if pa.types.is_struct(t):
-            return pa.struct(
-                [
-                    pa.field(
-                        f.name, _force_nullable(f.type),
-                        nullable=True, metadata=f.metadata,
-                    )
-                    for f in t
-                ]
-            )
-        if pa.types.is_list(t) or pa.types.is_large_list(t):
-            mk = pa.large_list if pa.types.is_large_list(t) else pa.list_
-            return mk(
-                pa.field(
-                    t.value_field.name, _force_nullable(t.value_type),
-                    nullable=True, metadata=t.value_field.metadata,
-                )
-            )
-        if pa.types.is_map(t):
-            # map KEYS stay non-nullable (parquet/Arrow invariant)
-            return pa.map_(t.key_type, _force_nullable(t.item_type))
-        return t
-
-    merged = pa.schema(
-        [
-            pa.field(
-                f.name, _force_nullable(f.type),
-                nullable=True, metadata=f.metadata,
-            )
-            for f in merged
-        ],
-        metadata=merged.metadata,
+    if not cur["partitions"]:
+        raise ValueError(f"{table_dir} holds no data files")
+    dirs = dict.fromkeys(
+        d
+        for _, ds in sorted(cur["partitions"].items())
+        for d in _entry_dirs(ds)
     )
-    # prefer_timestamp_ntz: the executor reads units with pyarrow, so
-    # the schema describes pyarrow's view of the files. The session
-    # writes timestamps as INT96 (spark.sql.parquet.outputTimestampType),
-    # which pyarrow reads tz-naive: a TimestampType column streams as
-    # TIMESTAMP_NTZ, while read_keyed_table's batch scan and the
-    # manifest's recorded schema say TIMESTAMP (pinned by
-    # test_stream_timestamp_type_differs_from_batch). A stream consumer
-    # needing watermarking casts to TIMESTAMP explicitly, the events.py
-    # discipline.
-    # project the merged PHYSICAL schema through the head's column map
-    # (r13): renamed fields surface under their logical names, dropped
-    # physical fields disappear — the stream's schema is the same
-    # logical view every batch read of the head serves
-    from nshm2022db_spark.streaming.sinks import (
-        _column_map,
-        _dropped_physical,
-    )
-
-    cmap = _column_map(cur)  # {logical: physical}
+    types: dict = {}
+    for d in dirs:
+        sj = _recorded_schema(table_dir, cur, d)
+        for f in StructType.fromJson(sj).fields:
+            types.setdefault(f.name, f.dataType)
+    logical = {ph: lg for lg, ph in _column_map(cur).items()}
     dropped = _dropped_physical(cur)
-    if cmap or dropped:
-        inv = {ph: lg for lg, ph in cmap.items()}
-        merged = pa.schema(
-            [
-                (f.with_name(inv[f.name]) if f.name in inv else f)
-                for f in merged
-                if f.name not in dropped
-            ],
-            metadata=merged.metadata,
-        )
-    spark_schema = from_arrow_schema(merged, prefer_timestamp_ntz=True)
-    spark_schema = spark_schema.add(pcol, "string").add(
+    schema = StructType(
+        [
+            StructField(logical.get(n, n), _nullable_type(t), True)
+            for n, t in types.items()
+            if n not in dropped
+        ]
+    )
+    schema = schema.add(cur["partition_col"], "string").add(
         "_commit_version", "long"
     )
     if change_types:
-        spark_schema = spark_schema.add("_change_type", "string").add(
+        schema = schema.add("_change_type", "string").add(
             "_commit_timestamp", "timestamp"
         )
-    return spark_schema
+    return schema
 
 
 class CommitLogPartition(InputPartition):
@@ -486,20 +429,11 @@ class CommitLogStreamReader(DataSourceStreamReader):
         self._schema = schema
         self._start = int(options.get("startingversion", 0))
         self._max_versions = int(options.get("maxversionsperbatch", 0))
-        # task sizing for the unit packer (defaults mirror Spark's file
-        # scan: 128 MiB target, 4 MiB per-file open cost); override with
-        # .option("maxPartitionBytes", n) / .option("openCostInBytes", n)
-        self._target_bytes = int(
-            options.get("maxpartitionbytes", 128 << 20)
-        )
-        self._open_cost = int(options.get("opencostinbytes", 4 << 20))
         # typed mode (.option("changeTypes", "true")): emit the Delta
         # CDF surface — _change_type + _commit_timestamp per image —
         # and accept overwrite/rewrite/delete/merge commits (the
         # additive-only allow-list is the UNTYPED feed's constraint)
-        self._typed = str(options.get("changetypes", "")).lower() in (
-            "true", "1", "yes",
-        )
+        self._typed = _change_types(options)
         # column-mapping capture (r13): the stream serves every commit
         # through the map current at START — physical names are stable
         # across rename/drop (metadata-only), so one logical projection
@@ -509,11 +443,9 @@ class CommitLogStreamReader(DataSourceStreamReader):
         # field-name translation.
         from nshm2022db_spark.streaming.sinks import (
             _column_map,
-            _dropped_physical,
+            _map_meta,
             current_commit,
         )
-
-        from nshm2022db_spark.streaming.sinks import _map_meta
 
         head_m = current_commit(self._path)
         self._cmap = dict(_column_map(head_m))  # {logical: physical}
@@ -587,7 +519,7 @@ class CommitLogStreamReader(DataSourceStreamReader):
             map_meta=self._map_meta, map_version=self._map_version,
         )
         units = [CommitLogPartition(**p) for p in plan]
-        return _pack_units(units, self._target_bytes, self._open_cost)
+        return _pack_units(units, _TARGET_BYTES, _OPEN_COST)
 
     # -- data read (executors) ------------------------------------------
     def read(self, partition: CommitLogUnitGroup) -> Iterator:
@@ -740,10 +672,7 @@ class CommitLogDataSource(DataSource):
 
     def schema(self) -> StructType:
         return table_stream_schema(
-            self.options["path"],
-            change_types=str(
-                self.options.get("changetypes", "")
-            ).lower() in ("true", "1", "yes"),
+            self.options["path"], change_types=_change_types(self.options)
         )
 
     def streamReader(self, schema: StructType) -> CommitLogStreamReader:

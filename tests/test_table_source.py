@@ -68,12 +68,11 @@ class TestPlanning:
         assert s["_commit_version"].dataType.simpleString() == "bigint"
         assert s["k"].dataType.simpleString() == "bigint"
 
-    def test_stream_timestamp_type_differs_from_batch(self, spark, tmp_path):
-        """Pins today's split for a ``TimestampType`` column: the session
-        writes INT96, the stream schema describes pyarrow's view of the
-        files (``timestamp_ntz``), while the batch read and the
-        manifest's recorded schema say ``timestamp``. Changing either
-        side must be a deliberate edit of this test."""
+    def test_stream_timestamp_type_equals_batch(self, spark, tmp_path):
+        """A ``TimestampType`` column streams as ``timestamp``: the
+        stream's schema, the batch read and the manifest's recorded
+        schema agree (the session writes INT96, which pyarrow reads
+        tz-naive; the executor casts it to the stream's type)."""
         from nshm2022db_spark.streaming.sinks import current_commit
 
         t = str(tmp_path / "t")
@@ -84,13 +83,29 @@ class TestPlanning:
             ),
         )
         assert table_stream_schema(t)["ts"].dataType.simpleString() == (
-            "timestamp_ntz"
+            "timestamp"
         )
         assert read_keyed_table(spark, t).schema["ts"].dataType.simpleString() == (
             "timestamp"
         )
         (sj,) = current_commit(t)["dir_schemas"].values()
         assert {f["name"]: f["type"] for f in sj["fields"]}["ts"] == "timestamp"
+
+    def test_schema_opens_no_parquet_file(self, bronze, monkeypatch):
+        """The schema comes from the head manifest's recorded
+        `dir_schemas` alone: no footer or data file is opened."""
+        import pyarrow.parquet as pq
+
+        def refuse(*a, **k):
+            raise AssertionError("table_stream_schema opened a parquet file")
+
+        for name in ("read_schema", "read_table", "ParquetFile"):
+            monkeypatch.setattr(pq, name, refuse)
+        s = table_stream_schema(bronze, change_types=True)
+        assert s.names == [
+            "k", "v", "day", "_commit_version", "_change_type",
+            "_commit_timestamp",
+        ]
 
     def test_non_append_history_raises(self, spark, bronze):
         tombstone_keys(
@@ -348,6 +363,69 @@ class TestEndToEnd:
         spark.catalog.dropTempView("tsrc_evo")
         assert {r.tag for r in rows if r._commit_version == 1} == {None}
         assert {r.tag for r in rows if r._commit_version == 2} == {"x"}
+
+    def test_stream_schema_equals_batch_across_evolution_and_clone(
+        self, spark, tmp_path
+    ):
+        """On a table with a timestamp column, a struct column a later
+        append added, a renamed key, a dropped column and a shallow
+        clone, the stream's data fields equal the batch read's by
+        (name, type), and a micro-batch's timestamps equal the batch
+        read's."""
+        from nshm2022db_spark.streaming.sinks import (
+            clone_table_shallow,
+            drop_column,
+            rename_column,
+        )
+
+        d, c = str(tmp_path / "t"), str(tmp_path / "clone")
+
+        def rows(lo, hi, day):
+            return spark.range(lo, hi).select(
+                F.col("id").alias("k"),
+                F.timestamp_seconds(F.col("id") * 3601 + 1_700_000_000).alias(
+                    "ts"
+                ),
+                F.lit("j").alias("junk"),
+                F.lit(day).alias("day"),
+            )
+
+        append_partition_transaction(spark, d, "day", rows(0, 3, "d1"))
+        append_partition_transaction(
+            spark, d, "day",
+            rows(3, 6, "d2").withColumn(
+                "meta", F.struct(F.col("k").alias("a"), F.lit(1).alias("b"))
+            ),
+        )
+        rename_column(spark, d, "k", "key")
+        drop_column(spark, d, "junk")
+        clone_table_shallow(d, c)
+        for t in (d, c):
+            stream = {
+                f.name: f.dataType
+                for f in table_stream_schema(t).fields
+                if f.name != "_commit_version"
+            }
+            batch = read_keyed_table(spark, t).schema
+            assert stream == {f.name: f.dataType for f in batch.fields}
+            assert stream["ts"].simpleString() == "timestamp"
+            assert "junk" not in stream and "k" not in stream
+
+        q = (
+            self._stream(spark, d).writeStream.outputMode("append")
+            .format("memory")
+            .queryName("tsrc_ts")
+            .start()
+        )
+        try:
+            q.processAllAvailable()
+        finally:
+            q.stop()
+        got = spark.sql("select key, ts, day from tsrc_ts").collect()
+        spark.catalog.dropTempView("tsrc_ts")
+        want = read_keyed_table(spark, d).select("key", "ts", "day").collect()
+        assert len(got) == 6
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want))
 
     def test_schema_evolution_struct_column_nulls_for_old_commits(
         self, spark

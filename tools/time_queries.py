@@ -1,8 +1,17 @@
-"""Time selected registered queries bench-style (warm-up + min of N,
-noop sink) in ONE session — the same methodology as bench.py, scoped to
-a subset so A/B probes do not pay a full 164-query run.
+"""Time selected registered queries (one warm-up, then N timed runs
+into a noop sink) in ONE session, and print the min, median and
+interquartile range (IQR) of the N runs per query.
 
-Usage: python tools/time_queries.py [-n RUNS] <query> [query ...]
+Limit: the runs share one session and one host, so the spread shows
+in-session noise only, not drift between sessions. On a shared 4-CPU
+host a sub-second query that a change did not touch read 15 % slower
+on the change in 10 of 10 alternating sessions, and a cross run did not
+reproduce it: a ±12 % difference is not resolved by this tool. For a
+speed claim, time the parent and the change in interleaved pairs, each
+run from a fresh archive of the committed files (PERF.md, "DML
+commits" section).
+
+Usage: python tools/time_queries.py [-n RUNS (default 5)] <query> [query ...]
        SPARK_GRAFT_SF_DIR honored as in bench.py.
 """
 
@@ -12,6 +21,8 @@ import gc
 import os
 import sys
 import time
+
+import numpy as np
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -24,7 +35,7 @@ def _run(df) -> None:
 
 def main() -> None:
     args = sys.argv[1:]
-    runs = 2
+    runs = 5
     if args and args[0] == "-n":
         runs = int(args[1])
         args = args[2:]
@@ -39,12 +50,17 @@ def main() -> None:
     for name in names:
         spark.sparkContext.setJobDescription(f"time:{name}")
         _run(qs[name](spark, sf_dir))  # warm-up
-        best = float("inf")
+        times = []
         for _ in range(runs):
             t0 = time.perf_counter()
             _run(qs[name](spark, sf_dir))
-            best = min(best, time.perf_counter() - t0)
-        print(f"TIME {name}={best:.3f}", flush=True)
+            times.append(time.perf_counter() - t0)
+        q1, med, q3 = np.percentile(times, [25, 50, 75])
+        print(
+            f"TIME {name}={min(times):.3f} median={med:.3f} "
+            f"iqr=[{q1:.3f}, {q3:.3f}] n={runs}",
+            flush=True,
+        )
         spark.catalog.clearCache()
         gc.collect()
 
